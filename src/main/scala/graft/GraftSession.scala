@@ -62,7 +62,9 @@ object GraftSession {
       // results) and is not scale- or core-count-dependent: a production
       // driver/executor serving many distinct plans wants the same. 25000
       // covers the full gate's unit count with headroom; entries beyond it
-      // LRU-evict exactly as before.
+      // LRU-evict exactly as before. This is a STATIC conf, read once per
+      // JVM: it applies only when this builder creates the JVM's first
+      // session. getOrCreate on an existing session keeps the old value.
       .config("spark.sql.codegen.cache.maxEntries", "25000")
 
   def create(): SparkSession = {

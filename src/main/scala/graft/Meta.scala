@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
+import graft.plans.ExecutedPlan
 
 /** Meta/ops statement surface (SURVEY.md §7 M5): SHOW COLUMNS [EXTENDED],
   * SET @var / SHOW var, EXPLAIN [ANALYZE]. The reference implements these as
@@ -93,7 +95,7 @@ object Meta {
       format: String = "TEXT"): DataFrame = {
     import spark.implicits._
     if (format != null && format.equalsIgnoreCase("MERMAID")) {
-      if (analyze) df.queryExecution.executedPlan.execute().count()
+      if (analyze) ExecutedPlan.run(df)
       return mermaid(df.queryExecution.executedPlan, analyze)
         .split('\n').toSeq.toDF("plan")
     }
@@ -102,26 +104,16 @@ object Meta {
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       else {
-        // execute THIS plan (df.write would build a separate QueryExecution
-        // and the metrics would land there instead)
-        df.queryExecution.executedPlan.execute().count()
         val sb = new StringBuilder
-        def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
+        def walk(p: SparkPlan, depth: Int): Unit = {
           val interesting = p.metrics.filter { case (_, m) => m.value > 0 }
             .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")
           sb.append("  " * depth).append(p.nodeName)
           if (interesting.nonEmpty) sb.append("  [").append(interesting).append("]")
           sb.append('\n')
-          p.children.foreach(walk(_, depth + 1))
-          p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              walk(a.executedPlan, depth + 1)
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              walk(q.plan, depth + 1)
-            case _ => ()
-          }
+          ExecutedPlan.children(p).foreach(walk(_, depth + 1))
         }
-        walk(df.queryExecution.executedPlan, 0)
+        walk(ExecutedPlan.run(df), 0)
         sb.toString
       }
     text.split('\n').toSeq.toDF("plan")
@@ -131,22 +123,14 @@ object Meta {
     * like the reference's rendering (opteryx/utils/mermaid.py:1-22): one
     * `NODE_i["name"]` per operator, edges child→parent labelled with the
     * child's output row count when ANALYZE ran. */
-  private def mermaid(root: org.apache.spark.sql.execution.SparkPlan,
-      analyze: Boolean): String = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  private def mermaid(root: SparkPlan, analyze: Boolean): String = {
     val sb = new StringBuilder("flowchart BT\n\n")
     var nextId = 0
     def esc(s: String): String = s.replace("\"", "'")
     def walk(p: SparkPlan): Int = {
       val id = nextId; nextId += 1
       sb.append(s"""  NODE_$id["${esc(p.nodeName)}"]""").append('\n')
-      val kids = p.children ++ (p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => Nil
-      })
-      kids.foreach { c =>
+      ExecutedPlan.children(p).foreach { c =>
         val cid = walk(c)
         val rows = if (analyze) c.metrics.get("numOutputRows").map(_.value) else None
         rows match {

@@ -1,34 +1,26 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec}
+import graft.plans.ExecutedPlan
 
 /** Plan-quality audit. Two modes:
   *  - no query names: audit EVERY gate query and write `PLANS.md` — a
   *    per-query table of shuffle-exchange count, join strategies, scan
   *    pushdown, and red flags (nested-loop/cartesian on non-tiny sides,
-  *    wide scans) so plan regressions are reviewable round over round;
-  *  - explicit names: dump their formatted plans (the round-1 behavior).
-  * Plans are compiled (not executed), so the audit is cheap; queries whose
-  * construction runs eager actions (p26 bloom build) still pay those.
+  *    wide scans) so plan regressions are reviewable round over round.
+  *    Plans are compiled (not executed), so the audit is cheap; queries
+  *    whose construction runs eager actions (p26 bloom build) still pay
+  *    those;
+  *  - explicit names: build and execute each query [[Runs]] times, print
+  *    the seconds of every run, then the formatted plan of the last run —
+  *    AQE's Final Plan (`isFinalPlan=true`) followed by its Initial Plan.
   */
 object PlanAudit {
 
-  private def collectAll(p: SparkPlan): Seq[SparkPlan] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-    def walk(x: SparkPlan): Unit = {
-      buf += x
-      x.children.foreach(walk)
-      x match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case _ => ()
-      }
-      x.subqueries.foreach(walk)
-    }
-    walk(p)
-    buf.toSeq
-  }
+  /** Fresh-JVM runs need this many iterations before the JIT converges
+    * (BENCH_NOTES.md, round-18 "Probe discipline note"). */
+  val Runs = 5
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.create()
@@ -38,8 +30,14 @@ object PlanAudit {
     if (explicit.nonEmpty) {
       explicit.foreach { n =>
         println(s"\n========== $n ==========")
-        println(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        var last: DataFrame = null
+        for (i <- 1 to Runs) {
+          val t0 = System.nanoTime()
+          last = SparkEntry.queries(n)(spark, dir)
+          ExecutedPlan.run(last)
+          println(f"[plan-audit] $n run $i ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        }
+        println(last.queryExecution.explainString(ExplainMode.fromString("formatted")))
       }
       spark.stop()
       return
@@ -62,7 +60,7 @@ object PlanAudit {
         // EnsureRequirements; under AQE this is the initial adaptive plan —
         // compiled, not run
         val plan = fn(spark, dir).queryExecution.executedPlan
-        val nodes = collectAll(plan)
+        val nodes = ExecutedPlan.collectAll(plan)
         val xchg = nodes.count(
           _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
         val bhj = nodes.count(_.nodeName.contains("BroadcastHashJoin"))

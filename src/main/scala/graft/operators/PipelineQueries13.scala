@@ -223,7 +223,8 @@ object PipelineQueries13 {
       // hash-identical vs the oracle).
       val base = Tables.dfSpread(s, dir, "embeddings")
         .filter(col("embedding").isNotNull)
-        .filter(assert_true(size(col("embedding")) === Dim - 1,
+        // null rows pass the assert: it holds in either conjunct order
+        .filter(assert_true(col("embedding").isNull || size(col("embedding")) === Dim - 1,
           concat(lit(s"p62: embedding width != ${Dim - 1}: "),
             size(col("embedding")).cast("string"))).isNull)
         .select(col("vec_id"), col("label"),

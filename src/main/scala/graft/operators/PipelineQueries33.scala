@@ -115,7 +115,8 @@ object PipelineQueries33 {
       // well-formed data — re-verified hash-identical vs the oracle).
       val exs = Tables.dfSpread(s, dir, "embeddings")
         .filter(col("embedding").isNotNull)
-        .filter(assert_true(size(col("embedding")) === Dim,
+        // null rows pass the assert: it holds in either conjunct order
+        .filter(assert_true(col("embedding").isNull || size(col("embedding")) === Dim,
           concat(lit(s"p125: embedding width != $Dim: "),
             size(col("embedding")).cast("string"))).isNull)
         .select(col("vec_id"), col("label"),

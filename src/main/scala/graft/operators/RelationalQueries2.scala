@@ -54,7 +54,7 @@ object RelationalQueries2 {
       // their re-reduce and the percentile selection are two consumers of
       // the one checkpointed frame — no separate base scan.
       //
-      // LATENCY FLOOR (round-7 measurement, tools/ProfileQ41j-m): at sf0.1
+      // LATENCY FLOOR (round 7, BENCH_NOTES.md "Standing latency facts"): at sf0.1
       // the local median is ~1.3-1.5s and resists restructuring because the
       // input is a SINGLE-ROW-GROUP parquet file — every data pass runs its
       // scan stage on one core (phase-A melt+agg ~0.6s, phase-B probe

@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 /** Physical-layout tooling for 100-TB-scale plans: bucketed co-located
@@ -54,26 +56,10 @@ object Layout {
   /** Count Exchange operators in the executed plan (post-AQE), descending
     * through adaptive query stages — the metric a scale review cares about. */
   def countExchanges(df: DataFrame): Int = {
-    // execute THIS plan so AQE finalizes its stages (a df.write would build
-    // and execute a separate QueryExecution)
-    df.queryExecution.executedPlan.execute().count()
-    var n = 0
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      p match {
-        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => n += 1
-        case _ => ()
-      }
-      p.children.foreach(walk)
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case r: org.apache.spark.sql.execution.ReusedSubqueryExec => walk(r.child)
-        case _ => ()
-      }
-    }
-    walk(df.queryExecution.executedPlan)
-    n
+    def count(p: SparkPlan): Int =
+      (if (p.isInstanceOf[ShuffleExchangeLike]) 1 else 0) +
+        ExecutedPlan.children(p).map(count).sum
+    count(ExecutedPlan.run(df))
   }
 
   /** Hive-style partitioned write (date/key directory layout) — the storage

@@ -265,24 +265,23 @@ class BenchCanarySpec extends AnyFunSuite {
     //   (1) cross-cut suite deltas: per-query MIN over common queries,
     //       section totals canary-normalized;
     //   (2) the BASELINE q01 anchor: judged on the ADMITTED cut's q01 min.
+    // whitespace-collapsed, so re-wrapping the prose does not break the pin
     val notes = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_NOTES.md")), "UTF-8")
+      java.nio.file.Paths.get("BENCH_NOTES.md")), "UTF-8").replaceAll("\\s+", " ")
     assert(notes.contains("## Binding comparator ruling for container-priced windows"),
       "BENCH_NOTES.md lost the standing comparator-ruling section")
-    assert(notes.contains("per-query MIN basis over the\n   queries common to both cuts") ||
-      notes.contains("per-query MIN basis over the queries common to both cuts"),
+    assert(notes.contains("per-query MIN basis over the queries common to both cuts"),
       "ruling clause (1) — min basis over common queries — missing")
     assert(notes.contains("judged on the ADMITTED cut's q01 min"),
       "ruling clause (2) — anchor judged on the admitted cut's min — missing")
     // and the ruling's canonical application: the committed r18 record
     // (bench_full.json, official=true) carries a q01 min within the 2x
     // anchor band, so the closed q01 thread stays closed
-    val full = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("bench_full.json")), "UTF-8")
-    val q01Min = """"q01_group_agg":\{"median":[-0-9.eE]+,"raw_median":[-0-9.eE]+,"min":([-0-9.eE]+)""".r
-    val m = q01Min.findFirstMatchIn(full)
-    assert(m.isDefined, "bench_full.json lost its q01 row")
-    assert(m.get.group(1).toDouble <= 0.50,
-      s"admitted-cut q01 min ${m.get.group(1)} crossed the 2x anchor band (0.50 s)")
+    val q01Min = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("bench_full.json"))
+      .path("queries").path("q01_group_agg").path("min")
+    assert(q01Min.isNumber, "bench_full.json lost its q01 row")
+    assert(q01Min.asDouble <= 0.50,
+      s"admitted-cut q01 min $q01Min crossed the 2x anchor band (0.50 s)")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.SparkPlan
+import graft.plans.ExecutedPlan.collectAll
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Enforces COVERAGE.md's "bounded frame" prose as a plan property over the
@@ -220,23 +220,6 @@ class BoundedWindowSpec extends AnyFunSuite {
       ("a global running total is single-partition by construction; " +
         "RelationalQueries3.scala documents that a 100-TB running total " +
         "would be windowed per key or per time bucket"))
-
-  private def collectAll(p: SparkPlan): Seq[SparkPlan] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-    def walk(x: SparkPlan): Unit = {
-      buf += x
-      x.children.foreach(walk)
-      x match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case _ => ()
-      }
-      x.subqueries.foreach(walk)
-    }
-    walk(p)
-    buf.toSeq
-  }
 
   /** first descendant of the window's input chain carrying a row-count
     * metric (Sort/Exchange wrappers in between don't count rows). */

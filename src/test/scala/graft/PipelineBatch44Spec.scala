@@ -127,15 +127,20 @@ class PipelineBatch44Spec extends AnyFunSuite {
     val orders = Tables.df(spark, SharedSpark.sf, "orders")
       .select("o_orderkey", "o_custkey").collect()
       .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
+    // one collect per key set, not one per row inside the count lambdas
+    val orderKeys = keys("orders", "o_orderkey")
+    val partKeys = keys("part", "p_partkey")
+    val suppKeys = keys("supplier", "s_suppkey")
+    val custKeys = keys("customer", "c_custkey")
     val want = Map(
       "fk_lineitem_orders" -> (li.length.toLong,
-        li.count(l => !keys("orders", "o_orderkey")(l._1)).toLong),
+        li.count(l => !orderKeys(l._1)).toLong),
       "fk_lineitem_part" -> (li.length.toLong,
-        li.count(l => !keys("part", "p_partkey")(l._2)).toLong),
+        li.count(l => !partKeys(l._2)).toLong),
       "fk_lineitem_supplier" -> (li.length.toLong,
-        li.count(l => !keys("supplier", "s_suppkey")(l._3)).toLong),
+        li.count(l => !suppKeys(l._3)).toLong),
       "fk_orders_customer" -> (orders.length.toLong,
-        orders.count(o => !keys("customer", "c_custkey")(o._2)).toLong),
+        orders.count(o => !custKeys(o._2)).toLong),
       "pk_lineitem" -> (li.length.toLong,
         (li.length - li.map(l => (l._1, l._4)).distinct.length).toLong),
       "pk_orders" -> (orders.length.toLong,

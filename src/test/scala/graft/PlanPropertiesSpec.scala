@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.ExecutedPlan.collectAll
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
@@ -18,23 +19,6 @@ class PlanPropertiesSpec extends AnyFunSuite {
   private def planOf(df: DataFrame): SparkPlan = {
     df.queryExecution.executedPlan.execute().count()
     df.queryExecution.executedPlan
-  }
-
-  private def collectAll(p: SparkPlan): Seq[SparkPlan] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-    def walk(x: SparkPlan): Unit = {
-      buf += x
-      x.children.foreach(walk)
-      x match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case _ => ()
-      }
-      x.subqueries.foreach(walk)
-    }
-    walk(p)
-    buf.toSeq
   }
 
   test("q40 (TPC-H Q6 shape): filters push into the parquet scan, schema pruned") {
@@ -422,5 +406,14 @@ class PlanPropertiesSpec extends AnyFunSuite {
           || n.contains("TakeOrdered") || n.contains("HashAggregate")),
         s"global sort directly over raw data: $below")
     }
+  }
+
+  test("ExecutedPlan.run returns AQE's final plan and the walk reaches its query stages") {
+    // q01 groups then orders: two shuffles, so AQE materializes query stages
+    val plan = graft.plans.ExecutedPlan.run(run("q01_group_agg"))
+    assert(plan.treeString.contains("isFinalPlan=true"), plan.treeString)
+    // Shuffle/Broadcast/ResultQueryStage: the QueryStageExec nodes
+    assert(collectAll(plan).exists(_.nodeName.endsWith("QueryStage")),
+      s"no query stage reached:\n${plan.treeString}")
   }
 }

@@ -5,7 +5,7 @@
 # --add-opens set (build.sbt jdk17AddOpens), same -Xmx default, same classes.
 #
 #   tools/jrun.sh graft.Bench
-#   tools/jrun.sh graft.PlanAudit /root/testdata/sf0.1 q01_group_agg
+#   tools/jrun.sh graft.PlanAudit <sf-dir> q01_group_agg  # 5 timed runs + final plan
 #
 # Env passthrough is the shell's (SPARK_GRAFT_* variables work unchanged).
 set -euo pipefail
