@@ -1,19 +1,39 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{ClickBenchGate, PipelineQueries, PipelineQueries2, PipelineQueries3, PipelineQueries4, PipelineQueries5, PipelineQueries6, PipelineQueries7, PipelineQueries8, PipelineQueries9, PipelineQueries10, PipelineQueries11, PipelineQueries12, PipelineQueries13, PipelineQueries14, PipelineQueries15, PipelineQueries16, PipelineQueries17, PipelineQueries18, PipelineQueries19, PipelineQueries20, PipelineQueries21, PipelineQueries22, PipelineQueries23, PipelineQueries24, PipelineQueries25, PipelineQueries26, PipelineQueries27, PipelineQueries28, PipelineQueries29, PipelineQueries30, PipelineQueries31, PipelineQueries32, PipelineQueries33, PipelineQueries34, PipelineQueries35, PipelineQueries36, PipelineQueries37, PipelineQueries38, PipelineQueries39, PipelineQueries40, PipelineQueries41, PipelineQueries42, PipelineQueries43, PipelineQueries44, PipelineQueries45, PipelineQueries46, PipelineQueries47, PipelineQueries48, PipelineQueries49, PipelineQueries50, PipelineQueries51, PipelineQueries52, PipelineQueries53, PipelineQueries54, PipelineQueries55, PipelineQueries56, PipelineQueries57, PipelineQueries58, PipelineQueries59, PipelineQueries60, PipelineQueries61, PipelineQueries62, PipelineQueries63, PipelineQueries64, PipelineQueries65, RelationalQueries, RelationalQueries2, RelationalQueries3, RelationalQueries4, TpchQueries}
+import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
-  val allDefs: Seq[QueryDef] =
-    RelationalQueries.defs ++ RelationalQueries2.defs ++ RelationalQueries3.defs ++
-      RelationalQueries4.defs ++
-      TpchQueries.defs ++ PipelineQueries.defs ++ PipelineQueries2.defs ++
-      PipelineQueries3.defs ++ PipelineQueries4.defs ++ PipelineQueries5.defs ++
-      PipelineQueries6.defs ++ PipelineQueries7.defs ++ PipelineQueries8.defs ++
-      PipelineQueries9.defs ++ PipelineQueries10.defs ++ PipelineQueries11.defs ++
-      PipelineQueries12.defs ++ PipelineQueries13.defs ++ PipelineQueries14.defs ++ PipelineQueries15.defs ++ PipelineQueries16.defs ++ PipelineQueries17.defs ++ PipelineQueries18.defs ++ PipelineQueries19.defs ++ PipelineQueries20.defs ++ PipelineQueries21.defs ++ PipelineQueries22.defs ++ PipelineQueries23.defs ++ PipelineQueries24.defs ++ PipelineQueries25.defs ++ PipelineQueries26.defs ++ PipelineQueries27.defs ++ PipelineQueries28.defs ++ PipelineQueries29.defs ++ PipelineQueries30.defs ++ PipelineQueries31.defs ++ PipelineQueries32.defs ++ PipelineQueries33.defs ++ PipelineQueries34.defs ++ PipelineQueries35.defs ++ PipelineQueries36.defs ++ PipelineQueries37.defs ++ PipelineQueries38.defs ++ PipelineQueries39.defs ++ PipelineQueries40.defs ++ PipelineQueries41.defs ++ PipelineQueries42.defs ++ PipelineQueries43.defs ++ PipelineQueries44.defs ++ PipelineQueries45.defs ++ PipelineQueries46.defs ++ PipelineQueries47.defs ++ PipelineQueries48.defs ++ PipelineQueries49.defs ++ PipelineQueries50.defs ++ PipelineQueries51.defs ++ PipelineQueries52.defs ++ PipelineQueries53.defs ++ PipelineQueries54.defs ++ PipelineQueries55.defs ++ PipelineQueries56.defs ++ PipelineQueries57.defs ++ PipelineQueries58.defs ++ PipelineQueries59.defs ++ PipelineQueries60.defs ++ PipelineQueries61.defs ++ PipelineQueries62.defs ++ PipelineQueries63.defs ++ PipelineQueries64.defs ++ PipelineQueries65.defs ++ ClickBenchGate.defs
+  /** Every gate query: the batches in registry order, each batch's defs in
+    * its own order. */
+  val allDefs: Seq[QueryDef] = Seq(
+    RelationalQueries.defs, RelationalQueries2.defs, RelationalQueries3.defs,
+    RelationalQueries4.defs, TpchQueries.defs, PipelineQueries.defs,
+    PipelineQueries2.defs, PipelineQueries3.defs, PipelineQueries4.defs,
+    PipelineQueries5.defs, PipelineQueries6.defs, PipelineQueries7.defs,
+    PipelineQueries8.defs, PipelineQueries9.defs, PipelineQueries10.defs,
+    PipelineQueries11.defs, PipelineQueries12.defs, PipelineQueries13.defs,
+    PipelineQueries14.defs, PipelineQueries15.defs, PipelineQueries16.defs,
+    PipelineQueries17.defs, PipelineQueries18.defs, PipelineQueries19.defs,
+    PipelineQueries20.defs, PipelineQueries21.defs, PipelineQueries22.defs,
+    PipelineQueries23.defs, PipelineQueries24.defs, PipelineQueries25.defs,
+    PipelineQueries26.defs, PipelineQueries27.defs, PipelineQueries28.defs,
+    PipelineQueries29.defs, PipelineQueries30.defs, PipelineQueries31.defs,
+    PipelineQueries32.defs, PipelineQueries33.defs, PipelineQueries34.defs,
+    PipelineQueries35.defs, PipelineQueries36.defs, PipelineQueries37.defs,
+    PipelineQueries38.defs, PipelineQueries39.defs, PipelineQueries40.defs,
+    PipelineQueries41.defs, PipelineQueries42.defs, PipelineQueries43.defs,
+    PipelineQueries44.defs, PipelineQueries45.defs, PipelineQueries46.defs,
+    PipelineQueries47.defs, PipelineQueries48.defs, PipelineQueries49.defs,
+    PipelineQueries50.defs, PipelineQueries51.defs, PipelineQueries52.defs,
+    PipelineQueries53.defs, PipelineQueries54.defs, PipelineQueries55.defs,
+    PipelineQueries56.defs, PipelineQueries57.defs, PipelineQueries58.defs,
+    PipelineQueries59.defs, PipelineQueries60.defs, PipelineQueries61.defs,
+    PipelineQueries62.defs, PipelineQueries63.defs, PipelineQueries64.defs,
+    PipelineQueries65.defs, ClickBenchGate.defs
+  ).flatten
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * SURVEY.md §7 M1 slice: scan→filter→groupBy→agg→sort→limit. */

@@ -86,10 +86,12 @@ object NativeExpressions {
   /** MinHash signature: for h in [0,k), min over shingles of
     * md5(h || ':' || shingle) as hex — identical to the SQL-expressible
     * definition the oracle uses, one digest instance per row batch.
-    * Row-local: signature generation is a map-only stage at any scale. */
+    * Row-local: signature generation is a map-only stage at any scale.
+    * An empty or all-null shingle array has no minimum: every entry is
+    * null, so the element type is declared nullable. */
   case class MinHashSignatureExpr(child: Expression, k: Int)
       extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def dataType: DataType = ArrayType(StringType, containsNull = true)
     override def prettyName: String = "minhash_signature"
 
     override protected def nullSafeEval(input: Any): Any = {

@@ -1,0 +1,120 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.{Functions, Tables}
+
+/** The shared operator kit: one home for each building block the query
+  * batches combine, so a decision that must match the oracle is made once.
+  *
+  *  - text: the tokenizer, the distinct shingle set, the MinHash signature,
+  *    its LSH bands and the bucket-pair emission, the df-capped rare-shingle
+  *    frame and the shared-shingle overlap counts of the near-dup family;
+  *  - exact sums: the DECIMAL(38,6) fold of the relational/TPC-H batches.
+  */
+object Kit {
+
+  // ------------------------------------------------------------------ text
+
+  /** Tokens of `lower(text)` split on whitespace runs — the oracle's
+    * `string_split_regex(lower(text), '\s+')`. Keeps the empty tokens a
+    * leading/trailing space or an empty text yields, exactly as the oracle
+    * does (unlike [[Functions.tokenize]], which drops them). */
+  def words(text: Column): Column = split(lower(text), "\\s+")
+
+  /** Distinct word `n`-gram shingles of a token array; docs shorter than `n`
+    * tokens get an empty set ([[Functions.wordShingles]]' contract — the
+    * oracle's `list_distinct` over `range(1, greatest(len - (n-1), 0) + 1)`). */
+  def shingleSet(tokens: Column, n: Int): Column =
+    array_distinct(Functions.wordShingles(tokens, n))
+
+  /** (doc_id, text) → (doc_id, shingle): one row per distinct 3-shingle —
+    * the oracle's `unnest(list_distinct(sh))`, so a doc shorter than three
+    * tokens has no rows. */
+  def shingleRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(shingleSet(words(col("text")), 3)).as("shingle"))
+
+  /** Adds `sig`: the 8-hash MinHash signature over the doc's distinct
+    * 3-shingles, h-th entry min over shingles of md5(h || ':' || shingle)
+    * (native kernel — one digest instance, k×|shingles| loop). Map-only. */
+  def signatures(docs: DataFrame): DataFrame =
+    docs.withColumn("sig", graft.functions.NativeExpressions.minhashSignature(
+      shingleSet(words(col("text")), 3), 8))
+
+  /** (doc_id, sig) → (doc_id, band, bucket): `nb` bands of `r` signature
+    * rows, bucket = md5 of the band's minhashes joined by '|'. A doc with an
+    * empty shingle set has an all-null signature and yields no band rows —
+    * the oracle's `unnest` of an empty list — instead of sharing the
+    * md5('') bucket with every other short doc. The guard reads the `sig`
+    * attribute, so the signature kernel still runs once per row. */
+  def bands(sig: DataFrame, nb: Int, r: Int): DataFrame =
+    sig.select(col("doc_id"),
+      explode(when(col("sig").getItem(0).isNotNull,
+        transform(sequence(lit(0), lit(nb - 1)), b => struct(
+          b.as("band"),
+          md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("bucket")))))
+        .as("bb"))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+
+  /** (doc_id, band, bucket) → distinct candidate pairs (doc_a < doc_b).
+    * Pair emission without a self-join: a band self-join recomputes the
+    * signature lineage once per side (at 100 TB that doubles the dominant
+    * map stage). Grouping on (band, bucket) shuffles once and emits i<j
+    * pairs row-locally; per-bucket lists are bounded by near-dup cluster
+    * size, and a hot bucket costs |bucket|^2 either way. */
+  def bucketPairs(bands: DataFrame): DataFrame =
+    bands.groupBy(col("band"), col("bucket"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+      .where(size(col("ids")) > 1)
+      .select(explode(col("ids")).as("doc_a"), col("ids"))
+      .select(col("doc_a"),
+        explode(filter(col("ids"), x => x > col("doc_a"))).as("doc_b"))
+      .distinct()
+
+  /** The p02 LSH candidate pairs (3-shingles → 8 minhashes → 4 bands of 2):
+    * its result, and the edge source of the component/audit queries. */
+  def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    bucketPairs(bands(signatures(Tables.dfSpread(s, dir, "documents")), 4, 2))
+
+  /** (doc_id, shingle) rows → (doc_id, shingle, n_docs, corpus_n) for the
+    * shingles whose document frequency n_docs ≤ max(2, floor(0.02·N)), N
+    * the corpus size: shingles in more than 2% of the corpus never block
+    * (stop-phrase blowup is what makes shingle joins quadratic at 100 TB).
+    * Document frequency via groupBy + join-back, NOT a window over the
+    * shingle key: partial aggregation collapses a hot shingle's occurrences
+    * before the shuffle, where count(*) OVER (PARTITION BY shingle) would
+    * route every occurrence of a stop-phrase to one task; the join back is
+    * AQE-skew-splittable. N arrives as a broadcast 1-row aggregate, and the
+    * cap filters the df table before the join back (filtering after it
+    * measured slower on p17, p105 and p192 at sf0.1). */
+  def rareShingles(sh: DataFrame, docs: DataFrame): DataFrame = {
+    val corpus = docs.agg(count(lit(1)).as("corpus_n"))
+    val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("n_docs"))
+      .crossJoin(broadcast(corpus))
+      .where(col("n_docs") <= greatest(lit(2L),
+        floor(col("corpus_n") * 0.02).cast("bigint")))
+    sh.join(rare, "shingle")
+      .select(col("doc_id"), col("shingle"), col("n_docs"), col("corpus_n"))
+  }
+
+  /** (doc_id, shingle) rows → (doc_a, doc_b, i): shingles shared by each
+    * doc pair (doc_a < doc_b) that shares at least one. */
+  def sharedCounts(rows: DataFrame): DataFrame =
+    rows.select(col("doc_id").as("doc_a"), col("shingle"))
+      .join(rows.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
+      .where(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+
+  // ------------------------------------------------------------ exact sums
+
+  def dec(c: Column): Column = c.cast("decimal(38,6)")
+
+  /** Exact decimal sum (shuffle-order-proof), emitted as DOUBLE. Final output
+    * columns must be DOUBLE, not DECIMAL: the oracle gate hashes results
+    * dtype-sensitively and a DECIMAL output renders "3.140000" vs the
+    * oracle's "3.14". The oracle side carries the identical outer
+    * CAST(... AS DOUBLE). */
+  def dsum(c: Column): Column = sum(dec(c)).cast("double")
+
+  def ts(s: String): Column = lit(s).cast("timestamp_ntz")
+}

@@ -23,12 +23,6 @@ import graft.{Functions, QueryDef, Tables}
   */
 object PipelineQueries {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
-  /** doc tokens → distinct n-word shingles, computed row-local. */
-  private def shingles(tokens: Column, n: Int): Column =
-    array_distinct(Functions.wordShingles(tokens, n))
-
   val defs: Seq[QueryDef] = Seq(
 
     // -------------------------------------------------------- deduplication
@@ -71,33 +65,7 @@ object PipelineQueries {
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
       ORDER BY doc_a, doc_b""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-        .withColumn("sh", shingles(toks(col("text")), 3))
-      // minhash_h = min over shingles of md5(h || ':' || shingle); the min of
-      // a uniform digest is a valid permutation surrogate and is
-      // engine-portable (md5 is md5 everywhere). Native kernel — one digest
-      // instance, k×|shingles| loop, no interpreted lambdas.
-      val withSig = docs.withColumn("sig",
-        graft.functions.NativeExpressions.minhashSignature(col("sh"), 8))
-      val bands = withSig.select(
-        col("doc_id"),
-        explode(transform(sequence(lit(0), lit(3)), b => struct(
-          b.as("band"),
-          md5(concat_ws("|", slice(col("sig"), b * 2 + 1, lit(2)))).as("bucket")))).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      // Pair emission without a self-join: a band self-join recomputes the
-      // signature lineage once per side (the q87 double-lineage class — at
-      // 100 TB that doubles the dominant map stage). Grouping on
-      // (band, bucket) computes signatures once, shuffles once, and emits
-      // i<j pairs row-locally; per-bucket lists are bounded by near-dup
-      // cluster size, and a hot bucket costs |bucket|^2 either way.
-      bands.groupBy(col("band"), col("bucket"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .where(size(col("ids")) > 1)
-        .select(explode(col("ids")).as("doc_a"), col("ids"))
-        .select(col("doc_a"),
-          explode(filter(col("ids"), x => x > col("doc_a"))).as("doc_b"))
-        .distinct()
+      Kit.minhashPairs(s, dir)
         .orderBy(col("doc_a"), col("doc_b"))
     },
 
@@ -117,7 +85,7 @@ object PipelineQueries {
              CAST(sum(CASE WHEN vote > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
       FROM bits GROUP BY doc_id ORDER BY doc_id""")) { (s, dir) =>
       Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), Functions.simhash32(toks(col("text"))).as("simhash"))
+        .select(col("doc_id"), Functions.simhash32(Kit.words(col("text"))).as("simhash"))
         .orderBy(col("doc_id"))
     },
 
@@ -153,17 +121,10 @@ object PipelineQueries {
       // Uncapped all-pairs TRUTH TIER: quadratic on purpose (exact
       // verification baseline). Bounded by contract like p17/p160 — past
       // the bound the prefix-filtered family (p191) is the scale plan.
-      val sh = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
-          "p04_dedup_jaccard", "p191_jaccard_prefix_filter",
-          TruthTier.documentsBound)
-        .select(col("doc_id"), explode(shingles(toks(col("text")), 3)).as("shingle"))
+      val sh = Kit.shingleRows(TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
+        "p04_dedup_jaccard", "p191_jaccard_prefix_filter", TruthTier.documentsBound))
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val a = sh.alias("a")
-      val b = sh.alias("b")
-      val inter = a.join(b, col("a.shingle") === col("b.shingle")
-          && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("i"))
+      val inter = Kit.sharedCounts(sh)
       val jac = col("i").cast("double") /
         (col("sa.n") + col("sb.n") - col("i"))
       inter
@@ -285,7 +246,7 @@ object PipelineQueries {
       val hit = (t: Column, ws: Seq[String]) =>
         size(filter(t, x => x.isin(ws.map(lit(_)): _*)))
       Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", toks(col("text")))
+        .withColumn("t", Kit.words(col("text")))
         .withColumn("s_en", hit(col("t"), Seq("the", "a", "and", "of", "to", "in", "is")))
         .withColumn("s_de", hit(col("t"), Seq("der", "die", "das", "und", "ist", "ein")))
         .withColumn("s_es", hit(col("t"), Seq("el", "la", "de", "y", "es", "un")))
@@ -317,7 +278,7 @@ object PipelineQueries {
       ORDER BY doc_id""")) { (s, dir) =>
       val t = col("t")
       Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", toks(col("text")))
+        .withColumn("t", Kit.words(col("text")))
         .select(
           col("doc_id"),
           col("n_chars"),
@@ -364,7 +325,7 @@ object PipelineQueries {
       FROM t ORDER BY doc_id""")) { (s, dir) =>
       Tables.dfSpread(s, dir, "documents")
         .withColumn("norm", trim(regexp_replace(lower(col("text")), "\\s+", " ")))
-        .withColumn("toks", toks(col("text")))
+        .withColumn("toks", Kit.words(col("text")))
         .select(
           col("doc_id"),
           md5(col("norm")).as("fp_doc"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Functions, QueryDef, Tables}
@@ -28,8 +28,6 @@ import graft.{Functions, QueryDef, Tables}
   * ranking or summation.
   */
 object PipelineQueries10 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p55: ground-truth Jaccard threshold and max audited Hamming radius. */
   private val JacT = 0.5
@@ -119,7 +117,7 @@ object PipelineQueries10 {
         "the prefix-filtered exact pair set at threshold, evaluated with " +
           "the pair-eval op on a bounded audit sample")
       val sim = guarded
-        .select(col("doc_id"), Functions.simhash32(toks(col("text"))).as("h"))
+        .select(col("doc_id"), Functions.simhash32(Kit.words(col("text"))).as("h"))
       val bl = sim.select(col("doc_id"), col("h"),
         explode(sequence(lit(0), lit(Subs - 1))).as("b"))
         .withColumn("bv", expr("shiftright(h, b * 8) & 255"))
@@ -136,10 +134,10 @@ object PipelineQueries10 {
         .distinct()
         .filter(col("ham") <= MaxHam)
       val sh = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
         .filter(size(col("tk")) >= 3)
         .select(col("doc_id"),
-          explode(array_distinct(Functions.wordShingles(col("tk"), 3))).as("g"))
+          explode(Kit.shingleSet(col("tk"), 3)).as("g"))
       val dcnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
       // r19 OPTIMIZATION (guide §2.5): pin the gram-keyed exchange feeding
       // the unblocked truth self-join — same AQE collapse as the p17-class

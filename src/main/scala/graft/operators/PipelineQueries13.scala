@@ -33,8 +33,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries13 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p61: FIXED query set (every 50th doc under id 500 — constant size at
     * every corpus scale, the production shape of a pinned query workload)
     * and neighbors kept per query. */
@@ -99,7 +97,7 @@ object PipelineQueries13 {
       SELECT qid, rnk, cid, round(cos, 6) AS cosine
       FROM sim WHERE rnk <= $TopK ORDER BY qid, rnk""")) { (s, dir) =>
       val docs = Tables.dfSpread(s, dir, "documents")
-      val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tk"))
+      val tok = docs.select(col("doc_id"), explode(Kit.words(col("text"))).as("tk"))
       val tf = tok.groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))
       val nn = docs.agg(count(lit(1)).as("n"))
       val idf = tf.groupBy(col("tk")).agg(count(lit(1)).as("dfreq"))
@@ -346,7 +344,7 @@ object PipelineQueries13 {
              round(min(sc), 3) AS sc_min, round(max(sc), 3) AS sc_max
       FROM st GROUP BY stage ORDER BY stage""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("tk"))
+        .select(col("doc_id"), explode(Kit.words(col("text"))).as("tk"))
       val tc = tok.groupBy(col("tk")).agg(count(lit(1)).as("c"))
       val tot = tc.agg(sum(col("c")).as("t"))
       val sc = tok.join(tc, "tk").crossJoin(broadcast(tot))
@@ -407,7 +405,7 @@ object PipelineQueries13 {
       val hit = (t: Column, ws: Seq[String]) =>
         size(filter(t, x => x.isin(ws.map(lit(_)): _*)))
       val scored = Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", toks(col("text")))
+        .withColumn("t", Kit.words(col("text")))
         .withColumn("s_en", hit(col("t"), Seq("the", "a", "and", "of", "to", "in", "is")))
         .withColumn("s_de", hit(col("t"), Seq("der", "die", "das", "und", "ist", "ein")))
         .withColumn("s_es", hit(col("t"), Seq("el", "la", "de", "y", "es", "un")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -27,8 +27,6 @@ import graft.{QueryDef, Tables}
   *    complements p22's repetition ratios.
   */
 object PipelineQueries14 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p67: coverage curve sample points (vocabulary sizes). */
   private val Sizes = Seq(100, 300, 1000, 3000)
@@ -63,7 +61,7 @@ object PipelineQueries14 {
       WHERE rnk <= ${Sizes.max}
       GROUP BY size ORDER BY size""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
-        .select(explode(toks(col("text"))).as("w"))
+        .select(explode(Kit.words(col("text"))).as("w"))
       val wf = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
       val tot = wf.agg(sum(col("c")).as("t"))
       val ranked = wf.orderBy(col("c").desc, col("w")).limit(Sizes.max)
@@ -116,10 +114,10 @@ object PipelineQueries14 {
       FROM lab l JOIN (SELECT component, rep_doc FROM rep WHERE rn = 1) r USING (component)
       ORDER BY l.doc_id""")) { (s, dir) =>
       val comps = ConnectedComponents.minLabelPropagation(
-        PipelineQueries3.minhashPairs(s, dir)
+        Kit.minhashPairs(s, dir)
           .select(col("doc_a").as("src"), col("doc_b").as("dst")))
       val sc = Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", toks(col("text")))
+        .withColumn("t", Kit.words(col("text")))
         .select(col("doc_id"),
           round(size(array_distinct(col("t"))).cast("double") / size(col("t")), 6).as("score"))
       val lab = sc.join(comps, sc("doc_id") === comps("node"), "left")
@@ -250,7 +248,7 @@ object PipelineQueries14 {
                    END, 6) AS entropy_norm
       FROM h ORDER BY doc_id""")) { (s, dir) =>
       val wc = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+        .select(col("doc_id"), explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
       val h = wc.groupBy(col("doc_id"))
         .agg(sum(col("c")).as("n_tok"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -21,8 +21,6 @@ import graft.{QueryDef, Tables}
   *    production dedup needs.
   */
 object PipelineQueries15 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p72: z-score beyond which a norm counts as an outlier. */
   private val ZOut = 2.0
@@ -109,7 +107,7 @@ object PipelineQueries15 {
              CAST(w AS BIGINT) AS n_wedges, CAST(t AS BIGINT) AS n_triangles,
              round(CASE WHEN w > 0 THEN 3.0 * t / w END, 6) AS clustering_coef
       FROM wed, tri, ne""")) { (s, dir) =>
-      val pairs = PipelineQueries3.minhashPairs(s, dir)
+      val pairs = Kit.minhashPairs(s, dir)
       val deg = pairs.select(col("doc_a").as("v"))
         .unionAll(pairs.select(col("doc_b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -174,16 +172,9 @@ object PipelineQueries15 {
                              / sum(CASE WHEN pos THEN 1 ELSE 0 END) END, 6) AS recall
       FROM m, th GROUP BY threshold ORDER BY threshold""")) { (s, dir) =>
       val docs = Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", toks(col("text")))
-      val sh = docs.select(col("doc_id"), explode(array_distinct(transform(
-          sequence(lit(1), greatest(size(col("t")) - 2, lit(0))),
-          i => concat_ws(" ", slice(col("t"), i, lit(3)))))).as("shingle"))
-      val sig = docs.select(col("doc_id"),
-        graft.functions.NativeExpressions.minhashSignature(
-          array_distinct(transform(
-            sequence(lit(1), greatest(size(col("t")) - 2, lit(0))),
-            i => concat_ws(" ", slice(col("t"), i, lit(3))))), 8).as("sig"))
-      val pairs = PipelineQueries3.minhashPairs(s, dir)
+      val sh = Kit.shingleRows(docs)
+      val sig = Kit.signatures(docs)
+      val pairs = Kit.minhashPairs(s, dir)
       val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
       val inter = pairs
         .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")

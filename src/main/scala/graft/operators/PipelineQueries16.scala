@@ -23,8 +23,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries16 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p75: query-set size, probe count, and k (mirrors p15's gate shape). */
   private val NQueries = 5
   private val Probes = 4
@@ -204,10 +202,6 @@ object PipelineQueries16 {
         TruthTier.documentsBound,
         "the prefix-filtered exact pair set as truth, with minhash " +
           "calibration on a bounded tuning sample")
-        .withColumn("t", toks(col("text")))
-      val shArr = array_distinct(transform(
-        sequence(lit(1), greatest(size(col("t")) - 2, lit(0))),
-        i => concat_ws(" ", slice(col("t"), i, lit(3)))))
       // NOTE: no localCheckpoint here, deliberately — the three band
       // configs reference IDENTICAL sh/inter/sig subtrees, and Spark's
       // ReuseExchange already deduplicates identical exchange subtrees
@@ -215,7 +209,7 @@ object PipelineQueries16 {
       // at 10x than letting the reuse rule share them). p61's frame needed
       // the checkpoint because its consumers sit in SEPARATE plans after
       // the broadcast boundary; these don't.
-      val sh = docs.select(col("doc_id"), explode(shArr).as("shingle"))
+      val sh = Kit.shingleRows(docs)
       val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
       // r19 OPTIMIZATION (guide §2.5): pin the shingle-keyed exchange under
       // the unblocked truth self-join (AQE coalesced the fan-out stage onto
@@ -224,25 +218,10 @@ object PipelineQueries16 {
       val shG = sh.repartition(s.sparkContext.defaultParallelism, col("shingle"))
       // shared-shingle candidate superset: every banded config's pair set
       // is a subset, so ONE truth join covers all three
-      val inter = shG.select(col("doc_id").as("doc_a"), col("shingle"))
-        .join(shG.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-      val sig = docs.select(col("doc_id"),
-        graft.functions.NativeExpressions.minhashSignature(shArr, 8).as("sig"))
+      val inter = Kit.sharedCounts(shG)
+      val sig = Kit.signatures(docs)
       val summaries = BandConfigs.map { case (nb, r) =>
-        val bands = sig.select(col("doc_id"),
-          explode(transform(sequence(lit(0), lit(nb - 1)), b => struct(
-            b.as("band"),
-            md5(concat_ws("|", slice(col("sig"), b * r + 1, lit(r)))).as("bucket")))).as("bb"))
-          .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-        val pairs = bands.groupBy(col("band"), col("bucket"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-          .where(size(col("ids")) > 1)
-          .select(explode(col("ids")).as("doc_a"), col("ids"))
-          .select(col("doc_a"),
-            explode(filter(col("ids"), x => x > col("doc_a"))).as("doc_b"))
-          .distinct()
+        val pairs = Kit.bucketPairs(Kit.bands(sig, nb, r))
         val truth = (coalesce(col("i"), lit(0L)).cast("double")
           / (col("na") + col("nb") - coalesce(col("i"), lit(0L))) >= JTruth)
         pairs

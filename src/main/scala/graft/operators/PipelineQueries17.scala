@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -27,8 +27,6 @@ import graft.{QueryDef, Tables}
   *    ingesting".
   */
 object PipelineQueries17 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p79 temperatures expressed as sqrt depth: α = 0.5^depth, i.e. 0.25 and
     * 0.5 (α=1 would be proportional sampling; lower α flattens toward
@@ -75,7 +73,7 @@ object PipelineQueries17 {
     }) { (s, dir) =>
       val lt = Tables.dfSpread(s, dir, "documents")
         .groupBy(col("lang"))
-        .agg(sum(size(toks(col("text")))).as("n_tokens"))
+        .agg(sum(size(Kit.words(col("text")))).as("n_tokens"))
       val all = Window.partitionBy()
       val share = col("n_tokens").cast("double") / sum(col("n_tokens")).over(all)
       val alphaCols = SqrtDepths.zipWithIndex.flatMap { case (d, i) =>
@@ -136,24 +134,14 @@ object PipelineQueries17 {
         TruthTier.documentsBound,
         "the same rare-capped pair semantics at the 0.5 threshold via " +
           "lossless prefix filtering; sweep lower thresholds on a bounded sample")
-      val sh = docs.select(col("doc_id"),
-        explode(array_distinct(graft.Functions.wordShingles(
-          toks(col("text")), 3))).as("shingle"))
+      val sh = Kit.shingleRows(docs)
         // r19 OPTIMIZATION (guide §2.5): pin the sh-by-shingle exchange to
         // session parallelism — see the p17 note (same collapsed join-back
         // + self-join fan-out stage, same bounded-input posture).
         .repartition(s.sparkContext.defaultParallelism, col("shingle"))
-      val dfc = sh.groupBy(col("shingle")).agg(count(lit(1)).as("n_docs"))
-      val cap = docs.agg(greatest(lit(2L),
-        (count(lit(1)) * 0.02).cast("bigint")).as("cap"))
-      val rare = sh.join(broadcast(cap))
-        .join(dfc, "shingle").where(col("n_docs") <= col("cap"))
-        .select(col("doc_id"), col("shingle"))
+      val rare = Kit.rareShingles(sh, docs)
       val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = rare.select(col("doc_id").as("doc_a"), col("shingle"))
-        .join(rare.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+      val inter = Kit.sharedCounts(rare)
       val pairs = inter
         .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
@@ -233,7 +221,7 @@ object PipelineQueries17 {
              round(CAST(count(DISTINCT gram) AS DOUBLE) / count(*), 6) AS distinct_ratio
       FROM g GROUP BY source, n ORDER BY source, n""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("w"))
+        .select(col("source"), Kit.words(col("text")).as("w"))
       val uni = t.select(col("source"), lit(1).as("n"), explode(col("w")).as("gram"))
       val bi = t.select(col("source"), lit(2).as("n"),
         explode(graft.Functions.wordShingles(col("w"), 2)).as("gram"))
@@ -272,8 +260,7 @@ object PipelineQueries17 {
       val nd = docs.agg((max(col("doc_id")) + 1).as("n"))
       val sh = docs.join(broadcast(nd))
         .select(floor(col("doc_id") * 10 / col("n")).cast("int").as("decile"),
-          explode(array_distinct(graft.Functions.wordShingles(
-            toks(col("text")), 3))).as("shingle"))
+          explode(Kit.shingleSet(Kit.words(col("text")), 3)).as("shingle"))
       val fst = sh.groupBy(col("shingle")).agg(min(col("decile")).as("decile"))
       val cnt = fst.groupBy(col("decile")).agg(count(lit(1)).as("new_shingles"))
       cnt.select(col("decile"), col("new_shingles"),

@@ -23,8 +23,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries18 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p84: docs with doc_id % 10 >= `SplitMod` form the incoming shard. */
   private val SplitMod = 8
   private val DupThreshold = 0.5
@@ -105,9 +103,7 @@ object PipelineQueries18 {
       LEFT JOIN verified v ON v.new_id = d.doc_id
       GROUP BY d.doc_id ORDER BY d.doc_id""")) { (s, dir) =>
       val docs = Tables.dfSpread(s, dir, "documents")
-      val sh = docs.select(col("doc_id"),
-        explode(array_distinct(graft.Functions.wordShingles(
-          toks(col("text")), 3))).as("shingle"))
+      val sh = Kit.shingleRows(docs)
       // banding kernel shared with the streaming twin
       // (graft.streaming.DocumentStreams.minhashCandidates)
       val bands = graft.streaming.DocumentStreams.bandTable(docs)
@@ -161,7 +157,7 @@ object PipelineQueries18 {
              CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(CAST(score AS DECIMAL(38,2))) AS DOUBLE) AS sum_score
       FROM dd GROUP BY lang, decile ORDER BY lang, decile""")) { (s, dir) =>
-      val w = toks(col("text"))
+      val w = Kit.words(col("text"))
       val sig = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("lang"), ensembleScore(w).as("score"))
       val qs = (1 to 9).map(i => i / 10.0 -> s"q$i")

@@ -23,8 +23,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries19 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p88 fractions and the phase-A bucket width (1 minute, in seconds). */
   private val Fractions = Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")
   private val BucketS = 60.0
@@ -65,7 +63,7 @@ object PipelineQueries19 {
              round(CAST(mx AS DOUBLE) / CAST(s0 AS DOUBLE), 6) AS top1_share
       FROM a ORDER BY axis""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), col("lang"), size(toks(col("text"))).cast("long").as("nt"))
+        .select(col("source"), col("lang"), size(Kit.words(col("text"))).cast("long").as("nt"))
       val u = tok
         .select(explode(array(
           struct(lit("source").as("axis"), col("source").as("unit")),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Functions, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 
 /** Pipeline coverage batch 2: the IVF-style ANN scale path and a composed
   * end-to-end training-data pipeline (quality filter → exact dedup →
@@ -105,29 +105,9 @@ object PipelineQueries2 {
       val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
         "p17_dedup_jaccard_capped", "p191_jaccard_prefix_filter",
         TruthTier.documentsBound)
-      val sh = docs.select(col("doc_id"),
-        explode(array_distinct(graft.Functions.wordShingles(
-          split(lower(col("text")), "\\s+"), 3))).as("shingle"))
-      // Document frequency via groupBy + join-back, NOT a window over the
-      // shingle key: partial (map-side) aggregation collapses a hot shingle's
-      // occurrences before the shuffle, whereas count(*) OVER (PARTITION BY
-      // shingle) would route every occurrence of a stop-phrase to one task —
-      // exactly the skew this query exists to dodge. The join back to `sh` is
-      // AQE-skew-splittable. The corpus cardinality arrives as a broadcast
-      // 1-row aggregate instead of a separate driver-side count() scan.
-      val nDocs = docs.agg(count(lit(1)).as("corpus_n"))
-      val rareShingles = sh.groupBy(col("shingle")).agg(count(lit(1)).as("n_docs"))
-        .crossJoin(broadcast(nDocs))
-        .filter(col("n_docs") <= greatest(lit(2L), (col("corpus_n") * 0.02).cast("bigint")))
-        .select(col("shingle"))
-      val rare = sh.join(rareShingles, "shingle").select(col("doc_id"), col("shingle"))
+      val rare = Kit.rareShingles(Kit.shingleRows(docs), docs)
       val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val a = rare.alias("a")
-      val b = rare.alias("b")
-      val inter = a.join(b, col("a.shingle") === col("b.shingle")
-          && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("i"))
+      val inter = Kit.sharedCounts(rare)
       val jac = col("i").cast("double") / (col("sa.n") + col("sb.n") - col("i"))
       inter
         .join(sizes.alias("sa"), col("sa.doc_id") === col("doc_a"))

@@ -36,7 +36,7 @@ object PipelineQueries21 {
              CAST(min(doc_b - doc_a) AS BIGINT) AS min_dist,
              CAST(max(doc_b - doc_a) AS BIGINT) AS max_dist
       FROM pairs GROUP BY 1 ORDER BY dist_bucket""")) { (s, dir) =>
-      PipelineQueries3.minhashPairs(s, dir)
+      Kit.minhashPairs(s, dir)
         .select((col("doc_b") - col("doc_a")).as("d"))
         .groupBy((length(bin(col("d"))) - 1).cast("int").as("dist_bucket"))
         .agg(count(lit(1)).as("n_pairs"),
@@ -106,7 +106,7 @@ object PipelineQueries21 {
       JOIN src b ON b.doc_id = p.doc_b
       GROUP BY 1, 2 ORDER BY src_a, src_b""")) { (s, dir) =>
       val src = Tables.df(s, dir, "documents").select(col("doc_id"), col("source"))
-      PipelineQueries3.minhashPairs(s, dir)
+      Kit.minhashPairs(s, dir)
         .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
         .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
         .groupBy(least(col("sa"), col("sb")).as("src_a"),

@@ -70,7 +70,7 @@ object PipelineQueries22 {
       // minhash candidate pipeline executed twice per run. One shared
       // localCheckpoint materializes it once; results unchanged
       // (re-verified vs DuckDB at sf0.001/sf0.01).
-      val pairs = PipelineQueries3.minhashPairs(s, dir).localCheckpoint()
+      val pairs = Kit.minhashPairs(s, dir).localCheckpoint()
       val comp = ConnectedComponents.minLabelPropagation(
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         .select(col("node").as("doc_id"), col("comp"))
@@ -122,8 +122,8 @@ object PipelineQueries22 {
       val q = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"),
           PipelineQueries18.ensembleScore(
-            split(lower(col("text")), "\\s+")).as("score"))
-      val g = PipelineQueries3.minhashPairs(s, dir)
+            Kit.words(col("text"))).as("score"))
+      val g = Kit.minhashPairs(s, dir)
         .join(q.select(col("doc_id").as("doc_a"), col("score").as("qa")), "doc_a")
         .join(q.select(col("doc_id").as("doc_b"), col("score").as("qb")), "doc_b")
         .select(abs(col("qa") - col("qb")).as("gap"))
@@ -155,7 +155,7 @@ object PipelineQueries22 {
              CAST(n_docs AS BIGINT) AS n_docs,
              CAST(n_sources AS BIGINT) AS n_sources
       FROM fam WHERE n_docs > 1 ORDER BY family_id""")) { (s, dir) =>
-      val w = split(lower(col("text")), "\\s+")
+      val w = Kit.words(col("text"))
       Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("source"), w.as("w"))
         .filter(size(col("w")) >= 8)

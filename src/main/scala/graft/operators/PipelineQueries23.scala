@@ -58,7 +58,7 @@ object PipelineQueries23 {
       val q = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           PipelineQueries18.ensembleScore(
-            split(lower(col("text")), "\\s+")).as("score"))
+            Kit.words(col("text"))).as("score"))
       val dx = col("doc_id").cast("decimal(38,0)")
       val dy = col("score").cast("decimal(38,2)")
       val a = q.groupBy(col("source"))

@@ -45,7 +45,7 @@ object PipelineQueries25 {
       val sig = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           PipelineQueries18.ensembleScore(
-            split(lower(col("text")), "\\s+")).as("score"))
+            Kit.words(col("text"))).as("score"))
       def bounds(v: org.apache.spark.sql.Column, qs: Seq[(Double, String)]) =
         broadcast(ExactPercentile.percentiles(
           sig.withColumn("g", lit(1)), "g", v, qs).drop("g"))

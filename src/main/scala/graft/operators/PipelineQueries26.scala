@@ -24,8 +24,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries26 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p102: query-doc modulus, per-arm candidate pool, RRF constant, final
     * top-k. */
   private val QMod = 125
@@ -105,7 +103,7 @@ object PipelineQueries26 {
       val qids = docs.filter(col("doc_id") % QMod === 0)
         .select(col("doc_id").as("qid"))
       val sh = docs.select(col("doc_id"),
-        explode(array_distinct(graft.Functions.wordShingles(toks(col("text")), 3))).as("s"))
+        explode(Kit.shingleSet(Kit.words(col("text")), 3)).as("s"))
       val qsh = sh.join(broadcast(qids), sh("doc_id") === qids("qid"))
         .select(col("qid"), col("s"))
       val lexW = Window.partitionBy(col("qid")).orderBy(col("ov").desc, col("cid"))
@@ -186,7 +184,7 @@ object PipelineQueries26 {
       CROSS JOIN du CROSS JOIN ku CROSS JOIN tot
       ORDER BY source""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("tk"))
+        .select(col("source"), Kit.words(col("text")).as("tk"))
         .filter(size(col("tk")) >= 3)
       val grams = t.select(col("source"),
         explode(transform(sequence(lit(1L), (size(col("tk")) - 2).cast("long")),

@@ -32,8 +32,6 @@ import graft.{Functions, QueryDef, Tables}
   */
 object PipelineQueries27 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p104: non-overlapping block width (tokens). */
   private val BlockW = 10
 
@@ -79,7 +77,7 @@ object PipelineQueries27 {
       FROM sp JOIN kd ON sp.h = kd.h
       GROUP BY sp.doc_id ORDER BY sp.doc_id""")) { (s, dir) =>
       val tt = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("t"))
+        .select(col("doc_id"), Kit.words(col("text")).as("t"))
         .filter(size(col("t")) >= BlockW)
       val sp = tt.select(col("doc_id"), explode(transform(
           sequence(lit(1), size(col("t")) - (BlockW - 1), lit(BlockW)),
@@ -141,20 +139,9 @@ object PipelineQueries27 {
         TruthTier.documentsBound,
         "the prefix-filter pattern applied on the smaller side's prefix " +
           "(overlap >= t*min bound), or a bounded audit sample")
-      val sh = docs.select(col("doc_id"),
-        explode(array_distinct(Functions.wordShingles(
-          toks(col("text")), 3))).as("shingle"))
-      val nDocs = docs.agg(count(lit(1)).as("corpus_n"))
-      val rareShingles = sh.groupBy(col("shingle")).agg(count(lit(1)).as("n_docs"))
-        .crossJoin(broadcast(nDocs))
-        .filter(col("n_docs") <= greatest(lit(2L), (col("corpus_n") * 0.02).cast("bigint")))
-        .select(col("shingle"))
-      val rare = sh.join(rareShingles, "shingle").select(col("doc_id"), col("shingle"))
+      val rare = Kit.rareShingles(Kit.shingleRows(docs), docs)
       val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = rare.alias("a").join(rare.alias("b"),
-          col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("i"))
+      val inter = Kit.sharedCounts(rare)
       val cont = col("i").cast("double") / least(col("sa.n"), col("sb.n"))
       val jac = col("i").cast("double") / (col("sa.n") + col("sb.n") - col("i"))
       inter
@@ -266,7 +253,7 @@ object PipelineQueries27 {
       def frac(num: Column): Column =
         round(num.cast("double") / col("total_chars"), 6)
       Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("t"))
+        .select(col("doc_id"), Kit.words(col("text")).as("t"))
         .filter(size(col("t")) >= 5)
         .withColumn("total_chars",
           aggregate(transform(col("t"), x => length(x).cast("long")),
@@ -322,7 +309,7 @@ object PipelineQueries27 {
       FROM scored s JOIN cuts c ON s.lang = c.lang
       ORDER BY s.doc_id""")) { (s, dir) =>
       val toksDf = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"), col("lang"), explode(Kit.words(col("text"))).as("tok"))
       val tf = toksDf.groupBy(col("tok")).agg(count(lit(1)).as("c"))
       val tot = tf.agg(sum(col("c")).as("n"))
       val top = tf.orderBy(col("c").desc, col("tok")).limit(1000)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Functions, QueryDef, Tables}
 
@@ -25,8 +24,6 @@ import graft.{Functions, QueryDef, Tables}
   *    bitwise-identical thresholds.
   */
 object PipelineQueries28 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p108: block width (tokens) and trim percentile. */
   private val BlockW = 10
@@ -78,7 +75,7 @@ object PipelineQueries28 {
       FROM blk CROSS JOIN cut
       GROUP BY doc_id ORDER BY doc_id""")) { (s, dir) =>
       val tt = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("t"))
+        .select(col("doc_id"), Kit.words(col("text")).as("t"))
         .filter(size(col("t")) >= BlockW)
         .select(col("doc_id"),
           slice(col("t"), lit(1), size(col("t")) - (size(col("t")) % BlockW)).as("t"))

@@ -42,8 +42,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries29 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p111: vocabulary cap (the broadcastable LM size at any corpus scale). */
   private val VocabK = 500
 
@@ -119,7 +117,7 @@ object PipelineQueries29 {
       FROM pt LEFT JOIN vocab ON pt.tok = vocab.tok CROSS JOIN tot
       GROUP BY pt.doc_id ORDER BY pt.doc_id""")) { (s, dir) =>
       val pt = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"), col("lang"), explode(Kit.words(col("text"))).as("tok"))
       val tf = pt.groupBy(col("tok"))
         .agg(count(lit(1)).as("rc"),
           count(when(col("lang") === "en", 1)).as("tc"))
@@ -212,7 +210,7 @@ object PipelineQueries29 {
              CAST(est - c AS BIGINT) AS overcount
       FROM est ORDER BY exact_count DESC, tok""")) { (s, dir) =>
       val pt = Tables.dfSpread(s, dir, "documents")
-        .select(explode(toks(col("text"))).as("tok"))
+        .select(explode(Kit.words(col("text"))).as("tok"))
       val tf = pt.groupBy(col("tok")).agg(count(lit(1)).as("c"))
       val ds = (0 until 4).map(lit(_))
       def bucket(d: Column, tok: Column): Column =

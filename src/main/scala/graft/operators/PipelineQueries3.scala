@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
@@ -15,8 +15,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries3 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** Broadcast `df` only when a bounded count probe stays at or under
     * `maxRows`; otherwise return it unhinted so the join planner falls back
     * to a shuffle join. The probe (`limit(maxRows+1).count()`) touches at
@@ -28,39 +26,6 @@ object PipelineQueries3 {
   private[graft] def broadcastIfSmall(df: DataFrame, maxRows: Int): DataFrame = {
     val probe = df.limit(maxRows + 1).count()
     if (probe <= maxRows) broadcast(df) else df
-  }
-
-  /** Distinct word n-gram shingles of the token array. */
-  private def shingles(tokens: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(tokens) - (n - 1), lit(0))),
-      i => concat_ws(" ", slice(tokens, i, lit(n)))))
-
-  /** The p02 LSH candidate pairs (3-shingles → 8 minhashes → 4 bands of 2),
-    * reused as the edge source for component resolution. */
-  private[graft] def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.dfSpread(s, dir, "documents")
-      .withColumn("sh", shingles(toks(col("text")), 3))
-    val withSig = docs.withColumn("sig",
-      graft.functions.NativeExpressions.minhashSignature(col("sh"), 8))
-    val bands = withSig.select(
-      col("doc_id"),
-      explode(transform(sequence(lit(0), lit(3)), b => struct(
-        b.as("band"),
-        md5(concat_ws("|", slice(col("sig"), b * 2 + 1, lit(2)))).as("bucket")))).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    // Pair emission without a self-join (p02's spelling): a band self-join
-    // recomputes the signature lineage once per side — at sf0.1 that alone
-    // is ~4s of the CC queries' wall time, and at 100 TB it doubles the
-    // dominant map stage. Group on (band, bucket), emit i<j pairs
-    // row-locally; per-bucket lists are bounded by near-dup cluster size.
-    bands.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("doc_a"), col("ids"))
-      .select(col("doc_a"),
-        explode(filter(col("ids"), x => x > col("doc_a"))).as("doc_b"))
-      .distinct()
   }
 
   /** The p02 candidate-pair CTEs as DuckDB SQL, shared by the p18 oracle. */
@@ -121,7 +86,7 @@ object PipelineQueries3 {
         FROM reach JOIN edges e ON e.src = reach.node)
       SELECT node AS doc_id, CAST(min(r) AS BIGINT) AS component
       FROM reach GROUP BY node ORDER BY doc_id""")) { (s, dir) =>
-      val pairs = minhashPairs(s, dir)
+      val pairs = Kit.minhashPairs(s, dir)
       ConnectedComponents.minLabelPropagation(
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         .select(col("node").as("doc_id"), col("comp").as("component"))
@@ -147,7 +112,7 @@ object PipelineQueries3 {
         FROM reach JOIN edges e ON e.src = reach.node)
       SELECT node AS doc_id, CAST(min(r) AS BIGINT) AS component
       FROM reach GROUP BY node ORDER BY doc_id""")) { (s, dir) =>
-      val pairs = minhashPairs(s, dir)
+      val pairs = Kit.minhashPairs(s, dir)
       ConnectedComponents.largeSmallStar(
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         .select(col("node").as("doc_id"), col("comp").as("component"))
@@ -217,7 +182,7 @@ object PipelineQueries3 {
       HAVING count(DISTINCT c.g) >= 3
       ORDER BY doc_id, bench_id""")) { (s, dir) =>
       val grams = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), explode(shingles(toks(col("text")), 5)).as("g"))
+        .select(col("doc_id"), explode(Kit.shingleSet(Kit.words(col("text")), 5)).as("g"))
       val bench = grams.filter(col("doc_id") % 20 === 0)
         .select(col("doc_id").as("bench_id"), col("g"))
       val corpus = grams.filter(col("doc_id") % 20 =!= 0)
@@ -271,7 +236,7 @@ object PipelineQueries3 {
              round(CAST(max(c) AS DOUBLE) / sum(c), 6) AS top_token_mass
       FROM tf GROUP BY doc_id ORDER BY doc_id""")) { (s, dir) =>
       Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"), explode(Kit.words(col("text"))).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"))
         .agg(

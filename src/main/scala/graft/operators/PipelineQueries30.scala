@@ -33,8 +33,6 @@ import graft.{Functions, QueryDef, Tables}
   */
 object PipelineQueries30 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p115: hot-block cap (boilerplate prefixes are p49's job, not a
     * quadratic pair-join's) and the keep threshold. */
   private val BlockCap = 50
@@ -148,7 +146,7 @@ object PipelineQueries30 {
       ORDER BY a_id, b_id""")) { (s, dir) =>
       val d = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("text"),
-          concat_ws(" ", slice(toks(col("text")), 1, 3)).as("blk"),
+          concat_ws(" ", slice(Kit.words(col("text")), 1, 3)).as("blk"),
           floor(length(col("text")) / 50).as("band"))
       val sz = d.groupBy(col("blk"), col("band")).agg(count(lit(1)).as("c"))
       val db = d.join(sz, Seq("blk", "band")).filter(col("c") <= BlockCap)
@@ -276,7 +274,7 @@ object PipelineQueries30 {
       val d = Tables.dfSpread(s, dir, "documents")
         .select(floor(expr(hexFracSql("md5(cast(doc_id AS string))")) * Shards)
           .cast("int").as("shard"),
-          size(toks(col("text"))).as("n_toks"), col("n_chars"))
+          size(Kit.words(col("text"))).as("n_toks"), col("n_chars"))
       val sh = d.groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"),
           sum(col("n_chars")).as("n_chars"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Functions, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 
 /** Pipeline coverage batch 31 — corpus-statistics instrumentation: Bloom
   * filter sizing, marginal-novelty profiling, and Heaps-law fitting.
@@ -28,8 +28,6 @@ import graft.{Functions, QueryDef, Tables}
   *    10-row frame; all corpus-sized work is two partial-agg shuffles.
   */
 object PipelineQueries31 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p119: Bloom geometry — k hashes into m = 16³ bits. */
   private val BloomK = 3
@@ -133,7 +131,7 @@ object PipelineQueries31 {
       GROUP BY sh.doc_id ORDER BY sh.doc_id""")) { (s, dir) =>
       val sh = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"),
-          explode(array_distinct(Functions.wordShingles(toks(col("text")), NovelN)))
+          explode(Kit.shingleSet(Kit.words(col("text")), NovelN))
             .as("gram"))
       val first = sh.groupBy(col("gram")).agg(min(col("doc_id")).as("first_doc"))
       val novel = count(when(col("first_doc") === col("doc_id"), 1))
@@ -187,7 +185,7 @@ object PipelineQueries31 {
       val dt = docs.crossJoin(broadcast(mx))
         .select(floor(col("doc_id").cast("double") * 10 / (col("mx") + 1))
           .cast("int").as("dec"),
-          col("doc_id"), toks(col("text")).as("t"))
+          col("doc_id"), Kit.words(col("text")).as("t"))
       val tok = dt.groupBy(col("dec")).agg(sum(size(col("t"))).as("toks"))
       val tu = dt.select(col("dec"), explode(col("t")).as("tok"))
         .groupBy(col("tok")).agg(min(col("dec")).as("first_dec"))

@@ -314,7 +314,7 @@ object PipelineQueries33 {
              round(CAST(sum(CAST(kterm AS DECIMAL(38,9))) AS DOUBLE), 6) AS js
       FROM kt GROUP BY src_a, src_b ORDER BY src_a, src_b""")) { (s, dir) =>
       val wc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), explode(split(lower(col("text")), "\\s+")).as("w"))
+        .select(col("source"), explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
       // top-K vocabulary via TakeOrdered — never a global window over the
       // corpus-sized vocabulary (the skew-safe cap, bounded at any scale)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -42,14 +41,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries34 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
-  /** Distinct word 3-gram shingles (p02's spelling). */
-  private def shingles3(tokens: Column): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(tokens) - 2, lit(0))),
-      i => concat_ws(" ", slice(tokens, i, lit(3)))))
-
   /** ±1 sign from an md5 hex digit — identical SQL text on both engines. */
   private val SignSql =
     "CASE WHEN instr('01234567', substr(md5(CAST(i AS STRING) || '_' || " +
@@ -70,18 +61,9 @@ object PipelineQueries34 {
              CAST(CAST(sum(s * (s - 1)) AS BIGINT) / 2 AS BIGINT) AS est_pairs,
              round(CAST(max(s) AS DOUBLE) * count(*) / sum(s), 6) AS skew
       FROM bs GROUP BY band ORDER BY band""")) { (s, dir) =>
-      // p02's exact signature pipeline (PipelineQueries3.minhashPairs), cut
-      // at the bands stage: the audit reads the LSH table, not the pairs
-      val bands = Tables.dfSpread(s, dir, "documents")
-        .withColumn("sh", shingles3(toks(col("text"))))
-        .withColumn("sig",
-          graft.functions.NativeExpressions.minhashSignature(col("sh"), 8))
-        .select(col("doc_id"),
-          explode(transform(sequence(lit(0), lit(3)), b => struct(
-            b.as("band"),
-            md5(concat_ws("|", slice(col("sig"), b * 2 + 1, lit(2)))).as("bucket"))))
-            .as("bb"))
-        .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+      // p02's exact signature pipeline (Kit.minhashPairs), cut at the bands
+      // stage: the audit reads the LSH table, not the pairs
+      val bands = Kit.bands(Kit.signatures(Tables.dfSpread(s, dir, "documents")), 4, 2)
       val bs = bands.groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("s"))
       bs.groupBy(col("band"))
         .agg(sum(col("s")).cast("bigint").as("n_docs"),

@@ -41,8 +41,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries35 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** The fixed EN stopword probe shared by p132/p133 (spelled identically in
     * the oracle SQL below). */
   private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
@@ -108,7 +106,7 @@ object PipelineQueries35 {
       GROUP BY 1, 2 ORDER BY 1, 2""")) { (s, dir) =>
       val d = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          (col("doc_id") % 5 === 0).as("is_test"), toks(col("text")).as("ws"))
+          (col("doc_id") % 5 === 0).as("is_test"), Kit.words(col("text")).as("ws"))
       val tok = d.select(col("doc_id"), col("lang"), col("is_test"),
         explode(col("ws")).as("w"))
       val train = tok.filter(!col("is_test"))
@@ -168,7 +166,7 @@ object PipelineQueries35 {
       SELECT bucket, n_docs, conf, acc, round(abs(conf - acc), 6) AS gap
       FROM b ORDER BY bucket""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("lang"), toks(col("text")).as("ws"))
+        .select(col("lang"), Kit.words(col("text")).as("ws"))
         .select((col("lang") === "en").cast("int").as("pos"),
           enRatio(col("ws"), 6).as("r"))
       val b = sc.groupBy(least(floor(col("r") * 20.0), lit(19.0)).cast("int")
@@ -211,7 +209,7 @@ object PipelineQueries35 {
       SELECT n_pos, n_neg, auc, round(2.0 * auc - 1.0, 6) AS gini FROM a""")) {
       (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("lang"), toks(col("text")).as("ws"))
+        .select(col("lang"), Kit.words(col("text")).as("ws"))
         .select((col("lang") === "en").cast("int").as("pos"),
           enRatio(col("ws"), 4).as("q"))
       val g = sc.groupBy(col("q"))

@@ -37,8 +37,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries36 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** p132/p133's fixed EN stopword probe (same spelling both engines). */
   private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by")
@@ -92,7 +90,7 @@ object PipelineQueries36 {
              round(tpr - p_tpr, 6) AS tpr_gap
       FROM grp CROSS JOIN pooled ORDER BY source""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), col("lang"), toks(col("text")).as("ws"))
+        .select(col("source"), col("lang"), Kit.words(col("text")).as("ws"))
         .select(col("source"),
           (col("lang") === "en").cast("int").as("pos"),
           (enRatio(col("ws")) >= Tau).cast("int").as("sel"))
@@ -152,7 +150,7 @@ object PipelineQueries36 {
              round(ci.qs[1], 6) AS ci_lo, round(ci.qs[2], 6) AS ci_hi
       FROM pt CROSS JOIN se CROSS JOIN ci""")) { (s, dir) =>
       val x = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("ws"))
+        .select(col("doc_id"), Kit.words(col("text")).as("ws"))
         .select(col("doc_id"), enRatio(col("ws")).as("x"))
       // all B=200 replicates in ONE map-side pass: the explode is local to
       // each task and the only shuffle is the 200-cell partial agg
@@ -226,7 +224,7 @@ object PipelineQueries36 {
       ORDER BY mi DESC, word LIMIT 20""")) { (s, dir) =>
       val pres = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          explode(array_distinct(toks(col("text")))).as("w"))
+          explode(array_distinct(Kit.words(col("text")))).as("w"))
         .distinct()
       val cell = pres.groupBy(col("w"), col("lang"))
         .agg(count(lit(1)).cast("bigint").as("n_wl"))

@@ -35,8 +35,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries37 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by")
   private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
@@ -133,7 +131,7 @@ object PipelineQueries37 {
                AS df_welch
       FROM w""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("ws"))
+        .select(col("source"), Kit.words(col("text")).as("ws"))
         .select((substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
           enRatio(col("ws")).as("x"))
       val g = sc.groupBy(col("grp"))
@@ -205,7 +203,7 @@ object PipelineQueries37 {
              CASE WHEN rank <= kmax.k THEN 1 ELSE 0 END AS rejected
       FROM crit CROSS JOIN kmax ORDER BY rank""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("ws"))
+        .select(col("source"), Kit.words(col("text")).as("ws"))
         .select(col("source"), enRatio(col("ws")).as("x"))
       val pool = sc.agg(count(lit(1)).cast("bigint").as("n"),
         round(sum(col("x").cast("decimal(38,6)")).cast("double")

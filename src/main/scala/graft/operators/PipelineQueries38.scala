@@ -36,8 +36,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries38 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by")
   private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
@@ -84,7 +82,7 @@ object PipelineQueries38 {
                   THEN 1 ELSE 0 END AS rejected
       FROM tot CROSS JOIN a""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("ws"))
+        .select(col("source"), Kit.words(col("text")).as("ws"))
         .select((substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
           enRatio(col("ws"), 4).as("q"))
       val g = sc.groupBy(col("q"))
@@ -149,7 +147,7 @@ object PipelineQueries38 {
                AS spearman_rho
       FROM a""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("text"), toks(col("text")).as("ws"))
+        .select(col("text"), Kit.words(col("text")).as("ws"))
         .select(enRatio(col("ws"), 4).as("q"), length(col("text")).as("y"))
       def midranks(frame: org.apache.spark.sql.DataFrame, v: String, out: String) = {
         val cnt = frame.groupBy(col(v)).agg(count(lit(1)).cast("bigint").as("c"))
@@ -219,7 +217,7 @@ object PipelineQueries38 {
                    / (count(*) + 1), 6) AS p_perm
       FROM nd CROSS JOIN obs GROUP BY obs.d_obs""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), col("source"), toks(col("text")).as("ws"))
+        .select(col("doc_id"), col("source"), Kit.words(col("text")).as("ws"))
         .select(col("doc_id"),
           (substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
           enRatio(col("ws"), 6).as("x"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Functions, QueryDef, Tables}
@@ -16,8 +16,6 @@ import graft.{Functions, QueryDef, Tables}
   * window over a hot key.
   */
 object PipelineQueries4 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -177,7 +175,7 @@ object PipelineQueries4 {
       FROM sp JOIN cnt USING (h)
       GROUP BY doc_id ORDER BY doc_id""")) { (s, dir) =>
       val tt = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("t"))
+        .select(col("doc_id"), Kit.words(col("text")).as("t"))
         .filter(size(col("t")) >= 10)
       val sp = tt.select(col("doc_id"), explode(array_distinct(transform(
           sequence(lit(1), size(col("t")) - 9, lit(5)),
@@ -219,7 +217,7 @@ object PipelineQueries4 {
       FROM toks t LEFT JOIN top ON t.tok = top.tok CROSS JOIN tot
       GROUP BY t.doc_id ORDER BY t.doc_id""")) { (s, dir) =>
       val toksDf = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"), explode(Kit.words(col("text"))).as("tok"))
       val tf = toksDf.groupBy(col("tok")).agg(count(lit(1)).as("c"))
       val tot = tf.agg(sum(col("c")).as("n"))
       val top = tf.orderBy(col("c").desc, col("tok")).limit(1000)
@@ -359,7 +357,7 @@ object PipelineQueries4 {
       FROM c GROUP BY lang, bin ORDER BY lang, bin""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          size(toks(col("text"))).cast("long").as("n_tokens"))
+          size(Kit.words(col("text"))).cast("long").as("n_tokens"))
       val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
       t.withColumn("before", sum(col("n_tokens")).over(w))

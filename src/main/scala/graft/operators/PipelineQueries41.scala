@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -33,8 +32,6 @@ import graft.{QueryDef, Tables}
   * rounded divisions; Benford expectations are literal constants.
   */
 object PipelineQueries41 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** ln(1+1/d)/ln(10) to 6dp, hardcoded so no libm call crosses engines. */
   private val Benford = Seq(
@@ -173,14 +170,8 @@ object PipelineQueries41 {
              round(CASE WHEN pp.v + tpp.v > 0
                THEN 2.0 * tp.v / (pp.v + tpp.v) END, 6) AS f1
       FROM n CROSS JOIN tp CROSS JOIN pp CROSS JOIN tpp""")) { (s, dir) =>
-      val shingles3 = (tokens: Column) => array_distinct(transform(
-        sequence(lit(1), greatest(size(tokens) - 2, lit(0))),
-        i => concat_ws(" ", slice(tokens, i, lit(3)))))
-      val k = Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", toks(col("text")))
-        .filter(size(col("t")) >= 3)
-        .withColumn("sig", graft.functions.NativeExpressions.minhashSignature(
-          shingles3(col("t")), 8))
+      val k = Kit.signatures(Tables.dfSpread(s, dir, "documents")
+          .filter(size(Kit.words(col("text"))) >= 3))
         .select(md5(concat_ws("|", col("sig"))).as("pred"),
           md5(substring(col("text"), 1, 128)).as("truth"))
       def pairs(f: org.apache.spark.sql.DataFrame, by: String) =

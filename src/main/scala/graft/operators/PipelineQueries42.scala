@@ -34,8 +34,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries42 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   private val K = 64
 
   /** p103's exact 52-bit hex fraction (bit-identical on both engines). */
@@ -87,7 +85,7 @@ object PipelineQueries42 {
       CROSS JOIN di CROSS JOIN est""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
         .select((substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
-          toks(col("text")).as("tk"))
+          Kit.words(col("text")).as("tk"))
         .filter(size(col("tk")) >= 3)
       val g = t.select(col("grp"),
         explode(transform(sequence(lit(1L), (size(col("tk")) - 2).cast("long")),
@@ -154,7 +152,7 @@ object PipelineQueries42 {
                     / sqrt((m * sjj - sj * sj) * (m * skk - sk * sk)) END, 6)
                AS assortativity
       FROM a CROSS JOIN nn CROSS JOIN ne""")) { (s, dir) =>
-      val pairs = PipelineQueries3.minhashPairs(s, dir)
+      val pairs = Kit.minhashPairs(s, dir)
       val dd = pairs.select(col("doc_a").as("doc"))
         .unionAll(pairs.select(col("doc_b").as("doc")))
         .groupBy(col("doc")).agg(count(lit(1)).cast("bigint").as("deg"))

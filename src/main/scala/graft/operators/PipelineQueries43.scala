@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -61,8 +60,6 @@ import graft.{QueryDef, Tables}
   * exact; outputs rounded 4–6dp.
   */
 object PipelineQueries43 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -227,7 +224,7 @@ object PipelineQueries43 {
       val d = Tables.dfSpread(s, dir, "documents").select(
         col("doc_id"), col("lang"),
         floor(col("n_chars") / 256.0).cast("long").as("lb"),
-        array_distinct(toks(col("text"))).as("tk"))
+        array_distinct(Kit.words(col("text"))).as("tk"))
       // bucket-partitioned rank: each (lang, length-bucket) sorts locally
       val byBucket = Window.partitionBy(col("lang"), col("lb")).orderBy(col("doc_id"))
       val cap = d.withColumn("rk", row_number().over(byBucket)).filter(col("rk") <= 15)
@@ -416,21 +413,12 @@ object PipelineQueries43 {
       val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
         "p160_idf_weighted_jaccard", "p192_wjaccard_prefix_filter",
         TruthTier.documentsBound)
-      val sh = docs.select(col("doc_id"),
-        explode(array_distinct(graft.Functions.wordShingles(
-          toks(col("text")), 3))).as("shingle"))
+      val sh = Kit.shingleRows(docs)
         // r19 OPTIMIZATION (guide §2.5): pin the sh-by-shingle exchange to
         // session parallelism — see the p17 note (same collapsed join-back
         // + self-join fan-out stage, same bounded-input posture).
         .repartition(s.sparkContext.defaultParallelism, col("shingle"))
-      val nDocs = docs.agg(count(lit(1)).as("corpus_n"))
-      // df via groupBy + join-back, never a window over the shingle key
-      // (p17's skew note applies verbatim)
-      val rare = sh
-        .join(sh.groupBy(col("shingle")).agg(count(lit(1)).as("n_docs")), "shingle")
-        .crossJoin(broadcast(nDocs))
-        .filter(col("n_docs") <= greatest(lit(2L),
-          floor(col("corpus_n") * 0.02).cast("bigint")))
+      val rare = Kit.rareShingles(sh, docs)
         .select(col("doc_id"), col("shingle"),
           round(log(col("corpus_n").cast("double") / col("n_docs")), 9)
             .cast("decimal(38,9)").as("idf"))

@@ -156,7 +156,7 @@ object PipelineQueries44 {
              CAST(count(DISTINCT da) AS BIGINT) AS n_docs_left
       FROM cat GROUP BY category ORDER BY category""")) { (s, dir) =>
       val t = Tables.df(s, dir, "documents")
-        .select(col("doc_id"), split(lower(col("text")), "\\s+").as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
         .filter(size(col("tk")) >= 16)
       val hs = t.select(col("doc_id"),
         md5(array_join(slice(col("tk"), 1, 8), " ")).as("head_h"),

@@ -52,8 +52,6 @@ import graft.{Functions, QueryDef, Tables}
   */
 object PipelineQueries45 {
 
-  private def toks(c: org.apache.spark.sql.Column) = split(lower(c), "\\s+")
-
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- deterministic bottom-k sample (p167)
@@ -110,7 +108,7 @@ object PipelineQueries45 {
              round(exp(-CAST(sum(lp) AS DOUBLE) / count(*)), 4) AS ppl
       FROM sc""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       val tr = t.filter(col("doc_id") % 2 === 0).select(explode(col("tk")).as("w"))
       val cw = tr.groupBy(col("w")).agg(count(lit(1)).as("c"))
       val tot = tr.agg(count(lit(1)).as("tt"))
@@ -168,7 +166,7 @@ object PipelineQueries45 {
              CAST(sum(CASE WHEN dist = 3 THEN 1 ELSE 0 END) AS BIGINT) AS d3
       FROM ver""")) { (s, dir) =>
       val sh = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), Functions.simhash60(toks(col("text"))).as("simhash"))
+        .select(col("doc_id"), Functions.simhash60(Kit.words(col("text"))).as("simhash"))
       val bands = sh.select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("band"))
         .withColumn("key",

@@ -106,7 +106,7 @@ object PipelineQueries46 {
                / CAST(tw AS DOUBLE), 6) AS cum_share
       FROM top, tot ORDER BY cnt DESC, word""")) { (s, dir) =>
       val c = Tables.dfSpread(s, dir, "documents")
-        .select(explode(split(lower(col("text")), "\\s+")).as("w"))
+        .select(explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       val p = c.withColumn("wt",
         round(sqrt(sqrt(col("c").cast("double") * col("c") * col("c"))), 6)

@@ -278,7 +278,7 @@ object PipelineQueries47 {
       SELECT sa AS source, sb AS nearest, delta
       FROM nn WHERE rk = 1 ORDER BY source""")) { (s, dir) =>
       val w = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), explode(split(lower(col("text")), "\\s+")).as("w"))
+        .select(col("source"), explode(Kit.words(col("text"))).as("w"))
       val topw = w.groupBy(col("w")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("w")).limit(30).select(col("w"))
       val st = w.groupBy(col("source")).agg(count(lit(1)).as("n"))

@@ -70,7 +70,7 @@ object PipelineQueries48 {
                AS DOUBLE) / sum(mass), 6) AS mass_collision_share
       FROM b""")) { (s, dir) =>
       val v = Tables.dfSpread(s, dir, "documents")
-        .select(explode(split(lower(col("text")), "\\s+")).as("w"))
+        .select(explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       val b = v.groupBy((conv(substring(md5(col("w")), 1, 8), 16, 10)
           .cast("long") % 4096).as("bucket"))
@@ -162,7 +162,7 @@ object PipelineQueries48 {
              round(CAST(n_hit AS DOUBLE) / n_grams, 6) AS hit_rate
       FROM hit ORDER BY order_n""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), split(lower(col("text")), "\\s+").as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       def grams(n: Int) = t.filter(size(col("tk")) >= n)
         .select((col("doc_id") % 2).as("half"), lit(n).as("n"),
           explode(expr(
@@ -331,7 +331,7 @@ object PipelineQueries48 {
       FROM agg""")) { (s, dir) =>
       val d = Tables.df(s, dir, "documents").select(
         col("doc_id"), md5(lower(col("text"))).as("h"),
-        round(size(split(lower(col("text")), "\\s+")).cast("double") /
+        round(size(Kit.words(col("text"))).cast("double") /
           greatest(col("n_chars"), lit(1L)), 6).as("quality"))
       // keep-BEST: struct-max elects the highest quality, smallest doc_id
       // on ties — the canonicalization policy, vs p01's keep-first

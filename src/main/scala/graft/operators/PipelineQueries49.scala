@@ -77,20 +77,10 @@ object PipelineQueries49 {
         WHERE df.n_docs <= greatest(2,
           CAST(floor(corpus_n * 0.02) AS BIGINT)))"""
 
-  /** Spark side of the same prologue (doc_id, shingle, n_docs). */
+  /** Spark side of the same prologue (doc_id, shingle, n_docs, corpus_n). */
   private def rareDf(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val docs = Tables.dfSpread(s, dir, "documents")
-    val sh = docs.select(col("doc_id"),
-      explode(array_distinct(graft.Functions.wordShingles(
-        split(lower(col("text")), "\\s+"), 3))).as("shingle"))
-    val nDocs = docs.agg(count(lit(1)).as("corpus_n"))
-    // df via groupBy + join-back, never a window over the shingle key
-    // (p17's stop-phrase skew note applies verbatim)
-    sh.join(sh.groupBy(col("shingle")).agg(count(lit(1)).as("n_docs")), "shingle")
-      .crossJoin(broadcast(nDocs))
-      .filter(col("n_docs") <= greatest(lit(2L),
-        floor(col("corpus_n") * 0.02).cast("bigint")))
-      .select(col("doc_id"), col("shingle"), col("n_docs"))
+    Kit.rareShingles(Kit.shingleRows(docs), docs)
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -224,16 +214,13 @@ object PipelineQueries49 {
               / (CAST(wa.w AS DOUBLE) + CAST(wb.w AS DOUBLE)
                  - CAST(shared AS DOUBLE)) >= 0.4
       ORDER BY doc_a, doc_b""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val nDocs = docs.agg(count(lit(1)).as("corpus_n"))
-      val base = rareDf(s, dir).crossJoin(broadcast(nDocs))
       // idf exactly as p160 spells it, carried in integer nano-units: the
       // DECIMAL(38,9) idf is k/1e9 exactly, so long sums here and decimal
       // sums there round-trip to the SAME nearest-double at the end — the
       // twin-equality spec pins it
       val idf = round(log(col("corpus_n").cast("double") / col("n_docs")), 9)
         .cast("decimal(38,9)")
-      val rn = base.select(col("doc_id"), col("shingle"), col("n_docs"),
+      val rn = rareDf(s, dir).select(col("doc_id"), col("shingle"), col("n_docs"),
         round(idf.cast("double") * 1e9, 0).cast("long").as("idf_n"))
       // same one-shuffle per-doc-array shape as p191.
       // r18 OPTIMIZATION (guide §4, the p191 merge-scan change): `wp` is

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -16,8 +16,6 @@ import graft.{QueryDef, Tables}
   * reduce the corpus to one row per source before any non-trivial work.
   */
 object PipelineQueries5 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** Chunk geometry: 32-token windows every 24 tokens (8-token overlap) —
     * sized to the synthetic corpus (~54 tokens/doc ⇒ 2-3 chunks) so the
@@ -57,7 +55,7 @@ object PipelineQueries5 {
              md5(array_to_string(list_slice(tk, start + 1, start + $ChunkSize), ' ')) AS chunk_md5
       FROM st ORDER BY doc_id, chunk_idx""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       t.select(col("doc_id"), col("tk"),
           explode(sequence(lit(0L), size(col("tk")).cast("long") - 1L,
             lit(ChunkStride.toLong))).as("start"))
@@ -97,7 +95,7 @@ object PipelineQueries5 {
              round((pow(tokens, 0.3) / z) / (tokens / all_tokens), 6) AS epochs
       FROM per CROSS JOIN tot ORDER BY source""")) { (s, dir) =>
       val per = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), size(toks(col("text"))).cast("long").as("n"))
+        .select(col("source"), size(Kit.words(col("text"))).cast("long").as("n"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("tokens"))
       val tot = per.agg(sum(col("tokens")).cast("double").as("all_tokens"),
@@ -171,7 +169,7 @@ object PipelineQueries5 {
       FROM t LEFT JOIN per USING (doc_id) ORDER BY doc_id""")) { (s, dir) =>
       val k = 8
       val docs = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       val grams = docs
         .filter(size(col("tk")) >= k)
         .select(col("doc_id"),

@@ -332,7 +332,7 @@ object PipelineQueries50 {
              round(CAST(cum_toks AS DOUBLE) / tot, 6) AS cum_token_share
       FROM ranked ORDER BY q DESC, source""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), split(lower(col("text")), "\\s+").as("toks"))
+        .select(col("source"), Kit.words(col("text")).as("toks"))
       val src = t.groupBy(col("source")).agg(
         sum(size(col("toks"))).cast("bigint").as("n_toks"),
         round(sum(size(filter(col("toks"),

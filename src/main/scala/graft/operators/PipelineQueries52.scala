@@ -196,7 +196,7 @@ object PipelineQueries52 {
       FROM per_bit ORDER BY bit""")) { (s, dir) =>
       val docs = Tables.dfSpread(s, dir, "documents")
       val sh = docs.select(col("doc_id"),
-        Functions.simhash60(split(lower(col("text")), "\\s+")).as("simhash"))
+        Functions.simhash60(Kit.words(col("text"))).as("simhash"))
       val bits = sh.select(col("doc_id"),
           explode(sequence(lit(0), lit(59))).as("bit"),
           col("simhash"))

@@ -98,7 +98,7 @@ object PipelineQueries53 {
       val tf = Tables.dfSpread(s, dir, "documents")
         .select(col("lang"),
           explode(graft.Functions.wordShingles(
-            split(lower(col("text")), "\\s+"), 2)).as("tok"))
+            Kit.words(col("text")), 2)).as("tok"))
         .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("r"))
       val cc = tf.groupBy(col("lang"), col("r")).agg(count(lit(1)).as("n_r"))
       val n1 = sum(when(col("r") === 1, col("n_r")).otherwise(0L))
@@ -200,7 +200,7 @@ object PipelineQueries53 {
       // and the distinct collapses map-side before the register shuffle
       val tok = Tables.dfSpread(s, dir, "documents")
         .select(col("lang"),
-          explode(split(lower(col("text")), "\\s+")).as("tok"))
+          explode(Kit.words(col("text"))).as("tok"))
         .filter(col("tok") =!= "").distinct()
       val h = tok.select(col("lang"),
         conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("hv"))
@@ -278,7 +278,7 @@ object PipelineQueries53 {
       FROM cells""")) { (s, dir) =>
       val perDoc = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
-          explode(split(lower(col("text")), "\\s+")).as("tok"))
+          explode(Kit.words(col("text"))).as("tok"))
         .filter(col("tok") =!= "")
         .groupBy(col("doc_id"), col("lang")).agg(
           count(lit(1)).as("n_toks"),
@@ -433,7 +433,7 @@ object PipelineQueries53 {
       // broadcast-filtered view of the same frame. Identical counts; rows
       // re-verified vs DuckDB at sf0.001/sf0.01.
       val docsTok = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), split(lower(col("text")), "\\s+").as("tks"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tks"))
       val dl = docsTok
         .select(col("doc_id"),
           size(filter(col("tks"), t => t =!= "")).cast("long").as("dl"))

@@ -241,8 +241,8 @@ object PipelineQueries54 {
       // distinct-token count (vocabulary breadth) predicting char length
       val f = Tables.dfSpread(s, dir, "documents").select(
         col("n_chars").as("y"),
-        size(split(lower(col("text")), "\\s+")).as("x1"),
-        size(array_distinct(split(lower(col("text")), "\\s+"))).as("x2"))
+        size(Kit.words(col("text"))).as("x1"),
+        size(array_distinct(Kit.words(col("text")))).as("x2"))
       val sums = f.agg(
         count(lit(1)).as("n"),
         sum(col("x1")).as("s1"), sum(col("x2")).as("s2"), sum(col("y")).as("sy"),
@@ -367,7 +367,7 @@ object PipelineQueries54 {
       FROM g JOIN t_within ON g.source = t_within.source, tot
       ORDER BY g.source""")) { (s, dir) =>
       val x = Tables.dfSpread(s, dir, "documents").select(col("source"),
-        size(split(lower(col("text")), "\\s+")).as("x"))
+        size(Kit.words(col("text"))).as("x"))
       val g = x.groupBy(col("source")).agg(count(lit(1)).as("n_g"),
         sum(col("x")).as("x_g"))
       val tot = g.agg(sum(col("n_g")).as("n"), sum(col("x_g")).as("xt"))

@@ -316,7 +316,7 @@ object PipelineQueries55 {
       val tf = Tables.dfSpread(s, dir, "documents")
         .select(col("source"),
           explode(graft.Functions.wordShingles(
-            split(lower(col("text")), "\\s+"), 2)).as("b"))
+            Kit.words(col("text")), 2)).as("b"))
         .groupBy(col("source"), col("b"))
         .agg(count(lit(1)).cast("bigint").as("r"))
       val cc = tf.groupBy(col("source"), col("r"))
@@ -368,7 +368,7 @@ object PipelineQueries55 {
       FROM lo ORDER BY w""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
         .select(when(col("lang") === "en", 1L).otherwise(0L).as("is_en"),
-          explode(split(lower(col("text")), "\\s+")).as("w"))
+          explode(Kit.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
       val tc = tok.groupBy(col("w")).agg(
         sum(col("is_en")).cast("bigint").as("c_en"),
@@ -422,7 +422,7 @@ object PipelineQueries55 {
       FROM a""")) { (s, dir) =>
       val docs = Tables.dfSpread(s, dir, "documents")
       val med = docs.agg(expr("percentile(n_chars, 0.5)").as("m"))
-      val nToks = size(split(lower(col("text")), "\\s+"))
+      val nToks = size(Kit.words(col("text")))
       val h = docs.crossJoin(broadcast(med)).select(
         when(col("n_chars").cast("double") > col("m"), 1L)
           .otherwise(0L).as("x1"),

@@ -147,7 +147,7 @@ object PipelineQueries56 {
       FROM terms""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
         .select(when(col("lang") === "en", 1).otherwise(0).as("is_en"),
-          explode(split(lower(col("text")), "\\s+")).as("w"))
+          explode(Kit.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
       // Partial top-k, then re-rank (r17 VERDICT #7): a global top-20 token
       // is necessarily in its shuffle partition's top-20 (each token lands
@@ -330,7 +330,7 @@ object PipelineQueries56 {
       FROM allt JOIN f ON allt.w = f.w
       GROUP BY allt.w, f.fw ORDER BY token""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), explode(split(lower(col("text")), "\\s+")).as("w"))
+        .select(col("source"), explode(Kit.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
       val cell = tok.groupBy(col("w"), col("source"))
         .agg(count(lit(1)).cast("bigint").as("v"))
@@ -386,7 +386,7 @@ object PipelineQueries56 {
                AS or_crude,
              round(s_ad / s_bc, 6) AS or_mh
       FROM tot""")) { (s, dir) =>
-      val nToks = size(split(lower(col("text")), "\\s+"))
+      val nToks = size(Kit.words(col("text")))
       val h = Tables.dfSpread(s, dir, "documents").select(col("lang"),
         when(col("n_chars") > 300, 1L).otherwise(0L).as("x"),
         when(lit(2) * col("n_chars") > lit(11) * nToks, 1L).otherwise(0L).as("y"))

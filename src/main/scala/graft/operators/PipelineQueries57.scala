@@ -93,7 +93,7 @@ object PipelineQueries57 {
              round(h_joint - h_first, 6) AS h_cond
       FROM h ORDER BY lang""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("lang"), split(lower(col("text")), "\\s+").as("t"))
+        .select(col("lang"), Kit.words(col("text")).as("t"))
       val cb = t.select(col("lang"),
           explode(graft.Functions.wordShingles(col("t"), 2)).as("b"))
         .groupBy(col("lang"), col("b"))
@@ -146,7 +146,7 @@ object PipelineQueries57 {
       FROM cc GROUP BY lang ORDER BY lang""")) { (s, dir) =>
       val tf = Tables.dfSpread(s, dir, "documents")
         .select(col("lang"), explode(graft.Functions.wordShingles(
-          split(lower(col("text")), "\\s+"), 2)).as("b"))
+          Kit.words(col("text")), 2)).as("b"))
         .groupBy(col("lang"), col("b"))
         .agg(count(lit(1)).cast("bigint").as("r"))
       val cc = tf.groupBy(col("lang"), col("r"))

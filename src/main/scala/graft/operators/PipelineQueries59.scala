@@ -142,7 +142,7 @@ object PipelineQueries59 {
       FROM top ORDER BY rnk""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
         .select(when(col("lang") === "en", 1).otherwise(0).as("is_en"),
-          explode(split(lower(col("text")), "\\s+")).as("w"))
+          explode(Kit.words(col("text"))).as("w"))
         .filter(col("w") =!= "")
       val cw = tok.groupBy(col("w"))
         .agg(sum(col("is_en")).cast("bigint").as("a"),
@@ -301,7 +301,7 @@ object PipelineQueries59 {
       // rows re-verified vs DuckDB at sf0.001/sf0.01.
       val docsTok = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
-          split(lower(col("text")), "\\s+").as("tks"))
+          Kit.words(col("text")).as("tks"))
       val dlnc = docsTok
         .select(col("doc_id"), col("n_chars"),
           size(filter(col("tks"), t => t =!= "")).cast("long").as("dl"))

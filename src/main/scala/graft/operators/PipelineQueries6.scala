@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -21,8 +21,6 @@ import graft.{QueryDef, Tables}
   * a float.
   */
 object PipelineQueries6 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** Content-defined chunking core, shared by p36 and PipelineBatch6Spec.
     *
@@ -129,7 +127,7 @@ object PipelineQueries6 {
         .toDF("query_id", "term")
       val qTerms = BmQueries.flatMap(_._2.split(" ")).distinct
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       val dl = t.select(col("doc_id"), size(col("tk")).cast("double").as("dl"))
       val stats = dl.agg(count(lit(1)).cast("double").as("n"),
         (sum(col("dl")) / count(lit(1))).as("avgdl"))
@@ -223,7 +221,7 @@ object PipelineQueries6 {
       FROM h JOIN share USING (chunk_md5)
       ORDER BY doc_id, chunk_idx""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       // Boundary flag computed inside the explode (see cdcChunks): rows are
       // (doc, pos, flag) triples, never position-rows carrying the array.
       val hashed = cdcChunks(t)
@@ -283,7 +281,7 @@ object PipelineQueries6 {
              avg_logprob
       FROM t LEFT JOIN per USING (doc_id) ORDER BY t.doc_id""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("doc_id"), Kit.words(col("text")).as("tk"))
       val bg = t.filter(size(col("tk")) >= 2)
         .select(col("doc_id"),
           explode(transform(sequence(lit(1L), size(col("tk")).cast("long") - 1L),

@@ -337,7 +337,7 @@ object PipelineQueries60 {
         size(filter(t, x => x.isin(ws.map(lit(_)): _*)))
       val scored = Tables.dfSpread(s, dir, "documents")
         .filter(col("lang").isin("en", "de", "es", "fr"))
-        .withColumn("t", split(lower(col("text")), "\\s+"))
+        .withColumn("t", Kit.words(col("text")))
         .select(col("lang"),
           hit(col("t"), Seq("the", "a", "and", "of", "to", "in", "is")).as("s_en"),
           hit(col("t"), Seq("der", "die", "das", "und", "ist", "ein")).as("s_de"),

@@ -521,7 +521,7 @@ object PipelineQueries61 {
       // ANSI divide-by-zero error
       val tf = Tables.dfSpread(s, dir, "documents")
         .select(explode(graft.Functions.wordShingles(
-          split(lower(col("text")), "\\s+"), 2)).as("b"))
+          Kit.words(col("text")), 2)).as("b"))
         .groupBy(col("b")).agg(count(lit(1)).cast("bigint").as("r"))
       val cc = tf.groupBy(col("r")).agg(count(lit(1)).cast("bigint").as("n_r"))
       val n = cc.agg(sum(col("n_r")).cast("bigint").as("types"),

@@ -253,7 +253,7 @@ object PipelineQueries62 {
       FROM cd, mg""")) { (s, dir) =>
       val b = Tables.dfSpread(s, dir, "documents")
         .select(least(floor(col("n_chars") / 200).cast("bigint"), lit(7)).as("xb"),
-          least(size(filter(split(lower(col("text")), "\\s+"),
+          least(size(filter(Kit.words(col("text")),
             x => x.isin(Seq("the", "a", "and", "of", "to", "in", "is")
               .map(lit(_)): _*))).cast("bigint"), lit(4)).as("yb"))
       val cells = b.groupBy(col("xb"), col("yb"))
@@ -332,7 +332,7 @@ object PipelineQueries62 {
       def hit(t: org.apache.spark.sql.Column, ws: Seq[String]) =
         size(filter(t, x => x.isin(ws.map(lit(_)): _*)))
       val sc = Tables.dfSpread(s, dir, "documents")
-        .withColumn("t", split(lower(col("text")), "\\s+"))
+        .withColumn("t", Kit.words(col("text")))
         .select((col("lang") === "en").cast("int").as("pos"),
           (hit(col("t"), Seq("the", "a", "and", "of", "to", "in", "is"))
             .cast("double")

@@ -397,7 +397,7 @@ object PipelineQueries63 {
              round(gl.mrr, 6) AS mrr, round(gl.hit10, 6) AS hit_at_10
       FROM fr, gl ORDER BY fr.term""")) { (s, dir) =>
       val tok = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("tok"))
+        .select(col("doc_id"), explode(Kit.words(col("text"))).as("tok"))
       val tokNe = tok.filter(col("tok") =!= "")
       val dl = tokNe.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       val avgdl = dl.agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))

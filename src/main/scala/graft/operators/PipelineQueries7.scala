@@ -37,8 +37,6 @@ import graft.{Functions, QueryDef, Tables}
   */
 object PipelineQueries7 {
 
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
-
   /** KMV parameters: k smallest hashes retained per group. */
   private val KmvK = 64
 
@@ -111,7 +109,7 @@ object PipelineQueries7 {
       FROM d JOIN k ON d.source = k.source
       ORDER BY source""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("tk"))
+        .select(col("source"), Kit.words(col("text")).as("tk"))
         .filter(size(col("tk")) >= 3)
       val grams = t.select(col("source"),
         explode(transform(sequence(lit(1L), (size(col("tk")) - 2).cast("long")),
@@ -176,7 +174,7 @@ object PipelineQueries7 {
              round(min(CASE WHEN cum <= $Budget THEN score END), 6) AS cutoff_score
       FROM c GROUP BY source ORDER BY source""")) { (s, dir) =>
       val t = Tables.df(s, dir, "documents")
-        .select(col("source"), col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("source"), col("doc_id"), Kit.words(col("text")).as("tk"))
       val scored = t.select(col("source"), col("doc_id"),
         size(col("tk")).cast("long").as("n_tok"),
         (size(array_distinct(col("tk"))).cast("double") / size(col("tk"))).as("score"))
@@ -221,7 +219,7 @@ object PipelineQueries7 {
       SELECT CAST(rank AS BIGINT) AS rank, pair, CAST(cnt AS BIGINT) AS cnt
       FROM r WHERE rank <= $TopPairs ORDER BY rank""")) { (s, dir) =>
       val wf = Tables.dfSpread(s, dir, "documents")
-        .select(explode(toks(col("text"))).as("w"))
+        .select(explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       val pairs = wf.filter(length(col("w")) >= 2)
         .select(col("w"), col("c"),
@@ -274,7 +272,7 @@ object PipelineQueries7 {
                                AS DECIMAL(38,9))) AS DOUBLE) / count(*), 6) AS avg_oov
       FROM per GROUP BY lang ORDER BY lang""")) { (s, dir) =>
       val t = Tables.df(s, dir, "documents")
-        .select(col("lang"), col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("lang"), col("doc_id"), Kit.words(col("text")).as("tk"))
       val wf = t.select(explode(col("tk")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       val rank = Window.orderBy(col("c").desc, col("w"))
@@ -339,7 +337,7 @@ object PipelineQueries7 {
                AS intercept
       FROM s ORDER BY source""")) { (s, dir) =>
       val wc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), explode(toks(col("text"))).as("w"))
+        .select(col("source"), explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
       val bySrc = Window.partitionBy(col("source")).orderBy(col("c").desc, col("w"))
       val g = wc.withColumn("rnk", row_number().over(bySrc))
@@ -453,7 +451,7 @@ object PipelineQueries7 {
       FROM a GROUP BY split ORDER BY split""")) { (s, dir) =>
       val t = Tables.df(s, dir, "documents")
         .select(col("source"), col("doc_id"),
-          size(toks(col("text"))).cast("long").as("n_tok"),
+          size(Kit.words(col("text"))).cast("long").as("n_tok"),
           expr(hexFracSql("md5(source)")).as("f"))
       t.withColumn("split",
           when(col("f") < 0.8, "train").when(col("f") < 0.9, "val").otherwise("test"))
@@ -499,7 +497,7 @@ object PipelineQueries7 {
              round(CAST(sum(CAST(kterm AS DECIMAL(38,9))) AS DOUBLE), 6) AS kl
       FROM term GROUP BY source ORDER BY source""")) { (s, dir) =>
       val wc = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), explode(toks(col("text"))).as("w"))
+        .select(col("source"), explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
       val ts = wc.groupBy(col("source")).agg(sum(col("c")).cast("double").as("t_s"))
       val qw = wc.groupBy(col("w")).agg(sum(col("c")).cast("double").as("cw"))

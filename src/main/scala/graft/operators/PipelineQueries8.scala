@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Functions, QueryDef, Tables}
@@ -36,8 +36,6 @@ import graft.{Functions, QueryDef, Tables}
   * pushed through the 1e-9 decimal grid before summation or ranking.
   */
 object PipelineQueries8 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p46: minimum pair count and report size. */
   private val PmiMinCount = 5
@@ -111,7 +109,7 @@ object PipelineQueries8 {
       SELECT CAST(rank AS BIGINT) AS rank, a, b,
              CAST(cab AS BIGINT) AS cab, round(pmi, 6) AS pmi
       FROM r WHERE rank <= $PmiTop ORDER BY rank""")) { (s, dir) =>
-      val t = Tables.dfSpread(s, dir, "documents").select(toks(col("text")).as("tk"))
+      val t = Tables.dfSpread(s, dir, "documents").select(Kit.words(col("text")).as("tk"))
       val uni = t.select(explode(col("tk")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       val tot = uni.agg(sum(col("c")).cast("double").as("t"))
@@ -269,7 +267,7 @@ object PipelineQueries8 {
       FROM r WHERE rank <= $SampleK ORDER BY source, rank""")) { (s, dir) =>
       val t = Tables.df(s, dir, "documents")
         .select(col("source"), col("doc_id"),
-          size(toks(col("text"))).cast("long").as("n_tok"),
+          size(Kit.words(col("text"))).cast("long").as("n_tok"),
           expr(hexFracSql("md5(cast(doc_id AS string))")).as("u"))
       val k = t.select(col("source"), col("doc_id"), col("n_tok"),
         round(round(log(col("u")), 9) / col("n_tok"), 9).as("pri"))
@@ -318,7 +316,7 @@ object PipelineQueries8 {
                    / sum(inst), 6) AS boiler_frac
       FROM df GROUP BY source ORDER BY source""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), col("doc_id"), toks(col("text")).as("tk"))
+        .select(col("source"), col("doc_id"), Kit.words(col("text")).as("tk"))
       val seg = t.select(col("source"), col("doc_id"),
         explode(transform(sequence(lit(1L), floor(size(col("tk")) / SegW).cast("long")),
           i => array_join(slice(col("tk"), (i * SegW - (SegW - 1)).cast("int"), lit(SegW)), " ")))
@@ -380,7 +378,7 @@ object PipelineQueries8 {
              round(jac, 6) AS jac
       FROM r WHERE rank <= $OverlapTop ORDER BY rank""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), toks(col("text")).as("tk"))
+        .select(col("source"), Kit.words(col("text")).as("tk"))
         .filter(size(col("tk")) >= 3)
       val g = t.select(col("source"),
         explode(transform(sequence(lit(1L), (size(col("tk")) - 2).cast("long")),

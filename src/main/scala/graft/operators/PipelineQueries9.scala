@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{Functions, QueryDef, Tables}
 
@@ -28,8 +28,6 @@ import graft.{Functions, QueryDef, Tables}
   * any ranking or summation.
   */
 object PipelineQueries9 {
-
-  private def toks(c: Column): Column = split(lower(c), "\\s+")
 
   /** p52: drop grams seen in more than MaxDf names; report top pairs. */
   private val MaxDf = 20
@@ -177,7 +175,7 @@ object PipelineQueries9 {
              CAST(sum(is_out) AS BIGINT) AS n_outliers
       FROM o GROUP BY source ORDER BY source""")) { (s, dir) =>
       val t = Tables.df(s, dir, "documents")
-        .select(col("source"), size(toks(col("text"))).cast("double").as("n"))
+        .select(col("source"), size(Kit.words(col("text"))).cast("double").as("n"))
       val q = ExactPercentile.percentiles(t, "source", col("n"),
         Seq(0.25 -> "q1", 0.5 -> "med", 0.75 -> "q3"))
       val fence = lit(1.5) * (col("q3") - col("q1"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
+import Kit.{dec, dsum, ts}
 
 /** Coverage batch 2 — the remaining SURVEY.md §2 surface: extra aggregate
   * functions (§2.2), cast/try-cast matrix, the rest of the string/hash/datetime
@@ -16,11 +17,6 @@ import graft.{QueryDef, Tables}
   * deterministic ORDER BY, decimal-exact or rounded aggregates.
   */
 object RelationalQueries2 {
-
-  private def dec(c: Column): Column = c.cast("decimal(38,6)")
-  /** Exact decimal sum emitted as DOUBLE — see [[RelationalQueries.dsum]]. */
-  private def dsum(c: Column): Column = sum(dec(c)).cast("double")
-  private def ts(s: String): Column = lit(s).cast("timestamp_ntz")
 
   val defs: Seq[QueryDef] = Seq(
 

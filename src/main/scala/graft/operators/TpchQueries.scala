@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import Kit.{dec, dsum, ts}
 
 /** Remaining TPC-H-shaped workloads (Q2/Q4/Q7/Q8/Q11/Q15/Q17/Q20/Q21/Q22
   * adapted to the driver testdata schema — no l_commitdate/l_receiptdate/
@@ -13,11 +14,6 @@ import graft.{QueryDef, Tables}
   * this covers all 22 TPC-H query shapes over the available columns.
   */
 object TpchQueries {
-
-  private def dec(c: Column): Column = c.cast("decimal(38,6)")
-  /** Exact decimal sum emitted as DOUBLE — see [[RelationalQueries.dsum]]. */
-  private def dsum(c: Column): Column = sum(dec(c)).cast("double")
-  private def ts(s: String): Column = lit(s).cast("timestamp_ntz")
 
   val defs: Seq[QueryDef] = Seq(
 

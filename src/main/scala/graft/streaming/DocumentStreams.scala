@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Kit
 
 /** Streaming twins of the document-pipeline operators (SURVEY.md §2.6 is a
   * new capability — the reference has no streaming): the incremental form
@@ -53,7 +54,7 @@ object DocumentStreams {
     * shape), computed row-locally — identical per micro-batch and in batch. */
   private def spanHashes(text: org.apache.spark.sql.Column, n: Int,
       stride: Int): org.apache.spark.sql.Column = {
-    val t = split(lower(text), "\\s+")
+    val t = Kit.words(text)
     // guard: sequence(1, size-n+1) is invalid when the doc is shorter than
     // one span — short docs get an empty span list, not an error
     when(size(t) >= n,
@@ -94,7 +95,7 @@ object DocumentStreams {
     * bounds this state with an ingest-time watermark — the [[spanCounts]]
     * contract. */
   def boilerplateCounts(docs: DataFrame): DataFrame = {
-    val t = split(lower(col("text")), "\\s+")
+    val t = Kit.words(col("text"))
     docs.filter(size(t) >= 3)
       .select(col("source"),
         explode(array_distinct(transform(
@@ -148,35 +149,13 @@ object DocumentStreams {
   }
 
   /** The (doc_id, band, bucket) MinHash band table over 3-word shingles —
-    * p84's banding spelling factored out so the batch snapshot side and the
-    * streaming probe side are provably the same kernel. Row-local: the
-    * signature is a per-row codegen expression, the band fan-out a 4-element
-    * explode. */
-  def bandTable(docs: DataFrame): DataFrame = {
-    val shingles = array_distinct(graft.Functions.wordShingles(
-      split(lower(col("text")), "\\s+"), 3))
-    // Docs too short for even one 3-word shingle emit NO bands: an all-null
-    // signature would band every such doc into the constant md5('') bucket,
-    // cross-matching all short docs (a spurious-candidate flood and a
-    // quadratic hot key on (band, bucket) at scale). The exclusion is
-    // expressed through lambda bindings — NOT a separate .where(), which
-    // Catalyst pushes below the projection and re-inlines the shingle array
-    // into both Filter and Project, doubling the row-local kernel cost.
-    // `transform(array(x), v => …)` binds x to a lambda variable evaluated
-    // exactly once, so the shingle array and the 8-hash signature are each
-    // computed one time per row no matter how the optimizer collapses plans.
-    val bands = flatten(filter(
-      transform(array(shingles), sh =>
-        when(size(sh) > 0,
-          flatten(transform(
-            array(graft.functions.NativeExpressions.minhashSignature(sh, 8)),
-            sig => transform(sequence(lit(0), lit(3)), b => struct(
-              b.as("band"),
-              md5(concat_ws("|", slice(sig, b * 2 + 1, lit(2)))).as("bucket"))))))),
-      x => x.isNotNull))
-    docs.select(col("doc_id"), explode(bands).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
+    * p84's banding, shared with p02 through [[graft.operators.Kit]] so the
+    * batch snapshot side and the streaming probe side are provably the same
+    * kernel. Row-local: the signature is a per-row expression, the band
+    * fan-out a 4-element explode; docs too short for one 3-word shingle
+    * emit no bands (see [[graft.operators.Kit.bands]]). */
+  def bandTable(docs: DataFrame): DataFrame =
+    Kit.bands(Kit.signatures(docs), 4, 2)
 
   /** Streaming incremental near-dup screen — the streaming form of p84's
     * candidate stage: arriving docs are shingled and minhash-banded

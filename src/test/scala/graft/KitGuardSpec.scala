@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** The near-dup text decisions live in `operators/Kit.scala` alone: the
+  * tokenizer that must match the oracle's `string_split_regex(lower(text),
+  * '\s+')`, and the shingle set whose hand-rolled copies drifted into the
+  * `slice` start-0 failure on docs shorter than a shingle. This spec fails
+  * when a batch file spells either one again instead of calling the kit.
+  */
+class KitGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala/graft")
+
+  private def sources: Seq[Path] = {
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  private def offenders(needle: String, allowed: Set[String]): Seq[String] =
+    sources.filterNot(p => allowed.contains(p.getFileName.toString)).flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => s"${root.relativize(p)}:${i + 1}"
+      }
+    }
+
+  test("the tokenizer is spelled only in Kit and Functions") {
+    val hits = offenders("split(lower(", Set("Kit.scala", "Functions.scala"))
+    assert(hits.isEmpty, s"use Kit.words instead of split(lower(...)): ${hits.mkString(", ")}")
+  }
+
+  test("no private tokenizer or hand-rolled shingle spelling") {
+    val hits = Seq("private def toks", "def shingles", "sequence(lit(1), greatest(size(")
+      .flatMap(offenders(_, Set.empty))
+    assert(hits.isEmpty,
+      s"use Kit.words / Kit.shingleSet instead of a local copy: ${hits.mkString(", ")}")
+  }
+}

@@ -22,8 +22,7 @@ class PipelineBatch21Spec extends AnyFunSuite {
         s"bucket $b: extrema outside its power-of-two band")
       assert(mn <= mx)
     }
-    val nPairs = graft.operators.PipelineQueries3
-      .minhashPairs(spark, SharedSpark.sf).count()
+    val nPairs = graft.operators.Kit.minhashPairs(spark, SharedSpark.sf).count()
     assert(rows.map(_._2).sum == nPairs, "profile does not conserve the pair set")
   }
 
@@ -50,8 +49,7 @@ class PipelineBatch21Spec extends AnyFunSuite {
   test("p94: the dup matrix conserves pairs and keys cells canonically") {
     val rows = byName("p94_cross_source_dup_matrix").run(spark, SharedSpark.sf)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val nPairs = graft.operators.PipelineQueries3
-      .minhashPairs(spark, SharedSpark.sf).count()
+    val nPairs = graft.operators.Kit.minhashPairs(spark, SharedSpark.sf).count()
     assert(rows.map(_._3).sum == nPairs, "matrix cells do not conserve the pair set")
     rows.foreach { case (a, b, n, leftDocs) =>
       assert(a <= b, s"cell ($a,$b) not canonically ordered")

@@ -33,8 +33,7 @@ class PipelineBatch22Spec extends AnyFunSuite {
   test("p96: gap classes partition the pair set with consistent sums") {
     val rows = byName("p96_dedup_quality_gap").run(spark, SharedSpark.sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    val nPairs = graft.operators.PipelineQueries3
-      .minhashPairs(spark, SharedSpark.sf).count()
+    val nPairs = graft.operators.Kit.minhashPairs(spark, SharedSpark.sf).count()
     assert(rows.map(_._2).sum == nPairs, "gap classes do not partition the pairs")
     rows.foreach { case (cls, n, sumGap) =>
       assert(Set("same", "near", "far").contains(cls))

@@ -32,8 +32,7 @@ class PipelineBatch34Spec extends AnyFunSuite {
     // the union of per-band pair masses upper-bounds the DISTINCT p02
     // candidate pairs (a pair can collide in several bands)
     val estTotal = rows.map(_._6).sum
-    val distinctPairs = graft.operators.PipelineQueries3
-      .minhashPairs(spark, SharedSpark.sf).count()
+    val distinctPairs = graft.operators.Kit.minhashPairs(spark, SharedSpark.sf).count()
     assert(distinctPairs <= estTotal,
       s"distinct pairs $distinctPairs exceed summed bucket mass $estTotal")
   }
