@@ -334,9 +334,35 @@ object Functions {
       (es: Seq[Expression]) => graft.functions.NativeExpressions.CosineSimilarityExpr(
         Cast(es(0), ArrayType(DoubleType)), Cast(es(1), ArrayType(DoubleType))),
       "internal")
-    reg.createOrReplaceTempFunction("simhash",
-      (es: Seq[Expression]) => graft.functions.NativeExpressions.SimHashExpr(es.head, 32),
-      "internal")
+    // SIMHASH(text | tokens): a STRING is tokenized the way every DataFrame
+    // caller tokenizes (Kit.words); the kernel itself reads ARRAY<STRING>
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.graft.Interop
+    import org.apache.spark.sql.types.{StringType => Str}
+    reg.createOrReplaceTempFunction("simhash", (es: Seq[Expression]) => {
+      val tokens = es.head.dataType match {
+        case _: Str => Interop.expression(graft.operators.Kit.words(Interop.column(es.head)))
+        case ArrayType(_: Str, _) => es.head
+        case t => throw new AnalysisException("DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", Map(
+          "sqlExpr" -> s"\"simhash(${es.head.sql})\"", "paramIndex" -> "first",
+          "requiredType" -> "(\"STRING\" or \"ARRAY<STRING>\")",
+          "inputSql" -> s"\"${es.head.sql}\"", "inputType" -> s"\"${t.sql}\""))
+      }
+      graft.functions.NativeExpressions.SimHashExpr(tokens, 32)
+    }, "internal")
+    // PRINTF/FORMAT_STRING: java.util.Formatter formats %f from a
+    // java.math.BigDecimal, not from Catalyst's Decimal, so DECIMAL arguments
+    // are handed over as BigDecimal (`printf('%05.2f', 3.14159)` = '03.14')
+    import org.apache.spark.sql.catalyst.expressions.FormatString
+    import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+    import org.apache.spark.sql.types.{DecimalType, ObjectType}
+    for (name <- Seq("printf", "format_string"))
+      reg.createOrReplaceTempFunction(name, (es: Seq[Expression]) =>
+        FormatString(es.map(e => e.dataType match {
+          case _: DecimalType =>
+            Invoke(e, "toJavaBigDecimal", ObjectType(classOf[java.math.BigDecimal]))
+          case _ => e
+        }): _*), "internal")
     reg.createOrReplaceTempFunction("minhash_signature",
       (es: Seq[Expression]) => graft.functions.NativeExpressions.MinHashSignatureExpr(
         es(0), es(1).eval().asInstanceOf[Int]),

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.regex.Matcher
+import scala.util.matching.Regex
 
 /** Pre-parse SQL dialect shim: rewrites the reference engine's non-ANSI
   * spellings into Spark SQL before parsing — the same strategy the reference
@@ -23,9 +24,11 @@ import java.util.regex.Matcher
   */
 object GraftSql {
 
-  // ALL lexical context (literal masking, balanced groups, operand capture,
-  // operand/operator position tests, arm spans) comes from the shared
-  // scanner — no rewrite below re-derives quote/paren/operand state ad hoc.
+  // ALL lexical context (the quote lexer, literal masking, balanced groups,
+  // operand capture, operand/operator position tests, arm spans) and the
+  // fixpoint driver of every splice-one-occurrence rewrite come from the
+  // shared scanner — no rewrite below re-derives quote/paren/operand state
+  // ad hoc or runs its own capped loop.
   import SqlScan._
 
   /** A relation-scoped temporal restriction extracted from `FOR` syntax.
@@ -44,25 +47,10 @@ object GraftSql {
     * split. Single statements come back as-is. */
   def splitStatements(sql: String): Seq[String] = {
     val s = stripComments(sql)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        cur.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { cur.append('\''); i += 1 }
-          else inStr = false
-        }
-      } else if (c == '\'') { inStr = true; cur.append(c) }
-      else if (c == ';') { parts += cur.toString; cur.clear() }
-      else cur.append(c)
-      i += 1
-    }
-    parts += cur.toString
-    parts.map(_.trim).filter(_.nonEmpty).toSeq
+    val mask = literalMask(s)
+    val cuts = s.indices.filter(i => !mask(i) && s.charAt(i) == ';')
+    (-1 +: cuts).zip(cuts :+ s.length)
+      .map { case (a, b) => s.substring(a + 1, b).trim }.filter(_.nonEmpty)
   }
 
   def rewrite(sql: String): Rewritten = rewrite(sql, _ => None)
@@ -96,68 +84,25 @@ object GraftSql {
     * every corpus use (regex patterns/replacements), exact for comparisons
     * via Spark's implicit string↔binary casts. Runs BEFORE literal-masked
     * rewrites because the masker would see only the quoted tail. */
-  private def rewriteLiteralPrefixes(sql: String): String = {
-    // quote-aware scan (same state machine as stripComments): a b/r that
-    // appears INSIDE an existing string literal (`'a b''c'' d'`) is content,
-    // not a prefix — a bare replaceAll would corrupt it
-    val out = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inStr = false
-        }
-      } else if ((c == 'b' || c == 'B' || c == 'r' || c == 'R')
-          && i + 1 < sql.length && sql.charAt(i + 1) == '\''
-          && (i == 0 || {
-            val p = sql.charAt(i - 1)
-            !Character.isLetterOrDigit(p) && p != '_' && p != '\''
-          })) {
-        () // drop the prefix; the opening quote is handled next iteration
-      } else if (c == '\'') { inStr = true; out.append(c) }
-      else out.append(c)
-      i += 1
-    }
-    out.toString
-  }
+  private def rewriteLiteralPrefixes(sql: String): String =
+    // the prefix letter must sit outside a literal: a b/r INSIDE one
+    // (`'a b''c'' d'`) is content
+    replaceOutsideLiterals("""(?<![\p{L}\p{Nd}_'])[bBrR](?=')""".r, sql)(_ => "")
 
   // -- comments ---------------------------------------------------------
 
-  /** Single-pass scanner that understands quotes AND comment delimiters
-    * together: an apostrophe inside a comment (`-- don't`) must not toggle
-    * literal state, and `--` inside a string literal is content, not a
-    * comment. */
+  /** Comments become one space each. The lexer's comment mode reads quotes
+    * and comment delimiters together: an apostrophe inside a comment
+    * (`-- don't`) must not toggle literal state, and `--` inside a string
+    * literal is content, not a comment. */
   private def stripComments(sql: String): String = {
     val out = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inStr = false
-        }
-      } else if (c == '\'') { inStr = true; out.append(c) }
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1
-        out.append(' ')
-        i -= 1 // leave the newline (if any) to the normal path
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*'
-        && !(i + 2 < sql.length && sql.charAt(i + 2) == '+')) {
-        // /*+ ... */ is an optimizer hint, not a comment — keep it
-        val end = sql.indexOf("*/", i + 2)
-        out.append(' ')
-        i = if (end < 0) sql.length - 1 else end + 1
-      } else out.append(c)
-      i += 1
+    var pos = 0
+    lex(sql, comments = true).filter(_.comment).foreach { sp =>
+      out.append(sql.substring(pos, sp.start)).append(' ')
+      pos = sp.end
     }
-    out.toString
+    out.append(sql.substring(pos)).toString
   }
 
   /** DuckDB-style numeric literal spellings the reference's parser accepts
@@ -360,21 +305,10 @@ object GraftSql {
     *     `get_json_object(...)` call as the next LHS, so the LHS parse
     *     balances parens/brackets backwards and the whole rewrite runs to
     *     fixpoint (each step consumes one arrow — guaranteed to terminate). */
-  private def rewriteArrowOps(sql: String): String = {
-    var cur = sql
-    var step = arrowStep(cur)
-    var guard = 0
-    while (step.isDefined && guard < 64) {
-      cur = step.get
-      step = arrowStep(cur)
-      guard += 1
-    }
-    cur
-  }
+  private def rewriteArrowOps(sql: String): String = fixpoint("JSON arrow", sql)(arrowStep)
 
   /** Rewrite the first applicable arrow accessor, or None when none left. */
-  private def arrowStep(sql: String): Option[String] = {
-    val mask = literalMask(sql)
+  private def arrowStep(sql: String, mask: Array[Boolean]): Option[String] = {
     var i = 0
     while (i < sql.length - 1) {
       if (!mask(i) && sql.charAt(i) == '-' && sql.charAt(i + 1) == '>') {
@@ -384,26 +318,12 @@ object GraftSql {
         val rhsQuoted = r < sql.length && sql.charAt(r) == '\''
         val rhsDigit = r < sql.length && sql.charAt(r).isDigit
         if (rhsQuoted || rhsDigit) {
-          // ---- RHS: quoted key (with '' unescaping) or integer subscript
-          var rEnd = r
-          var key: String = ""
-          var wellFormed = true
-          if (rhsQuoted) {
-            rEnd = r + 1
-            val kb = new StringBuilder
-            var closed = false
-            while (rEnd < sql.length && !closed) {
-              if (sql.charAt(rEnd) == '\'') {
-                if (rEnd + 1 < sql.length && sql.charAt(rEnd + 1) == '\'') { kb.append('\''); rEnd += 2 }
-                else { closed = true; rEnd += 1 }
-              } else { kb.append(sql.charAt(rEnd)); rEnd += 1 }
-            }
-            wellFormed = closed
-            key = kb.toString
-          } else {
-            while (rEnd < sql.length && sql.charAt(rEnd).isDigit) rEnd += 1
-            key = sql.substring(r, rEnd)
-          }
+          // ---- RHS: a quoted key (the whole literal, as written) or an
+          // integer subscript
+          var rEnd = r + 1
+          while (rEnd < sql.length &&
+            (if (rhsQuoted) mask(rEnd) else sql.charAt(rEnd).isDigit)) rEnd += 1
+          val key = sql.substring(r, rEnd)
           // ---- LHS: string literal, dotted identifier, or a balanced
           // (...)/[...] group with its preceding function name (for chained
           // get_json_object calls)
@@ -411,7 +331,7 @@ object GraftSql {
           while (l >= 0 && sql.charAt(l).isWhitespace) l -= 1
           val lhsEnd = l + 1
           val lhsStart = operandStart(sql, mask, l)
-          if (wellFormed && lhsStart >= 0 && lhsStart < lhsEnd) {
+          if (lhsStart >= 0 && lhsStart < lhsEnd) {
             val lhs = sql.substring(lhsStart, lhsEnd)
             var p = lhsStart - 1
             while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
@@ -430,10 +350,8 @@ object GraftSql {
               // (struct/map/array native access, JSON text via
               // get_json_object — functions/DialectExpressions.scala)
               val fn = if (opEnd - i == 3) "graft_extract_text" else "graft_extract"
-              val keyArg =
-                if (rhsQuoted) s"'${key.replace("'", "''")}'" else key
               return Some(sql.substring(0, lhsStart) +
-                s"$fn($lhs, $keyArg)" + sql.substring(rEnd))
+                s"$fn($lhs, $key)" + sql.substring(rEnd))
             }
           }
         }
@@ -442,9 +360,6 @@ object GraftSql {
     }
     None
   }
-
-  private def jsonPath(key: String): String =
-    if (key.startsWith("$")) key else s"$$.$key"
 
   /** Keywords that bound an infix-XOR operand: everything at or below OR
     * precedence plus clause context. AND/NOT/comparisons bind tighter than
@@ -478,23 +393,11 @@ object GraftSql {
     * extremum scalar subquery (`> ALL (SELECT s)` → `> (SELECT max(s))`).
     * `ANY(col)` with NO preceding comparison operator is Spark's boolean
     * aggregate and is left untouched. */
-  private def rewriteQuantified(sql: String): String = {
-    val upper = sql.toUpperCase
-    if (!upper.contains("ANY") && !upper.contains("ALL") && !upper.contains("SOME")) return sql
-    var s = sql
-    var step = quantStep(s)
-    var guard = 0
-    while (step.isDefined && guard < 64) {
-      s = step.get
-      step = quantStep(s)
-      guard += 1
-    }
-    s
-  }
+  private def rewriteQuantified(sql: String): String =
+    fixpoint("quantified comparison", sql)(quantStep)
 
   /** Rewrite the first applicable quantified comparison, or None. */
-  private def quantStep(sql: String): Option[String] = {
-    val mask = literalMask(sql)
+  private def quantStep(sql: String, mask: Array[Boolean]): Option[String] = {
     val it = quantKw.findAllMatchIn(sql)
     while (it.hasNext) {
       val m = it.next()
@@ -532,23 +435,6 @@ object GraftSql {
             val isSubquery = innerU.startsWith("SELECT") || innerU.startsWith("WITH")
             val existsQ = kw == "ANY" || kw == "SOME"
             val likeFamily = op.endsWith("LIKE")
-            // Spark's native `LIKE ANY ('a%', 'b%')` pattern-list form: a
-            // top-level comma in a non-subquery RHS means it's not an array
-            // expression — leave it for Spark's parser.
-            def topLevelComma: Boolean = {
-              var depth = 0
-              var k = open + 1
-              while (k < close) {
-                val ch = sql.charAt(k)
-                if (!mask(k)) {
-                  if (ch == '(' || ch == '[') depth += 1
-                  else if (ch == ')' || ch == ']') depth -= 1
-                  else if (ch == ',' && depth == 0) return true
-                }
-                k += 1
-              }
-              false
-            }
             // ANSI three-valued semantics over a subquery, with uncorrelated
             // scalar subqueries only (Spark reuses the identical ones):
             //   cnt = 0       → ALL is TRUE, ANY is FALSE (empty set)
@@ -591,7 +477,10 @@ object GraftSql {
             }
             val replacement: Option[String] =
               if (!isSubquery) {
-                if (likeFamily && topLevelComma) None // native pattern list
+                // Spark's native `LIKE ANY ('a%', 'b%')` pattern-list form: a
+                // top-level comma in a non-subquery RHS means it's not an
+                // array expression — leave it for Spark's parser
+                if (likeFamily && topLevelCommas(sql, mask, open, close).nonEmpty) None
                 else {
                   val body = op match {
                     case "ILIKE" => s"ilike($lhs, __x)"
@@ -642,24 +531,10 @@ object GraftSql {
     * deep, which would hide its FROM/JOIN targets from the depth-0 scans
     * below. */
   private def stripOuterParens(arm: String): String = {
-    var s = arm.trim
-    var changed = true
-    while (changed && s.startsWith("(")) {
-      changed = false
-      val mask = literalMask(s)
-      var d = 0
-      var i = 0
-      var close = -1
-      while (i < s.length && close < 0) {
-        if (!mask(i)) {
-          if (s.charAt(i) == '(') d += 1
-          else if (s.charAt(i) == ')') { d -= 1; if (d == 0) close = i }
-        }
-        i += 1
-      }
-      if (close == s.length - 1) { s = s.substring(1, close).trim; changed = true }
-    }
-    s
+    val s = arm.trim
+    if (s.startsWith("(") && closeParen(s, literalMask(s), 0) == s.length - 1)
+      stripOuterParens(s.substring(1, s.length - 1))
+    else s
   }
 
   /** The arm's column-contributing relations OTHER than `view`, for the
@@ -835,26 +710,30 @@ object GraftSql {
     * so nested calls — GENERATE_SERIES(1, cardinality(arr)) — and multiple
     * occurrences in one statement rewrite correctly (each step consumes one
     * GENERATE_SERIES token; loop to fixpoint). */
-  private def rewriteSeries(sql: String): String = {
-    var s = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val mask = literalMask(s)
-      seriesFn.findAllMatchIn(s).find(m => !mask(m.start)).foreach { m =>
-        val open = m.end - 1
-        val close = closeParen(s, mask, open)
-        if (close >= 0) {
-          s = s.substring(0, m.start) + "explode(sequence(" +
-            s.substring(open + 1, close) + "))" + s.substring(close + 1)
-          changed = true
-        }
-      }
-    }
-    s
+  private def rewriteSeries(sql: String): String =
+    rewriteCalls("GENERATE_SERIES", seriesFn, sql)(c => Some(s"explode(sequence(${c.args}))"))
+
+  /** A call found by [[rewriteCalls]] in `s`: the match of its name (up to
+    * and including the open paren) and the positions of its parens. */
+  private final case class Call(
+      s: String, mask: Array[Boolean], m: Regex.Match, open: Int, close: Int) {
+    def args: String = s.substring(open + 1, close)
   }
+
+  /** Rewrite calls to a fixpoint: each step replaces the first call that
+    * `call` matches outside literals, with a balanced argument list, for
+    * which `splice` returns a replacement of the whole call `name(...)`. */
+  private def rewriteCalls(rewrite: String, call: Regex, sql: String)(
+      splice: Call => Option[String]): String =
+    fixpoint(rewrite, sql) { (s, mask) =>
+      call.findAllMatchIn(s).filter(m => !mask(m.start)).flatMap { m =>
+        val open = s.indexOf('(', m.start)
+        val close = closeParen(s, mask, open)
+        if (close < 0) None
+        else splice(Call(s, mask, m, open, close))
+          .map(rep => s.substring(0, m.start) + rep + s.substring(close + 1))
+      }.nextOption()
+    }
 
   // -- reference dialect spellings --------------------------------------------
 
@@ -867,6 +746,10 @@ object GraftSql {
     // BLOB is STRING engine-wide (GraftBlob scaladoc): BLOB 'abc', blob(x)
     // and CAST(x AS BLOB) must all land on the same type so they compare
     "VARCHAR" -> "STRING", "BLOB" -> "STRING")
+
+  private val extractComputed =
+    ("""(?i)\bEXTRACT\s*\(\s*(CENTURY|DECADE|MILLISECONDS?|NANOSECONDS?|""" +
+      """JULIAN|DATE|TIME)\s+FROM\b""").r
 
   private val extractRename = Map(
     "ISOYEAR" -> "YEAROFWEEK", "DAYOFYEAR" -> "DOY", "ISOWEEK" -> "WEEK",
@@ -924,25 +807,8 @@ object GraftSql {
       }
     }
     // EXTRACT computed fields — balanced splice of the operand
-    var guard = 0
-    var changed = true
-    val extractComputed =
-      ("""(?i)\bEXTRACT\s*\(\s*(CENTURY|DECADE|MILLISECONDS?|NANOSECONDS?|""" +
-        """JULIAN|DATE|TIME)\s+FROM\b""").r
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val mask = literalMask(s)
-      extractComputed.findAllMatchIn(s).find(m => !mask(m.start)).foreach { m =>
-        val open = s.indexOf('(', m.start)
-        val close = closeParen(s, mask, open)
-        if (close > 0) {
-          val operand = s.substring(m.end, close).trim
-          s = s.substring(0, m.start) +
-            extractCompute(m.group(1).toUpperCase)(operand) + s.substring(close + 1)
-          changed = true
-        }
-      }
+    s = rewriteCalls("EXTRACT", extractComputed, s) { c =>
+      Some(extractCompute(c.m.group(1).toUpperCase)(c.s.substring(c.m.end, c.close).trim))
     }
     // DATEDIFF with unit
     s = replaceOutsideLiterals("""(?i)\bDATEDIFF\s*\(\s*'(\w+)'\s*,""".r, s) { m =>
@@ -951,135 +817,25 @@ object GraftSql {
         case None => m.matched
       }
     }
+    // 2-argument REGEXP_EXTRACT[_ALL](s, p) means the whole match (group 0)
+    // in the reference dialect; Spark's default is group 1
+    s = rewriteCalls("REGEXP_EXTRACT", """(?i)\bREGEXP_EXTRACT(?:_ALL)?\s*\(""".r, s) { c =>
+      if (topLevelCommas(c.s, c.mask, c.open, c.close).size != 1) None
+      else Some(c.s.substring(c.m.start, c.close) + ", 0)")
+    }
     // ARRAY_AGG(... LIMIT n)
-    guard = 0
-    changed = true
-    val aggLimit = """(?i)\bARRAY_AGG\s*\(""".r
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val mask = literalMask(s)
-      aggLimit.findAllMatchIn(s).foreach { m =>
-        if (!changed && !mask(m.start)) {
-          val open = m.end - 1
-          val close = closeParen(s, mask, open)
-          if (close > 0) {
-            val inner = s.substring(open + 1, close)
-            val lim = """(?i)\s+LIMIT\s+(\d+)\s*$""".r.findFirstMatchIn(inner)
-            lim.foreach { lm =>
-              s = s.substring(0, m.start) +
-                s"slice(array_agg(${inner.substring(0, lm.start)}), 1, ${lm.group(1)})" +
-                s.substring(close + 1)
-              changed = true
-            }
-          }
-        }
-      }
+    s = rewriteCalls("ARRAY_AGG LIMIT", """(?i)\bARRAY_AGG\s*\(""".r, s) { c =>
+      """(?i)\s+LIMIT\s+(\d+)\s*$""".r.findFirstMatchIn(c.args).map(lm =>
+        s"slice(array_agg(${c.args.substring(0, lm.start)}), 1, ${lm.group(1)})")
     }
-    // bracket array literals (fixpoint: nested arrays convert outside-in).
-    // A `[` after an operand is subscripting: literal string/int subscripts
-    // become graft_extract (type-dispatching — struct field, map key, array
-    // index, JSON-text path alike), anything else stays Spark-native. A `[`
-    // after a keyword, `(`/`,`, an operator, or the `ARRAY` constructor word
-    // is an array literal.
-    // XOR/RLIKE included (grammar-fuzz find, r13): an array literal as the
-    // right operand of an infix keyword (`a XOR [1, 0] @> (1)`) must not
-    // read as a subscript of the keyword word
-    val kw = Set("SELECT", "WHERE", "AND", "OR", "NOT", "THEN", "ELSE",
-      "WHEN", "IN", "ON", "BY", "AS", "VALUES", "RETURN", "UNION", "ALL",
-      "DISTINCT", "HAVING", "SET", "BETWEEN", "LIKE", "ILIKE", "RLIKE",
-      "XOR", "ARRAY")
-    guard = 0
-    changed = true
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val mask = literalMask(s)
-      var i = 0
-      while (i < s.length && !changed) {
-        if (!mask(i) && s.charAt(i) == '[') {
-          var p = i - 1
-          while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
-          // preceding word (if any): keywords make this a literal
-          var w = p
-          while (w >= 0 && (s.charAt(w).isLetterOrDigit || s.charAt(w) == '_')) w -= 1
-          val word = if (w < p) s.substring(w + 1, p + 1).toUpperCase else ""
-          val isArrayWord = word == "ARRAY"
-          val subscript = !isArrayWord && !kw.contains(word) && p >= 0 &&
-            (s.charAt(p).isLetterOrDigit || s.charAt(p) == '_' ||
-              s.charAt(p) == ')' || s.charAt(p) == ']' || s.charAt(p) == '\'')
-          val close = closeGroup(s, mask, i, '[', ']')
-          if (close > 0 && !subscript) {
-            val start = if (isArrayWord) w + 1 else i
-            s = s.substring(0, start) + "array(" + s.substring(i + 1, close) +
-              ")" + s.substring(close + 1)
-            changed = true
-          } else if (close > 0 && subscript) {
-            // literal-keyed subscript → graft_extract (a string key on a
-            // JSON-text column has no Spark-native bracket form)
-            val inner = s.substring(i + 1, close).trim
-            val literalKey = inner.matches("'(?:[^']|'')*'") || inner.matches("\\d+")
-            if (literalKey) {
-              var l = i - 1
-              while (l >= 0 && s.charAt(l).isWhitespace) l -= 1
-              val lhsStart = operandStart(s, mask, l)
-              if (lhsStart >= 0 && lhsStart <= l) {
-                val lhs = s.substring(lhsStart, l + 1)
-                s = s.substring(0, lhsStart) +
-                  s"graft_extract($lhs, $inner)" + s.substring(close + 1)
-                changed = true
-              }
-            }
-          }
-        }
-        i += 1
-      }
-    }
+    // bracket array literals and literal-keyed subscripts
+    s = fixpoint("bracket array", s)(bracketStep)
     // UNNEST((a, b)) tuple form
     s = mapOutsideLiterals(s) {
       _.replaceAll("""(?i)\bUNNEST\s*\(\s*\(""", "UNNEST(ARRAY(")
     }
     // x @> array(...) / x @> (v1, v2) — array containment
-    guard = 0
-    changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val mask = literalMask(s)
-      var i = 0
-      while (i < s.length - 1 && !changed) {
-        if (!mask(i) && s.charAt(i) == '@' && s.charAt(i + 1) == '>') {
-          var r = i + 2
-          while (r < s.length && s.charAt(r).isWhitespace) r += 1
-          val isArrayFn = s.regionMatches(true, r, "array(", 0, 6) ||
-            s.regionMatches(true, r, "array (", 0, 7)
-          val isTuple = r < s.length && s.charAt(r) == '(' &&
-            !s.regionMatches(true, r + 1, "select", 0, 6)
-          if (isArrayFn || isTuple) {
-            val open = s.indexOf('(', r)
-            val close = closeParen(s, mask, open)
-            var l = i - 1
-            while (l >= 0 && s.charAt(l).isWhitespace) l -= 1
-            val lhsStart = operandStart(s, mask, l)
-            if (close > 0 && lhsStart >= 0 && lhsStart <= l) {
-              val rawLhs = s.substring(lhsStart, l + 1)
-              // a bare parenthesized tuple on the LHS is the reference's
-              // array spelling too: ('a','b') @> [...] — never a struct
-              val lhs =
-                if (rawLhs.startsWith("(") && rawLhs.endsWith(")")) "array" + rawLhs
-                else rawLhs
-              val rhs =
-                if (isArrayFn) s.substring(r, close + 1)
-                else "array" + s.substring(open, close + 1)
-              s = s.substring(0, lhsStart) +
-                s"array_contains_all($lhs, $rhs)" + s.substring(close + 1)
-              changed = true
-            }
-          }
-        }
-        i += 1
-      }
-    }
+    s = fixpoint("array containment", s)(containsStep)
     // VARCHAR/BLOB as type names: the dialect's BLOB surface is UTF-8
     // STRING engine-wide (DialectExpressions.GraftBlob scaladoc), so the
     // type spelling maps to STRING as well — `CAST(42.0 AS BLOB)` compares
@@ -1142,35 +898,22 @@ object GraftSql {
     // AND binds tighter than XOR, so it stays inside the operand) and emit
     // a fully parenthesized `((lhs) != (rhs))`. A chain rewrites
     // right-associatively over passes — XOR is associative, so equivalent.
-    s = {
-      var out = s
-      var guard = 0
-      var changed = true
-      while (changed && guard < 32) {
-        changed = false
-        guard += 1
-        val mask = literalMask(out)
-        // infix iff an OPERAND ends immediately before the keyword (word,
-        // ')', ']' or a literal — SqlScan.operandEndsBefore); otherwise it
-        // is the registered xor(a,b) function in call position — `TRUE XOR
-        // (x)` is infix even though a '(' follows, `SELECT xor(1,0)` /
-        // `a AND xor(1,0)` are calls
-        val xorOperandBoundary =
-          xorBoundaryKw ++ Set("and", "not", "in", "between", "like")
-        val xorRe = """(?i)\bXOR\b""".r
-        xorRe.findAllMatchIn(out)
-          .find(m => !mask(m.start) &&
-            operandEndsBefore(out, m.start, xorOperandBoundary)).foreach { m =>
+    // Infix iff an OPERAND ends immediately before the keyword (word, ')',
+    // ']' or a literal — SqlScan.operandEndsBefore); otherwise it is the
+    // registered xor(a,b) function in call position — `TRUE XOR (x)` is
+    // infix even though a '(' follows, `SELECT xor(1,0)` / `a AND
+    // xor(1,0)` are calls.
+    val xorOperandBoundary = xorBoundaryKw ++ Set("and", "not", "in", "between", "like")
+    s = fixpoint("XOR", s) { (out, mask) =>
+      """(?i)\bXOR\b""".r.findAllMatchIn(out)
+        .find(m => !mask(m.start) && operandEndsBefore(out, m.start, xorOperandBoundary))
+        .flatMap { m =>
           val (ls, rs) = infixOperandBounds(out, mask, m.start, m.end, xorBoundaryKw)
           val lhs = out.substring(ls, m.start).trim
           val rhs = out.substring(m.end, rs).trim
-          if (lhs.nonEmpty && rhs.nonEmpty) {
-            out = out.substring(0, ls) + s"(($lhs) != ($rhs))" + out.substring(rs)
-            changed = true
-          }
+          if (lhs.isEmpty || rhs.isEmpty) None
+          else Some(out.substring(0, ls) + s"(($lhs) != ($rhs))" + out.substring(rs))
         }
-      }
-      out
     }
     // CURRENT_TIME keyword (Spark 4 parses it into the unsupported TIME
     // type) → time-of-day string, matching the registered current_time()
@@ -1224,6 +967,95 @@ object GraftSql {
       s"ip_in_subnet(${m.group(1)}, '${m.group(2)}')"
     }
     s
+  }
+
+  /** Words after which a `[` opens an array literal, not a subscript.
+    * XOR/RLIKE included (grammar-fuzz find, r13): an array literal as the
+    * right operand of an infix keyword (`a XOR [1, 0] @> (1)`) must not
+    * read as a subscript of the keyword word. */
+  private val arrayLiteralKw = Set("SELECT", "WHERE", "AND", "OR", "NOT", "THEN",
+    "ELSE", "WHEN", "IN", "ON", "BY", "AS", "VALUES", "RETURN", "UNION", "ALL",
+    "DISTINCT", "HAVING", "SET", "BETWEEN", "LIKE", "ILIKE", "RLIKE", "XOR", "ARRAY")
+
+  /** Rewrite the first bracket array literal or literal-keyed subscript, or
+    * None. A `[` after an operand is subscripting: literal string/int
+    * subscripts become graft_extract (type-dispatching — struct field, map
+    * key, array index, JSON-text path alike), anything else stays
+    * Spark-native. A `[` after a keyword, `(`/`,`, an operator, or the
+    * `ARRAY` constructor word is an array literal; nested arrays convert
+    * outside-in. */
+  private def bracketStep(s: String, mask: Array[Boolean]): Option[String] = {
+    var i = 0
+    while (i < s.length) {
+      if (!mask(i) && s.charAt(i) == '[') {
+        var p = i - 1
+        while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
+        // preceding word (if any): keywords make this a literal
+        var w = p
+        while (w >= 0 && (s.charAt(w).isLetterOrDigit || s.charAt(w) == '_')) w -= 1
+        val word = if (w < p) s.substring(w + 1, p + 1).toUpperCase else ""
+        val isArrayWord = word == "ARRAY"
+        val subscript = !isArrayWord && !arrayLiteralKw.contains(word) && p >= 0 &&
+          (s.charAt(p).isLetterOrDigit || s.charAt(p) == '_' ||
+            s.charAt(p) == ')' || s.charAt(p) == ']' || s.charAt(p) == '\'')
+        val close = closeGroup(s, mask, i, '[', ']')
+        if (close > 0 && !subscript) {
+          val start = if (isArrayWord) w + 1 else i
+          return Some(s.substring(0, start) + "array(" + s.substring(i + 1, close) +
+            ")" + s.substring(close + 1))
+        } else if (close > 0) {
+          // literal-keyed subscript → graft_extract (a string key on a
+          // JSON-text column has no Spark-native bracket form)
+          val inner = s.substring(i + 1, close).trim
+          if (inner.matches("'(?:[^']|'')*'") || inner.matches("\\d+")) {
+            val lhsStart = operandStart(s, mask, p)
+            if (lhsStart >= 0 && lhsStart <= p)
+              return Some(s.substring(0, lhsStart) +
+                s"graft_extract(${s.substring(lhsStart, p + 1)}, $inner)" + s.substring(close + 1))
+          }
+        }
+      }
+      i += 1
+    }
+    None
+  }
+
+  /** Rewrite the first array containment `x @> array(...)` / `x @> (v1, v2)`
+    * to `array_contains_all`, or None. */
+  private def containsStep(s: String, mask: Array[Boolean]): Option[String] = {
+    var i = 0
+    while (i < s.length - 1) {
+      if (!mask(i) && s.charAt(i) == '@' && s.charAt(i + 1) == '>') {
+        var r = i + 2
+        while (r < s.length && s.charAt(r).isWhitespace) r += 1
+        val isArrayFn = s.regionMatches(true, r, "array(", 0, 6) ||
+          s.regionMatches(true, r, "array (", 0, 7)
+        val isTuple = r < s.length && s.charAt(r) == '(' &&
+          !s.regionMatches(true, r + 1, "select", 0, 6)
+        if (isArrayFn || isTuple) {
+          val open = s.indexOf('(', r)
+          val close = closeParen(s, mask, open)
+          var l = i - 1
+          while (l >= 0 && s.charAt(l).isWhitespace) l -= 1
+          val lhsStart = operandStart(s, mask, l)
+          if (close > 0 && lhsStart >= 0 && lhsStart <= l) {
+            val rawLhs = s.substring(lhsStart, l + 1)
+            // a bare parenthesized tuple on the LHS is the reference's
+            // array spelling too: ('a','b') @> [...] — never a struct
+            val lhs =
+              if (rawLhs.startsWith("(") && rawLhs.endsWith(")")) "array" + rawLhs
+              else rawLhs
+            val rhs =
+              if (isArrayFn) s.substring(r, close + 1)
+              else "array" + s.substring(open, close + 1)
+            return Some(s.substring(0, lhsStart) +
+              s"array_contains_all($lhs, $rhs)" + s.substring(close + 1))
+          }
+        }
+      }
+      i += 1
+    }
+    None
   }
 
   /** See the call site in [[rewriteDialectSpellings]]: per-CASE-level

@@ -11,12 +11,21 @@ import java.util.regex.Matcher
   * INTERVAL-minuend swap r12). This object promotes that machinery from
   * per-rewrite guard to shared infrastructure:
   *
+  *  - the single-quote lexer ([[lex]]) — the only code that knows the
+  *    `'…'` / `''`-escape grammar (and, for comment stripping, line and
+  *    block comments); everything below reads its spans or its
+  *    [[literalMask]];
   *  - literal masking ([[literalMask]], [[mapOutsideLiterals]],
   *    [[replaceOutsideLiterals]], [[mapOutsideBackticks]]) — no rewrite may
   *    see string-literal content as SQL;
+  *  - the fixpoint driver ([[fixpoint]]) — every splice-one-occurrence
+  *    rewrite runs under it: it recomputes the mask and applies one step
+  *    until the step reports nothing left, with no iteration cap; a step
+  *    that returns its input unchanged is an `IllegalStateException`
+  *    naming the rewrite;
   *  - balanced-group scanning ([[parenDepthOf]], [[closeParen]],
-  *    [[closeGroup]]) — splices that consume a call's argument list find
-  *    the real closing delimiter, mask-aware;
+  *    [[closeGroup]], [[topLevelCommas]]) — splices that consume a call's
+  *    argument list find the real closing delimiter, mask-aware;
   *  - operand/expression capture ([[operandStart]], [[exprStart]],
   *    [[matchingCaseStart]], [[enclosingCallName]]) — backward scans that
   *    identify the operand an infix operator binds to;
@@ -34,24 +43,54 @@ import java.util.regex.Matcher
   */
 private[graft] object SqlScan {
 
+  /** A lexeme the rewrites never look into: a single-quoted literal from
+    * its opening quote to just past its closing one (to the end of the text
+    * when unterminated), or — in comment mode — a comment. */
+  final case class Span(start: Int, end: Int, comment: Boolean)
+
+  /** The single-quote lexer: the literal spans of `sql` in order, a doubled
+    * `''` inside a literal being an escape. With `comments`, `--` line
+    * comments (up to, not including, the newline) and block comments are
+    * spans too, so an apostrophe inside a comment (`-- don't`) opens no
+    * literal and `--` inside a literal stays content; a block comment whose
+    * opener is followed by `+` is an optimizer hint and stays text. */
+  def lex(sql: String, comments: Boolean = false): Seq[Span] = {
+    val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
+    val n = sql.length
+    var i = 0
+    while (i < n) {
+      if (sql.charAt(i) == '\'') {
+        var j = i + 1
+        var open = true
+        while (j < n && open) {
+          if (sql.charAt(j) != '\'') j += 1
+          else if (j + 1 < n && sql.charAt(j + 1) == '\'') j += 2
+          else { open = false; j += 1 }
+        }
+        spans += Span(i, j, comment = false)
+        i = j
+      } else if (comments && sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i)
+        val end = if (nl < 0) n else nl
+        spans += Span(i, end, comment = true)
+        i = end
+      } else if (comments && sql.startsWith("/*", i) && !sql.startsWith("/*+", i)) {
+        val close = sql.indexOf("*/", i + 2)
+        val end = if (close < 0) n else close + 2
+        spans += Span(i, end, comment = true)
+        i = end
+      } else i += 1
+    }
+    spans.toSeq
+  }
+
   /** mask(i) = true iff position i sits strictly inside a single-quoted
     * literal (opening quote excluded, so a regex match that starts AT a
     * literal — e.g. `'x' = ANY(arr)` — still rewrites; content matches —
     * e.g. the arrow in `'a -> 1'` — do not). */
   def literalMask(sql: String): Array[Boolean] = {
     val mask = new Array[Boolean](sql.length)
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inStr && c == '\'') { inStr = true; mask(i) = false }
-      else if (inStr && c == '\'') {
-        mask(i) = true
-        if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { mask(i + 1) = true; i += 1 }
-        else inStr = false
-      } else mask(i) = inStr
-      i += 1
-    }
+    lex(sql).foreach(sp => java.util.Arrays.fill(mask, sp.start + 1, sp.end, true))
     mask
   }
 
@@ -68,29 +107,32 @@ private[graft] object SqlScan {
     * string literals (literals are preserved verbatim). */
   def mapOutsideLiterals(sql: String)(f: String => String): String = {
     val out = new StringBuilder
-    val seg = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inStr && c == '\'') {
-        out.append(f(seg.toString)); seg.clear()
-        inStr = true
-        out.append(c)
-      } else if (inStr && c == '\'') {
-        // handle escaped '' inside literal
-        if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-          out.append("''"); i += 1
-        } else {
-          inStr = false
-          out.append(c)
-        }
-      } else if (inStr) out.append(c)
-      else seg.append(c)
-      i += 1
+    var pos = 0
+    lex(sql).foreach { sp =>
+      out.append(f(sql.substring(pos, sp.start))).append(sql.substring(sp.start, sp.end))
+      pos = sp.end
     }
-    out.append(f(seg.toString))
-    out.toString
+    out.append(f(sql.substring(pos))).toString
+  }
+
+  /** Rewrite to a fixpoint: `step` gets the current text and its literal
+    * mask and returns the text with ONE occurrence rewritten, or None when
+    * none is left. Progress contract: every Some must differ from the text
+    * it was given — a step that returns its input unchanged would loop
+    * forever, so it throws an IllegalStateException naming `rewrite`. There
+    * is no iteration cap: a statement with any number of occurrences
+    * rewrites completely. */
+  def fixpoint(rewrite: String, sql: String)(
+      step: (String, Array[Boolean]) => Option[String]): String = {
+    var cur = sql
+    var next = step(cur, literalMask(cur))
+    while (next.isDefined) {
+      if (next.get == cur)
+        throw new IllegalStateException(s"$rewrite rewrite made no progress on: $cur")
+      cur = next.get
+      next = step(cur, literalMask(cur))
+    }
+    cur
   }
 
   /** Apply `f` only to the spans outside backtick-quoted identifiers (which
@@ -139,6 +181,25 @@ private[graft] object SqlScan {
       k += 1
     }
     -1
+  }
+
+  /** Positions of the commas directly inside the group that opens at `open`
+    * and closes at `close`: commas nested in a deeper (...)/[...] group do
+    * not count (mask-aware). */
+  def topLevelCommas(s: String, mask: Array[Boolean], open: Int, close: Int): Seq[Int] = {
+    val commas = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var k = open + 1
+    while (k < close) {
+      val ch = s.charAt(k)
+      if (!mask(k) && (ch == '(' || ch == '[')) {
+        val e = closeGroup(s, mask, k, ch, if (ch == '(') ')' else ']')
+        k = if (e < 0) close else e + 1
+      } else {
+        if (!mask(k) && ch == ',') commas += k
+        k += 1
+      }
+    }
+    commas.toSeq
   }
 
   /** Scan backwards from inclusive position `l` (the last non-space char of

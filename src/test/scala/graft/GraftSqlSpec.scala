@@ -494,4 +494,42 @@ class GraftSqlSpec extends AnyFunSuite {
       "SELECT COUNT(*) AS n FROM my_probe JOIN $satellites s ON my_probe.planet_id = s.planetId")
     assert(other.head().getLong(0) == earthSats)
   }
+
+  test("rewrites run to completion however many occurrences a statement holds") {
+    def items(n: Int)(f: Int => String) = (1 to n).map(f).mkString("SELECT ", ", ", " FROM t")
+    val arrows = GraftSql.rewrite(items(65)(i => s"j -> 'k$i' AS a$i")).sql
+    assert(!arrows.contains("->"), arrows)
+    val xors = GraftSql.rewrite(items(33)(i => s"p$i XOR q$i AS x$i")).sql
+    assert(!xors.toUpperCase.contains("XOR"), xors)
+    val centuries = GraftSql.rewrite(items(33)(i => s"EXTRACT(CENTURY FROM d$i) AS c$i")).sql
+    assert(!centuries.toUpperCase.contains("CENTURY"), centuries)
+    val series = GraftSql.rewrite(
+      items(33)(i => s"(SELECT count(*) FROM GENERATE_SERIES(1, $i)) AS s$i")).sql
+    assert(!series.toUpperCase.contains("GENERATE_SERIES"), series)
+  }
+
+  test("splitStatements: ; and -- inside literals, '' escapes") {
+    assert(GraftSql.splitStatements("SELECT 'a;--b' AS v; SELECT 'it''s;' AS w -- c;d\n") ==
+      Seq("SELECT 'a;--b' AS v", "SELECT 'it''s;' AS w"))
+  }
+
+  // collected, not counted: a count() prunes the failing projection
+  test("2-argument regexp_extract[_all] returns the whole match (group 0)") {
+    assert(g.query("SELECT size(regexp_extract_all('a1b22c333', '[0-9]+')) AS n")
+      .head().getInt(0) == 3)
+    assert(g.query("SELECT regexp_extract('ab12cd', '[0-9]+') AS v").head().getString(0) == "12")
+  }
+
+  test("simhash takes text (tokenized as Kit.words) or a token array, nothing else") {
+    assert(g.query("SELECT simhash('hello') = simhash('hello') AS v").head().getBoolean(0))
+    assert(g.query("SELECT simhash('Hello World') = simhash(array('hello', 'world')) AS v")
+      .head().getBoolean(0))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      g.query("SELECT simhash(42) AS v").collect())
+    assert(e.getMessage.contains("simhash"), e.getMessage)
+  }
+
+  test("printf formats DECIMAL arguments with %f") {
+    assert(g.query("SELECT printf('%05.2f', 3.14159) AS v").head().getString(0) == "03.14")
+  }
 }

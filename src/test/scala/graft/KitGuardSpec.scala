@@ -9,6 +9,9 @@ import scala.jdk.CollectionConverters._
   * '\s+')`, and the shingle set whose hand-rolled copies drifted into the
   * `slice` start-0 failure on docs shorter than a shingle. This spec fails
   * when a batch file spells either one again instead of calling the kit.
+  * Likewise the dialect rewriter's quote lexer and fixpoint driver live in
+  * `SqlScan.scala` alone: capped rewrite loops silently left the occurrences
+  * past their cap unrewritten.
   */
 class KitGuardSpec extends AnyFunSuite {
 
@@ -37,5 +40,11 @@ class KitGuardSpec extends AnyFunSuite {
       .flatMap(offenders(_, Set.empty))
     assert(hits.isEmpty,
       s"use Kit.words / Kit.shingleSet instead of a local copy: ${hits.mkString(", ")}")
+  }
+
+  test("no hand-rolled quote loop or capped rewrite loop outside SqlScan") {
+    val hits = Seq("inStr =", "guard <").flatMap(offenders(_, Set("SqlScan.scala")))
+    assert(hits.isEmpty,
+      s"use SqlScan.lex / SqlScan.fixpoint instead of a local copy: ${hits.mkString(", ")}")
   }
 }

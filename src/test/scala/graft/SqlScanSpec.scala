@@ -175,4 +175,33 @@ class SqlScanSpec extends AnyFunSuite {
     assert(refs("SELECT * FROM db.sch.t JOIN $planets p").flatMap(_.name)
       == Seq("db.sch.t", "$planets"))
   }
+
+  test("lex: literals, escapes, unterminated tail, comments only in comment mode") {
+    val s = "a 'b''c' -- d'\n/* 'e */ /*+ f */ 'g"
+    // without comment mode the apostrophe after `d` opens a literal
+    assert(lex(s) == Seq(Span(2, 8, comment = false), Span(13, 19, comment = false),
+      Span(33, 35, comment = false)))
+    assert(lex(s, comments = true) == Seq(Span(2, 8, comment = false),
+      Span(9, 14, comment = true), Span(15, 23, comment = true), Span(33, 35, comment = false)))
+  }
+
+  test("fixpoint: one step per occurrence until None, no-progress step throws") {
+    var calls = 0
+    val out = fixpoint("strip", "x" * 100) { (s, _) =>
+      calls += 1
+      if (s.isEmpty) None else Some(s.tail)
+    }
+    assert(out.isEmpty && calls == 101)
+    // the mask handed to each step is the current text's literal mask
+    assert(fixpoint("unquote", "'a' b") { (s, m) =>
+      if (s.startsWith("'")) Some(s.substring(m.lastIndexOf(true) + 1).trim) else None
+    } == "b")
+    val e = intercept[IllegalStateException](fixpoint("stuck", "x")((s, _) => Some(s)))
+    assert(e.getMessage.contains("stuck"))
+  }
+
+  test("topLevelCommas: nested groups and literals hide their commas") {
+    val s = "f(a, g(b, c), [d, e], 'x,y')"
+    assert(topLevelCommas(s, maskOf(s), 1, s.length - 1) == Seq(3, 12, 20))
+  }
 }
