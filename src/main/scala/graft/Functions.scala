@@ -543,6 +543,70 @@ object Functions {
       reg.createOrReplaceTempFunction("current_time",
         (_: Seq[Expression]) => new DateFormatClass(CurTs(), Literal("HH:mm:ss")),
         "internal")
+    reg.createOrReplaceTempFunction("quantified_cmp", quantifiedCompare _, "internal")
+  }
+
+  /** QUANTIFIED_CMP(lhs, agg, op, quantifier): the ANSI three-valued
+    * `lhs op ALL|ANY (subquery)` that GraftSql writes for an order or
+    * equality quantifier. `agg` is one scalar subquery over the set,
+    * `named_struct('cnt', COUNT(*), 'nulls', <null count>, <witnesses>)`,
+    * whose witnesses are `w` (the extremum `op` must beat: MAX for `> ALL`,
+    * MIN for `> ANY`, duals for `<`) or `min`, `max` (for `= ALL` and
+    * `<> ANY`). The SQL names the subquery once; the CASE built here reads
+    * each field from its own copy of it, as if the subquery had been pasted
+    * once per field, so lhs stays outside the subquery (an aggregate lhs, a
+    * JOIN condition or an outer reference resolves as in any comparison).
+    *   cnt = 0        → ALL is TRUE, ANY is FALSE (empty set)
+    *   lhs op w       → decides when no NULLs interfere
+    *   NULL elements  → UNKNOWN whenever they could flip the result */
+  private def quantifiedCompare(
+      es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
+  ): org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, EqualTo, Expression,
+      GetStructField, GreaterThan, GreaterThanOrEqual, IsNull, LessThan, LessThanOrEqual,
+      Literal, NamedExpression, Not, Or, ScalarSubquery}
+    import org.apache.spark.sql.types.{BooleanType, StructType}
+    def arg(i: Int): String =
+      if (es.length == 4 && es(i).foldable) String.valueOf(es(i).eval()) else ""
+    val (op, quantifier) = (arg(2), arg(3))
+    val fields = es.lift(1).map(_.dataType) match {
+      case Some(st: StructType) => st.fieldNames.toSeq
+      case _ => Nil
+    }
+    val order = Set("<", "<=", ">", ">=")(op) && Set("ALL", "ANY")(quantifier) &&
+      fields == Seq("cnt", "nulls", "w")
+    val equality = (op, quantifier) == ("=", "ALL") || (op, quantifier) == ("<>", "ANY")
+    require(order || equality && fields == Seq("cnt", "nulls", "min", "max"),
+      "quantified_cmp(lhs, named_struct('cnt', .., 'nulls', .., 'w', ..), op, 'ALL'|'ANY')" +
+        " takes a literal order op, or '=' ALL / '<>' ANY over fields cnt, nulls, min, max")
+    val Seq(lhs, agg, _, _) = es
+    val all = quantifier == "ALL"
+    def field(i: Int): Expression = GetStructField(agg.transform {
+      case s: ScalarSubquery => s.copy(exprId = NamedExpression.newExprId)
+    }, i)
+    val (cnt, nulls) = (field(0), field(1))
+    val unknown = Literal(null, BooleanType)
+    def tf(b: Boolean): Expression = Literal(b)
+    val cmp: Option[Expression => Expression] = op match {
+      case ">" => Some(GreaterThan(lhs, _))
+      case ">=" => Some(GreaterThanOrEqual(lhs, _))
+      case "<" => Some(LessThan(lhs, _))
+      case "<=" => Some(LessThanOrEqual(lhs, _))
+      case _ => None
+    }
+    cmp match {
+      case Some(c) =>
+        val (first, second) =
+          if (all) (Not(c(field(2))), c(field(2))) else (c(field(2)), Not(c(field(2))))
+        CaseWhen(Seq(EqualTo(cnt, Literal(0L)) -> tf(all), first -> tf(!all),
+          GreaterThan(nulls, Literal(0L)) -> unknown, second -> tf(all)), unknown)
+      // `= ALL` / `<> ANY`: a refuting element exists iff the non-null
+      // values aren't all equal to lhs, checkable via MIN and MAX
+      case None =>
+        CaseWhen(Seq(EqualTo(cnt, Literal(0L)) -> tf(all), IsNull(lhs) -> unknown,
+          Or(Not(EqualTo(lhs, field(2))), Not(EqualTo(lhs, field(3)))) -> tf(!all),
+          GreaterThan(nulls, Literal(0L)) -> unknown), tf(all))
+    }
   }
 
   /** Tokenization shared by MATCH_AGAINST. */

@@ -155,13 +155,19 @@ class Graft(val spark: SparkSession) {
     // EXECUTE <prepared> (p1, p2, ...) — positional binds, injection-safe
     sql match {
       case executeRe(name, params) if prepared.contains(name) =>
-        val bound: Seq[Any] = Option(params).filter(_.trim.nonEmpty).toSeq
-          .flatMap(_.split(",").toSeq.map(_.trim).map {
-            case s if s.startsWith("'") && s.endsWith("'") => s.substring(1, s.length - 1)
+        // split on the commas outside literals: `('x,y', 'it''s')` binds two
+        val bound: Seq[Any] = Option(params).filter(_.trim.nonEmpty).toSeq.flatMap { p =>
+          val group = s"($p)"
+          val cuts = (0 +: SqlScan.topLevelCommas(group, SqlScan.literalMask(group), 0,
+            group.length - 1)) :+ (group.length - 1)
+          cuts.sliding(2).map(c => group.substring(c(0) + 1, c(1)).trim).map {
+            case s if s.startsWith("'") && s.endsWith("'") =>
+              s.substring(1, s.length - 1).replace("''", "'")
             case n if n.matches("""-?\d+""") => n.toLong
             case d if d.matches("""-?\d*\.\d+""") => d.toDouble
             case other => other
-          })
+          }
+        }
         return queryImpl(prepared(name), bound, named)
       case _ => ()
     }

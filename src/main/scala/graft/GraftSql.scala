@@ -389,8 +389,9 @@ object GraftSql {
     * plus the ANSI subquery forms). A balanced scanner, not a regex: the
     * RHS may be any call chain (`ANY(transform(w, x -> length(x)))`) or a
     * subquery. Array RHS compiles to Spark higher-order `exists`/`forall`
-    * lambdas (codegen-friendly); subquery RHS compiles to IN / NOT IN or an
-    * extremum scalar subquery (`> ALL (SELECT s)` → `> (SELECT max(s))`).
+    * lambdas (codegen-friendly); subquery RHS compiles to IN / NOT IN or to
+    * `quantified_cmp` over one scalar subquery that aggregates the set
+    * (`> ALL (SELECT s)` reads its count, null count and `max(s)`).
     * `ANY(col)` with NO preceding comparison operator is Spark's boolean
     * aggregate and is left untouched. */
   private def rewriteQuantified(sql: String): String =
@@ -435,46 +436,15 @@ object GraftSql {
             val isSubquery = innerU.startsWith("SELECT") || innerU.startsWith("WITH")
             val existsQ = kw == "ANY" || kw == "SOME"
             val likeFamily = op.endsWith("LIKE")
-            // ANSI three-valued semantics over a subquery, with uncorrelated
-            // scalar subqueries only (Spark reuses the identical ones):
-            //   cnt = 0       → ALL is TRUE, ANY is FALSE (empty set)
-            //   lhs op ext    → decides when no NULLs interfere, where ext is
-            //                   the witness extremum (MAX for `> ALL`, MIN for
-            //                   `> ANY`, duals for `<`)
-            //   NULL elements → UNKNOWN whenever they could flip the result
-            def extremumCase(agg: String): String = {
-              val ext = s"(SELECT $agg(__v) FROM ($inner) AS __q(__v))"
-              val cnt = s"(SELECT COUNT(*) FROM ($inner) AS __q(__v))"
-              val nulls = s"(SELECT COUNT(*) - COUNT(__v) FROM ($inner) AS __q(__v))"
-              if (existsQ)
-                s"(CASE WHEN $cnt = 0 THEN FALSE" +
-                  s" WHEN $lhs $op $ext THEN TRUE" +
-                  s" WHEN $nulls > 0 THEN CAST(NULL AS BOOLEAN)" +
-                  s" WHEN NOT($lhs $op $ext) THEN FALSE" +
-                  s" ELSE CAST(NULL AS BOOLEAN) END)"
-              else
-                s"(CASE WHEN $cnt = 0 THEN TRUE" +
-                  s" WHEN NOT($lhs $op $ext) THEN FALSE" +
-                  s" WHEN $nulls > 0 THEN CAST(NULL AS BOOLEAN)" +
-                  s" WHEN $lhs $op $ext THEN TRUE" +
-                  s" ELSE CAST(NULL AS BOOLEAN) END)"
-            }
-            // = ALL / != ANY: a refuting element exists iff the non-null
-            // values aren't all equal to lhs — checkable via MIN and MAX.
-            def equalityCase(refuteWins: Boolean): String = {
-              val mn = s"(SELECT MIN(__v) FROM ($inner) AS __q(__v))"
-              val mx = s"(SELECT MAX(__v) FROM ($inner) AS __q(__v))"
-              val cnt = s"(SELECT COUNT(*) FROM ($inner) AS __q(__v))"
-              val nulls = s"(SELECT COUNT(*) - COUNT(__v) FROM ($inner) AS __q(__v))"
-              val (onEmpty, onRefute, onAllEqual) =
-                if (refuteWins) ("FALSE", "TRUE", "FALSE") // != ANY
-                else ("TRUE", "FALSE", "TRUE") // = ALL
-              s"(CASE WHEN $cnt = 0 THEN $onEmpty" +
-                s" WHEN ($lhs) IS NULL THEN CAST(NULL AS BOOLEAN)" +
-                s" WHEN $lhs <> $mn OR $lhs <> $mx THEN $onRefute" +
-                s" WHEN $nulls > 0 THEN CAST(NULL AS BOOLEAN)" +
-                s" ELSE $onAllEqual END)"
-            }
+            // ANSI three-valued semantics over a subquery: one scalar
+            // subquery aggregates the set into count, null count and the
+            // witnesses, and `quantified_cmp` (Functions.quantifiedCompare)
+            // decides the comparison from them. The subquery text appears
+            // once, so nested comparisons grow linearly.
+            def aggregated(witnesses: String): String =
+              s"quantified_cmp($lhs, (SELECT named_struct('cnt', COUNT(*)," +
+                s" 'nulls', COUNT(*) - COUNT(__v), $witnesses) FROM ($inner) AS __q(__v))," +
+                s" '${if (op == "!=") "<>" else op}', '${if (existsQ) "ANY" else "ALL"}')"
             val replacement: Option[String] =
               if (!isSubquery) {
                 // Spark's native `LIKE ANY ('a%', 'b%')` pattern-list form: a
@@ -496,9 +466,9 @@ object GraftSql {
                 case (">", _) | (">=", _) | ("<", _) | ("<=", _) =>
                   // witness extremum: > ANY(S) needs min(S); > ALL(S) max(S)
                   val wantMin = (op.startsWith(">") && existsQ) || (op.startsWith("<") && !existsQ)
-                  Some(extremumCase(if (wantMin) "MIN" else "MAX"))
-                case ("=", false) => Some(equalityCase(refuteWins = false))
-                case ("!=", true) | ("<>", true) => Some(equalityCase(refuteWins = true))
+                  Some(aggregated(s"'w', ${if (wantMin) "MIN" else "MAX"}(__v)"))
+                case ("=", false) | ("!=", true) | ("<>", true) =>
+                  Some(aggregated("'min', MIN(__v), 'max', MAX(__v)"))
                 case _ =>
                   throw new IllegalArgumentException(
                     s"Unsupported quantified comparison `$op $kw (SELECT ...)` — " +

@@ -9,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Conventions enforced across the corpus so hash-comparison is stable:
   *  - every output column is explicitly aliased, identically on both sides;
   *  - every query ends in a deterministic ORDER BY over a unique key;
-  *  - double-typed aggregates are either computed exactly (DECIMAL(38,6)
-  *    sums — order-independent, engine-independent) or rounded.
+  *  - double-typed aggregates are either computed exactly (the exact sums
+  *    of [[graft.operators.Kit]] — order-independent, engine-independent)
+  *    or rounded.
   */
 final case class QueryDef(
     name: String,

@@ -368,7 +368,7 @@ object PipelineQueries {
         .groupBy(window(col("ts"), "1 hour").getField("start").as("window_start"),
           col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(38,6)")).cast("double").as("total"))
+          Kit.dsum(col("value"), 6).as("total"))
         .orderBy(col("window_start"), col("event_type"))
     },
 

@@ -267,7 +267,7 @@ object PipelineQueries10 {
           .select(col("s"), col("cid"), (col("pos") + 1).as("dim"),
             col("col").as("val"))
           .groupBy(col("s"), col("cid"), col("dim"))
-          .agg((sum(round(col("val"), 9).cast("decimal(38,9)")).cast("double") /
+          .agg((Kit.rsum(col("val"), 9) /
             count(lit(1))).as("m"))
           .groupBy(col("s"), col("cid"))
           .agg(transform(
@@ -276,7 +276,7 @@ object PipelineQueries10 {
       val a2 = assign(pack(update(assign(pack(init)))))
       a2.groupBy(col("s"), col("cid"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(sum(col("cos").cast("decimal(38,9)")).cast("double") /
+          round(Kit.dsum(col("cos"), 9) /
             count(lit(1)), 6).as("avg_cos"),
           round(min(col("cos")), 6).as("min_cos"))
         .select(col("s").as("sub"), col("cid").as("code"),

@@ -157,12 +157,12 @@ object PipelineQueries11 {
           col("n_users"), lit(0.0).as("sum_hours"))
       val r2 = s2.join(s1, Seq("user_id"))
         .agg(count(lit(1)).as("n_users"),
-          sum(hours(col("t1"), col("t2")).cast("decimal(38,9)")).cast("double").as("sum_hours"))
+          Kit.dsum(hours(col("t1"), col("t2")), 9).as("sum_hours"))
         .select(lit(2).as("stage"), lit("click_after_view").as("label"),
           col("n_users"), col("sum_hours"))
       val r3 = s3.join(s1, Seq("user_id"))
         .agg(count(lit(1)).as("n_users"),
-          sum(hours(col("t1"), col("t3")).cast("decimal(38,9)")).cast("double").as("sum_hours"))
+          Kit.dsum(hours(col("t1"), col("t3")), 9).as("sum_hours"))
         .select(lit(3).as("stage"), lit("purchase_after_click").as("label"),
           col("n_users"), col("sum_hours"))
       r1.unionAll(r2).unionAll(r3)

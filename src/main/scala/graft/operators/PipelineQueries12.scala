@@ -119,7 +119,7 @@ object PipelineQueries12 {
       FROM z ORDER BY user_id, day""")) { (s, dir) =>
       val d = Tables.df(s, dir, "events")
         .groupBy(col("user_id"), col("ts").cast("date").as("day"))
-        .agg(sum(round(col("value"), 9).cast("decimal(38,9)"))
+        .agg(sum(Kit.rdec(col("value"), 9))
           .cast("decimal(38,9)").as("v"))
       val tw = Window.partitionBy(col("user_id")).orderBy(col("day"))
         .rowsBetween(-Trail, -1)

@@ -114,15 +114,13 @@ object PipelineQueries13 {
         .select(col("doc_id"), col("tk"), (col("tf") * col("idf")).as("w"))
         .localCheckpoint()
       val nrm = w.groupBy(col("doc_id"))
-        .agg(sqrt(sum(round(col("w") * col("w"), 9).cast("decimal(38,9)"))
-          .cast("double")).as("nrm"))
+        .agg(sqrt(Kit.rsum(col("w") * col("w"), 9)).as("nrm"))
       val qw = w.filter(col("doc_id") % QMod === 0 && col("doc_id") < QCap)
         .select(col("doc_id").as("qid"), col("tk").as("qtk"), col("w").as("wq"))
       val dt = w.join(broadcast(qw),
           col("tk") === col("qtk") && col("doc_id") =!= col("qid"))
         .groupBy(col("qid"), col("doc_id").as("cid"))
-        .agg(sum(round(col("wq") * col("w"), 9).cast("decimal(38,9)"))
-          .cast("double").as("dot"))
+        .agg(Kit.rsum(col("wq") * col("w"), 9).as("dot"))
       val sim = dt
         .join(broadcast(nrm.select(col("doc_id").as("qid"), col("nrm").as("nq"))), "qid")
         .join(nrm.select(col("doc_id").as("cid"), col("nrm").as("nc")), "cid")
@@ -263,8 +261,7 @@ object PipelineQueries13 {
         val scored = base.select(col("xs"),
           (cw * (col("y") - (lit(1.0) / (lit(1.0) + exp(-zCol(w)))))).as("s"))
         val gExprs = (0 until Dim).map(i =>
-          sum(round(col("s") * element_at(col("xs"), i + 1), 9)
-            .cast("decimal(38,9)")).as(s"g$i"))
+          sum(Kit.rdec(col("s") * element_at(col("xs"), i + 1), 9)).as(s"g$i"))
         val row = scored.agg(gExprs.head, gExprs.tail: _*).head()
         w = w.indices.map(j =>
           w(j) + Lr * row.getDecimal(j).doubleValue() / n).toArray
@@ -273,7 +270,7 @@ object PipelineQueries13 {
         .select(col("label"), (lit(1.0) / (lit(1.0) + exp(-zCol(w)))).as("p"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(sum(round(col("p"), 9).cast("decimal(38,9)")).cast("double")
+          round(Kit.rsum(col("p"), 9)
             / count(lit(1)), 6).as("avg_p"),
           sum(when(col("p") >= 0.5, 1L).otherwise(0L)).as("n_pred_pos"))
         .orderBy(col("label"))
@@ -350,8 +347,7 @@ object PipelineQueries13 {
       val sc = tok.join(tc, "tk").crossJoin(broadcast(tot))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_tok"),
-          round(sum(round(-log(col("c").cast("double") / col("t")), 9)
-            .cast("decimal(38,9)")).cast("double") / count(lit(1)), 3).as("sc"))
+          round(Kit.rsum(-log(col("c").cast("double") / col("t")), 9) / count(lit(1)), 3).as("sc"))
       val q = ExactPercentile.percentiles(
         sc.withColumn("g", lit(1)), "g", col("sc"),
         Seq(0.25 -> "q1", 0.5 -> "q2", 0.75 -> "q3")).drop("g")
@@ -477,18 +473,17 @@ object PipelineQueries13 {
         explode(array((lit(7) * col("v") + 13) % col("m"),
           (lit(31) * col("v") + 5) % col("m"))).as("dst"))
       var r = base.select(col("v"),
-        round(lit(1.0) / col("n"), 12).cast("decimal(38,12)").as("r"))
+        Kit.rdec(lit(1.0) / col("n"), 12).as("r"))
       for (_ <- 1 to PrIters) {
         val contrib = e.join(r, col("src") === col("v"))
           .groupBy(col("dst"))
-          .agg(sum(round(col("r").cast("double") / 2, 12)
-            .cast("decimal(38,12)")).as("s"))
+          .agg(sum(Kit.rdec(col("r").cast("double") / 2, 12)).as("s"))
         r = nodes.join(contrib, col("v") === col("dst"), "left")
           .crossJoin(broadcast(nn))
           .select(col("v"),
-            round(lit(0.15) / col("n")
-              + lit(Damping) * coalesce(col("s"), lit(0).cast("decimal(38,12)")).cast("double"), 12)
-              .cast("decimal(38,12)").as("r"))
+            Kit.rdec(lit(0.15) / col("n")
+              + lit(Damping) * coalesce(col("s"), Kit.dec(lit(0), 12)).cast("double"),
+              12).as("r"))
       }
       r.orderBy(col("r").desc, col("v")).limit(20)
         .select(col("v").as("doc_id"), round(col("r").cast("double"), 10).as("pr"))

@@ -178,7 +178,7 @@ object PipelineQueries14 {
         .agg(count(lit(1)).as("n"),
           round(min(col("lo")), 6).as("p01"), round(min(col("hi")), 6).as("p99"),
           sum(col("clipped")).as("n_clipped"),
-          round(sum(round(col("wv"), 9).cast("decimal(38,9)")).cast("double")
+          round(Kit.rsum(col("wv"), 9)
             / count(lit(1)), 6).as("mean_wins"))
         .orderBy(col("event_type"))
     },
@@ -252,8 +252,7 @@ object PipelineQueries14 {
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
       val h = wc.groupBy(col("doc_id"))
         .agg(sum(col("c")).as("n_tok"),
-          sum(round(col("c") * log(col("c").cast("double")), 9)
-            .cast("decimal(38,9)")).cast("double").as("sclc"))
+          Kit.rsum(col("c") * log(col("c").cast("double")), 9).as("sclc"))
       val ent = log(col("n_tok").cast("double")) - col("sclc") / col("n_tok")
       h.select(col("doc_id"), col("n_tok"),
           round(ent, 6).as("entropy"),

@@ -64,18 +64,17 @@ object PipelineQueries15 {
         .select(col("vec_id"), col("label"),
           explode(transform(col("embedding"), e => round(e.cast("double"), 6))).as("x"))
         .groupBy(col("vec_id"), col("label"))
-        .agg(sqrt(sum(round(col("x") * col("x"), 9).cast("decimal(38,9)"))
-          .cast("double")).as("nrm"))
+        .agg(sqrt(Kit.rsum(col("x") * col("x"), 9)).as("nrm"))
       val st = nr.agg(count(lit(1)).as("n"),
-        sum(round(col("nrm"), 9).cast("decimal(38,9)")).cast("double").as("s1"),
-        sum(round(col("nrm") * col("nrm"), 9).cast("decimal(38,9)")).cast("double").as("s2"))
+        Kit.rsum(col("nrm"), 9).as("s1"),
+        Kit.rsum(col("nrm") * col("nrm"), 9).as("s2"))
       val zs = (col("nrm") - col("s1") / col("n")) /
         sqrt((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1))
       nr.crossJoin(broadcast(st))
         .select(col("label"), col("nrm"), zs.as("zs"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(sum(round(col("nrm"), 9).cast("decimal(38,9)")).cast("double")
+          round(Kit.rsum(col("nrm"), 9)
             / count(lit(1)), 6).as("mean_norm"),
           round(min(col("nrm")), 6).as("min_norm"),
           round(max(col("nrm")), 6).as("max_norm"),

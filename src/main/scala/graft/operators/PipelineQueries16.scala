@@ -286,7 +286,7 @@ object PipelineQueries16 {
         .groupBy(col("user_id"))
         .agg(max(col("ts").cast("date")).as("last_d"),
           count(lit(1)).as("freq"),
-          sum(round(col("value"), 2).cast("decimal(38,2)")).cast("double").as("mon"))
+          Kit.rsum(col("value"), 2).as("mon"))
       val mx = u.agg(max(col("last_d")).as("corpus_d"))
       val r = u.crossJoin(broadcast(mx))
         .select(col("user_id"), datediff(col("corpus_d"), col("last_d")).as("rec"),
@@ -306,7 +306,7 @@ object PipelineQueries16 {
           (lit(1) + steps(col("monr"), Seq("m1", "m2", "m3"))).as("ms"))
       sc.groupBy((col("rs") * 100 + col("fs") * 10 + col("ms")).cast("int").as("rfm_code"))
         .agg(count(lit(1)).as("n_users"),
-          round(sum(round(col("mon"), 2).cast("decimal(38,2)")).cast("double")
+          round(Kit.rsum(col("mon"), 2)
             / count(lit(1)), 2).as("avg_monetary"))
         .orderBy(col("rfm_code"))
     }

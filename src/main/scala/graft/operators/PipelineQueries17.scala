@@ -190,8 +190,7 @@ object PipelineQueries17 {
         / HalfLifeDays)
       ev.crossJoin(broadcast(mx))
         .select(col("user_id"),
-          round(col("value") * pow(lit(0.5), weeks), 6)
-            .cast("decimal(38,6)").as("dv"))
+          Kit.rdec(col("value") * pow(lit(0.5), weeks), 6).as("dv"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("dv")).cast("double").as("decayed_value"))

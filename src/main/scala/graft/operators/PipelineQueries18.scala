@@ -170,7 +170,7 @@ object PipelineQueries18 {
         .select(col("lang"), decile.cast("int").as("decile"), col("score"))
         .groupBy(col("lang"), col("decile"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(col("score").cast("decimal(38,2)")).cast("double").as("sum_score"))
+          Kit.dsum(col("score"), 2).as("sum_score"))
         .orderBy(col("lang"), col("decile"))
     },
 

@@ -75,7 +75,7 @@ object PipelineQueries21 {
       val e = col("n") / 24.0
       val x = c.join(t, "event_type")
         .withColumn("cell",
-          round((col("o") - e) * (col("o") - e) / e, 6).cast("decimal(38,6)"))
+          Kit.rdec((col("o") - e) * (col("o") - e) / e, 6))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("event_type")).orderBy(col("o").desc, col("h"))))
       x.groupBy(col("event_type"))

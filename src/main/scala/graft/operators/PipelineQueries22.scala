@@ -130,7 +130,7 @@ object PipelineQueries22 {
       g.groupBy(when(col("gap") < 0.005, "same")
           .when(col("gap") < 0.055, "near").otherwise("far").as("gap_class"))
         .agg(count(lit(1)).as("n_pairs"),
-          sum(round(col("gap"), 2).cast("decimal(38,2)")).cast("double").as("sum_gap"))
+          Kit.rsum(col("gap"), 2).as("sum_gap"))
         .orderBy(col("gap_class"))
     },
 

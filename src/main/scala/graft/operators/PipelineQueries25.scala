@@ -60,7 +60,7 @@ object PipelineQueries25 {
           col("score"))
         .groupBy(col("len_decile"), col("q_quintile"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(col("score").cast("decimal(38,2)")).cast("double").as("sum_score"))
+          Kit.dsum(col("score"), 2).as("sum_score"))
         .orderBy(col("len_decile"), col("q_quintile"))
     }
   )

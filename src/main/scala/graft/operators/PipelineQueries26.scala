@@ -203,8 +203,7 @@ object PipelineQueries26 {
       val merged = sk.agg(
         slice(array_sort(array_distinct(flatten(collect_list(col("sketch"))))),
           1, K).as("msk"),
-        sum(round(estOf(col("sketch")), 4).cast("decimal(38,4)"))
-          .cast("double").as("sum_est"))
+        Kit.rsum(estOf(col("sketch")), 4).as("sum_est"))
       val duExact = grams.select(col("g")).distinct().agg(count(lit(1)).as("d_union"))
       sk.select(col("source"), col("d_exact"),
           round(estOf(col("sketch")), 4).as("est"))

@@ -182,7 +182,7 @@ object PipelineQueries28 {
         .select(col("label"), (col("pos") + 1).as("dim"),
           col("col").cast("double").as("val"))
       val cent = uv.groupBy(col("label"), col("dim"))
-        .agg((sum(round(col("val"), 9).cast("decimal(38,9)")).cast("double") /
+        .agg((Kit.rsum(col("val"), 9) /
           count(lit(1))).as("m"))
       val cvec = cent.groupBy(col("label"))
         .agg(transform(
@@ -193,7 +193,7 @@ object PipelineQueries28 {
           round(Functions.cosineSimilarity(col("embedding"), col("cv")), 9).as("d"))
       val mom = c.groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
-          sum(col("d").cast("decimal(38,9)")).cast("double").as("s1"),
+          Kit.dsum(col("d"), 9).as("s1"),
           sum(col("d").cast("decimal(18,9)") * col("d").cast("decimal(18,9)"))
             .cast("double").as("s2"))
       val thr = mom.select(col("label"), (col("s1") / col("n")).as("mu"),

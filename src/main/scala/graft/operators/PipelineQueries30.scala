@@ -108,7 +108,7 @@ object PipelineQueries30 {
       a.select(col("cid"), posexplode(col("v")))
         .select(col("cid"), (col("pos") + 1).as("dim"), col("col").as("val"))
         .groupBy(col("cid"), col("dim"))
-        .agg((sum(round(col("val"), 9).cast("decimal(38,9)")).cast("double") /
+        .agg((Kit.rsum(col("val"), 9) /
           count(lit(1))).as("m"))
         .groupBy(col("cid"))
         .agg(transform(

@@ -201,12 +201,10 @@ object PipelineQueries31 {
       val pts = curve.select(round(log(col("cum_toks").cast("double")), 9).as("x"),
         round(log(col("cum_vocab").cast("double")), 9).as("y"))
       val fit = pts.agg(count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(38,9)")).cast("double").as("sx"),
-        sum(col("y").cast("decimal(38,9)")).cast("double").as("sy"),
-        sum(round(col("x") * col("y"), 12).cast("decimal(38,12)"))
-          .cast("double").as("sxy"),
-        sum(round(col("x") * col("x"), 12).cast("decimal(38,12)"))
-          .cast("double").as("sxx"))
+        Kit.dsum(col("x"), 9).as("sx"),
+        Kit.dsum(col("y"), 9).as("sy"),
+        Kit.rsum(col("x") * col("y"), 12).as("sxy"),
+        Kit.rsum(col("x") * col("x"), 12).as("sxx"))
       val b = (col("n") * col("sxy") - col("sx") * col("sy")) /
         (col("n") * col("sxx") - col("sx") * col("sx"))
       // `+ 0.0` normalizes IEEE -0.0 (a saturated-vocab corpus fits slope

@@ -125,8 +125,7 @@ object PipelineQueries33 {
       // per-dim means, engine-side rounding: identical expression to the
       // old groupBy(i) per-cell mean, as 64 agg columns over one pass
       val mExprs = (0 until Dim).map(i =>
-        round(sum(element_at(col("xs"), i + 1).cast("decimal(38,6)"))
-          .cast("double") / count(lit(1)), 9).as(s"m$i"))
+        round(Kit.dsum(element_at(col("xs"), i + 1), 6) / count(lit(1)), 9).as(s"m$i"))
       val mRow = exs.agg(mExprs.head, mExprs.tail: _*).head()
       val mlit = array((0 until Dim).map(i => lit(mRow.getDouble(i))): _*)
       val ex = exs.select(col("vec_id"), col("label"),
@@ -148,14 +147,12 @@ object PipelineQueries33 {
       for (_ <- 1 to Iters) {
         val scored = ex.select(col("xc"), dCol(v).as("d"))
         val gExprs = (0 until Dim).map(i =>
-          sum(round(col("d") * element_at(col("xc"), i + 1), 9)
-            .cast("decimal(38,9)")).cast("double").as(s"g$i"))
+          Kit.rsum(col("d") * element_at(col("xc"), i + 1), 9).as(s"g$i"))
         val gRow = scored.agg(gExprs.head, gExprs.tail: _*)
           .localCheckpoint() // one corpus job; norm + rescale read 64 cells
         val g = gRow.select(posexplode(
           array((0 until Dim).map(i => col(s"g$i")): _*)).as(Seq("i", "g")))
-        val n2 = g.agg(sum(round(col("g") * col("g"), 12).cast("decimal(38,12)"))
-          .cast("double").as("n2"))
+        val n2 = g.agg(Kit.rsum(col("g") * col("g"), 12).as("n2"))
         n2Last = n2.head().getDouble(0)
         // engine-side rounding (never driver-side): v's grid must come from
         // the same round() kernel the oracle uses
@@ -168,10 +165,9 @@ object PipelineQueries33 {
       val eig = nn.select(round(sqrt(lit(n2Last)) / col("n"), 6).as("eigenvalue"))
       pf.groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(sum(round(col("p"), 9).cast("decimal(38,9)")).cast("double")
+          round(Kit.rsum(col("p"), 9)
             / count(lit(1)), 6).as("mean_proj"),
-          round(sqrt(sum(round(col("p") * col("p"), 9).cast("decimal(38,9)"))
-            .cast("double") / count(lit(1))), 6).as("rms_proj"))
+          round(sqrt(Kit.rsum(col("p") * col("p"), 9) / count(lit(1))), 6).as("rms_proj"))
         .crossJoin(broadcast(eig))
         .orderBy(col("label"))
     },
@@ -346,7 +342,7 @@ object PipelineQueries33 {
               .otherwise(0.0), 9).as("kterm"))
       kt.groupBy(col("src_a"), col("src_b"))
         .agg(sum(col("shared")).cast("bigint").as("n_shared"),
-          round(sum(col("kterm").cast("decimal(38,9)")).cast("double"), 6).as("js"))
+          round(Kit.dsum(col("kterm"), 9), 6).as("js"))
         .orderBy(col("src_a"), col("src_b"))
     })
 }

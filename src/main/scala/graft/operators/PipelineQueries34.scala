@@ -147,25 +147,22 @@ object PipelineQueries34 {
         .localCheckpoint() // consumed by the projection AND the true-distance leg
       val proj = exr.join(broadcast(sgn), "i")
         .groupBy(col("vec_id"), col("j"))
-        .agg((sum(round(col("x") * col("sg"), 6).cast("decimal(38,6)"))
-          .cast("double") / lit(4.0)).as("y"))
+        .agg((Kit.rsum(col("x") * col("sg"), 6) / lit(4.0)).as("y"))
       val pd = proj.as("a").filter(col("a.vec_id") % 2 === 0)
         .join(proj.as("b"),
           col("b.vec_id") === col("a.vec_id") + 1 && col("a.j") === col("b.j"))
         .groupBy(col("a.vec_id").as("pa"))
-        .agg(sum(round((col("a.y") - col("b.y")) * (col("a.y") - col("b.y")), 12)
-          .cast("decimal(38,12)")).cast("double").as("d2p"))
+        .agg(Kit.rsum((col("a.y") - col("b.y")) * (col("a.y") - col("b.y")), 12).as("d2p"))
       val td = exr.as("a").filter(col("a.vec_id") % 2 === 0)
         .join(exr.as("b"),
           col("b.vec_id") === col("a.vec_id") + 1 && col("a.i") === col("b.i"))
         .groupBy(col("a.vec_id").as("pa"))
-        .agg(sum(round((col("a.x") - col("b.x")) * (col("a.x") - col("b.x")), 12)
-          .cast("decimal(38,12)")).cast("double").as("d2t"))
+        .agg(Kit.rsum((col("a.x") - col("b.x")) * (col("a.x") - col("b.x")), 12).as("d2t"))
       val rt = pd.join(td, "pa").filter(col("d2t") > 0)
         .select(round(sqrt(col("d2p") / col("d2t")), 6).as("ratio"))
       rt.groupBy(floor(col("ratio") * lit(10.0)).cast("int").as("bucket"))
         .agg(count(lit(1)).as("n_pairs"),
-          round(sum(col("ratio").cast("decimal(38,6)")).cast("double")
+          round(Kit.dsum(col("ratio"), 6)
             / count(lit(1)), 6).as("mean_ratio"))
         .orderBy(col("bucket"))
     })

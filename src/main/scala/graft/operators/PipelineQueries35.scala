@@ -125,7 +125,7 @@ object PipelineQueries35 {
         .agg(count(lit(1)).as("n_words"))
       val sparse = tw.join(model, "w")
         .groupBy(col("doc_id").as("sp_doc"), col("lang").as("sp_lang"))
-        .agg(sum(round(log(col("cnt") + 1), 6).cast("decimal(38,6)")).as("s_hit"))
+        .agg(sum(Kit.rdec(log(col("cnt") + 1), 6)).as("s_hit"))
       // densify over the 5-class broadcast so zero-hit classes still score
       val scores = tn
         .crossJoin(broadcast(tot))
@@ -133,11 +133,9 @@ object PipelineQueries35 {
         .join(sparse, col("sp_doc") === col("doc_id") &&
           col("sp_lang") === col("pred_lang"), "left")
         .select(col("doc_id"), col("true_lang"), col("pred_lang"),
-          (coalesce(col("s_hit"), lit(0).cast("decimal(38,6)"))
-            + round(log(col("d_c").cast("double") / col("d_all")), 6)
-              .cast("decimal(38,6)")
-            - round(round(log(col("t_c") + col("v")), 6) * col("n_words"), 6)
-              .cast("decimal(38,6)")).as("score"))
+          (coalesce(col("s_hit"), Kit.dec(lit(0), 6))
+            + Kit.rdec(log(col("d_c").cast("double") / col("d_all")), 6)
+            - Kit.rdec(round(log(col("t_c") + col("v")), 6) * col("n_words"), 6)).as("score"))
       val pred = scores.withColumn("rn", row_number().over(
         Window.partitionBy(col("doc_id"))
           .orderBy(col("score").desc, col("pred_lang"))))
@@ -172,7 +170,7 @@ object PipelineQueries35 {
       val b = sc.groupBy(least(floor(col("r") * 20.0), lit(19.0)).cast("int")
           .as("bucket"))
         .agg(count(lit(1)).as("n_docs"),
-          round(sum(col("r").cast("decimal(38,6)")).cast("double")
+          round(Kit.dsum(col("r"), 6)
             / count(lit(1)), 6).as("conf"),
           round(sum(col("pos")).cast("double") / count(lit(1)), 6).as("acc"))
       b.select(col("bucket"), col("n_docs"), col("conf"), col("acc"),

@@ -162,21 +162,19 @@ object PipelineQueries36 {
       val wt = x.withColumn("b", explode(sequence(lit(0), lit(199))))
         .withColumn("wt", ladder)
       val reps = wt.groupBy(col("b"))
-        .agg((sum(round(col("wt") * col("x"), 6).cast("decimal(38,6)"))
-          .cast("double") / sum(col("wt"))).as("m0"), sum(col("wt")).as("sw"))
+        .agg((Kit.rsum(col("wt") * col("x"), 6) / sum(col("wt"))).as("m0"), sum(col("wt")).as("sw"))
         .filter(col("sw") > 0)
         .select(col("b"), round(col("m0"), 6).as("m"))
       val ci = ExactPercentile.percentiles(
         reps.withColumn("g", lit(1)), "g", col("m"),
         Seq(0.025 -> "q_lo", 0.975 -> "q_hi")).drop("g")
       val se = reps.agg(count(lit(1)).cast("bigint").as("n_reps"),
-        round(sqrt((sum(round(col("m") * col("m"), 12).cast("decimal(38,12)"))
-          .cast("double")
-          - sum(col("m").cast("decimal(38,6)")).cast("double")
-            * sum(col("m").cast("decimal(38,6)")).cast("double") / count(lit(1)))
+        round(sqrt((Kit.rsum(col("m") * col("m"), 12)
+          - Kit.dsum(col("m"), 6)
+            * Kit.dsum(col("m"), 6) / count(lit(1)))
           / (count(lit(1)) - 1)), 6).as("se_boot"))
       val pt = x.agg(count(lit(1)).cast("bigint").as("n_docs"),
-        round(sum(col("x").cast("decimal(38,6)")).cast("double")
+        round(Kit.dsum(col("x"), 6)
           / count(lit(1)), 6).as("mean_x"))
       pt.crossJoin(broadcast(se)).crossJoin(broadcast(ci))
         .select(col("n_docs"), col("n_reps"), col("mean_x"), col("se_boot"),
@@ -253,7 +251,7 @@ object PipelineQueries36 {
       terms.filter(col("n_w") >= 2)
         .groupBy(col("w").as("word"))
         .agg(max(col("n_w")).cast("bigint").as("df"),
-          round(sum(col("t").cast("decimal(38,9)")).cast("double"), 6).as("mi"))
+          round(Kit.dsum(col("t"), 9), 6).as("mi"))
         .orderBy(col("mi").desc, col("word"))
         .limit(20)
     })

@@ -88,8 +88,7 @@ object PipelineQueries37 {
           (col("r_tot").cast("double") * col("c_tot") / col("n")).as("e"),
           col("n"), col("source"), col("lang"))
       val chi2raw = cells.agg(
-        sum(round((col("obs") - col("e")) * (col("obs") - col("e")) / col("e"), 9)
-          .cast("decimal(38,9)")).cast("double").as("chi2_raw"),
+        Kit.rsum((col("obs") - col("e")) * (col("obs") - col("e")) / col("e"), 9).as("chi2_raw"),
         max(col("n")).cast("bigint").as("n_docs"),
         ((countDistinct(col("source")) - 1) * (countDistinct(col("lang")) - 1))
           .cast("bigint").as("dof"),
@@ -136,9 +135,8 @@ object PipelineQueries37 {
           enRatio(col("ws")).as("x"))
       val g = sc.groupBy(col("grp"))
         .agg(count(lit(1)).cast("bigint").as("n"),
-          sum(col("x").cast("decimal(38,6)")).cast("double").as("sx"),
-          sum(round(col("x") * col("x"), 12).cast("decimal(38,12)"))
-            .cast("double").as("sxx"))
+          Kit.dsum(col("x"), 6).as("sx"),
+          Kit.rsum(col("x") * col("x"), 12).as("sxx"))
       val st = g.select(col("grp"), col("n"),
         round(col("sx") / col("n"), 6).as("m"),
         round((col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1),
@@ -206,16 +204,15 @@ object PipelineQueries37 {
         .select(col("source"), Kit.words(col("text")).as("ws"))
         .select(col("source"), enRatio(col("ws")).as("x"))
       val pool = sc.agg(count(lit(1)).cast("bigint").as("n"),
-        round(sum(col("x").cast("decimal(38,6)")).cast("double")
+        round(Kit.dsum(col("x"), 6)
           / count(lit(1)), 6).as("m"),
-        round((sum(round(col("x") * col("x"), 12).cast("decimal(38,12)"))
-          .cast("double")
-          - sum(col("x").cast("decimal(38,6)")).cast("double")
-            * sum(col("x").cast("decimal(38,6)")).cast("double") / count(lit(1)))
+        round((Kit.rsum(col("x") * col("x"), 12)
+          - Kit.dsum(col("x"), 6)
+            * Kit.dsum(col("x"), 6) / count(lit(1)))
           / (count(lit(1)) - 1), 12).as("v"))
       val grp = sc.groupBy(col("source"))
         .agg(count(lit(1)).cast("bigint").as("n_g"),
-          round(sum(col("x").cast("decimal(38,6)")).cast("double")
+          round(Kit.dsum(col("x"), 6)
             / count(lit(1)), 6).as("m_g"))
       val z = grp.crossJoin(broadcast(pool))
         .select(col("source"), col("n_g"),

@@ -161,8 +161,8 @@ object PipelineQueries38 {
       val rk = sc.join(broadcast(qr), "q").join(broadcast(yr), "y")
         .select(col("rx"), col("ry"))
       val a = rk.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("rx").cast("decimal(38,1)")).cast("double").as("sx"),
-        sum(col("ry").cast("decimal(38,1)")).cast("double").as("sy"),
+        Kit.dsum(col("rx"), 1).as("sx"),
+        Kit.dsum(col("ry"), 1).as("sy"),
         sum(col("rx").cast("decimal(19,1)") * col("ry").cast("decimal(19,1)"))
           .cast("double").as("sxy"),
         sum(col("rx").cast("decimal(19,1)") * col("rx").cast("decimal(19,1)"))

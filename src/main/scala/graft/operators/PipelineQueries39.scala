@@ -77,7 +77,7 @@ object PipelineQueries39 {
         .groupBy(col("source")).agg(count(lit(1)).cast("bigint").as("n"))
       val w = c.select(col("source"), col("n"),
         round(sqrt(col("n").cast("double")), 6).as("wt"))
-      val tw = w.agg(sum(col("wt").cast("decimal(38,6)")).cast("double").as("t"))
+      val tw = w.agg(Kit.dsum(col("wt"), 6).as("t"))
       val f = w.crossJoin(broadcast(tw))
         .select(col("source"), col("n"), col("wt"),
           round(col("wt") / col("t") * Seats, 6).as("ideal"))
@@ -171,8 +171,7 @@ object PipelineQueries39 {
         .groupBy(col("event_type"), col("d"), col("vb"))
         .agg(count(lit(1)).cast("bigint").as("n_users"),
           sum(col("c")).cast("bigint").as("n_rows"),
-          round(exp(sum(round(-col("p") * log(col("p")), 9)
-            .cast("decimal(38,9)")).cast("double")), 6).as("ent_l"))
+          round(exp(Kit.rsum(-col("p") * log(col("p")), 9)), 6).as("ent_l"))
       val ls = Seq(2, 3, 5).toDF("l")
       grp.crossJoin(broadcast(ls))
         .groupBy(col("l"))

@@ -256,7 +256,7 @@ object PipelineQueries43 {
         .groupBy(col("lang"))
         .agg(
           count(lit(1)).as("n_pairs"),
-          round(sum(col("jac").cast("decimal(38,6)")).cast("double") /
+          round(Kit.dsum(col("jac"), 6) /
             count(lit(1)), 6).as("avg_jac"),
           sum(when(col("jac") >= 0.3, 1L).otherwise(0L)).as("n_close"))
         .orderBy(col("lang"))
@@ -288,12 +288,12 @@ object PipelineQueries43 {
       FROM p, cov""")) { (s, dir) =>
       val x = Tables.df(s, dir, "documents")
         .filter(col("n_chars") > 0)
-        .select(round(log(col("n_chars")), 9).cast("decimal(38,9)").as("lx"))
+        .select(Kit.rdec(log(col("n_chars")), 9).as("lx"))
       val m = x.agg(
         count(lit(1)).as("n"),
         sum(col("lx")).cast("decimal(38,9)").as("s1"),
-        sum(round(col("lx").cast("double") * col("lx").cast("double"), 9)
-          .cast("decimal(38,9)")).cast("decimal(38,9)").as("s2"))
+        sum(Kit.rdec(col("lx").cast("double") * col("lx").cast("double"), 9))
+          .cast("decimal(38,9)").as("s2"))
       val p = m.select(col("n"),
         (col("s1").cast("double") / col("n")).as("mu"),
         sqrt(greatest(col("s2").cast("double") / col("n") -
@@ -356,14 +356,13 @@ object PipelineQueries43 {
         .groupBy(col("event_type"))
         .agg(
           count(lit(1)).as("n"),
-          round(sum(col("nv").cast("decimal(38,6)")).cast("double") /
+          round(Kit.dsum(col("nv"), 6) /
             count(lit(1)), 6).as("mean_norm"),
           round(sqrt(greatest(
-            sum(round(col("nv") * col("nv"), 9).cast("decimal(38,9)"))
-              .cast("double") / count(lit(1)) -
-              (sum(col("nv").cast("decimal(38,6)")).cast("double") /
+            Kit.rsum(col("nv") * col("nv"), 9) / count(lit(1)) -
+              (Kit.dsum(col("nv"), 6) /
                 count(lit(1))) *
-              (sum(col("nv").cast("decimal(38,6)")).cast("double") /
+              (Kit.dsum(col("nv"), 6) /
                 count(lit(1))),
             lit(0.0))), 6).as("std_norm"))
         .orderBy(col("event_type"))
@@ -420,8 +419,7 @@ object PipelineQueries43 {
         .repartition(s.sparkContext.defaultParallelism, col("shingle"))
       val rare = Kit.rareShingles(sh, docs)
         .select(col("doc_id"), col("shingle"),
-          round(log(col("corpus_n").cast("double") / col("n_docs")), 9)
-            .cast("decimal(38,9)").as("idf"))
+          Kit.rdec(log(col("corpus_n").cast("double") / col("n_docs")), 9).as("idf"))
       val wts = rare.groupBy(col("doc_id"))
         .agg(sum(col("idf")).cast("decimal(38,9)").as("w"))
       val a = rare.alias("a")

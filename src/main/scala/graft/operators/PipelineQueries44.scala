@@ -126,7 +126,7 @@ object PipelineQueries44 {
         col("cumy").cast("double") / col("m")
       cum.crossJoin(broadcast(tot))
         .select(col("n"), col("m"),
-          round(col("t") * d * d, 9).cast("decimal(38,9)").as("term"))
+          Kit.rdec(col("t") * d * d, 9).as("term"))
         .groupBy(col("n"), col("m"))
         .agg(round(col("n").cast("double") * col("m") /
           ((col("n") + col("m")) * (col("n") + col("m")).cast("double")) *
@@ -201,8 +201,7 @@ object PipelineQueries44 {
       val ref = topk.agg(min(col("v")).as("xref"))
       val agg = topk.crossJoin(broadcast(ref))
         .filter(col("v") > col("xref"))
-        .select(round(log(col("v") / col("xref")), 9)
-          .cast("decimal(38,9)").as("term"), col("xref"))
+        .select(Kit.rdec(log(col("v") / col("xref")), 9).as("term"), col("xref"))
         .agg(count(lit(1)).as("k"), sum(col("term")).cast("double").as("s"),
           min(col("xref")).as("xref"))
       agg.select(col("k"), round(col("xref"), 4).as("x_ref"),

@@ -116,9 +116,8 @@ object PipelineQueries45 {
       val ho = t.filter(col("doc_id") % 2 === 1).select(explode(col("tk")).as("w"))
       val sc = ho.join(cw, Seq("w"), "left").crossJoin(broadcast(tot))
         .select(
-          round(log((coalesce(col("c"), lit(0L)) + 0.5) /
-            (col("tt") + lit(0.5) * (col("v") + 1))), 9)
-            .cast("decimal(38,9)").as("lp"),
+          Kit.rdec(log((coalesce(col("c"), lit(0L)) + 0.5) /
+            (col("tt") + lit(0.5) * (col("v") + 1))), 9).as("lp"),
           when(col("c").isNull, 1L).otherwise(0L).as("oov"),
           col("tt"), col("v"))
       sc.groupBy(col("tt"), col("v"))

@@ -109,8 +109,7 @@ object PipelineQueries46 {
         .select(explode(Kit.words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
       val p = c.withColumn("wt",
-        round(sqrt(sqrt(col("c").cast("double") * col("c") * col("c"))), 6)
-          .cast("decimal(38,6)"))
+        Kit.rdec(sqrt(sqrt(col("c").cast("double") * col("c") * col("c"))), 6))
       val tot = p.agg(sum(col("wt")).cast("decimal(38,6)").as("tw"))
       val top = p.orderBy(col("c").desc, col("w")).limit(20)
       val wCum = Window.orderBy(col("c").desc, col("w"))
@@ -188,8 +187,7 @@ object PipelineQueries46 {
       c.join(t, "source")
         .groupBy(col("source"))
         .agg(
-          sum(round(-pTerm * log(pTerm), 9).cast("decimal(38,9)"))
-            .cast("double").as("h_nats"),
+          Kit.rsum(-pTerm * log(pTerm), 9).as("h_nats"),
           min(col("n")).as("n_chars"),
           count(lit(1)).as("alphabet"))
         .select(col("source"), col("n_chars").cast("long").as("n_chars"),

@@ -89,15 +89,14 @@ object PipelineQueries47 {
         .crossJoin(broadcast(gl)).crossJoin(broadcast(tot))
         .join(g, Seq("lang", "lb", "source"), "left")
         .groupBy(col("lang"), col("lb"))
-        .agg(round(lit(0.5) * sum(round(abs(
+        .agg(round(lit(0.5) * Kit.rsum(abs(
           coalesce(col("c").cast("double") / col("t"), lit(0.0)) -
-            col("cg").cast("double") / col("n")), 9).cast("decimal(38,9)"))
-          .cast("double"), 6).as("tvd"))
+            col("cg").cast("double") / col("n")), 9), 6).as("tvd"))
       tvd.agg(
         count(lit(1)).as("n_groups"),
         round(max(col("tvd")), 6).as("max_tvd"),
         sum(when(col("tvd") > 0.3, 1L).otherwise(0L)).as("groups_over_t"),
-        round(sum(col("tvd").cast("decimal(38,6)")).cast("double") /
+        round(Kit.dsum(col("tvd"), 6) /
           count(lit(1)), 6).as("avg_tvd"))
     },
 
@@ -221,11 +220,11 @@ object PipelineQueries47 {
         .filter(col("npre") > 0 && col("npost") > 0)
       val m = u.agg(
         count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(38,6)")).cast("double").as("sx"),
-        sum(col("y").cast("decimal(38,6)")).cast("double").as("sy"),
-        sum(round(col("x") * col("y"), 9).cast("decimal(38,9)")).cast("double").as("sxy"),
-        sum(round(col("x") * col("x"), 9).cast("decimal(38,9)")).cast("double").as("sxx"),
-        sum(round(col("y") * col("y"), 9).cast("decimal(38,9)")).cast("double").as("syy"))
+        Kit.dsum(col("x"), 6).as("sx"),
+        Kit.dsum(col("y"), 6).as("sy"),
+        Kit.rsum(col("x") * col("y"), 9).as("sxy"),
+        Kit.rsum(col("x") * col("x"), 9).as("sxx"),
+        Kit.rsum(col("y") * col("y"), 9).as("syy"))
       val covXy = col("sxy") / col("n") - (col("sx") / col("n")) * (col("sy") / col("n"))
       val varX = col("sxx") / col("n") - (col("sx") / col("n")) * (col("sx") / col("n"))
       val varY = col("syy") / col("n") - (col("sy") / col("n")) * (col("sy") / col("n"))
@@ -290,7 +289,7 @@ object PipelineQueries47 {
       val muM = col("sf").cast("double") / col("cnt")
       val mu = f.groupBy(col("w"))
         .agg(sum(col("f").cast("decimal(38,9)")).as("sf"),
-          sum(round(col("f") * col("f"), 18).cast("decimal(38,18)")).as("sff"),
+          sum(Kit.rdec(col("f") * col("f"), 18)).as("sff"),
           count(lit(1)).as("cnt"))
         .select(col("w"), muM.as("mu"),
           sqrt(greatest(col("sff").cast("double") / col("cnt") - muM * muM,
@@ -303,8 +302,7 @@ object PipelineQueries47 {
       val delta = a.join(b, col("a.w") === col("b.w") &&
           col("a.source") =!= col("b.source"))
         .groupBy(col("a.source").as("sa"), col("b.source").as("sb"))
-        .agg(round(sum(round(abs(col("a.z") - col("b.z")), 9)
-          .cast("decimal(38,9)")).cast("double") / count(lit(1)), 6).as("delta"))
+        .agg(round(Kit.rsum(abs(col("a.z") - col("b.z")), 9) / count(lit(1)), 6).as("delta"))
       val byA = Window.partitionBy(col("sa")).orderBy(col("delta"), col("sb"))
       delta.withColumn("rk", row_number().over(byA))
         .filter(col("rk") === 1)

@@ -254,9 +254,8 @@ object PipelineQueries48 {
       risk.filter(col("d") > 0)
         .withColumn("surv", exp(sum(
           when(col("d") < col("n_at_risk"),
-            round(log(lit(1) - col("d").cast("double") / col("n_at_risk")), 9)
-              .cast("decimal(38,9)"))
-            .otherwise(lit(0).cast("decimal(38,9)"))).over(byDayAsc)))
+            Kit.rdec(log(lit(1) - col("d").cast("double") / col("n_at_risk")), 9))
+            .otherwise(Kit.dec(lit(0), 9))).over(byDayAsc)))
         .withColumn("absorbed", max(when(col("d") === col("n_at_risk"), 1)
           .otherwise(0)).over(byDayAsc))
         .select(col("t_day"), col("d"), col("n_at_risk"),

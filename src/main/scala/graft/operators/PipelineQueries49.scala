@@ -218,8 +218,7 @@ object PipelineQueries49 {
       // DECIMAL(38,9) idf is k/1e9 exactly, so long sums here and decimal
       // sums there round-trip to the SAME nearest-double at the end — the
       // twin-equality spec pins it
-      val idf = round(log(col("corpus_n").cast("double") / col("n_docs")), 9)
-        .cast("decimal(38,9)")
+      val idf = Kit.rdec(log(col("corpus_n").cast("double") / col("n_docs")), 9)
       val rn = rareDf(s, dir).select(col("doc_id"), col("shingle"), col("n_docs"),
         round(idf.cast("double") * 1e9, 0).cast("long").as("idf_n"))
       // same one-shuffle per-doc-array shape as p191.

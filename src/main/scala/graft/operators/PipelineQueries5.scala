@@ -299,7 +299,7 @@ object PipelineQueries5 {
           hotFraction = 0.1, saltFactor = 8)
         .groupBy(col("k"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"),
+          Kit.dsum(col("value"), 6).as("sum_value"),
           max(col("n_cust")).as("n_cust"))
         .orderBy(col("k"))
     }

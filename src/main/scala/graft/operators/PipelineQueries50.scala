@@ -124,7 +124,7 @@ object PipelineQueries50 {
         concat(lit("p193: ragged embedding width, expected "), lit(dim),
           lit(", got "), size(col("xs")).cast("string"))).isNull)
       val sumExprs = (0 until dim).map(i =>
-        sum(round(element_at(col("xs"), i + 1), 9).cast("decimal(38,9)"))
+        sum(Kit.rdec(element_at(col("xs"), i + 1), 9))
           .as(s"s$i"))
       val centRows = e.groupBy(col("label"))
         .agg(count(lit(1)).as("cnt"), sumExprs: _*)
@@ -151,8 +151,7 @@ object PipelineQueries50 {
       val bCol =
         if (bCands.size == 1) lit(null).cast("double") else least(bCands: _*)
       val sil = withDd.select(col("label"),
-        round((bCol - aCol) / greatest(aCol, bCol), 9)
-          .cast("decimal(38,9)").as("s"))
+        Kit.rdec((bCol - aCol) / greatest(aCol, bCol), 9).as("s"))
       sil.groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
           round(sum(col("s")).cast("double") / count(lit(1)), 6).as("mean_sil"))
@@ -188,7 +187,7 @@ object PipelineQueries50 {
       val test = ev.filter(col("event_id") % 2 === 1)
         .select(col("event_type"), col("value"))
       val pred = calib.groupBy(col("event_type")).agg(
-        (sum(round(col("value"), 2).cast("decimal(38,2)")).cast("double") /
+        (Kit.rsum(col("value"), 2) /
           count(lit(1))).as("mu"))
       val resid = calib.join(broadcast(pred), "event_type")
         .select(lit(0L).as("k"), abs(col("value") - col("mu")).as("r"))
@@ -248,8 +247,7 @@ object PipelineQueries50 {
         .select(col("vec_id"), (col("pos") + 1).as("dim"),
           col("col").cast("double").as("val"))
       val norms = vals.groupBy(col("vec_id")).agg(
-        sqrt(sum(round(col("val") * col("val"), 9).cast("decimal(38,9)"))
-          .cast("double")).as("nrm"))
+        sqrt(Kit.rsum(col("val") * col("val"), 9)).as("nrm"))
       // deterministic pairing: vec 2k with 2k+1 — one equi-join, no
       // quadratic pair space anywhere
       val pairs = e.alias("a").join(e.alias("b"),
@@ -258,14 +256,12 @@ object PipelineQueries50 {
         .select(graft.Functions.cosineSimilarity(
           col("a.embedding"), col("b.embedding")).as("cos"))
       val cent = vals.groupBy(col("dim")).agg(
-        (sum(round(col("val"), 9).cast("decimal(38,9)")).cast("double") /
+        (Kit.rsum(col("val"), 9) /
           count(lit(1))).as("m"))
-      val cn = cent.agg(sqrt(sum(round(col("m") * col("m"), 9)
-        .cast("decimal(38,9)")).cast("double")).as("center_norm"))
-      val mn = norms.agg((sum(round(col("nrm"), 9).cast("decimal(38,9)"))
-        .cast("double") / count(lit(1))).as("mean_norm"))
+      val cn = cent.agg(sqrt(Kit.rsum(col("m") * col("m"), 9)).as("center_norm"))
+      val mn = norms.agg((Kit.rsum(col("nrm"), 9) / count(lit(1))).as("mean_norm"))
       val pc = pairs.agg(count(lit(1)).as("n_pairs"),
-        (sum(round(col("cos"), 9).cast("decimal(38,9)")).cast("double") /
+        (Kit.rsum(col("cos"), 9) /
           count(lit(1))).as("mpc"))
       pc.crossJoin(broadcast(mn)).crossJoin(broadcast(cn))
         .select(col("n_pairs"), round(col("mpc"), 6).as("mean_pair_cos"),
@@ -395,14 +391,12 @@ object PipelineQueries50 {
         (col("sx").cast("double") / col("n")).as("mean_g"),
         ((col("sxx").cast("double") - col("sx").cast("double") * col("sx") /
           col("n")) / (col("n") - 1)).as("var_g"))
-      val sMean = sum(round(col("mean_g"), 9).cast("decimal(38,9)")).cast("double")
+      val sMean = Kit.rsum(col("mean_g"), 9)
       val glob = gm.agg(
         count(lit(1)).as("k"),
         (sMean / count(lit(1))).as("grand"),
-        (sum(round(col("var_g") / col("n"), 9).cast("decimal(38,9)"))
-          .cast("double") / count(lit(1))).as("vbar"),
-        ((sum(round(col("mean_g") * col("mean_g"), 9).cast("decimal(38,9)"))
-          .cast("double") - sMean * sMean / count(lit(1))) /
+        (Kit.rsum(col("var_g") / col("n"), 9) / count(lit(1))).as("vbar"),
+        ((Kit.rsum(col("mean_g") * col("mean_g"), 9) - sMean * sMean / count(lit(1))) /
           (count(lit(1)) - 1)).as("between_v"))
       val tau2 = greatest(lit(0.0), col("between_v") - col("vbar"))
       val b = tau2 / (tau2 + col("var_g") / col("n"))

@@ -118,8 +118,8 @@ object PipelineQueries51 {
       val w = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val walk = daily.select(col("d"),
-        sum(round(col("k") * 0.200670695 + (col("n") - col("k")) * -0.050010421,
-          9).cast("decimal(38,9)")).over(w).cast("double").as("llr"))
+        sum(Kit.rdec(col("k") * 0.200670695 + (col("n") - col("k")) * -0.050010421, 9))
+          .over(w).cast("double").as("llr"))
       val crossed = walk.filter(abs(col("llr")) > 2.944438979)
       val firstX = crossed.agg(min(col("d")).as("xd"))
       val nDays = daily.agg(count(lit(1)).as("n_days"))
@@ -178,11 +178,9 @@ object PipelineQueries51 {
       val acf = pairs.crossJoin(broadcast(m))
         .groupBy(col("lag"))
         .agg(count(lit(1)).as("n_pairs"),
-          sum(round((col("c") - col("mu")) * (col("cp") - col("mu")), 9)
-            .cast("decimal(38,9)")).cast("double").as("num"))
+          Kit.rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
       val den = daily.crossJoin(broadcast(m))
-        .agg(sum(round((col("c") - col("mu")) * (col("c") - col("mu")), 9)
-          .cast("decimal(38,9)")).cast("double").as("ss"))
+        .agg(Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
       acf.crossJoin(broadcast(den))
         .select(col("lag"), col("n_pairs"),
           round(col("num") / col("ss"), 6).as("acf"))
@@ -273,10 +271,8 @@ object PipelineQueries51 {
       val res = daily.join(broadcast(dm.select(col("dow"), col("mean_daily"))), "dow")
         .crossJoin(broadcast(m))
         .agg(
-          sum(round((col("c") - col("mu")) * (col("c") - col("mu")), 9)
-            .cast("decimal(38,9)")).cast("double").as("sst"),
-          sum(round((col("c") - col("mean_daily")) * (col("c") - col("mean_daily")), 9)
-            .cast("decimal(38,9)")).cast("double").as("ssr"))
+          Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("sst"),
+          Kit.rsum((col("c") - col("mean_daily")) * (col("c") - col("mean_daily")), 9).as("ssr"))
       val tot = dm.agg(sum(col("total")).as("g"))
       dm.crossJoin(broadcast(tot)).crossJoin(broadcast(res))
         .select(col("dow"), col("n_days"), col("total"),

@@ -98,7 +98,7 @@ object PipelineQueries52 {
       val topk = scored.withColumn("rn", rn).filter(col("rn") <= 5)
         .select(col("q_id"), col("vec_id"), col("cos"), col("embedding"))
       val rel = topk.groupBy(col("q_id")).agg(
-        (sum(round(col("cos"), 9).cast("decimal(38,9)")).cast("double") / 5)
+        (Kit.rsum(col("cos"), 9) / 5)
           .as("mean_rel"))
       // 10 result pairs per query — the pair space is probe-cap bounded
       val intra = topk.alias("a").join(topk.alias("b"),
@@ -107,7 +107,7 @@ object PipelineQueries52 {
           Functions.cosineSimilarity(col("a.embedding"), col("b.embedding"))
             .as("pc"))
         .groupBy(col("q_id"))
-        .agg((sum(round(col("pc"), 9).cast("decimal(38,9)")).cast("double") / 10)
+        .agg((Kit.rsum(col("pc"), 9) / 10)
           .as("intra_cos"))
       rel.join(intra, "q_id")
         .select(col("q_id"), round(col("mean_rel"), 6).as("mean_rel"),
@@ -154,10 +154,10 @@ object PipelineQueries52 {
       val u = Tables.df(s, dir, "events")
         .groupBy(col("event_type"), col("user_id"))
         .agg(count(lit(1)).as("x"),
-          (sum(round(col("value"), 2).cast("decimal(38,2)")).cast("double") /
+          (Kit.rsum(col("value"), 2) /
             count(lit(1))).as("y"))
       val cells = u.select(col("event_type"), col("x"),
-        round(col("y"), 6).cast("decimal(38,6)").as("y"))
+        Kit.rdec(col("y"), 6).as("y"))
       def suff(df: org.apache.spark.sql.RelationalGroupedDataset) = df.agg(
         count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).cast("double").as("sy"),
@@ -243,9 +243,8 @@ object PipelineQueries52 {
         .select(col("event_type"), (col("user_id") % 2).as("arm"), col("value"))
       val g = arms.groupBy(col("event_type"), col("arm")).agg(
         count(lit(1)).as("n"),
-        sum(round(col("value"), 2).cast("decimal(38,2)")).cast("double").as("sx"),
-        sum(round(col("value") * col("value"), 4).cast("decimal(38,4)"))
-          .cast("double").as("sxx"))
+        Kit.rsum(col("value"), 2).as("sx"),
+        Kit.rsum(col("value") * col("value"), 4).as("sxx"))
       val w = g.groupBy(col("event_type")).agg(
         min(when(col("arm") === 0, col("n"))).as("n0"),
         min(when(col("arm") === 1, col("n"))).as("n1"),
@@ -369,7 +368,7 @@ object PipelineQueries52 {
       val nNodes = tier.agg(count(lit(1)).as("n_nodes"))
       val nEdges = knn.agg(count(lit(1)).as("n_edges"))
       mutual.agg(count(lit(1)).as("n_mutual"),
-          sum(round(col("cos"), 9).cast("decimal(38,9)")).cast("double")
+          Kit.rsum(col("cos"), 9)
             .as("sum_cos"))
         .crossJoin(broadcast(nNodes))
         .crossJoin(broadcast(nEdges))

@@ -355,8 +355,7 @@ object PipelineQueries53 {
       // per-group s^2/n rounded into DECIMAL before the k-row reduce:
       // no float sum order exists anywhere in the statistic
       val terms = g.withColumn("s2n",
-        round(col("s").cast("double") * col("s").cast("double") / col("n"), 6)
-          .cast("decimal(38,6)"))
+        Kit.rdec(col("s").cast("double") * col("s").cast("double") / col("n"), 6))
       val ssb = col("s2n_all").cast("double") -
         col("s_all").cast("double") * col("s_all").cast("double") / col("n_total")
       val ssw = col("ss_all").cast("double") - col("s2n_all").cast("double")
@@ -466,8 +465,7 @@ object PipelineQueries53 {
       def gains(ranked: org.apache.spark.sql.DataFrame, out: String) =
         ranked.join(broadcast(w), "rn")
           .groupBy(col("term"))
-          .agg(sum(round((expr("shiftleft(1L, rel)") - 1) / col("disc"), 9)
-            .cast("decimal(38,9)")).as(out))
+          .agg(sum(Kit.rdec((expr("shiftleft(1L, rel)") - 1) / col("disc"), 9)).as(out))
       val sys = scored.withColumn("rn", row_number().over(
         Window.partitionBy(col("term")).orderBy(col("score").desc, col("doc_id"))))
       val ideal = scored.withColumn("rn", row_number().over(

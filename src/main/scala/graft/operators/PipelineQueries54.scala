@@ -112,9 +112,9 @@ object PipelineQueries54 {
         .crossJoin(broadcast(tot))
       cdf.filter(col("v_next").isNotNull)
         .select(col("source"),
-          round(abs(col("cum_s").cast("double") / col("n_s")
+          Kit.rdec(abs(col("cum_s").cast("double") / col("n_s")
               - col("cum_all").cast("double") / col("n_all"))
-            * (col("v_next") - col("v")), 9).cast("decimal(38,9)").as("piece"))
+            * (col("v_next") - col("v")), 9).as("piece"))
         .groupBy(col("source"))
         .agg(round(sum(col("piece")).cast("double"), 6).as("w1"))
         .orderBy(col("source"))
@@ -173,17 +173,15 @@ object PipelineQueries54 {
       // (Σm)² as an exact DECIMAL(37,0) product, then ONE double division,
       // rounded into DECIMAL before any multi-cell sum (the p215 pattern)
       val cterm = cell.withColumn("s2n",
-        round((col("sm") * col("sm")).cast("double") / col("n"), 6)
-          .cast("decimal(38,6)"))
+        Kit.rdec((col("sm") * col("sm")).cast("double") / col("n"), 6))
       val dimTot = cterm.groupBy(col("dim")).agg(
         sum(col("n")).as("n_all"), sum(col("sm")).as("sm_all"),
         sum(col("sq")).as("sq_all"), sum(col("s2n")).as("s2n_all"))
       val dterm = dimTot.select(
-        round(col("sq_all").cast("double")
-          - col("sm_all").cast("double") * col("sm_all").cast("double") / col("n_all"), 6)
-          .cast("decimal(38,6)").as("ss_tot"),
-        round(col("sq_all").cast("double") - col("s2n_all").cast("double"), 6)
-          .cast("decimal(38,6)").as("ss_within"))
+        Kit.rdec(col("sq_all").cast("double")
+          - col("sm_all").cast("double") * col("sm_all").cast("double") / col("n_all"),
+          6).as("ss_tot"),
+        Kit.rdec(col("sq_all").cast("double") - col("s2n_all").cast("double"), 6).as("ss_within"))
       val kn = e.agg(countDistinct(col("label")).as("k"), count(lit(1)).as("n"))
       val agg = dterm.agg(sum(col("ss_tot")).as("sst"), sum(col("ss_within")).as("ssw"))
       agg.crossJoin(broadcast(kn))
@@ -373,9 +371,8 @@ object PipelineQueries54 {
       val tot = g.agg(sum(col("n_g")).as("n"), sum(col("x_g")).as("xt"))
       val withinTerms = x.join(broadcast(g), "source").filter(col("x") > 0)
         .select(col("source"),
-          round((col("x").cast("double") / col("x_g"))
-            * log((col("x").cast("double") * col("n_g")) / col("x_g")), 9)
-            .cast("decimal(38,9)").as("term"))
+          Kit.rdec((col("x").cast("double") / col("x_g"))
+            * log((col("x").cast("double") * col("n_g")) / col("x_g")), 9).as("term"))
       val tWithin = withinTerms.groupBy(col("source"))
         .agg(sum(col("term")).cast("double").as("t_g"))
       g.join(tWithin, "source").crossJoin(broadcast(tot))

@@ -129,11 +129,10 @@ object PipelineQueries55 {
         sum(col("c_s") * col("rv").cast("decimal(19,1)"))
           .cast("decimal(38,1)").as("rsum"))
       val term = gs.select(col("source"), col("n_s"),
-        round(col("rsum").cast("double") * col("rsum").cast("double")
-          / col("n_s"), 6).cast("decimal(38,6)").as("r2n"))
+        Kit.rdec(col("rsum").cast("double") * col("rsum").cast("double")
+          / col("n_s"), 6).as("r2n"))
       val tie = vc.filter(col("c") > 1).agg(
-        coalesce(sum((col("c") * col("c") * col("c") - col("c"))
-          .cast("decimal(38,0)")).cast("double"), lit(0.0)).as("tsum"))
+        coalesce(Kit.dsum(col("c") * col("c") * col("c") - col("c"), 0), lit(0.0)).as("tsum"))
       val a = term.agg(count(lit(1)).cast("bigint").as("k"),
         sum(col("n_s")).cast("bigint").as("n"),
         sum(col("r2n")).cast("double").as("s_r2n"))
@@ -210,11 +209,9 @@ object PipelineQueries55 {
       // ss_between read Σ n_s·z̄_s² — the grand-mean subtraction vanished)
       val terms = g.crossJoin(broadcast(tot)).select(
         col("k"), col("n"),
-        round(col("n_s") * zbarDiff * zbarDiff, 6)
-          .cast("decimal(38,6)").as("tb"),
-        round(col("szz").cast("double")
-          - col("sz").cast("double") * col("sz").cast("double") / col("n_s"), 6)
-          .cast("decimal(38,6)").as("tw"))
+        Kit.rdec(col("n_s") * zbarDiff * zbarDiff, 6).as("tb"),
+        Kit.rdec(col("szz").cast("double")
+          - col("sz").cast("double") * col("sz").cast("double") / col("n_s"), 6).as("tw"))
       val agg = terms.agg(max(col("k")).as("k"), max(col("n")).as("n"),
         sum(col("tb")).cast("double").as("ssb"),
         sum(col("tw")).cast("double").as("ssw"))
@@ -329,8 +326,7 @@ object PipelineQueries55 {
           hapax.cast("bigint").as("hapax"),
           round(hapax.cast("double") / sum(col("n_r")), 6).as("hapax_share"),
           round(lit(10000.0)
-            * (sum((col("r") * col("r") * col("n_r")).cast("decimal(38,0)"))
-              .cast("double") - nTok)
+            * (Kit.dsum(col("r") * col("r") * col("n_r"), 0) - nTok)
             / (nTok.cast("double") * nTok), 6).as("yule_k"))
         .orderBy(col("source"))
     },

@@ -175,8 +175,7 @@ object PipelineQueries56 {
           "left")
         .groupBy(col("depth")).agg(count(col("ra")).cast("bigint").as("agree"))
       val terms = ov.select(col("depth"),
-        round(pow(lit(0.9), col("depth") - 1) * col("agree") / col("depth"), 9)
-          .cast("decimal(38,9)").as("term"))
+        Kit.rdec(pow(lit(0.9), col("depth") - 1) * col("agree") / col("depth"), 9).as("term"))
       terms.agg(lit(20L).as("k"),
         round(lit(0.1) * sum(col("term")).cast("double"), 6).as("rbo_trunc"))
     },
@@ -344,9 +343,8 @@ object PipelineQueries56 {
         .crossJoin(st.crossJoin(broadcast(tt)))
       val dense = grid.join(cell, Seq("w", "source"), "left")
         .select(col("w"), col("fw"),
-          round(abs(coalesce(col("v"), lit(0L)).cast("double") / col("fw")
-            - col("s_tot").cast("double") / col("n_all")), 9)
-            .cast("decimal(38,9)").as("t"))
+          Kit.rdec(abs(coalesce(col("v"), lit(0L)).cast("double") / col("fw")
+            - col("s_tot").cast("double") / col("n_all")), 9).as("t"))
       dense.groupBy(col("w").as("token"), col("fw").as("freq"))
         .agg(round(lit(0.5) * sum(col("t")).cast("double"), 6).as("gries_dp"))
         .orderBy(col("token"))
@@ -397,10 +395,8 @@ object PipelineQueries56 {
         sum((lit(1L) - col("x")) * (lit(1L) - col("y"))).cast("bigint").as("d"),
         count(lit(1)).cast("bigint").as("n"))
       val term = st.select(col("a"), col("b"), col("c"), col("d"),
-        round(col("a").cast("double") * col("d") / col("n"), 9)
-          .cast("decimal(38,9)").as("ad_n"),
-        round(col("b").cast("double") * col("c") / col("n"), 9)
-          .cast("decimal(38,9)").as("bc_n"))
+        Kit.rdec(col("a").cast("double") * col("d") / col("n"), 9).as("ad_n"),
+        Kit.rdec(col("b").cast("double") * col("c") / col("n"), 9).as("bc_n"))
       val tot = term.agg(count(lit(1)).cast("bigint").as("k"),
         sum(col("a")).cast("bigint").as("sa"), sum(col("b")).cast("bigint").as("sb"),
         sum(col("c")).cast("bigint").as("sc"), sum(col("d")).cast("bigint").as("sd"),

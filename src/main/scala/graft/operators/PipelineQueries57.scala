@@ -103,8 +103,7 @@ object PipelineQueries57 {
           explode(slice(col("t"), lit(1), size(col("t")) - 1)).as("w"))
         .groupBy(col("lang"), col("w"))
         .agg(count(lit(1)).cast("bigint").as("c"))
-      def clnc = sum(round(col("c") * log(col("c").cast("double")), 9)
-        .cast("decimal(38,9)")).cast("double")
+      def clnc = Kit.rsum(col("c") * log(col("c").cast("double")), 9)
       val sb = cb.groupBy(col("lang"))
         .agg(sum(col("c")).cast("bigint").as("n"), clnc.as("clnc"))
       val sf = cf.groupBy(col("lang")).agg(clnc.as("clnc_f"))
@@ -346,9 +345,8 @@ object PipelineQueries57 {
       val term = sc.join(ns, "source").join(gc, "bkt")
         .crossJoin(broadcast(tot))
         .select(col("source"),
-          round(sqrt((col("c_s").cast("double") / col("n_s"))
-            * (col("c_all").cast("double") / col("n_all"))), 9)
-            .cast("decimal(38,9)").as("t"))
+          Kit.rdec(sqrt((col("c_s").cast("double") / col("n_s"))
+            * (col("c_all").cast("double") / col("n_all"))), 9).as("t"))
       term.groupBy(col("source")).agg(sum(col("t")).cast("double").as("bc"))
         .select(col("source"), round(col("bc"), 6).as("bhattacharyya"),
           round(sqrt(greatest(lit(1.0) - col("bc"), lit(0.0))), 6).as("hellinger"))

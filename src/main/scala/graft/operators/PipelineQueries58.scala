@@ -431,16 +431,14 @@ object PipelineQueries58 {
             - col("ni").cast("decimal(14,0)") * col("b2").cast("decimal(14,0)"))
             .as("d"))
       val term = x.select(col("lang"), col("ni"),
-        round(col("l").cast("double") * col("d").cast("double")
+        Kit.rdec(col("l").cast("double") * col("d").cast("double")
             * col("d").cast("double")
           / (col("n").cast("double")
             * (col("b2").cast("double") * (lit(2) * col("n").cast("double") - col("b2"))
-              - col("n").cast("double") * col("l"))), 12)
-          .cast("decimal(38,12)").as("t"))
+              - col("n").cast("double") * col("l"))), 12).as("t"))
       val comp = term.groupBy(col("lang")).agg(
         max(col("ni")).cast("bigint").as("ni"),
-        round(sum(col("t")).cast("double") / max(col("ni")), 9)
-          .cast("decimal(38,9)").as("comp"))
+        Kit.rdec(sum(col("t")).cast("double") / max(col("ni")), 9).as("comp"))
       val tot = comp.agg(count(lit(1)).cast("bigint").as("k"),
         sum(col("comp")).cast("decimal(38,9)").as("sc"))
       comp.crossJoin(broadcast(tot)).crossJoin(broadcast(nn))

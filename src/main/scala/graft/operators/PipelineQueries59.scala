@@ -218,8 +218,7 @@ object PipelineQueries59 {
         .select(col("rt"), col("ct"), coalesce(col("c"), lit(0L)).as("c"))
       def e = col("rt").cast("double") * col("ct") / col("n")
       val chi = cell.crossJoin(broadcast(nn))
-        .agg(sum(round((col("c") - e) * (col("c") - e) / e, 9)
-          .cast("decimal(38,9)")).cast("double").as("chi2"))
+        .agg(Kit.rsum((col("c") - e) * (col("c") - e) / e, 9).as("chi2"))
       val dims = rm.agg(count(lit(1)).cast("bigint").as("r"))
         .crossJoin(cm.agg(count(lit(1)).cast("bigint").as("cc")))
       val fin = chi.crossJoin(broadcast(dims)).crossJoin(broadcast(nn))
@@ -337,12 +336,10 @@ object PipelineQueries59 {
       val ap = ranked.join(rtot, "term").filter(col("nrel") > 0)
         .groupBy(col("term"), col("nrel"))
         .agg((sum(when(col("rel") === 1 && col("rn") <= 10,
-          round(col("cumrel").cast("double") / col("rn"), 9)
-            .cast("decimal(38,9)"))
-          .otherwise(lit(0.0).cast("decimal(38,9)"))).cast("double")
+          Kit.rdec(col("cumrel").cast("double") / col("rn"), 9))
+          .otherwise(Kit.dec(lit(0.0), 9))).cast("double")
           / least(col("nrel"), lit(10L))).as("ap10"))
-      val map10 = ap.agg((sum(round(col("ap10"), 9).cast("decimal(38,9)"))
-        .cast("double") / count(lit(1))).as("map10"))
+      val map10 = ap.agg((Kit.rsum(col("ap10"), 9) / count(lit(1))).as("map10"))
       ap.crossJoin(broadcast(map10))
         .select(col("term"), col("nrel").as("n_relevant"),
           round(col("ap10"), 6).as("ap10"), round(col("map10"), 6).as("map10"))
@@ -416,10 +413,8 @@ object PipelineQueries59 {
       val dw = lagd.agg(
         max(col("n")).as("n"), max(col("b")).as("b"),
         sum(when(col("ep").isNotNull,
-          round((col("e") - col("ep")) * (col("e") - col("ep")), 9)
-            .cast("decimal(38,9)"))).cast("double").as("num"),
-        sum(round(col("e") * col("e"), 9).cast("decimal(38,9)"))
-          .cast("double").as("den"))
+          Kit.rdec((col("e") - col("ep")) * (col("e") - col("ep")), 9))).cast("double").as("num"),
+        Kit.rsum(col("e") * col("e"), 9).as("den"))
       dw.select(col("n").as("n_days"), round(col("b"), 6).as("ols_slope"),
         round(col("num") / col("den"), 6).as("dw_stat"),
         round(lit(1) - col("num") / col("den") / 2, 6).as("rho_hat"))

@@ -145,11 +145,10 @@ object PipelineQueries6 {
         .join(dl, Seq("doc_id"))
         .crossJoin(broadcast(stats))
         .select(col("query_id"), col("doc_id"),
-          round(
-            log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+          Kit.rdec(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
               col("tf") * (K1 + 1.0) /
               (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl"))),
-            9).cast("decimal(38,9)").as("c"))
+            9).as("c"))
       val scored = contrib.groupBy(col("query_id"), col("doc_id"))
         .agg(sum(col("c")).as("s"))
       val w = Window.partitionBy(col("query_id"))
@@ -300,8 +299,8 @@ object PipelineQueries6 {
         .join(uni, bg("w2") === uni("w"))
         .crossJoin(broadcast(tot))
         .select(col("doc_id"),
-          round(log(lit(0.75) * col("c2") / col("c1") + lit(0.25) * col("cu") / col("tt")),
-            9).cast("decimal(38,9)").as("lp"))
+          Kit.rdec(log(lit(0.75) * col("c2") / col("c1") + lit(0.25) * col("cu") / col("tt")),
+            9).as("lp"))
       val per = sc.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"),
           round(sum(col("lp")).cast("double") / count(lit(1)), 4).as("avg_logprob"))

@@ -113,8 +113,7 @@ object PipelineQueries60 {
         row_number().over(Window.orderBy(col("d"))).cast("bigint").as("rn"),
         sum(col("c")).over(wd).cast("bigint").as("cum"))
       val dev = r.select(col("d"), col("c"),
-        round(col("c") - col("cum").cast("double") / col("rn"), 9)
-          .cast("decimal(38,9)").as("dev"))
+        Kit.rdec(col("c") - col("cum").cast("double") / col("rn"), 9).as("dev"))
       val m = dev.select(col("d"),
         sum(col("dev")).over(wd).cast("decimal(38,9)").as("mt"))
       val exc = m.select(col("d"), (col("mt") - min(col("mt")).over(wd)).as("ex"))
@@ -365,9 +364,8 @@ object PipelineQueries60 {
         sum(when(col("nij") + col("nji") > 0, 1L).otherwise(0L))
           .cast("bigint").as("df"),
         sum(when(col("nij") + col("nji") > 0,
-          round(((col("nij") - col("nji")) * (col("nij") - col("nji")))
-            .cast("double") / (col("nij") + col("nji")), 9)
-            .cast("decimal(38,9)"))).cast("double").as("chi2"),
+          Kit.rdec(((col("nij") - col("nji")) * (col("nij") - col("nji")))
+            .cast("double") / (col("nij") + col("nji")), 9))).cast("double").as("chi2"),
         sum(col("nij") + col("nji")).cast("bigint").as("n_off"))
       agg.select(col("df").as("df_pairs"), col("n_off").as("n_offdiag"),
         round(col("chi2"), 6).as("bowker_chi2"))
@@ -441,8 +439,8 @@ object PipelineQueries60 {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = seg.join(sm, Seq("k", "sg"))
         .select(col("k"), col("sg"), col("d"),
-          sum(round(col("c") - col("s1").cast("double") / col("ns"), 9)
-            .cast("decimal(38,9)")).over(wseg).cast("decimal(38,9)").as("cd"))
+          sum(Kit.rdec(col("c") - col("s1").cast("double") / col("ns"), 9)).over(wseg)
+            .cast("decimal(38,9)").as("cd"))
       val rng = cum.groupBy(col("k"), col("sg"))
         .agg((max(col("cd")) - min(col("cd"))).cast("double").as("rr"))
       def sdpop = sqrt(col("s2").cast("double") / col("ns")
@@ -450,16 +448,15 @@ object PipelineQueries60 {
           * (col("s1").cast("double") / col("ns")))
       val rs = rng.join(sm, Seq("k", "sg"))
         .groupBy(col("k"))
-        .agg((sum(round(col("rr") / sdpop, 9).cast("decimal(38,9)"))
-          .cast("double") / count(lit(1))).as("mean_rs"))
+        .agg((Kit.rsum(col("rr") / sdpop, 9) / count(lit(1))).as("mean_rs"))
       val pts = rs.crossJoin(broadcast(nn))
         .select(log(col("t").cast("double") / col("k")).as("x"),
           log(col("mean_rs")).as("y"))
       val ols = pts.agg(count(lit(1)).cast("bigint").as("np"),
-        sum(round(col("x"), 9).cast("decimal(38,9)")).cast("double").as("sx"),
-        sum(round(col("y"), 9).cast("decimal(38,9)")).cast("double").as("sy"),
-        sum(round(col("x") * col("y"), 9).cast("decimal(38,9)")).cast("double").as("sxy"),
-        sum(round(col("x") * col("x"), 9).cast("decimal(38,9)")).cast("double").as("sxx"))
+        Kit.rsum(col("x"), 9).as("sx"),
+        Kit.rsum(col("y"), 9).as("sy"),
+        Kit.rsum(col("x") * col("y"), 9).as("sxy"),
+        Kit.rsum(col("x") * col("x"), 9).as("sxx"))
       ols.crossJoin(nn).select(col("t").as("n_days"), col("np").as("n_scales"),
         round((col("np") * col("sxy") - col("sx") * col("sy"))
           / (col("np") * col("sxx") - col("sx") * col("sx")), 6).as("hurst_h"))
@@ -537,17 +534,15 @@ object PipelineQueries60 {
       val det = xy.crossJoin(broadcast(ab))
         .select(col("dow"), (col("y") - col("a") - col("b") * col("x")).as("dt"))
       val sea = det.groupBy(col("dow"))
-        .agg((sum(round(col("dt"), 9).cast("decimal(38,9)")).cast("double")
+        .agg((Kit.rsum(col("dt"), 9)
           / count(lit(1))).as("sdow"))
       val rem = det.join(broadcast(sea), "dow")
         .select(col("dt"), (col("dt") - col("sdow")).as("rt"))
       val vv = rem.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(round(col("dt"), 9).cast("decimal(38,9)")).cast("double").as("sd1"),
-        sum(round(col("dt") * col("dt"), 9).cast("decimal(38,9)"))
-          .cast("double").as("sd2"),
-        sum(round(col("rt"), 9).cast("decimal(38,9)")).cast("double").as("sr1"),
-        sum(round(col("rt") * col("rt"), 9).cast("decimal(38,9)"))
-          .cast("double").as("sr2"))
+        Kit.rsum(col("dt"), 9).as("sd1"),
+        Kit.rsum(col("dt") * col("dt"), 9).as("sd2"),
+        Kit.rsum(col("rt"), 9).as("sr1"),
+        Kit.rsum(col("rt") * col("rt"), 9).as("sr2"))
       val amp = sea.agg(max(abs(col("sdow"))).as("amp"))
       vv.crossJoin(amp).select(col("n").as("n_days"),
         round(greatest(lit(0.0),
@@ -591,9 +586,8 @@ object PipelineQueries60 {
       val nn = tr.agg(sum(col("nij")).cast("bigint").as("n"),
         countDistinct(col("i")).cast("bigint").as("k"))
       val h = tr.join(ri, "i")
-        .agg(sum(round(col("nij").cast("double")
-          * log(col("nij").cast("double") / col("ni")), 9)
-          .cast("decimal(38,9)")).cast("double").as("s"))
+        .agg(Kit.rsum(col("nij").cast("double")
+          * log(col("nij").cast("double") / col("ni")), 9).as("s"))
       h.crossJoin(broadcast(nn))
         .select(col("n").as("n_transitions"), col("k").as("n_states"),
           round(-col("s") / col("n"), 6).as("entropy_rate"),

@@ -107,16 +107,13 @@ object PipelineQueries61 {
         .select(col("lag"), col("a.c").as("c"), col("b.c").as("cp"))
       val acf = pairs.crossJoin(broadcast(m))
         .groupBy(col("lag"))
-        .agg(sum(round((col("c") - col("mu")) * (col("cp") - col("mu")), 9)
-          .cast("decimal(38,9)")).cast("double").as("num"))
+        .agg(Kit.rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
       val den = daily.crossJoin(broadcast(m))
-        .agg(sum(round((col("c") - col("mu")) * (col("c") - col("mu")), 9)
-          .cast("decimal(38,9)")).cast("double").as("ss"))
+        .agg(Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
       val q = acf.crossJoin(broadcast(den)).crossJoin(broadcast(nn))
         .agg(count(lit(1)).cast("bigint").as("k"),
-          sum(round((col("num") / col("ss")) * (col("num") / col("ss"))
-            / (col("n") - col("lag")), 9).cast("decimal(38,9)"))
-            .cast("double").as("s"))
+          Kit.rsum((col("num") / col("ss")) * (col("num") / col("ss"))
+            / (col("n") - col("lag")), 9).as("s"))
       q.crossJoin(broadcast(nn))
         .select(col("n").as("n_days"), col("k").as("n_lags"),
           round(col("n").cast("double") * (col("n") + 2) * col("s"), 6)
@@ -318,17 +315,14 @@ object PipelineQueries61 {
         ((col("sy").cast("double") - col("b") * col("sx")) / col("n")).as("a"))
       val res = xy.crossJoin(broadcast(ab))
         .select(col("x"),
-          round((col("y") - col("a") - col("b") * col("x"))
-            * (col("y") - col("a") - col("b") * col("x")), 9)
-            .cast("decimal(38,9)").as("u"))
+          Kit.rdec((col("y") - col("a") - col("b") * col("x"))
+            * (col("y") - col("a") - col("b") * col("x")), 9).as("u"))
       val s2 = res.agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("x")).cast("bigint").as("sx"),
         sum(col("x") * col("x")).cast("bigint").as("sxx"),
         sum(col("u")).cast("double").as("su"),
-        sum(round(col("u").cast("double") * col("x"), 9)
-          .cast("decimal(38,9)")).cast("double").as("sxu"),
-        sum(round(col("u").cast("double") * col("u").cast("double"), 9)
-          .cast("decimal(38,9)")).cast("double").as("suu"))
+        Kit.rsum(col("u").cast("double") * col("x"), 9).as("sxu"),
+        Kit.rsum(col("u").cast("double") * col("u").cast("double"), 9).as("suu"))
       val fin = s2.select(col("n"),
         (col("sxu") - col("sx").cast("double") * col("su") / col("n")).as("cxu"),
         (col("sxx").cast("double")

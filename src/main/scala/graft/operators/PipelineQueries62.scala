@@ -104,15 +104,13 @@ object PipelineQueries62 {
       val theta = lit(6.283185307179586) * col("j") * col("t") / col("n")
       val ab = r.crossJoin(broadcast(fr)).crossJoin(broadcast(nn))
         .groupBy(col("j"))
-        .agg(sum(round(col("c") * cos(theta), 9).cast("decimal(38,9)"))
-          .cast("double").as("a"),
-          sum(round(col("c") * sin(theta), 9).cast("decimal(38,9)"))
-            .cast("double").as("b"))
+        .agg(Kit.rsum(col("c") * cos(theta), 9).as("a"),
+          Kit.rsum(col("c") * sin(theta), 9).as("b"))
       val spec = ab.crossJoin(broadcast(nn))
         .select(col("j"), ((col("a") * col("a") + col("b") * col("b"))
           / col("n")).as("i"))
       val tot = spec.agg(
-        sum(round(col("i"), 9).cast("decimal(38,9)")).cast("double").as("s"),
+        Kit.rsum(col("i"), 9).as("s"),
         max(col("i")).as("imax"))
       val pk = spec.crossJoin(broadcast(tot))
         .filter(col("i") === col("imax")).agg(min(col("j")).as("jstar"))
@@ -210,9 +208,8 @@ object PipelineQueries62 {
       def ea = col("n_s").cast("double") * col("at") / col("nt")
       def eb = col("n_s").cast("double") * (col("nt") - col("at")) / col("nt")
       val chi = t.crossJoin(broadcast(mg))
-        .agg(sum(round((col("a") - ea) * (col("a") - ea) / ea
-          + ((col("n_s") - col("a")) - eb) * ((col("n_s") - col("a")) - eb) / eb,
-          9).cast("decimal(38,9)")).cast("double").as("chi2"))
+        .agg(Kit.rsum((col("a") - ea) * (col("a") - ea) / ea
+          + ((col("n_s") - col("a")) - eb) * ((col("n_s") - col("a")) - eb) / eb, 9).as("chi2"))
       chi.crossJoin(broadcast(mg)).crossJoin(broadcast(med))
         .select(col("nt").as("n_docs"), col("med").as("grand_median"),
           (col("k") - 1).as("df"), round(col("chi2"), 6).as("chi2_mood"))
@@ -343,22 +340,19 @@ object PipelineQueries62 {
             .as("r"))
       val nn = sc.agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("pos")).cast("bigint").as("npos"),
-        sum(round((col("r") - col("pos")) * (col("r") - col("pos")), 9)
-          .cast("decimal(38,9)")).cast("double").as("bsum"))
+        Kit.rsum((col("r") - col("pos")) * (col("r") - col("pos")), 9).as("bsum"))
       val bins = sc.groupBy(least(floor(col("r") * 20.0), lit(19.0))
           .cast("bigint").as("bucket"))
         .agg(count(lit(1)).cast("bigint").as("nb"),
-          sum(round(col("r"), 9).cast("decimal(38,9)")).cast("double").as("rsum"),
+          Kit.rsum(col("r"), 9).as("rsum"),
           sum(col("pos")).cast("bigint").as("psum"))
       def conf = col("rsum") / col("nb")
       def acc = col("psum").cast("double") / col("nb")
       def ybar = col("npos").cast("double") / col("n")
       val parts = bins.crossJoin(broadcast(nn))
         .groupBy(col("n"), col("npos"))
-        .agg(sum(round(col("nb") * (conf - acc) * (conf - acc), 9)
-          .cast("decimal(38,9)")).cast("double").as("rel"),
-          sum(round(col("nb") * (acc - ybar) * (acc - ybar), 9)
-            .cast("decimal(38,9)")).cast("double").as("res"))
+        .agg(Kit.rsum(col("nb") * (conf - acc) * (conf - acc), 9).as("rel"),
+          Kit.rsum(col("nb") * (acc - ybar) * (acc - ybar), 9).as("res"))
       parts.crossJoin(broadcast(nn.select(col("n").as("n2"),
           col("npos").as("npos2"), col("bsum"))))
         .select(col("n2").as("n_docs"),
@@ -434,10 +428,8 @@ object PipelineQueries62 {
         col("st").cast("double") / (col("n") * col("k"))
       val ss = rows.crossJoin(broadcast(dims))
         .groupBy(col("n"), col("k"), col("st"))
-        .agg(sum(round(rowMeanDev * rowMeanDev, 9).cast("decimal(38,9)"))
-          .cast("double").as("ssb_over_k"),
-          sum(round(col("rs2") - col("rs").cast("double") * col("rs") / col("k"),
-            9).cast("decimal(38,9)")).cast("double").as("ssw"))
+        .agg(Kit.rsum(rowMeanDev * rowMeanDev, 9).as("ssb_over_k"),
+          Kit.rsum(col("rs2") - col("rs").cast("double") * col("rs") / col("k"), 9).as("ssw"))
       val ms = ss.select(col("n"), col("k"),
         (col("k") * col("ssb_over_k") / (col("n") - 1)).as("msb"),
         (col("ssw") / (col("n").cast("double") * (col("k") - 1))).as("msw"))

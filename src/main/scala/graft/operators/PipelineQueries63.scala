@@ -328,11 +328,9 @@ object PipelineQueries63 {
         .select(col("lag"), col("a.c").as("c"), col("b.c").as("cp"))
       val acf = pairs.crossJoin(broadcast(m))
         .groupBy(col("lag"))
-        .agg(sum(round((col("c") - col("mu")) * (col("cp") - col("mu")), 9)
-          .cast("decimal(38,9)")).cast("double").as("num"))
+        .agg(Kit.rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
       val den = daily.crossJoin(broadcast(m))
-        .agg(sum(round((col("c") - col("mu")) * (col("c") - col("mu")), 9)
-          .cast("decimal(38,9)")).cast("double").as("ss"))
+        .agg(Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
       val rv = acf.crossJoin(broadcast(den)).agg(
         (max(when(col("lag") === 1, col("num"))) / first(col("ss"))).as("r1"),
         (max(when(col("lag") === 2, col("num"))) / first(col("ss"))).as("r2"),
@@ -425,8 +423,7 @@ object PipelineQueries63 {
       val fr = ranked.filter(col("rel") === 1)
         .groupBy(col("term")).agg(min(col("rn")).cast("bigint").as("first_rank"))
       val gl = fr.agg(
-        (sum(round(lit(1.0) / col("first_rank"), 9).cast("decimal(38,9)"))
-          .cast("double") / count(lit(1))).as("mrr"),
+        (Kit.rsum(lit(1.0) / col("first_rank"), 9) / count(lit(1))).as("mrr"),
         (sum(when(col("first_rank") <= 10, 1).otherwise(0)).cast("double")
           / count(lit(1))).as("hit10"))
       fr.crossJoin(broadcast(gl))

@@ -166,13 +166,12 @@ object PipelineQueries64 {
       def dt = col("d1") + col("d0")
       val lr = evt.agg(count(lit(1)).cast("bigint").as("n_times"),
         sum(col("d1")).cast("bigint").as("o1"),
-        sum(round(dt.cast("double") * col("n1") / nt, 9).cast("decimal(38,9)"))
-          .cast("double").as("e1"),
+        Kit.rsum(dt.cast("double") * col("n1") / nt, 9).as("e1"),
         sum(when(nt > 1,
-          round(dt.cast("double") * col("n1") / nt
+          Kit.rdec(dt.cast("double") * col("n1") / nt
             * (lit(1) - col("n1").cast("double") / nt)
-            * (nt - dt) / (nt - 1), 9).cast("decimal(38,9)"))
-          .otherwise(lit(0).cast("decimal(38,9)"))).cast("double").as("v"))
+            * (nt - dt) / (nt - 1), 9))
+          .otherwise(Kit.dec(lit(0), 9))).cast("double").as("v"))
       val nn = subj.agg(count(lit(1)).cast("bigint").as("n"))
       lr.crossJoin(broadcast(nn))
         .select(col("n").as("n_subjects"), col("n_times").as("n_event_times"),
@@ -254,9 +253,8 @@ object PipelineQueries64 {
         sum(col("c1").cast("double") * col("two_block") / (lit(2) * col("c")))
           .cast("double").as("w_ab"),
         sum(col("two_block").cast("double") / 2).cast("double").as("ssum"),
-        sum(round((col("two_block").cast("double") / (lit(2) * col("c")))
-          * (col("two_block").cast("double") / (lit(2) * col("c"))) * col("c"),
-          9).cast("decimal(38,9)")).cast("double").as("ssq"))
+        Kit.rsum((col("two_block").cast("double") / (lit(2) * col("c")))
+          * (col("two_block").cast("double") / (lit(2) * col("c"))) * col("c"), 9).as("ssq"))
       st.select(col("n1").as("n_en"), (col("n") - col("n1")).as("n_other"),
         round(col("w_ab"), 6).as("ab_w"),
         round((col("w_ab") - col("n1").cast("double") * col("ssum") / col("n"))
@@ -296,8 +294,7 @@ object PipelineQueries64 {
         count(lit(1)).cast("bigint").as("n"))
       val e = dc.crossJoin(broadcast(m))
         .select(col("d"),
-          round((col("c") - col("mu")) * (col("c") - col("mu")), 9)
-            .cast("decimal(38,9)").as("e2"),
+          Kit.rdec((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("e2"),
           row_number().over(Window.orderBy(col("d"))).as("rn"))
       val tot = e.agg(sum(col("e2")).cast("double").as("se"))
       val wd = Window.orderBy(col("d"))
@@ -427,14 +424,12 @@ object PipelineQueries64 {
       val m = dc.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"),
         count(lit(1)).cast("bigint").as("n"))
       val e = dc.crossJoin(broadcast(m))
-        .select(col("d"), round(col("c") - col("mu"), 9)
-          .cast("decimal(38,9)").as("e"),
+        .select(col("d"), Kit.rdec(col("c") - col("mu"), 9).as("e"),
           row_number().over(Window.orderBy(col("d"))).as("rn"))
       val wd = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cs = e.select(col("d"), sum(col("e")).over(wd).cast("double").as("st"))
-      val s2 = cs.agg(sum(round(col("st") * col("st"), 9)
-        .cast("decimal(38,9)")).cast("double").as("ss"))
+      val s2 = cs.agg(Kit.rsum(col("st") * col("st"), 9).as("ss"))
       // r18 OPTIMIZATION (guide §3.1): `rn - brn IN (1, 2)` is a non-equi
       // predicate, so the planner emitted a CartesianProduct over the day
       // frame (caught by the regenerated PLANS.md row — the only CARTESIAN
@@ -447,10 +442,8 @@ object PipelineQueries64 {
       val lags = e.join(b, col("rn") === col("arn"))
         .select(col("e").as("e0"), col("e1"), (col("rn") - col("brn")).as("lag"))
       val gam = lags.groupBy(col("lag"))
-        .agg(sum(round(col("e0").cast("double") * col("e1").cast("double"), 9)
-          .cast("decimal(38,9)")).cast("double").as("g"))
-      val g0 = e.agg(sum(round(col("e").cast("double") * col("e").cast("double"),
-        9).cast("decimal(38,9)")).cast("double").as("g"))
+        .agg(Kit.rsum(col("e0").cast("double") * col("e1").cast("double"), 9).as("g"))
+      val g0 = e.agg(Kit.rsum(col("e").cast("double") * col("e").cast("double"), 9).as("g"))
       // broadcast hints: g1/g2 are 1-row by construction (one aggregate row
       // per lag), but the planner's estimate after filter is unknown and it
       // chose CartesianProduct (PLANS.md flag) — hint the tiny sides
@@ -515,9 +508,8 @@ object PipelineQueries64 {
           sum(col("c")).cast("bigint").as("s1"),
           sum(col("c") * col("c")).cast("bigint").as("s2"))
       val ivar = iv.agg(count(lit(1)).cast("bigint").as("k"),
-        sum(round((col("s2").cast("double")
-          - col("s1").cast("double") * col("s1") / col("n")) / (col("n") - 1),
-          9).cast("decimal(38,9)")).cast("double").as("sv"))
+        Kit.rsum((col("s2").cast("double")
+          - col("s1").cast("double") * col("s1") / col("n")) / (col("n") - 1), 9).as("sv"))
       val tv = grid.groupBy(col("d")).agg(sum(col("c")).cast("bigint").as("tc"))
       val tvar = tv.agg(count(lit(1)).cast("bigint").as("n"),
         ((sum(col("tc") * col("tc")).cast("double")

@@ -86,9 +86,8 @@ object PipelineQueries65 {
         .agg(count(lit(1)).cast("bigint").as("n_s"),
           sum(x).cast("decimal(38,0)").as("s1"),
           sum(x * x).cast("decimal(38,0)").as("s2"))
-      val msw = g.agg((sum(round(col("s2").cast("double")
+      val msw = g.agg((Kit.rsum(col("s2").cast("double")
         - col("s1").cast("double") * col("s1").cast("double") / col("n_s"), 6)
-        .cast("decimal(38,6)")).cast("double")
         / (sum(col("n_s")) - count(lit(1)))).as("msw"))
       val b = g.select(col("source").as("src_b"), col("n_s").as("nb"),
         col("s1").as("bs1"))
@@ -162,8 +161,7 @@ object PipelineQueries65 {
             .cast("decimal(38,1)").as("rsum"))
       val nn = gs.agg(sum(col("n_s")).cast("bigint").as("n"))
       val tie = vc.filter(col("c") > 1)
-        .agg(coalesce(sum((col("c") * col("c") * col("c") - col("c"))
-          .cast("decimal(38,0)")).cast("double"), lit(0.0)).as("tsum"))
+        .agg(coalesce(Kit.dsum(col("c") * col("c") * col("c") - col("c"), 0), lit(0.0)).as("tsum"))
       val base = nn.crossJoin(tie)
         .select((col("n").cast("double") * (col("n") + 1) / 12
           - col("tsum") / (lit(12.0) * (col("n") - 1))).as("s2"))
@@ -291,11 +289,9 @@ object PipelineQueries65 {
       val wAsc = Window.orderBy(col("t_day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val na = risk.select(col("t_day"), col("d"), col("n_r"),
-        sum(round(col("d").cast("double") / col("n_r"), 9)
-          .cast("decimal(38,9)")).over(wAsc).cast("double").as("h"),
-        sum(round(col("d").cast("double")
-          / (col("n_r").cast("double") * col("n_r")), 9)
-          .cast("decimal(38,9)")).over(wAsc).cast("double").as("v"))
+        sum(Kit.rdec(col("d").cast("double") / col("n_r"), 9)).over(wAsc).cast("double").as("h"),
+        sum(Kit.rdec(col("d").cast("double")
+          / (col("n_r").cast("double") * col("n_r")), 9)).over(wAsc).cast("double").as("v"))
       na.filter(col("d") > 0)
         .select(col("t_day"), col("n_r").as("n_at_risk"), col("d").as("d_events"),
           round(col("h"), 6).as("na_cumhaz"), round(col("v"), 6).as("na_var"))
@@ -378,8 +374,7 @@ object PipelineQueries65 {
       val wil = w.agg(
         sum(col("c1") * (lit(2) * col("f") - col("c") + 1))
           .cast("bigint").as("w2"),
-        sum((col("c") * col("c") * col("c") - col("c")).cast("decimal(38,0)"))
-          .cast("double").as("tsum"))
+        Kit.dsum(col("c") * col("c") * col("c") - col("c"), 0).as("tsum"))
       val zw = wil.crossJoin(broadcast(nn))
         .select(((col("w2").cast("double") / 2
           - col("n1").cast("double") * (col("n") + 1) / 2)
@@ -400,9 +395,8 @@ object PipelineQueries65 {
         sum(col("c1").cast("double") * col("two_block") / (lit(2) * col("c")))
           .cast("double").as("w_ab"),
         sum(col("two_block").cast("double") / 2).cast("double").as("ssum"),
-        sum(round((col("two_block").cast("double") / (lit(2) * col("c")))
-          * (col("two_block").cast("double") / (lit(2) * col("c"))) * col("c"),
-          9).cast("decimal(38,9)")).cast("double").as("ssq"))
+        Kit.rsum((col("two_block").cast("double") / (lit(2) * col("c")))
+          * (col("two_block").cast("double") / (lit(2) * col("c"))) * col("c"), 9).as("ssq"))
       val zab = ab.select(((col("w_ab")
         - col("n1").cast("double") * col("ssum") / col("n"))
         / sqrt(col("n1").cast("double") * (col("n") - col("n1"))

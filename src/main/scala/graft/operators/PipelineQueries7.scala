@@ -288,7 +288,7 @@ object PipelineQueries7 {
       per.groupBy(col("lang"))
         .agg(count(lit(1)).as("docs"),
           sum(when(rate <= OovKeep, 1L).otherwise(0L)).as("kept_docs"),
-          round(sum(round(rate, 9).cast("decimal(38,9)")).cast("double") /
+          round(Kit.rsum(rate, 9) /
             count(lit(1)), 6).as("avg_oov"))
         .orderBy(col("lang"))
     },
@@ -344,7 +344,7 @@ object PipelineQueries7 {
         .select(col("source"),
           round(log(col("rnk").cast("double")), 9).as("x"),
           round(log(col("c").cast("double")), 9).as("y"))
-      def gridSum(c: Column) = sum(round(c, 9).cast("decimal(38,9)")).cast("double")
+      def gridSum(c: Column) = Kit.rsum(c, 9)
       val agg = g.groupBy(col("source")).agg(
         count(lit(1)).cast("double").as("n"),
         gridSum(col("x")).as("sx"),
@@ -402,7 +402,7 @@ object PipelineQueries7 {
       val uv = e.select(col("label"), posexplode(col("embedding")))
         .select(col("label"), (col("pos") + 1).as("dim"), col("col").cast("double").as("val"))
       val cent = uv.groupBy(col("label"), col("dim"))
-        .agg((sum(round(col("val"), 9).cast("decimal(38,9)")).cast("double") /
+        .agg((Kit.rsum(col("val"), 9) /
           count(lit(1))).as("m"))
       val cvec = cent.groupBy(col("label"))
         .agg(transform(
@@ -413,7 +413,7 @@ object PipelineQueries7 {
         .withColumn("cos", cosCol)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(sum(round(col("cos"), 9).cast("decimal(38,9)")).cast("double") /
+          round(Kit.rsum(col("cos"), 9) /
             count(lit(1)), 6).as("avg_cos"),
           round(min(col("cos")), 6).as("min_cos"))
         .orderBy(col("label"))
@@ -515,7 +515,7 @@ object PipelineQueries7 {
         .select(col("source"), round(p * round(log(p / q), 9), 9).as("kterm"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_vocab"),
-          round(sum(col("kterm").cast("decimal(38,9)")).cast("double"), 6).as("kl"))
+          round(Kit.dsum(col("kterm"), 9), 6).as("kl"))
         .orderBy(col("source"))
     }
   )

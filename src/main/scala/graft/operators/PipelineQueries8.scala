@@ -217,7 +217,7 @@ object PipelineQueries8 {
         a.select(col("cid"), posexplode(col("v")))
           .select(col("cid"), (col("pos") + 1).as("dim"), col("col").as("val"))
           .groupBy(col("cid"), col("dim"))
-          .agg((sum(round(col("val"), 9).cast("decimal(38,9)")).cast("double") /
+          .agg((Kit.rsum(col("val"), 9) /
             count(lit(1))).as("m"))
           .groupBy(col("cid"))
           .agg(transform(
@@ -226,7 +226,7 @@ object PipelineQueries8 {
       val a2 = assign(pack(update(assign(pack(init)))))
       a2.groupBy(col("cid"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(sum(col("cos").cast("decimal(38,9)")).cast("double") /
+          round(Kit.dsum(col("cos"), 9) /
             count(lit(1)), 6).as("avg_cos"),
           round(min(col("cos")), 6).as("min_cos"))
         .select(col("cid").as("cluster"), col("n_vecs"), col("avg_cos"), col("min_cos"))
@@ -464,7 +464,7 @@ object PipelineQueries8 {
         .groupBy(col("label"))
         .agg(countDistinct(col("vec_id")).as("n_vecs"),
           count(lit(1)).as("n_vals"),
-          round(sum(round(col("err") * col("err"), 9).cast("decimal(38,9)")).cast("double") /
+          round(Kit.rsum(col("err") * col("err"), 9) /
             count(lit(1)), 9).as("mse"),
           round(max(abs(col("err"))), 6).as("max_abs_err"))
         .orderBy(col("label"))

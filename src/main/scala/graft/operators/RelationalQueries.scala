@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
-import Kit.{dec, dsum, ts}
+import Kit.{dec, dsum, fsum, ts}
 
 /** Relational operator coverage — one query per physical operator in the
   * reference's inventory (SURVEY.md §2.1/§2.2) plus the expression/function
@@ -14,36 +14,6 @@ import Kit.{dec, dsum, ts}
   * wants them (small dimension tables).
   */
 object RelationalQueries {
-
-  /** Exact order-independent sum of a KNOWN-fixed-scale numeric column via
-    * fixed-point longs — the representation columnar engines (DuckDB
-    * included) use for decimal arithmetic. The stored doubles carry exact
-    * k/10^s rationals; `floor(x*10^s + 0.5)` recovers k exactly for either
-    * sign (the scaled value sits within ~1e-7 of k, far from the .5
-    * boundary), and the long sum is associative — shuffle-order-proof like
-    * [[Kit.dsum]] but pure codegen primitive ops (measured 4x faster at sf0.1:
-    * the decimal path boxes java.math.BigDecimal per row). The oracle SQL
-    * mirrors the same floor/scale arithmetic.
-    *
-    * Headroom: |sum of scaled values| must stay below 2^63 ≈ 9.2e18 — at
-    * money magnitudes (≤1e5) and scale 4 that is ~10^10 rows per group-by
-    * output cell's input; beyond that (full 100-TB single-cell sums) use
-    * [[Kit.dsum]], whose decimal(38) buffer never overflows. */
-  private[graft] def fsum(c: Column, scale: Int): Column = {
-    val f = math.pow(10, scale)
-    val scaledLong = floor((if (scale == 0) c else c * f) + lit(0.5))
-    // Overflow guard: try_sum follows ANSI semantics even off ANSI mode and
-    // yields NULL on a 2^63 wrap; a NULL sum over a non-empty group is then
-    // escalated to a loud error instead of a silently wrong number. (A NULL
-    // sum with zero non-null inputs is the ordinary empty-sum NULL and
-    // passes through.) Past the documented headroom, use [[Kit.dsum]].
-    val summed = try_sum(scaledLong)
-    val guarded = when(summed.isNull && count(scaledLong) > 0,
-      raise_error(lit("graft.fsum: fixed-point sum overflowed 2^63 — use dsum for this column"))
-        .cast("long"))
-      .otherwise(summed)
-    if (scale == 0) guarded.cast("double") else guarded / f
-  }
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
-import Kit.{dec, dsum, ts}
+import Kit.{dec, dsum, fsum, ts}
 
 /** Coverage batch 2 — the remaining SURVEY.md §2 surface: extra aggregate
   * functions (§2.2), cast/try-cast matrix, the rest of the string/hash/datetime
@@ -279,7 +279,7 @@ object RelationalQueries2 {
       Tables.df(s, dir, "events")
         .groupBy((floor(unix_timestamp(col("ts").cast("timestamp")) / 900) * 900)
           .cast("bigint").as("bucket_s"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_v"))
+        .agg(count(lit(1)).as("n"), dsum(col("value"), 6).as("sum_v"))
         .orderBy(col("bucket_s"))
     },
 
@@ -298,7 +298,7 @@ object RelationalQueries2 {
         .agg(
           grouping(col("l_returnflag")).cast("int").as("g_rf"),
           grouping(col("l_linestatus")).cast("int").as("g_ls"),
-          RelationalQueries.fsum(col("l_quantity"), 0).as("sum_qty"),
+          fsum(col("l_quantity"), 0).as("sum_qty"),
           count(lit(1)).as("n"))
         .select(col("l_returnflag"), col("l_linestatus"), col("g_rf"), col("g_ls"),
           col("sum_qty"), col("n"))
@@ -320,7 +320,7 @@ object RelationalQueries2 {
           grouping(col("o_orderstatus")).cast("int").as("g_st"),
           grouping(col("o_orderpriority")).cast("int").as("g_pr"),
           count(lit(1)).as("n"),
-          RelationalQueries.fsum(col("o_totalprice"), 2).as("sum_price"))
+          fsum(col("o_totalprice"), 2).as("sum_price"))
         .select(col("o_orderstatus"), col("o_orderpriority"), col("g_st"), col("g_pr"),
           col("n"), col("sum_price"))
         .orderBy(col("o_orderstatus"), col("o_orderpriority"))
@@ -440,7 +440,7 @@ object RelationalQueries2 {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .groupBy(col("o_orderkey"), col("o_orderdate").cast("date").as("od"))
-        .agg(RelationalQueries.fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
+        .agg(fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderkey"))
         .limit(10)
     },
@@ -528,7 +528,7 @@ object RelationalQueries2 {
           (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) && col("l_quantity").between(1, 11)) ||
           (col("p_brand") === "Brand#23" && col("p_size").between(10, 30) && col("l_quantity").between(10, 20)) ||
           (col("p_brand") === "Brand#34" && col("p_size").between(20, 50) && col("l_quantity").between(20, 30)))
-        .agg(RelationalQueries.fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"),
+        .agg(fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"),
           count(lit(1)).as("n"))
     },
 
@@ -555,7 +555,7 @@ object RelationalQueries2 {
         .join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(RelationalQueries.fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
+        .agg(fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
     },
@@ -582,7 +582,7 @@ object RelationalQueries2 {
         .join(o, li("l_orderkey") === o("o_orderkey"))
         .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
         .groupBy(col("n_name"), year(col("o_orderdate")).cast("int").as("o_year"))
-        .agg(RelationalQueries.fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("profit"))
+        .agg(fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("profit"))
         .orderBy(col("n_name"), col("o_year").desc)
     },
 

@@ -69,7 +69,7 @@ object RelationalQueries4 {
         .withColumn("us", unix_micros(col("ts").cast("timestamp")))
         .select(col("event_id"),
           count(lit(1)).over(w).as("n_1h"),
-          sum(round(col("value"), 2).cast("decimal(38,2)")).over(w)
+          sum(Kit.rdec(col("value"), 2)).over(w)
             .cast("double").as("sum_1h"))
         .orderBy(col("event_id"))
     },
@@ -163,7 +163,7 @@ object RelationalQueries4 {
         .groupBy(col("c_nationkey"))
         .pivot("c_mktsegment", Seq("BUILDING", "MACHINERY"))
         .agg(count(lit(1)).as("n"),
-          sum(round(col("c_acctbal"), 2).cast("decimal(38,2)")).cast("double").as("bal"))
+          Kit.rsum(col("c_acctbal"), 2).as("bal"))
         .select(col("c_nationkey"),
           // an empty pivot cell is NULL under PivotFirst, while the
           // conditional-agg oracle counts it as 0 — align the count cells

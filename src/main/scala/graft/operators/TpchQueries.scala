@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import Kit.{dec, dsum, ts}
+import Kit.{dec, dsum, fsum, ts}
 
 /** Remaining TPC-H-shaped workloads (Q2/Q4/Q7/Q8/Q11/Q15/Q17/Q20/Q21/Q22
   * adapted to the driver testdata schema — no l_commitdate/l_receiptdate/
@@ -79,7 +79,7 @@ object TpchQueries {
           || (col("supp_nation") === "NATION_7" && col("cust_nation") === "NATION_3"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).cast("int").as("l_year"))
-        .agg(RelationalQueries.fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
+        .agg(fsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
     },
 
@@ -175,7 +175,7 @@ object TpchQueries {
         .join(perPart, li("l_partkey") === col("ap_key"))
         .filter(col("l_quantity") < col("qty_cap"))
         .agg(
-          round(RelationalQueries.fsum(col("l_extendedprice"), 2) / 7.0, 4).as("avg_yearly"),
+          round(fsum(col("l_extendedprice"), 2) / 7.0, 4).as("avg_yearly"),
           count(lit(1)).as("n"))
     },
 
@@ -197,7 +197,7 @@ object TpchQueries {
         .filter(col("c_acctbal") > col("avg_bal"))
         .join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("numcust"), RelationalQueries.fsum(col("c_acctbal"), 2).as("totacctbal"))
+        .agg(count(lit(1)).as("numcust"), fsum(col("c_acctbal"), 2).as("totacctbal"))
         .orderBy(col("c_nationkey"))
     },
 
@@ -234,7 +234,7 @@ object TpchQueries {
         .filter(col("r_name") === "ASIA"
           && col("o_orderdate") >= lit(java.sql.Date.valueOf("1994-01-01")))
         .groupBy(col("n_name"))
-        .agg(RelationalQueries.fsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
+        .agg(fsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
     },
 

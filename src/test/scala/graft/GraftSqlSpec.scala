@@ -192,6 +192,12 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(g.query("EXECUTE seg ('BUILDING')").head().getLong(0) > 0)
   }
 
+  test("EXECUTE binds quoted commas and '' escapes as one string each") {
+    g.prepare("pair", "SELECT ? AS a, ? AS b")
+    val r = g.query("EXECUTE pair ('x,y', 'it''s')").head()
+    assert((r.getString(0), r.getString(1)) == ("x,y", "it's"))
+  }
+
   test("explain returns a formatted plan") {
     val plan = g.explain("SELECT count(*) FROM lineitem WHERE l_quantity > 10")
     assert(plan.contains("Scan parquet") || plan.contains("PushedFilters") || plan.nonEmpty)
@@ -307,6 +313,44 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(!one("SELECT CASE WHEN 1 = 0 THEN 8 ELSE 0 END - 3 = ANY (SELECT * FROM VALUES (5) AS t(v)) AS r").getBoolean(0))
     // nested CASE inside the LHS still matches its own END
     assert(one("SELECT CASE WHEN 1 = 1 THEN CASE WHEN 2 = 2 THEN 9 ELSE 0 END ELSE 0 END - 4 = ANY (SELECT * FROM VALUES (5) AS t(v)) AS r").getBoolean(0))
+  }
+
+  test("nested quantified subqueries: the subquery text is pasted once per level") {
+    def sub(j: Int): String =
+      if (j == 0) "SELECT r_regionkey FROM region"
+      else s"SELECT r_regionkey FROM region WHERE r_regionkey >= ALL (${sub(j - 1)})"
+    def nested(k: Int): String =
+      s"SELECT n_nationkey FROM nation WHERE n_nationkey > ALL (${sub(k - 1)}) ORDER BY n_nationkey"
+    for (k <- 1 to 5) {
+      val sql = nested(k)
+      val grown = GraftSql.rewrite(sql).sql.length - sql.length
+      assert(grown <= 600 * k, s"$k levels: the rewrite added $grown chars")
+    }
+    // every region key is >= ALL only for the maximum (4), so nations 5..24
+    assert(g.query(nested(2)).collect().map(_.getAs[Number](0).longValue).toSeq == (5L to 24L))
+    // lhs stays outside the subquery, so it resolves wherever a comparison
+    // does: an aggregate lhs under HAVING and in a grouped SELECT list
+    // (region key sums 50, 47, 68, 77, 58 against max 56), a JOIN condition,
+    // and an outer reference two levels up
+    def longs(sql: String): Seq[Long] =
+      g.query(sql).collect().map(_.getAs[Number](0).longValue).toSeq
+    assert(longs("SELECT n_regionkey FROM nation GROUP BY n_regionkey " +
+      "HAVING SUM(n_nationkey) > ALL (SELECT r_regionkey * 14 FROM region) ORDER BY n_regionkey") ==
+      Seq(2L, 3L, 4L))
+    assert(g.query("SELECT n_regionkey, SUM(n_nationkey) > ALL (SELECT r_regionkey * 14 FROM region) " +
+      "AS b FROM nation GROUP BY n_regionkey ORDER BY n_regionkey").collect()
+      .map(_.getBoolean(1)).toSeq == Seq(false, false, true, true, true))
+    assert(longs("SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey " +
+      "AND n_nationkey > ALL (SELECT r_regionkey * 4 FROM region) ORDER BY n_nationkey") ==
+      (17L to 24L))
+    assert(longs("SELECT r_regionkey FROM region r WHERE EXISTS (SELECT 1 FROM nation n " +
+      "WHERE n.n_regionkey = r.r_regionkey AND r.r_regionkey > ALL " +
+      "(SELECT n2.n_regionkey FROM nation n2 WHERE n2.n_nationkey < 3)) ORDER BY r_regionkey") ==
+      Seq(3L, 4L))
+    // `= ANY` is IN, never quantified_cmp; called by hand it is refused
+    val e = intercept[Exception](g.query("SELECT quantified_cmp(1, (SELECT named_struct(" +
+      "'cnt', 1L, 'nulls', 0L, 'min', 1, 'max', 1)), '=', 'ANY') AS v").collect())
+    assert(String.valueOf(e.getMessage).contains("quantified_cmp"))
   }
 
   test("visibility filters: DNF injected at every resolution, pushed to the scan") {

@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   * when a batch file spells either one again instead of calling the kit.
   * Likewise the dialect rewriter's quote lexer and fixpoint driver live in
   * `SqlScan.scala` alone: capped rewrite loops silently left the occurrences
-  * past their cap unrewritten.
+  * past their cap unrewritten. And the exact sums every batch folds its
+  * double aggregates with are spelled in `Kit.scala` alone, so the one
+  * decision that keeps results hash-equal to the oracle is made once.
   */
 class KitGuardSpec extends AnyFunSuite {
 
@@ -40,6 +42,20 @@ class KitGuardSpec extends AnyFunSuite {
       .flatMap(offenders(_, Set.empty))
     assert(hits.isEmpty,
       s"use Kit.words / Kit.shingleSet instead of a local copy: ${hits.mkString(", ")}")
+  }
+
+  test("exact sums are spelled only in Kit") {
+    // whitespace collapsed: a fold often spans lines
+    val fold = """\.cast\("decimal\(38,\d+\)"\)\)\.cast\("double"\)""".r
+    val rounded = """,(\d+)\)\.cast\("decimal\(38,\1\)"\)""".r
+    val spelled = sources.filterNot(_.getFileName.toString == "Kit.scala").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8").replaceAll("\\s+", "")
+      Seq(fold, rounded).flatMap(_.findAllIn(text).map(m => s"${root.relativize(p)}: $m"))
+    }
+    val defs = Seq("def fsum", "def dsum").flatMap(offenders(_, Set("Kit.scala")))
+    assert(spelled.isEmpty && defs.isEmpty,
+      "use Kit.dsum / Kit.rsum / Kit.rdec / Kit.fsum instead of a local spelling: " +
+        (spelled ++ defs).mkString(", "))
   }
 
   test("no hand-rolled quote loop or capped rewrite loop outside SqlScan") {

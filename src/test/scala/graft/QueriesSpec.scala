@@ -70,12 +70,12 @@ class QueriesSpec extends AnyFunSuite {
 
   test("fsum fails loudly past 2^63 instead of wrapping silently") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     // two addends just under Long.MaxValue: a plain long sum would wrap to a
     // negative number; the guarded fsum must throw instead
     val big = Seq(9.0e18, 9.0e18).toDF("v")
     val ex = intercept[Throwable] {
-      big.agg(operators.RelationalQueries.fsum(col("v"), 0).as("s")).collect()
+      big.agg(operators.Kit.fsum(col("v"), 0).as("s")).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
@@ -83,9 +83,18 @@ class QueriesSpec extends AnyFunSuite {
       s"expected the fsum overflow error, got: $ex")
     // and below the headroom it stays exact
     val ok = Seq(1.5, 2.25).toDF("v")
-      .agg(operators.RelationalQueries.fsum(col("v"), 2).as("s"))
+      .agg(operators.Kit.fsum(col("v"), 2).as("s"))
       .collect()(0).getDouble(0)
     assert(ok == 3.75)
+    // the DECIMAL fold is exact too: ten 0.1s over ten partitions sum to 1.0
+    // (a double sum gives 0.9999999999999999), and round-then-cast keeps
+    // sub-scale noise out of the sum
+    val tenths = Seq.fill(10)(0.1).toDF("v").repartition(10)
+      .agg(operators.Kit.rsum(col("v"), 9).as("s")).collect()(0).getDouble(0)
+    assert(tenths == 1.0)
+    val noise = Seq(1).toDF("i").agg(operators.Kit.rsum(lit(4e-10), 9).as("s"))
+      .collect()(0).getDouble(0)
+    assert(noise == 0.0)
   }
 
   test("entry returns rows") {
