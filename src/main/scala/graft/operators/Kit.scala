@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Functions, Tables}
 
@@ -9,9 +10,16 @@ import graft.{Functions, Tables}
   *
   *  - text: the tokenizer, the distinct shingle set, the MinHash signature,
   *    its LSH bands and the bucket-pair emission, the df-capped rare-shingle
-  *    frame and the shared-shingle overlap counts of the near-dup family;
+  *    frame and the shared-shingle overlap counts of the near-dup family,
+  *    the English stop-word ratio and the md5 hex fraction;
   *  - exact sums: the DECIMAL(38,s) and fixed-point BIGINT folds every
-  *    batch sums its double aggregates with, one helper per oracle spelling.
+  *    batch sums its double aggregates with, one helper per oracle spelling;
+  *  - series: the per-day event count frame of the `events` time-series
+  *    batches, its dense day × event-type grid, the day index, the
+  *    least-squares trend and the lag-pair autocovariance frame, each
+  *    mirroring one CTE of their oracle SQL;
+  *  - vectors: the per-key centroid mean of the embedding batches and the
+  *    two-round spherical k-means built on it.
   */
 object Kit {
 
@@ -106,6 +114,37 @@ object Kit {
       .where(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
 
+  /** The fixed English stop-word probe of the p132-p142 statistics. */
+  private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
+    "that", "for", "on", "with", "as", "was", "at", "by")
+  private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
+
+  /** Share of the token array `ws` that is an English stop word, rounded
+    * to `places` — the oracle's [[enRatioSql]]. */
+  def enRatio(ws: Column, places: Int): Column =
+    round(size(filter(ws, x => x.isin(EnStops.map(lit(_)): _*)))
+      .cast("double") / size(ws), places)
+
+  /** [[enRatio]] over the token list `ws`, as oracle SQL text. */
+  def enRatioSql(places: Int): String =
+    s"round(CAST(len(list_filter(ws, x -> x IN ($EnStopsSql))) AS DOUBLE)" +
+      s" / len(ws), $places)"
+
+  /** An md5 hex string's fractional position in [0,1): its first 13 hex
+    * digits (52 bits, exact in a double) over 16^13. */
+  def hexFrac(hex: Column): Column =
+    conv(substring(hex, 1, 13), 16, 10).cast("double") / lit(math.pow(16.0, 13.0))
+
+  /** [[hexFrac]] as SQL text valid verbatim in both Spark SQL and DuckDB:
+    * Horner over the same 13 hex digits. Every step adds 4 mantissa bits
+    * and divides by a power of two, so all 13 steps are exact in an IEEE
+    * double and both engines (and both forms) give bit-identical
+    * fractions — what lets the sketch estimates hash-match the oracle. */
+  def hexFracSql(col: String): String =
+    (1 to 13).foldRight("0.0") { (i, acc) =>
+      s"((CAST(instr('0123456789abcdef', substr($col, $i, 1)) AS DOUBLE) - 1.0 + $acc) / 16.0)"
+    }
+
   // ------------------------------------------------------------ exact sums
   //
   // Spark's double `sum` depends on the shuffle order; the oracle's kernels
@@ -157,4 +196,129 @@ object Kit {
   }
 
   def ts(s: String): Column = lit(s).cast("timestamp_ntz")
+
+  // ---------------------------------------------------------------- series
+  //
+  // The `events` time-series batches build their statistics over the
+  // per-day count frame; each helper mirrors one CTE of their oracle SQL.
+  // The frames are keyed by the observed day (or day × event type), so the
+  // windows and pair joins over them are bounded by the date span at any
+  // corpus size.
+
+  /** events → (d DATE, c BIGINT): `SELECT CAST(ts AS DATE) AS d,
+    * CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1`. Takes the
+    * events frame so a caller can filter it first. */
+  def dayCounts(events: DataFrame): DataFrame =
+    events.groupBy(col("ts").cast("date").as("d")).agg(count(lit(1)).cast("bigint").as("c"))
+
+  /** events → (d): `SELECT DISTINCT CAST(ts AS DATE) AS d FROM events`. */
+  def days(events: DataFrame): DataFrame =
+    events.select(col("ts").cast("date").as("d")).distinct()
+
+  /** events → (et): `SELECT DISTINCT event_type AS et FROM events`. */
+  def eventTypes(events: DataFrame): DataFrame =
+    events.select(col("event_type").as("et")).distinct()
+
+  /** events → (d, et, c): the dense day × event-type count grid, 0 in the
+    * empty cells — `days CROSS JOIN types LEFT JOIN counts ON counts.d = d
+    * AND counts.et = et`, `COALESCE(c, 0)`. */
+  def dayTypeGrid(events: DataFrame): DataFrame = {
+    val raw = events.groupBy(col("ts").cast("date").as("rd"),
+        col("event_type").as("ret"))
+      .agg(count(lit(1)).cast("bigint").as("rc"))
+    days(events).crossJoin(broadcast(eventTypes(events)))
+      .join(raw, col("rd") === col("d") && col("ret") === col("et"), "left")
+      .select(col("d"), col("et"), coalesce(col("rc"), lit(0L)).as("c"))
+  }
+
+  /** (d, c) → (d, c, x): x the day's offset from the first day —
+    * `date_diff('day', base.d0, d)` with `base AS (SELECT min(d) AS d0)`. */
+  def dayIndex(dc: DataFrame): DataFrame =
+    dc.crossJoin(broadcast(dc.agg(min(col("d")).as("d0"))))
+      .select(col("d"), col("c"), datediff(col("d"), col("d0")).cast("bigint").as("x"))
+
+  /** (x, y) BIGINT rows → one row (n, b, a): the least-squares line
+    * y = a + b·x from exact BIGINT sums — the oracle's `s`, `fit` and `ab`
+    * CTEs; only the closing divisions round. */
+  def trend(xy: DataFrame): DataFrame =
+    xy.agg(count(lit(1)).cast("bigint").as("n"),
+        sum(col("x")).cast("bigint").as("sx"),
+        sum(col("y")).cast("bigint").as("sy"),
+        sum(col("x") * col("y")).cast("bigint").as("sxy"),
+        sum(col("x") * col("x")).cast("bigint").as("sxx"))
+      .select(col("n"), col("sx"), col("sy"),
+        ((col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy"))
+          / (col("n").cast("double") * col("sxx")
+            - col("sx").cast("double") * col("sx"))).as("b"))
+      .select(col("n"), col("b"),
+        ((col("sy").cast("double") - col("b") * col("sx")) / col("n")).as("a"))
+
+  /** (d, c) → (lag, n_pairs, num, ss) for lag 1..k: over the days `lag`
+    * ranks apart, n_pairs pairs and num = Σ (c − μ)(c_prev − μ); ss =
+    * Σ (c − μ)² over all days, μ the mean count — the oracle's `m`, `rn`,
+    * `pairs`, `acf` and `den` CTEs. A lag counts observed days: pairs
+    * come from a join on the day rank, not on the date. */
+  def lagPairs(daily: DataFrame, k: Int): DataFrame = {
+    val m = daily.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"))
+    val rn = daily.select(col("c"),
+      row_number().over(Window.orderBy(col("d"))).as("r"))
+    val lags = daily.sparkSession.range(1, k + 1).select(col("id").cast("bigint").as("lag"))
+    val pairs = rn.alias("a").crossJoin(broadcast(lags))
+      .join(rn.alias("b"), col("a.r") === col("b.r") + col("lag"))
+      .select(col("lag"), col("a.c").as("c"), col("b.c").as("cp"))
+    val acf = pairs.crossJoin(broadcast(m))
+      .groupBy(col("lag"))
+      .agg(count(lit(1)).as("n_pairs"),
+        rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
+    val den = daily.crossJoin(broadcast(m))
+      .agg(rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
+    acf.crossJoin(broadcast(den))
+  }
+
+  // --------------------------------------------------------------- vectors
+
+  /** (keys…, vec) rows → (keys…, cv): the element-wise mean vector per key,
+    * each component (as DOUBLE, the oracle's `CAST(v[dim] AS DOUBLE)`) the
+    * 9dp-gridded exact sum over the count —
+    * `CAST(sum(CAST(round(val, 9) AS DECIMAL(38,9))) AS DOUBLE) / count(*)`
+    * grouped by (keys…, dim), re-packed by `list(m ORDER BY dim)`. The
+    * (keys, dim) partial aggregate is the only corpus-sized shuffle. */
+  def centroids(rows: DataFrame, keys: Seq[String], vec: Column): DataFrame = {
+    val k = keys.map(col)
+    rows.select(k :+ posexplode(vec): _*)
+      .select(k ++ Seq((col("pos") + 1).as("dim"), col("col").cast("double").as("val")): _*)
+      .groupBy(k :+ col("dim"): _*)
+      .agg((rsum(col("val"), 9) / count(lit(1))).as("m"))
+      .groupBy(k: _*)
+      .agg(transform(
+        array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
+        x => x.getField("m")).as("cv"))
+  }
+
+  /** Two Lloyd rounds of spherical k-means within each `keys` group:
+    * vectors (vec_id, keys…, vec) and seeds (keys…, cid, cv) → (vec_id,
+    * keys…, vec, cid, cos) after the second assignment. A group's centroids
+    * are packed into ONE broadcast array row, so assignment is map-only:
+    * `array_max` over struct(9dp cosine, −cid) takes the highest cosine and
+    * gives a tie to the LOWER cluster id — the oracle's `row_number() OVER
+    * (PARTITION BY vec_id ORDER BY cos DESC, cid) = 1`. The update step is
+    * [[centroids]]. */
+  def sphericalKMeans(vecs: DataFrame, seeds: DataFrame, keys: Seq[String],
+      vec: String): DataFrame = {
+    val k = keys.map(col)
+    def pack(u: DataFrame) =
+      u.groupBy(k: _*).agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cents"))
+    def assign(cents: DataFrame) = {
+      val scoredArr = transform(col("cents"), c => struct(
+        round(Functions.cosineSimilarity(col(vec), c.getField("cv")), 9).as("cos"),
+        (-c.getField("cid")).as("ncid")))
+      val best = array_max(scoredArr)
+      val withCents =
+        if (keys.isEmpty) vecs.crossJoin(broadcast(cents)) else vecs.join(broadcast(cents), keys)
+      withCents.select((col("vec_id") +: k) ++ Seq(col(vec),
+        (-best.getField("ncid")).as("cid"), best.getField("cos").as("cos")): _*)
+    }
+    def update(a: DataFrame) = centroids(a, keys :+ "cid", col(vec))
+    assign(pack(update(assign(pack(seeds)))))
+  }
 }

@@ -248,32 +248,7 @@ object PipelineQueries10 {
           (row_number().over(Window.partitionBy(col("s")).orderBy(col("vec_id"))) - 1)
             .cast("int"))
         .select(col("s"), col("cid"), col("cv"))
-      // Pack each subspace's codebook into one array row — Subs broadcast
-      // rows total, joined by BHJ on the subspace id; assignment is then a
-      // row-local array_max exactly as p47.
-      def pack(u: org.apache.spark.sql.DataFrame) =
-        u.groupBy(col("s")).agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cb"))
-      def assign(cb: org.apache.spark.sql.DataFrame) = {
-        val scoredArr = transform(col("cb"), c =>
-          struct(round(Functions.cosineSimilarity(col("vs"), c.getField("cv")), 9).as("cos"),
-            (-c.getField("cid")).as("ncid")))
-        val best = array_max(scoredArr)
-        es.join(broadcast(cb), Seq("s"))
-          .select(col("vec_id"), col("s"), col("vs"),
-            (-best.getField("ncid")).as("cid"), best.getField("cos").as("cos"))
-      }
-      def update(a: org.apache.spark.sql.DataFrame) =
-        a.select(col("s"), col("cid"), posexplode(col("vs")))
-          .select(col("s"), col("cid"), (col("pos") + 1).as("dim"),
-            col("col").as("val"))
-          .groupBy(col("s"), col("cid"), col("dim"))
-          .agg((Kit.rsum(col("val"), 9) /
-            count(lit(1))).as("m"))
-          .groupBy(col("s"), col("cid"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
-            x => x.getField("m")).as("cv"))
-      val a2 = assign(pack(update(assign(pack(init)))))
+      val a2 = Kit.sphericalKMeans(es, init, Seq("s"), "vs")
       a2.groupBy(col("s"), col("cid"))
         .agg(count(lit(1)).as("n_vecs"),
           round(Kit.dsum(col("cos"), 9) /

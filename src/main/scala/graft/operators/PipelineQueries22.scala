@@ -51,7 +51,7 @@ object PipelineQueries22 {
       asg AS (
         SELECT d.doc_id,
                coalesce(c.comp, d.doc_id) AS rep,
-               CASE WHEN ${PipelineQueries7.hexFracSql(
+               CASE WHEN ${Kit.hexFracSql(
                  "md5(CAST(coalesce(c.comp, d.doc_id) AS VARCHAR))")} < $TrainFrac
                     THEN 'train' ELSE 'val' END AS split
         FROM documents d LEFT JOIN comp c ON c.node = d.doc_id),
@@ -78,8 +78,8 @@ object PipelineQueries22 {
       val asg = Tables.df(s, dir, "documents").select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
         .select(col("doc_id"), rep.as("rep"),
-          when(expr(PipelineQueries7.hexFracSql(
-            s"md5(CAST(coalesce(comp, doc_id) AS STRING))")) < TrainFrac, "train")
+          when(Kit.hexFrac(md5(coalesce(col("comp"), col("doc_id")).cast("string")))
+            < TrainFrac, "train")
             .otherwise("val").as("split"))
       val leaks = pairs
         .join(asg.select(col("doc_id").as("doc_a"), col("split").as("sa")), "doc_a")

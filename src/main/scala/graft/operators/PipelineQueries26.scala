@@ -34,12 +34,6 @@ object PipelineQueries26 {
   /** p103: sketch size (matches p38's library default). */
   private val K = 64
 
-  /** hex-hash fraction as a Column — first 13 hex digits (52 bits, exact
-    * in a double), same value as the oracle's Horner spelling
-    * (PipelineQueries7.hexFracSql) bit-for-bit. */
-  private def hexFrac(c: Column): Column =
-    conv(substring(c, 1, 13), 16, 10).cast("double") / lit(math.pow(16.0, 13.0))
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---------------- hybrid retrieval, reciprocal-rank fusion (p102)
@@ -164,12 +158,12 @@ object PipelineQueries26 {
                row_number() OVER (PARTITION BY source ORDER BY g) AS rnk
         FROM g),
       k AS (
-        SELECT source, max(${PipelineQueries7.hexFracSql("g")}) AS kth
+        SELECT source, max(${Kit.hexFracSql("g")}) AS kth
         FROM r WHERE rnk <= $K GROUP BY source),
       ru AS (
         SELECT g, row_number() OVER (ORDER BY g) AS rnk
         FROM (SELECT DISTINCT g FROM g)),
-      ku AS (SELECT max(${PipelineQueries7.hexFracSql("g")}) AS kthu
+      ku AS (SELECT max(${Kit.hexFracSql("g")}) AS kthu
              FROM ru WHERE rnk <= $K),
       est AS (SELECT source, ${K - 1}.0 / kth AS est FROM k),
       tot AS (SELECT CAST(sum(CAST(round(est, 4) AS DECIMAL(38,4))) AS DOUBLE) AS sum_est
@@ -195,7 +189,7 @@ object PipelineQueries26 {
         .agg(count(lit(1)).as("d_exact"),
           graft.Functions.kmvSketch(col("g")).as("sketch"))
       def estOf(arr: Column): Column = lit(K - 1).cast("double") /
-        hexFrac(element_at(arr, K))
+        Kit.hexFrac(element_at(arr, K))
       // union: the K smallest of the concatenated per-source sketches —
       // EXACTLY the K-minimum set of the global gram set (each input is
       // its source's complete K-minimum set), so est_union is the same

@@ -178,16 +178,7 @@ object PipelineQueries28 {
       WHERE c.d < thr.mu - 2.5 * thr.sigma
       ORDER BY c.label, c.vec_id""")) { (s, dir) =>
       val e = Tables.df(s, dir, "embeddings")
-      val uv = e.select(col("label"), posexplode(col("embedding")))
-        .select(col("label"), (col("pos") + 1).as("dim"),
-          col("col").cast("double").as("val"))
-      val cent = uv.groupBy(col("label"), col("dim"))
-        .agg((Kit.rsum(col("val"), 9) /
-          count(lit(1))).as("m"))
-      val cvec = cent.groupBy(col("label"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
-          x => x.getField("m")).as("cv"))
+      val cvec = Kit.centroids(e, Seq("label"), col("embedding"))
       val c = e.join(broadcast(cvec), Seq("label"))
         .select(col("label"), col("vec_id"),
           round(Functions.cosineSimilarity(col("embedding"), col("cv")), 9).as("d"))

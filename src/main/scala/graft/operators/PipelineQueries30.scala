@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Functions, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 
 /** Pipeline coverage batch 30 — pipeline operations around the corpus
   * itself: fuzzy metadata dedup, data-quality rule audits, shard
@@ -43,13 +43,6 @@ object PipelineQueries30 {
 
   /** p118: cluster count — matches p47 so the two views agree. */
   private val K = 4
-
-  /** Same exact Horner hex-fraction as p38/p44/p48: 13 hex digits → 52
-    * mantissa bits, every step exact in an IEEE double. */
-  private def hexFracSql(col: String): String =
-    (1 to 13).foldRight("0.0") { (i, acc) =>
-      s"((CAST(instr('0123456789abcdef', substr($col, $i, 1)) AS DOUBLE) - 1.0 + $acc) / 16.0)"
-    }
 
   /** The shared two-round Lloyd CTE prefix of the p47 oracle (seeding by
     * the K lowest vec_ids, gridded-cosine assignment, DECIMAL-grid
@@ -93,28 +86,7 @@ object PipelineQueries30 {
     val init = e.orderBy(col("vec_id")).limit(K)
       .select((row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int").as("cid"),
         col("v").as("cv"))
-    def pack(u: DataFrame) =
-      u.agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cents"))
-    def assign(cents: DataFrame) = {
-      val scoredArr = transform(col("cents"), c =>
-        struct(round(Functions.cosineSimilarity(col("v"), c.getField("cv")), 9).as("cos"),
-          (-c.getField("cid")).as("ncid")))
-      val best = array_max(scoredArr)
-      e.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("v"),
-          (-best.getField("ncid")).as("cid"), best.getField("cos").as("cos"))
-    }
-    def update(a: DataFrame) =
-      a.select(col("cid"), posexplode(col("v")))
-        .select(col("cid"), (col("pos") + 1).as("dim"), col("col").as("val"))
-        .groupBy(col("cid"), col("dim"))
-        .agg((Kit.rsum(col("val"), 9) /
-          count(lit(1))).as("m"))
-        .groupBy(col("cid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
-          x => x.getField("m")).as("cv"))
-    assign(pack(update(assign(pack(init))))).drop("v")
+    Kit.sphericalKMeans(e, init, Nil, "v").drop("v")
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -256,7 +228,7 @@ object PipelineQueries30 {
     // audit a 100 TB dataloader-sharding job runs.
     QueryDef("p117_shard_manifest", Some(s"""
       WITH d AS (
-        SELECT CAST(floor(${hexFracSql("md5(CAST(doc_id AS VARCHAR))")} * 16)
+        SELECT CAST(floor(${Kit.hexFracSql("md5(CAST(doc_id AS VARCHAR))")} * 16)
                  AS INT) AS shard,
                len(string_split_regex(lower(text), '\\s+')) AS n_toks,
                n_chars
@@ -272,7 +244,7 @@ object PipelineQueries30 {
              round(CAST(n_docs AS DOUBLE) / tot.t, 6) AS doc_share
       FROM sh CROSS JOIN tot ORDER BY shard""")) { (s, dir) =>
       val d = Tables.dfSpread(s, dir, "documents")
-        .select(floor(expr(hexFracSql("md5(cast(doc_id AS string))")) * Shards)
+        .select(floor(Kit.hexFrac(md5(col("doc_id").cast("string"))) * Shards)
           .cast("int").as("shard"),
           size(Kit.words(col("text"))).as("n_toks"), col("n_chars"))
       val sh = d.groupBy(col("shard"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -40,20 +39,6 @@ import graft.{QueryDef, Tables}
   * rounded; argmax ties broken lexicographically.
   */
 object PipelineQueries35 {
-
-  /** The fixed EN stopword probe shared by p132/p133 (spelled identically in
-    * the oracle SQL below). */
-  private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
-    "that", "for", "on", "with", "as", "was", "at", "by")
-  private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
-
-  private def enRatio(ws: Column, places: Int): Column =
-    round(size(filter(ws, x => x.isin(EnStops.map(lit(_)): _*)))
-      .cast("double") / size(ws), places)
-
-  private def enRatioSql(places: Int): String =
-    s"round(CAST(len(list_filter(ws, x -> x IN ($EnStopsSql))) AS DOUBLE)" +
-      s" / len(ws), $places)"
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -152,7 +137,7 @@ object PipelineQueries35 {
         FROM documents),
       sc AS (
         SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,
-               ${enRatioSql(6)} AS r
+               ${Kit.enRatioSql(6)} AS r
         FROM d),
       b AS (
         SELECT CAST(least(floor(r * 20.0), 19.0) AS INTEGER) AS bucket,
@@ -166,7 +151,7 @@ object PipelineQueries35 {
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("lang"), Kit.words(col("text")).as("ws"))
         .select((col("lang") === "en").cast("int").as("pos"),
-          enRatio(col("ws"), 6).as("r"))
+          Kit.enRatio(col("ws"), 6).as("r"))
       val b = sc.groupBy(least(floor(col("r") * 20.0), lit(19.0)).cast("int")
           .as("bucket"))
         .agg(count(lit(1)).as("n_docs"),
@@ -185,7 +170,7 @@ object PipelineQueries35 {
         FROM documents),
       sc AS (
         SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,
-               ${enRatioSql(4)} AS q
+               ${Kit.enRatioSql(4)} AS q
         FROM d),
       g AS (
         SELECT q, CAST(sum(pos) AS BIGINT) AS np,
@@ -209,7 +194,7 @@ object PipelineQueries35 {
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("lang"), Kit.words(col("text")).as("ws"))
         .select((col("lang") === "en").cast("int").as("pos"),
-          enRatio(col("ws"), 4).as("q"))
+          Kit.enRatio(col("ws"), 4).as("q"))
       val g = sc.groupBy(col("q"))
         .agg(sum(col("pos")).cast("bigint").as("np"),
           sum(lit(1) - col("pos")).cast("bigint").as("nn"))

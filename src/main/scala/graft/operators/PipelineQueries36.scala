@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -37,19 +36,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries36 {
 
-  /** p132/p133's fixed EN stopword probe (same spelling both engines). */
-  private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
-    "that", "for", "on", "with", "as", "was", "at", "by")
-  private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
-
-  private def enRatio(ws: Column): Column =
-    round(size(filter(ws, x => x.isin(EnStops.map(lit(_)): _*)))
-      .cast("double") / size(ws), 6)
-
-  private val EnRatioSql =
-    s"round(CAST(len(list_filter(ws, x -> x IN ($EnStopsSql))) AS DOUBLE)" +
-      " / len(ws), 6)"
-
   /** Fixed data-independent gating threshold for p134 (1/16). */
   private val Tau = 0.0625
 
@@ -68,7 +54,7 @@ object PipelineQueries36 {
       WITH sc AS (
         SELECT source,
                CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,
-               CASE WHEN $EnRatioSql >= $Tau THEN 1 ELSE 0 END AS sel
+               CASE WHEN ${Kit.enRatioSql(6)} >= $Tau THEN 1 ELSE 0 END AS sel
         FROM (SELECT source, lang,
                      string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
@@ -93,7 +79,7 @@ object PipelineQueries36 {
         .select(col("source"), col("lang"), Kit.words(col("text")).as("ws"))
         .select(col("source"),
           (col("lang") === "en").cast("int").as("pos"),
-          (enRatio(col("ws")) >= Tau).cast("int").as("sel"))
+          (Kit.enRatio(col("ws"), 6) >= Tau).cast("int").as("sel"))
       val grp = sc.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           round(sum(col("sel")).cast("double") / count(lit(1)), 6).as("sel_rate"),
@@ -118,7 +104,7 @@ object PipelineQueries36 {
     // -------------------------------------- Poisson bootstrap CI (p135)
     QueryDef("p135_poisson_bootstrap", Some(s"""
       WITH x AS (
-        SELECT doc_id, $EnRatioSql AS x
+        SELECT doc_id, ${Kit.enRatioSql(6)} AS x
         FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
       w AS (
@@ -151,7 +137,7 @@ object PipelineQueries36 {
       FROM pt CROSS JOIN se CROSS JOIN ci""")) { (s, dir) =>
       val x = Tables.dfSpread(s, dir, "documents")
         .select(col("doc_id"), Kit.words(col("text")).as("ws"))
-        .select(col("doc_id"), enRatio(col("ws")).as("x"))
+        .select(col("doc_id"), Kit.enRatio(col("ws"), 6).as("x"))
       // all B=200 replicates in ONE map-side pass: the explode is local to
       // each task and the only shuffle is the 200-cell partial agg
       val u = conv(substring(md5(concat(col("doc_id").cast("string"), lit("_"),

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -34,18 +33,6 @@ import graft.{QueryDef, Tables}
   * statistics rounded 6dp; ranks tie-broken by source name.
   */
 object PipelineQueries37 {
-
-  private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
-    "that", "for", "on", "with", "as", "was", "at", "by")
-  private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
-
-  private def enRatio(ws: Column): Column =
-    round(size(filter(ws, x => x.isin(EnStops.map(lit(_)): _*)))
-      .cast("double") / size(ws), 6)
-
-  private val EnRatioSql =
-    s"round(CAST(len(list_filter(ws, x -> x IN ($EnStopsSql))) AS DOUBLE)" +
-      " / len(ws), 6)"
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -104,7 +91,7 @@ object PipelineQueries37 {
     QueryDef("p138_welch_ttest", Some(s"""
       WITH sc AS (
         SELECT CAST(substr(source, 4) AS INTEGER) % 2 AS grp,
-               $EnRatioSql AS x
+               ${Kit.enRatioSql(6)} AS x
         FROM (SELECT source, string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
       g AS (
@@ -132,7 +119,7 @@ object PipelineQueries37 {
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("source"), Kit.words(col("text")).as("ws"))
         .select((substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
-          enRatio(col("ws")).as("x"))
+          Kit.enRatio(col("ws"), 6).as("x"))
       val g = sc.groupBy(col("grp"))
         .agg(count(lit(1)).cast("bigint").as("n"),
           Kit.dsum(col("x"), 6).as("sx"),
@@ -160,7 +147,7 @@ object PipelineQueries37 {
     // ----------------------- Benjamini-Hochberg FDR screen (p139)
     QueryDef("p139_bh_fdr", Some(s"""
       WITH sc AS (
-        SELECT source, $EnRatioSql AS x
+        SELECT source, ${Kit.enRatioSql(6)} AS x
         FROM (SELECT source, string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
       pool AS (
@@ -202,7 +189,7 @@ object PipelineQueries37 {
       FROM crit CROSS JOIN kmax ORDER BY rank""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("source"), Kit.words(col("text")).as("ws"))
-        .select(col("source"), enRatio(col("ws")).as("x"))
+        .select(col("source"), Kit.enRatio(col("ws"), 6).as("x"))
       val pool = sc.agg(count(lit(1)).cast("bigint").as("n"),
         round(Kit.dsum(col("x"), 6)
           / count(lit(1)), 6).as("m"),

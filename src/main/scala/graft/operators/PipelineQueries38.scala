@@ -36,25 +36,13 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries38 {
 
-  private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
-    "that", "for", "on", "with", "as", "was", "at", "by")
-  private val EnStopsSql = EnStops.map(w => s"'$w'").mkString(", ")
-
-  private def enRatio(ws: Column, places: Int): Column =
-    round(size(filter(ws, x => x.isin(EnStops.map(lit(_)): _*)))
-      .cast("double") / size(ws), places)
-
-  private def enRatioSql(places: Int): String =
-    s"round(CAST(len(list_filter(ws, x -> x IN ($EnStopsSql))) AS DOUBLE)" +
-      s" / len(ws), $places)"
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---------------------- two-sample Kolmogorov-Smirnov test (p140)
     QueryDef("p140_ks_test", Some(s"""
       WITH sc AS (
         SELECT CAST(substr(source, 4) AS INTEGER) % 2 AS grp,
-               ${enRatioSql(4)} AS q
+               ${Kit.enRatioSql(4)} AS q
         FROM (SELECT source, string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
       g AS (
@@ -84,7 +72,7 @@ object PipelineQueries38 {
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("source"), Kit.words(col("text")).as("ws"))
         .select((substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
-          enRatio(col("ws"), 4).as("q"))
+          Kit.enRatio(col("ws"), 4).as("q"))
       val g = sc.groupBy(col("q"))
         .agg(sum(when(col("grp") === 0, 1).otherwise(0)).cast("bigint").as("c0"),
           sum(when(col("grp") === 1, 1).otherwise(0)).cast("bigint").as("c1"))
@@ -110,7 +98,7 @@ object PipelineQueries38 {
     // --------------------------- Spearman rank correlation (p141)
     QueryDef("p141_spearman_corr", Some(s"""
       WITH sc AS (
-        SELECT ${enRatioSql(4)} AS q, len(text) AS y
+        SELECT ${Kit.enRatioSql(4)} AS q, len(text) AS y
         FROM (SELECT text, string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
       qv AS (SELECT q, CAST(count(*) AS BIGINT) AS c FROM sc GROUP BY q),
@@ -148,7 +136,7 @@ object PipelineQueries38 {
       FROM a""")) { (s, dir) =>
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("text"), Kit.words(col("text")).as("ws"))
-        .select(enRatio(col("ws"), 4).as("q"), length(col("text")).as("y"))
+        .select(Kit.enRatio(col("ws"), 4).as("q"), length(col("text")).as("y"))
       def midranks(frame: org.apache.spark.sql.DataFrame, v: String, out: String) = {
         val cnt = frame.groupBy(col(v)).agg(count(lit(1)).cast("bigint").as("c"))
         cnt.select(col(v),
@@ -180,7 +168,7 @@ object PipelineQueries38 {
     QueryDef("p142_permutation_test", Some(s"""
       WITH sc AS (
         SELECT doc_id, CAST(substr(source, 4) AS INTEGER) % 2 AS grp,
-               ${enRatioSql(6)} AS x
+               ${Kit.enRatioSql(6)} AS x
         FROM (SELECT doc_id, source,
                      string_split_regex(lower(text), '\\s+') AS ws
               FROM documents) t),
@@ -220,7 +208,7 @@ object PipelineQueries38 {
         .select(col("doc_id"), col("source"), Kit.words(col("text")).as("ws"))
         .select(col("doc_id"),
           (substring(col("source"), 4, 10).cast("int") % 2).as("grp"),
-          enRatio(col("ws"), 6).as("x"))
+          Kit.enRatio(col("ws"), 6).as("x"))
       def meanDiff(g: Column): Column = {
         round(sum(when(g === 0, col("x").cast("decimal(38,6)"))).cast("double")
           / sum(when(g === 0, 1).otherwise(0)), 6) -

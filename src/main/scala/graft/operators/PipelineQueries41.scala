@@ -108,9 +108,7 @@ object PipelineQueries41 {
              CAST(pk.d AS STRING) AS cp_day,
              round(pk.a, 6) AS max_abs_cusum
       FROM st CROSS JOIN pk WHERE pk.rn = 1""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val st = dc.agg(count(lit(1)).cast("bigint").as("n_days"),
         sum(col("c")).cast("bigint").as("total"),
         round(sum(col("c")).cast("double") / count(lit(1)), 6).as("mean_c"))

@@ -36,10 +36,6 @@ object PipelineQueries42 {
 
   private val K = 64
 
-  /** p103's exact 52-bit hex fraction (bit-identical on both engines). */
-  private def hexFrac(c: Column): Column =
-    conv(substring(c, 1, 13), 16, 10).cast("double") / lit(math.pow(16.0, 13.0))
-
   val defs: Seq[QueryDef] = Seq(
 
     // ------------------ KMV intersection via inclusion-exclusion (p152)
@@ -64,12 +60,12 @@ object PipelineQueries42 {
         SELECT grp, g, row_number() OVER (PARTITION BY grp ORDER BY g) AS rnk
         FROM g),
       k AS (
-        SELECT grp, max(${PipelineQueries7.hexFracSql("g")}) AS kth
+        SELECT grp, max(${Kit.hexFracSql("g")}) AS kth
         FROM r WHERE rnk <= $K GROUP BY grp),
       ru AS (
         SELECT g, row_number() OVER (ORDER BY g) AS rnk
         FROM (SELECT DISTINCT g FROM g) x),
-      ku AS (SELECT max(${PipelineQueries7.hexFracSql("g")}) AS kthu
+      ku AS (SELECT max(${Kit.hexFracSql("g")}) AS kthu
              FROM ru WHERE rnk <= $K),
       est AS (
         SELECT round(${K - 1}.0 / a.kth, 4) AS est_a,
@@ -98,7 +94,7 @@ object PipelineQueries42 {
       val sk = g.groupBy(col("grp"))
         .agg(graft.Functions.kmvSketch(col("g")).as("sketch"))
       def estOf(arr: Column): Column =
-        round(lit(K - 1).cast("double") / hexFrac(element_at(arr, K)), 4)
+        round(lit(K - 1).cast("double") / Kit.hexFrac(element_at(arr, K)), 4)
       // each input is its group's complete K-min set, so the K smallest of
       // the merged set IS the union sketch
       val merged = sk.agg(

@@ -164,24 +164,8 @@ object PipelineQueries51 {
       SELECT CAST(acf.lag AS BIGINT) AS lag, acf.n_pairs,
              round(acf.num / den.ss, 6) AS acf
       FROM acf, den ORDER BY lag""")) { (s, dir) =>
-      val daily = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).as("c"))
-      val m = daily.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"))
-      // row numbering over the bounded day frame; lagged pairs by rank join
-      val rn = daily.select(col("c"),
-        row_number().over(Window.orderBy(col("d"))).as("r"))
-      val lags = s.range(1, 8).select(col("id").cast("bigint").as("lag"))
-      val pairs = rn.alias("a").crossJoin(broadcast(lags))
-        .join(rn.alias("b"), col("a.r") === col("b.r") + col("lag"))
-        .select(col("lag"), col("a.c").as("c"), col("b.c").as("cp"))
-      val acf = pairs.crossJoin(broadcast(m))
-        .groupBy(col("lag"))
-        .agg(count(lit(1)).as("n_pairs"),
-          Kit.rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
-      val den = daily.crossJoin(broadcast(m))
-        .agg(Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
-      acf.crossJoin(broadcast(den))
+      val daily = Kit.dayCounts(Tables.df(s, dir, "events"))
+      Kit.lagPairs(daily, 7)
         .select(col("lag"), col("n_pairs"),
           round(col("num") / col("ss"), 6).as("acf"))
         .orderBy(col("lag"))
@@ -258,9 +242,7 @@ object PipelineQueries51 {
              round(dm.mean_daily, 6) AS mean_daily,
              round(1 - res.ssr / res.sst, 6) AS seasonal_strength
       FROM dm, tot, res ORDER BY dm.dow""")) { (s, dir) =>
-      val daily = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).as("c"))
+      val daily = Kit.dayCounts(Tables.df(s, dir, "events"))
         // ISO dow (1 = Monday … 7): weekday() is 0 = Monday on Spark,
         // isodow() is 1 = Monday on DuckDB — native dayofweek() differs
         .withColumn("dow", expr("weekday(d)").cast("bigint") + 1)
@@ -307,9 +289,7 @@ object PipelineQueries51 {
              coalesce(o.n_rows, 0) AS n_rows
       FROM expect e LEFT JOIN obs o ON e.month = o.month
       ORDER BY e.month""")) { (s, dir) =>
-      val daily = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).as("c"))
+      val daily = Kit.dayCounts(Tables.df(s, dir, "events"))
       val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       // the calendar frame is the observed date span — bounded at any
       // corpus size; an ingest-completeness audit distinct from p88/p166

@@ -408,8 +408,7 @@ object PipelineQueries54 {
                         WHEN s.s_stat < 0 THEN (s.s_stat + 1) / sqrt(v.var_s)
                         ELSE 0.0 END, 6) AS z
       FROM s, n, v""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d")).agg(count(lit(1)).as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val a = dc.alias("a"); val b = dc.alias("b")
       val sStat = a.join(b, col("a.d") < col("b.d"))
         .agg(sum(when(col("b.c") > col("a.c"), 1L)

@@ -265,8 +265,7 @@ object PipelineQueries56 {
              round(CASE WHEN var_r <= 0 THEN 0.0
                ELSE (runs - mu) / sqrt(var_r) END, 6) AS runs_z
       FROM z""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d")).agg(count(lit(1)).as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val med = dc.agg(expr("percentile(c, 0.5)").as("m"))
       val sgn = dc.crossJoin(broadcast(med))
         .filter(col("c").cast("double") =!= col("m"))

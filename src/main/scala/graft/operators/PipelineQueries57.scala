@@ -173,8 +173,7 @@ object PipelineQueries57 {
       SELECT CAST(count(*) AS BIGINT) AS n_pairs,
              round(median(slope), 6) AS theil_sen_slope
       FROM sl""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d")).agg(count(lit(1)).as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val a = dc.alias("a"); val b = dc.alias("b")
       // the pair frame is the day grid squared — date-span-bounded
       val sl = a.join(b, col("a.d") < col("b.d"))
@@ -211,9 +210,7 @@ object PipelineQueries57 {
                AS ccf_r
       FROM a ORDER BY lag""")) { (s, dir) =>
       val ev = Tables.df(s, dir, "events")
-      def daily(t: String) = ev.filter(col("event_type") === t)
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      def daily(t: String) = Kit.dayCounts(ev.filter(col("event_type") === t))
       val x = daily("click").select(col("d"), col("c").as("xc"))
       val y = daily("purchase").select(col("d").as("dy"), col("c").as("yc"))
       val lags = s.range(-3, 4).select(col("id").as("lag"))

@@ -198,23 +198,16 @@ object PipelineQueries58 {
              round(CAST(ssj AS DOUBLE) / CAST(ssd AS DOUBLE) / n, 6) AS kendalls_w
       FROM num, den, km, nn""")) { (s, dir) =>
       val ev = Tables.df(s, dir, "events")
-      val d = ev.select(col("ts").cast("date").as("day")).distinct()
-      val ty = ev.select(col("event_type").as("et")).distinct()
-      val cnt = ev.groupBy(col("ts").cast("date").as("day"),
-          col("event_type").as("et"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
       // dense day×type grid — date-span × type-cardinality bounded
-      val cell = d.crossJoin(broadcast(ty))
-        .join(cnt, Seq("day", "et"), "left")
-        .select(col("day"), col("et"), coalesce(col("c"), lit(0L)).as("c"))
-      val b = cell.select(col("day").as("bday"), col("c").as("bc"))
-      val rk = cell.join(b, col("day") === col("bday"))
-        .groupBy(col("day"), col("et"))
+      val cell = Kit.dayTypeGrid(ev)
+      val b = cell.select(col("d").as("bday"), col("c").as("bc"))
+      val rk = cell.join(b, col("d") === col("bday"))
+        .groupBy(col("d"), col("et"))
         .agg((sum(when(col("bc") < col("c"), 2L).otherwise(0L))
           + sum(when(col("bc") === col("c"), 1L).otherwise(0L)) + 1)
           .cast("bigint").as("r2"))
-      val km = ty.agg(count(lit(1)).cast("bigint").as("k"))
-      val nn = d.agg(count(lit(1)).cast("bigint").as("n"))
+      val km = Kit.eventTypes(ev).agg(count(lit(1)).cast("bigint").as("k"))
+      val nn = Kit.days(ev).agg(count(lit(1)).cast("bigint").as("n"))
       val rj = rk.groupBy(col("et")).agg(sum(col("r2")).cast("bigint").as("r2j"))
       val num = rj.crossJoin(broadcast(km)).crossJoin(broadcast(nn))
         .agg(sum((col("r2j") - col("n") * (col("k") + 1)).cast("decimal(18,0)")
@@ -530,9 +523,7 @@ object PipelineQueries58 {
                  / (CAST(t AS DOUBLE) * t * t + CAST(t AS DOUBLE) * t))), 6)
                AS p_approx
       FROM cp, k, nn""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val b = dc.select(col("d").as("bd"), col("c").as("bc"))
       // the day-pair grid is date-span-bounded at ANY corpus size (p237)
       val vv = dc.crossJoin(broadcast(b))

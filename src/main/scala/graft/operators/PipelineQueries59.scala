@@ -386,24 +386,9 @@ object PipelineQueries59 {
              round(dw.num / dw.den, 6) AS dw_stat,
              round(1 - dw.num / dw.den / 2, 6) AS rho_hat
       FROM dw, ab""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val base = dc.agg(min(col("d")).as("d0"))
-      val xy = dc.crossJoin(broadcast(base))
-        .select(datediff(col("d"), col("d0")).cast("bigint").as("x"),
-          col("c").as("y"))
-      val st = xy.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("x")).cast("bigint").as("sx"),
-        sum(col("y")).cast("bigint").as("sy"),
-        sum(col("x") * col("y")).cast("bigint").as("sxy"),
-        sum(col("x") * col("x")).cast("bigint").as("sxx"))
-      val fit = st.select(col("n"), col("sx"), col("sy"),
-        ((col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy"))
-          / (col("n").cast("double") * col("sxx")
-            - col("sx").cast("double") * col("sx"))).as("b"))
-      val ab = fit.select(col("n"), col("b"),
-        ((col("sy").cast("double") - col("b") * col("sx")) / col("n")).as("a"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
+      val xy = Kit.dayIndex(dc).select(col("x"), col("c").as("y"))
+      val ab = Kit.trend(xy)
       val e = xy.crossJoin(broadcast(ab))
         .select(col("x"), col("n"), col("b"),
           (col("y") - col("a") - col("b") * col("x")).as("e"))

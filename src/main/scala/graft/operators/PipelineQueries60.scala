@@ -103,9 +103,7 @@ object PipelineQueries60 {
              round(CAST(k.kmax AS DOUBLE), 6) AS ph_excursion,
              round(CAST(k.kmax AS DOUBLE) / sd.sd, 6) AS ph_over_sd
       FROM k, cp, sd""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       // every window here runs over the per-DAY frame — date-span-bounded
       val wd = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -419,9 +417,7 @@ object PipelineQueries60 {
              round((ols.np * ols.sxy - ols.sx * ols.sy)
                / (ols.np * ols.sxx - ols.sx * ols.sx), 6) AS hurst_h
       FROM ols, nn""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = dc.agg(count(lit(1)).cast("bigint").as("t"))
       val r = dc.select(col("d"), col("c"),
         row_number().over(Window.orderBy(col("d"))).cast("bigint").as("rn"))
@@ -512,25 +508,10 @@ object PipelineQueries60 {
                AS seasonal_strength,
              round(amp.amp, 6) AS max_dow_amplitude
       FROM vv, amp""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val base = dc.agg(min(col("d")).as("d0"))
-      val xy = dc.crossJoin(broadcast(base))
-        .select(col("d"), datediff(col("d"), col("d0")).cast("bigint").as("x"),
-          col("c").as("y"), dayofweek(col("d")).as("dow"))
-      val st = xy.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("x")).cast("bigint").as("sx"),
-        sum(col("y")).cast("bigint").as("sy"),
-        sum(col("x") * col("y")).cast("bigint").as("sxy"),
-        sum(col("x") * col("x")).cast("bigint").as("sxx"))
-      val fit = st.select(col("n"), col("sx"), col("sy"),
-        ((col("n").cast("double") * col("sxy")
-          - col("sx").cast("double") * col("sy"))
-          / (col("n").cast("double") * col("sxx")
-            - col("sx").cast("double") * col("sx"))).as("b"))
-      val ab = fit.select(col("n"), col("b"),
-        ((col("sy").cast("double") - col("b") * col("sx")) / col("n")).as("a"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
+      val xy = Kit.dayIndex(dc)
+        .select(col("d"), col("x"), col("c").as("y"), dayofweek(col("d")).as("dow"))
+      val ab = Kit.trend(xy)
       val det = xy.crossJoin(broadcast(ab))
         .select(col("dow"), (col("y") - col("a") - col("b") * col("x")).as("dt"))
       val sea = det.groupBy(col("dow"))

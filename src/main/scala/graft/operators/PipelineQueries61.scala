@@ -93,24 +93,9 @@ object PipelineQueries61 {
       SELECT nn.n AS n_days, q.k AS n_lags,
              round(CAST(nn.n AS DOUBLE) * (nn.n + 2) * q.s, 6) AS q_lb
       FROM q, nn""")) { (s, dir) =>
-      val daily = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val m = daily.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"))
+      val daily = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = daily.agg(count(lit(1)).cast("bigint").as("n"))
-      // rank join over the bounded day frame — the p201 skeleton
-      val rn = daily.select(col("c"),
-        row_number().over(Window.orderBy(col("d"))).as("r"))
-      val lags = s.range(1, 8).select(col("id").cast("bigint").as("lag"))
-      val pairs = rn.alias("a").crossJoin(broadcast(lags))
-        .join(rn.alias("b"), col("a.r") === col("b.r") + col("lag"))
-        .select(col("lag"), col("a.c").as("c"), col("b.c").as("cp"))
-      val acf = pairs.crossJoin(broadcast(m))
-        .groupBy(col("lag"))
-        .agg(Kit.rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
-      val den = daily.crossJoin(broadcast(m))
-        .agg(Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
-      val q = acf.crossJoin(broadcast(den)).crossJoin(broadcast(nn))
+      val q = Kit.lagPairs(daily, 7).crossJoin(broadcast(nn))
         .agg(count(lit(1)).cast("bigint").as("k"),
           Kit.rsum((col("num") / col("ss")) * (col("num") / col("ss"))
             / (col("n") - col("lag")), 9).as("s"))
@@ -294,25 +279,9 @@ object PipelineQueries61 {
              round(CAST(n AS DOUBLE) * (cxu * cxu) / (cxx * cuu), 6) AS bp_lm,
              round(cxu / cxx, 6) AS het_slope
       FROM fin""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val base = dc.agg(min(col("d")).as("d0"))
-      val xy = dc.crossJoin(broadcast(base))
-        .select(datediff(col("d"), col("d0")).cast("bigint").as("x"),
-          col("c").as("y"))
-      val st = xy.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("x")).cast("bigint").as("sx"),
-        sum(col("y")).cast("bigint").as("sy"),
-        sum(col("x") * col("y")).cast("bigint").as("sxy"),
-        sum(col("x") * col("x")).cast("bigint").as("sxx"))
-      val fit = st.select(col("n"), col("sx"), col("sy"),
-        ((col("n").cast("double") * col("sxy")
-          - col("sx").cast("double") * col("sy"))
-          / (col("n").cast("double") * col("sxx")
-            - col("sx").cast("double") * col("sx"))).as("b"))
-      val ab = fit.select(col("n"), col("b"),
-        ((col("sy").cast("double") - col("b") * col("sx")) / col("n")).as("a"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
+      val xy = Kit.dayIndex(dc).select(col("x"), col("c").as("y"))
+      val ab = Kit.trend(xy)
       val res = xy.crossJoin(broadcast(ab))
         .select(col("x"),
           Kit.rdec((col("y") - col("a") - col("b") * col("x"))
@@ -381,14 +350,10 @@ object PipelineQueries61 {
              round(((prss.rssp - r1.rss1 - r2.rss2) / 2)
                / ((r1.rss1 + r2.rss2) / (nn.n - 4)), 6) AS chow_f
       FROM nn, brk, r1, r2, prss""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val base = dc.agg(min(col("d")).as("d0"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
-      val xy = dc.crossJoin(broadcast(base))
-        .select(col("d"), datediff(col("d"), col("d0")).cast("bigint").as("x"),
-          col("c").as("y"),
+      val xy = Kit.dayIndex(dc)
+        .select(col("d"), col("x"), col("c").as("y"),
           row_number().over(Window.orderBy(col("d"))).as("rn"))
       val seg = xy.crossJoin(broadcast(nn))
         .select(col("d"), col("x"), col("y"),

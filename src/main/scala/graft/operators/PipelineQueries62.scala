@@ -91,9 +91,7 @@ object PipelineQueries62 {
              round(CAST(nn.n AS DOUBLE) / pk.jstar, 6) AS period_days,
              round(tot.imax / tot.s, 6) AS fisher_g
       FROM nn, pk, tot""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
       val r = dc.select(col("c"),
         (row_number().over(Window.orderBy(col("d"))) - 1).cast("bigint").as("t"))
@@ -137,9 +135,7 @@ object PipelineQueries62 {
              round((CAST(tp.t AS DOUBLE) - CAST(2.0 AS DOUBLE) * (nn.n - 2) / 3)
                / sqrt((CAST(16.0 AS DOUBLE) * nn.n - 29) / 90), 6) AS z_stat
       FROM tp, nn""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
       val w = Window.orderBy(col("d"))
       val l = dc.select(col("c"), lag(col("c"), 1).over(w).as("p"),
@@ -408,16 +404,9 @@ object PipelineQueries62 {
              round((msb - msw) / (msb + (k - 1) * msw), 6) AS icc1
       FROM ms""")) { (s, dir) =>
       val ev = Tables.df(s, dir, "events")
-      val days = ev.select(col("ts").cast("date").as("d")).distinct()
-      val types = ev.select(col("event_type").as("et")).distinct()
-      val raw = ev.groupBy(col("ts").cast("date").as("rd"),
-          col("event_type").as("ret"))
-        .agg(count(lit(1)).cast("bigint").as("rc"))
       // dense span x k grid — both axes bounded (calendar span, event-type
       // vocabulary), so the cross join is a constant-size frame
-      val grid = days.crossJoin(broadcast(types))
-        .join(raw, col("rd") === col("d") && col("ret") === col("et"), "left")
-        .select(col("d"), col("et"), coalesce(col("rc"), lit(0L)).as("c"))
+      val grid = Kit.dayTypeGrid(ev)
       val dims = grid.agg(countDistinct(col("d")).cast("bigint").as("n"),
         countDistinct(col("et")).cast("bigint").as("k"),
         sum(col("c")).cast("bigint").as("st"))

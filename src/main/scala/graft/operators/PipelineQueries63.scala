@@ -85,9 +85,7 @@ object PipelineQueries63 {
       SELECT rr.n AS n_days, pr.bc AS b_pairs, pr.ac AS a_pairs,
              round(-ln(CAST(pr.ac AS DOUBLE) / pr.bc), 6) AS sampen
       FROM pr, rr""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val st = dc.agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("c")).cast("bigint").as("s1"),
         sum(col("c") * col("c")).cast("bigint").as("s2"))
@@ -141,9 +139,7 @@ object PipelineQueries63 {
              round(CAST(agg.sp - agg.sm AS DOUBLE) / sqrt(agg.sp + agg.sm), 6)
                AS z_stat
       FROM agg""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
       val r = dc.select(col("c"),
         row_number().over(Window.orderBy(col("d"))).cast("bigint").as("rn"))
@@ -189,9 +185,7 @@ object PipelineQueries63 {
              round(CASE WHEN g.gmax >= g.gmin THEN g.gmax ELSE g.gmin END, 6)
                AS g_stat
       FROM g, pk""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val st = dc.agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("c")).cast("bigint").as("s1"),
         sum(col("c") * col("c")).cast("bigint").as("s2"),
@@ -316,22 +310,8 @@ object PipelineQueries63 {
              round((r3 - p21 * r2 - p22 * r1)
                / (1 - p21 * r1 - p22 * r2), 6) FROM dl2
       ORDER BY lag""")) { (s, dir) =>
-      val daily = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val m = daily.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"))
-      val rn = daily.select(col("c"),
-        row_number().over(Window.orderBy(col("d"))).as("r"))
-      val lags = s.range(1, 4).select(col("id").cast("bigint").as("lag"))
-      val pairs = rn.alias("a").crossJoin(broadcast(lags))
-        .join(rn.alias("b"), col("a.r") === col("b.r") + col("lag"))
-        .select(col("lag"), col("a.c").as("c"), col("b.c").as("cp"))
-      val acf = pairs.crossJoin(broadcast(m))
-        .groupBy(col("lag"))
-        .agg(Kit.rsum((col("c") - col("mu")) * (col("cp") - col("mu")), 9).as("num"))
-      val den = daily.crossJoin(broadcast(m))
-        .agg(Kit.rsum((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("ss"))
-      val rv = acf.crossJoin(broadcast(den)).agg(
+      val daily = Kit.dayCounts(Tables.df(s, dir, "events"))
+      val rv = Kit.lagPairs(daily, 3).agg(
         (max(when(col("lag") === 1, col("num"))) / first(col("ss"))).as("r1"),
         (max(when(col("lag") === 2, col("num"))) / first(col("ss"))).as("r2"),
         (max(when(col("lag") === 3, col("num"))) / first(col("ss"))).as("r3"))

@@ -287,9 +287,7 @@ object PipelineQueries64 {
       pk AS (SELECT min(d) AS peak_date FROM dev, mx WHERE dv = dmax)
       SELECT m.n AS n_days, pk.peak_date, round(mx.dmax, 6) AS d_stat
       FROM m, mx, pk""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val m = dc.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"),
         count(lit(1)).cast("bigint").as("n"))
       val e = dc.crossJoin(broadcast(m))
@@ -344,9 +342,7 @@ object PipelineQueries64 {
                / (CAST(5.0 AS DOUBLE) * nn.n * (nn.n + 1)
                  * (nn.n - 1) * (nn.n - 1))), 6) AS z_stat
       FROM rvn, nn""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
       val vc = dc.groupBy(col("c").as("v"))
         .agg(count(lit(1)).cast("bigint").as("t"))
@@ -418,9 +414,7 @@ object PipelineQueries64 {
              round(lrv.v, 6) AS long_run_var,
              round(s2.ss / (CAST(m.n AS DOUBLE) * m.n * lrv.v), 6) AS kpss_eta
       FROM s2, lrv, m""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val m = dc.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"),
         count(lit(1)).cast("bigint").as("n"))
       val e = dc.crossJoin(broadcast(m))
@@ -495,14 +489,7 @@ object PipelineQueries64 {
                * (1 - ivar.sv / tvar.vt), 6) AS cronbach_alpha
       FROM ivar, tvar""")) { (s, dir) =>
       val ev = Tables.df(s, dir, "events")
-      val days = ev.select(col("ts").cast("date").as("d")).distinct()
-      val types = ev.select(col("event_type").as("et")).distinct()
-      val raw = ev.groupBy(col("ts").cast("date").as("rd"),
-          col("event_type").as("ret"))
-        .agg(count(lit(1)).cast("bigint").as("rc"))
-      val grid = days.crossJoin(broadcast(types))
-        .join(raw, col("rd") === col("d") && col("ret") === col("et"), "left")
-        .select(col("d"), col("et"), coalesce(col("rc"), lit(0L)).as("c"))
+      val grid = Kit.dayTypeGrid(ev)
       val iv = grid.groupBy(col("et"))
         .agg(count(lit(1)).cast("bigint").as("n"),
           sum(col("c")).cast("bigint").as("s1"),

@@ -442,9 +442,7 @@ object PipelineQueries65 {
                / sqrt(CAST(l.b AS DOUBLE) * l.k * l.k * (l.k + 1)
                  * (l.k * l.k - 1) / 144), 6) AS z_stat
       FROM l""")) { (s, dir) =>
-      val dc = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
+      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
       val base = dc.agg(min(col("d")).as("d0"))
       val cell = dc.crossJoin(broadcast(base))
         .filter(datediff(col("d"), col("d0")) < 28)

@@ -50,18 +50,6 @@ object PipelineQueries7 {
   private val VocabV = 16
   private val OovKeep = 0.45
 
-  /** SQL text (valid verbatim in BOTH Spark SQL and DuckDB) mapping an md5
-    * hex string column to its fractional position in [0,1): Horner over the
-    * first 13 hex digits. Every step adds 4 mantissa bits and divides by a
-    * power of two, so all 13 steps are EXACT in an IEEE double (52-bit
-    * mantissa) — both engines produce bit-identical fractions, which is
-    * what lets the sketch estimate hash-match against the oracle.
-    */
-  private[operators] def hexFracSql(col: String): String =
-    (1 to 13).foldRight("0.0") { (i, acc) =>
-      s"((CAST(instr('0123456789abcdef', substr($col, $i, 1)) AS DOUBLE) - 1.0 + $acc) / 16.0)"
-    }
-
   val defs: Seq[QueryDef] = Seq(
 
     // ------------------------------------------- KMV distinct sketch (p38)
@@ -100,7 +88,7 @@ object PipelineQueries7 {
                row_number() OVER (PARTITION BY source ORDER BY g) AS rnk
         FROM g),
       k AS (
-        SELECT source, max(${hexFracSql("g")}) AS kth
+        SELECT source, max(${Kit.hexFracSql("g")}) AS kth
         FROM r WHERE rnk <= $KmvK GROUP BY source)
       SELECT d.source AS source,
              d_exact,
@@ -399,15 +387,7 @@ object PipelineQueries7 {
              round(min(cos), 6) AS min_cos
       FROM c GROUP BY label ORDER BY label""")) { (s, dir) =>
       val e = Tables.df(s, dir, "embeddings")
-      val uv = e.select(col("label"), posexplode(col("embedding")))
-        .select(col("label"), (col("pos") + 1).as("dim"), col("col").cast("double").as("val"))
-      val cent = uv.groupBy(col("label"), col("dim"))
-        .agg((Kit.rsum(col("val"), 9) /
-          count(lit(1))).as("m"))
-      val cvec = cent.groupBy(col("label"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
-          x => x.getField("m")).as("cv"))
+      val cvec = Kit.centroids(e, Seq("label"), col("embedding"))
       val cosCol = Functions.cosineSimilarity(col("embedding"), col("cv"))
       e.join(broadcast(cvec), Seq("label"))
         .withColumn("cos", cosCol)
@@ -436,7 +416,7 @@ object PipelineQueries7 {
       WITH t AS (
         SELECT source, doc_id,
                len(string_split_regex(lower(text), '\\s+')) AS n_tok,
-               ${hexFracSql("md5(source)")} AS f
+               ${Kit.hexFracSql("md5(source)")} AS f
         FROM documents),
       a AS (
         SELECT source, doc_id, n_tok,
@@ -452,7 +432,7 @@ object PipelineQueries7 {
       val t = Tables.df(s, dir, "documents")
         .select(col("source"), col("doc_id"),
           size(Kit.words(col("text"))).cast("long").as("n_tok"),
-          expr(hexFracSql("md5(source)")).as("f"))
+          Kit.hexFrac(md5(col("source"))).as("f"))
       t.withColumn("split",
           when(col("f") < 0.8, "train").when(col("f") < 0.9, "val").otherwise("test"))
         .groupBy(col("split"))

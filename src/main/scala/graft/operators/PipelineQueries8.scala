@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Functions, QueryDef, Tables}
+import graft.{QueryDef, Tables}
 
 /** Pipeline coverage batch 8 — corpus mining and vector-infrastructure
   * stages of a training-data pipeline:
@@ -54,14 +54,6 @@ object PipelineQueries8 {
 
   /** p50: report the top pairs only. */
   private val OverlapTop = 20
-
-  /** Same exact Horner hex-fraction as batch 7 (p38/p44): 13 hex digits →
-    * 52 mantissa bits, every step exact in an IEEE double, so both engines
-    * produce bit-identical fractions in [0,1). */
-  private def hexFracSql(col: String): String =
-    (1 to 13).foldRight("0.0") { (i, acc) =>
-      s"((CAST(instr('0123456789abcdef', substr($col, $i, 1)) AS DOUBLE) - 1.0 + $acc) / 16.0)"
-    }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -197,33 +189,7 @@ object PipelineQueries8 {
       val init = e.orderBy(col("vec_id")).limit(KClusters)
         .select((row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int").as("cid"),
           col("v").as("cv"))
-      // Pack the K centroids into ONE broadcast row so assignment needs no
-      // join or shuffle — each vector scans the array locally.
-      def pack(u: org.apache.spark.sql.DataFrame) =
-        u.agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cents"))
-      def assign(cents: org.apache.spark.sql.DataFrame) = {
-        // max over struct(cos, -cid): highest gridded cosine wins, ties go
-        // to the LOWER cluster id (matching the oracle's ORDER BY cos DESC,
-        // cid window).
-        val scoredArr = transform(col("cents"), c =>
-          struct(round(Functions.cosineSimilarity(col("v"), c.getField("cv")), 9).as("cos"),
-            (-c.getField("cid")).as("ncid")))
-        val best = array_max(scoredArr)
-        e.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("v"),
-            (-best.getField("ncid")).as("cid"), best.getField("cos").as("cos"))
-      }
-      def update(a: org.apache.spark.sql.DataFrame) =
-        a.select(col("cid"), posexplode(col("v")))
-          .select(col("cid"), (col("pos") + 1).as("dim"), col("col").as("val"))
-          .groupBy(col("cid"), col("dim"))
-          .agg((Kit.rsum(col("val"), 9) /
-            count(lit(1))).as("m"))
-          .groupBy(col("cid"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("dim").as("d"), col("m").as("m")))),
-            x => x.getField("m")).as("cv"))
-      val a2 = assign(pack(update(assign(pack(init)))))
+      val a2 = Kit.sphericalKMeans(e, init, Nil, "v")
       a2.groupBy(col("cid"))
         .agg(count(lit(1)).as("n_vecs"),
           round(Kit.dsum(col("cos"), 9) /
@@ -252,7 +218,7 @@ object PipelineQueries8 {
       WITH t AS (
         SELECT source, doc_id,
                CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) AS n_tok,
-               ${hexFracSql("md5(CAST(doc_id AS VARCHAR))")} AS u
+               ${Kit.hexFracSql("md5(CAST(doc_id AS VARCHAR))")} AS u
         FROM documents),
       k AS (
         SELECT source, doc_id, n_tok,
@@ -268,7 +234,7 @@ object PipelineQueries8 {
       val t = Tables.df(s, dir, "documents")
         .select(col("source"), col("doc_id"),
           size(Kit.words(col("text"))).cast("long").as("n_tok"),
-          expr(hexFracSql("md5(cast(doc_id AS string))")).as("u"))
+          Kit.hexFrac(md5(col("doc_id").cast("string"))).as("u"))
       val k = t.select(col("source"), col("doc_id"), col("n_tok"),
         round(round(log(col("u")), 9) / col("n_tok"), 9).as("pri"))
       val w = Window.partitionBy(col("source")).orderBy(col("pri").desc, col("doc_id"))

@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.TruthTier
 import graft.plans.ExecutedPlan.collectAll
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Enforces COVERAGE.md's "bounded frame" prose as a plan property over the
   * ENTIRE gate: no query's physical plan may contain an un-partitioned
@@ -15,6 +20,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   * cases here are all frames the plan has already collapsed to a capped
   * cardinality (band configs, vocabulary caps, decile/threshold rollups,
   * label/source cross-tabs) before the window runs.
+  *
+  * The same walk finds every `repartition(n, cols)` pin. Such a pin turns
+  * off AQE's skew split on its exchange, which is safe only on an input the
+  * truth-tier guard bounds.
   */
 class BoundedWindowSpec extends AnyFunSuite {
   private val spark = SharedSpark.spark
@@ -228,14 +237,23 @@ class BoundedWindowSpec extends AnyFunSuite {
     below.flatMap(_.metrics.get("numOutputRows")).headOption.map(_.value)
   }
 
-  test("no gate query plans an un-partitioned window over an unbounded input") {
+  /** One walk over every gate query's compiled plan: the un-partitioned
+    * windows that break their documented bound, and the queries whose plan
+    * holds a hash-partitioned `repartition(n, cols)` exchange. */
+  private lazy val (windowOffenders, pinnedQueries) = {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    val pinned = Set.newBuilder[String]
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
       val df = SparkEntry.queries(name)(spark, SharedSpark.sf)
       // compiled (pre-execution) plan: under AQE this is the initial plan,
-      // which still carries every WindowExec the query will run
-      val globalWins = collectAll(df.queryExecution.executedPlan)
-        .collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+      // which still carries every WindowExec and exchange the query will run
+      val nodes = collectAll(df.queryExecution.executedPlan)
+      if (nodes.exists {
+        case e: ShuffleExchangeExec =>
+          e.shuffleOrigin == REPARTITION_BY_NUM && e.outputPartitioning.isInstanceOf[HashPartitioning]
+        case _ => false
+      }) pinned += name
+      val globalWins = nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
       if (globalWins.nonEmpty && !exempt.contains(name)) {
         bounded.get(name) match {
           case None =>
@@ -252,7 +270,32 @@ class BoundedWindowSpec extends AnyFunSuite {
         }
       }
     }
-    assert(offenders.isEmpty,
-      "un-partitioned corpus-risk windows found:\n  " + offenders.mkString("\n  "))
+    (offenders.toSeq, pinned.result())
+  }
+
+  test("no gate query plans an un-partitioned window over an unbounded input") {
+    assert(windowOffenders.isEmpty,
+      "un-partitioned corpus-risk windows found:\n  " + windowOffenders.mkString("\n  "))
+  }
+
+  /** The shingle-exchange pins, each behind a `TruthTier.guard` on the
+    * documents table. */
+  private val pinnedTiers = Set("p55_dedup_audit", "p77_band_tuning",
+    "p80_dedup_threshold_sweep", "p160_idf_weighted_jaccard")
+
+  test("hash repartition pins sit only on guarded truth tiers") {
+    assert(pinnedQueries == pinnedTiers,
+      s"queries with a repartition(n, cols) exchange: ${pinnedQueries.toSeq.sorted.mkString(", ")}")
+    // one document past the bound: each pinned query refuses while its
+    // DataFrame is built, before any pinned exchange can run
+    val dir = Files.createTempDirectory("graft-oversized-docs")
+    spark.range(TruthTier.documentsBound + 1)
+      .select(col("id").as("doc_id"), lit("alpha beta gamma delta").as("text"),
+        lit("en").as("lang"), lit("src0").as("source"), lit(22L).as("n_chars"))
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    for (q <- pinnedTiers.toSeq.sorted) {
+      val e = intercept[TruthTier.ExceededException](SparkEntry.queries(q)(spark, dir.toString))
+      assert(e.op == q && e.actual == TruthTier.documentsBound + 1)
+    }
   }
 }

@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
   * `SqlScan.scala` alone: capped rewrite loops silently left the occurrences
   * past their cap unrewritten. And the exact sums every batch folds its
   * double aggregates with are spelled in `Kit.scala` alone, so the one
-  * decision that keeps results hash-equal to the oracle is made once.
+  * decision that keeps results hash-equal to the oracle is made once. So
+  * are the per-day event series frames and the embedding centroid and
+  * k-means frames, the English stop-word ratio and the md5 hex fraction.
   */
 class KitGuardSpec extends AnyFunSuite {
 
@@ -62,5 +64,29 @@ class KitGuardSpec extends AnyFunSuite {
     val hits = Seq("inStr =", "guard <").flatMap(offenders(_, Set("SqlScan.scala")))
     assert(hits.isEmpty,
       s"use SqlScan.lex / SqlScan.fixpoint instead of a local copy: ${hits.mkString(", ")}")
+  }
+
+  test("series, vector, stop-word and hex-fraction frames are spelled only in Kit") {
+    // whitespace removed and triple-quoted oracle SQL blanked: a spelling
+    // often spans lines, and the oracle text is the spec, not a copy
+    val spellings = Seq(
+      """groupBy\(col\("ts"\)\.cast\("date"\)\.as\("d"\)\)\.agg\(count\(lit\(1\)\)(\.cast\("bigint"\))?\.as\("c"\)\)""",
+      """select\(col\("ts"\)\.cast\("date"\)\.as\("\w+"\)\)\.distinct\(\)""",
+      """datediff\(col\("d"\),col\("d0"\)\)\.cast\("bigint"\)\.as\("x"\)""",
+      """col\("a\.r"\)===col\("b\.r"\)\+col\("lag"\)""",
+      """collect_list\(struct\(col\("dim"\)""",
+      """array_max\(scoredArr\)""",
+      """valEnStops=""",
+      """defhexFrac""").map(_.r)
+    val spelled = sources.filterNot(_.getFileName.toString == "Kit.scala").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+        .replaceAll("(?s)\"\"\".*?\"\"\"", "\"\"")
+        .replaceAll("\\s+", "")
+      spellings.flatMap(_.findAllIn(text).map(m => s"${root.relativize(p)}: $m"))
+    }
+    assert(spelled.isEmpty,
+      "use Kit.dayCounts / dayTypeGrid / dayIndex / lagPairs / centroids / " +
+        "sphericalKMeans / enRatio / hexFrac instead of a local spelling: " +
+        spelled.mkString(", "))
   }
 }
