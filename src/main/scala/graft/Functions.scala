@@ -18,18 +18,11 @@ object Functions {
 
   // ---------------------------------------------------------------- vectors
 
-  /** Dot product of two ARRAY<numeric> columns via higher-order functions.
-    * (Reference: COSINE_SIMILARITY at opteryx/functions/__init__.py:611.) */
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
-  /** Cosine similarity — native codegen'd expression (one fused loop; the
-    * HOF composition above evaluates its lambdas interpreted, which is 50×
-    * slower inside an all-pairs join). Same accumulation order. */
+  /** Cosine similarity of two ARRAY<numeric> columns (the reference's
+    * COSINE_SIMILARITY, opteryx/functions/__init__.py:611) — a native
+    * codegen'd expression: one fused loop, where a dot product and norms
+    * composed from higher-order functions evaluate their lambdas
+    * interpreted, 50× slower inside an all-pairs join. */
   def cosineSimilarity(a: Column, b: Column): Column =
     graft.functions.NativeExpressions.cosineSimilarity(a, b)
 
@@ -246,8 +239,8 @@ object Functions {
     spark.udf.register("date_bin", dateBin)
     // Expression-composed registrations stay codegen-friendly:
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{BitwiseGet, BitwiseXor, Cast, Expression, If, InitCap, IsNotNull, Literal, Rand, Randn, XxHash64}
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import org.apache.spark.sql.catalyst.expressions.{BitwiseGet, BitwiseXor, Cast, Expression, If, InitCap, IsNotNull, Literal, Randn, XxHash64}
+    import org.apache.spark.sql.types.ArrayType
     val reg = spark.sessionState.functionRegistry
     if (!reg.functionExists(FunctionIdentifier("time_bucket")))
       spark.udf.register("time_bucket", (d: java.time.Duration, ts: java.sql.Timestamp) =>
@@ -257,7 +250,7 @@ object Functions {
     // PHI (golden-ratio literal, folded at plan time like PI), the
     // *_ENCODE/*_DECODE hash aliases, array containment quantifiers, and
     // GET_STRING (JSON field subscript returning string).
-    import org.apache.spark.sql.catalyst.expressions.{ArrayExcept, ArraysOverlap, Base64, Concat, EqualTo, GetJsonObject, Hex, Size, UnBase64, Unhex}
+    import org.apache.spark.sql.catalyst.expressions.{ArraysOverlap, Base64, Concat, GetJsonObject, Hex, Size, UnBase64, Unhex}
     reg.createOrReplaceTempFunction("phi",
       (_: Seq[Expression]) => Literal(1.618033988749895), "internal")
     reg.createOrReplaceTempFunction("hex_encode",
@@ -422,7 +415,7 @@ object Functions {
     // (opteryx/functions/__init__.py:508-659) — remaining spellings Spark
     // lacks or spells differently. All are thin Catalyst compositions
     // (codegen-friendly, no UDFs).
-    import org.apache.spark.sql.catalyst.expressions.{Abs, ArrayContains, Contains, CurrentTimestamp => CurTs, DateFormatClass, ElementAt, EndsWith, JsonObjectKeys, Length, Lower, Sha2, StartsWith}
+    import org.apache.spark.sql.catalyst.expressions.{Abs, ArrayContains, CurrentTimestamp => CurTs, DateFormatClass, EndsWith, JsonObjectKeys, Length, Sha2, StartsWith}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, Max, Min}
     import org.apache.spark.sql.types.{LongType, StringType => StrType}
     reg.createOrReplaceTempFunction("absolute",

@@ -71,4 +71,22 @@ object IvfIndex {
       .filter(col("rn") <= topK)
       .orderBy(col("q_id"), col("rn"))
   }
+
+  /** The exact cosine top-k ground truth [[ivfTopK]] is scored against:
+    * (q_id, n_id) for the k nearest other vectors of each query vector
+    * (rows of `e` where `isQuery` holds), ties by the lower id — the
+    * oracle's `row_number() OVER (PARTITION BY q.vec_id ORDER BY
+    * list_cosine_similarity(…) DESC, c.vec_id) <= k` over all pairs. The
+    * query side is broadcast: queries are a small fixed set. */
+  def exactTopK(e: DataFrame, isQuery: Column, k: Int): DataFrame = {
+    val q = e.filter(isQuery).alias("q")
+    val c = e.alias("c")
+    val cos = Functions.cosineSimilarity(col("q.embedding"), col("c.embedding"))
+    val w = Window.partitionBy(col("q.vec_id")).orderBy(cos.desc, col("c.vec_id"))
+    broadcast(q).join(c, col("q.vec_id") =!= col("c.vec_id"))
+      .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
+        row_number().over(w).as("rn"))
+      .filter(col("rn") <= k)
+      .select(col("q_id"), col("n_id"))
+  }
 }

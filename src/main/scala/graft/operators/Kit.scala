@@ -19,7 +19,15 @@ import graft.{Functions, Tables}
   *    least-squares trend and the lag-pair autocovariance frame, each
   *    mirroring one CTE of their oracle SQL;
   *  - vectors: the per-key centroid mean of the embedding batches and the
-  *    two-round spherical k-means built on it.
+  *    two-round spherical k-means built on it;
+  *  - stats: the rank and moment statistics — midranks over the
+  *    distinct-value frame and the per-group rank sums with their tie term
+  *    (p141, p223, p284), the two-group cumulative frame and the
+  *    Ansari–Bradley sums (p278, p287), the exact DECIMAL(38,0) power sums
+  *    and central moments (p239, p260, p283), the survival subjects (p188,
+  *    p277, p286), the click/view value frame (p155, p162), the annotator
+  *    screens (p124, p247, p252, p274) and the BM25 probe terms (p216,
+  *    p250), each quoting the oracle CTE it mirrors.
   */
 object Kit {
 
@@ -321,4 +329,181 @@ object Kit {
     def update(a: DataFrame) = centroids(a, keys :+ "cid", col(vec))
     assign(pack(update(assign(pack(seeds)))))
   }
+
+  // ----------------------------------------------------------------- stats
+  //
+  // The rank and moment statistics reduce the corpus to a frame keyed by
+  // the distinct values (or by the survival day) before any window runs,
+  // so every window below is bounded by the value domain, never by rows.
+  // Each helper mirrors one CTE of their oracle SQL.
+
+  /** (v, c) value-count frame → (v, out): the midrank of each distinct
+    * value — `coalesce(sum(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
+    * PRECEDING AND 1 PRECEDING), 0) + (c + 1) / 2.0`. */
+  private def midrankFrame(vc: DataFrame, v: String, out: String): DataFrame =
+    vc.select(col(v),
+      (coalesce(sum(col("c")).over(Window.orderBy(col(v))
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+        + (col("c") + 1) / 2.0).as(out))
+
+  private def valueCounts(rows: DataFrame, v: Column): DataFrame =
+    rows.groupBy(v).agg(count(lit(1)).cast("bigint").as("c"))
+
+  /** rows → (v, out): midranks of column `v` over its distinct-value
+    * frame — `vc AS (SELECT v, CAST(count(*) AS BIGINT) AS c … GROUP BY v)`
+    * and the midrank CTE over it. */
+  def midranks(rows: DataFrame, v: String, out: String): DataFrame =
+    midrankFrame(valueCounts(rows, col(v)), v, out)
+
+  /** rows → ((g, n_s, rsum), (tsum)): over the value v = `x`, the per-group
+    * size and exact rank sum — `gs AS (SELECT sc.g, CAST(sum(sc.c_s) AS BIGINT) AS n_s,
+    * CAST(sum(sc.c_s * CAST(r.rv AS DECIMAL(19,1))) AS DECIMAL(38,1)) AS
+    * rsum FROM sc JOIN r ON sc.v = r.v GROUP BY sc.g)` — and the one-row
+    * tie term `tie AS (SELECT coalesce(CAST(sum(CAST(c * c * c - c AS
+    * DECIMAL(38,0))) AS DOUBLE), 0) AS tsum FROM vc WHERE c > 1)`. */
+  def rankSums(rows: DataFrame, g: String, x: Column): (DataFrame, DataFrame) = {
+    val vc = valueCounts(rows, x.as("v"))
+    val sc = rows.groupBy(col(g), x.as("v")).agg(count(lit(1)).cast("bigint").as("c_s"))
+    val gs = sc.join(broadcast(midrankFrame(vc, "v", "rv")), "v").groupBy(col(g)).agg(
+      sum(col("c_s")).cast("bigint").as("n_s"),
+      sum(col("c_s") * col("rv").cast("decimal(19,1)")).cast("decimal(38,1)").as("rsum"))
+    val tie = vc.filter(col("c") > 1).agg(
+      coalesce(dsum(col("c") * col("c") * col("c") - col("c"), 0), lit(0.0)).as("tsum"))
+    (gs, tie)
+  }
+
+  /** (grp 0/1, v) rows → ((n, n1), (v, c, c1, f)): the two-group totals
+    * `nn` and the cumulative value frame `w AS (SELECT v, c, c1,
+    * CAST(sum(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS f
+    * FROM vc)`, c1 the group-1 count at v. */
+  def twoGroupFrame(g: DataFrame): (DataFrame, DataFrame) = {
+    val nn = g.agg(count(lit(1)).cast("bigint").as("n"),
+      sum(col("grp")).cast("bigint").as("n1"))
+    val vc = g.groupBy(col("v"))
+      .agg(count(lit(1)).cast("bigint").as("c"),
+        sum(col("grp")).cast("bigint").as("c1"))
+    val w = vc.select(col("v"), col("c"), col("c1"),
+      sum(col("c")).over(Window.orderBy(col("v"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("bigint").as("f"))
+    (nn, w)
+  }
+
+  /** [[twoGroupFrame]]'s (nn, w) → one row (n, n1, w_ab, ssum, ssq): the
+    * Ansari–Bradley sums over the closed-form block scores — the oracle's
+    * `sc`, `sc2` and `st` CTEs. twoG(x) = Σ_{i≤x} 2·min(i, N+1−i) folds at
+    * h = (N+1) // 2; a tie block (f0, f] takes the mean of its scores. */
+  def ansariBradley(nn: DataFrame, w: DataFrame): DataFrame = {
+    val sc = w.crossJoin(broadcast(nn))
+      .select(col("v"), col("c"), col("c1"), col("f"),
+        (col("f") - col("c")).as("f0"), col("n"), col("n1"),
+        floor((col("n") + 1) / 2).cast("bigint").as("h"))
+    def twoG(x: Column) =
+      when(x <= col("h"), x * (x + 1))
+        .otherwise(col("h") * (col("h") + 1)
+          + (x - col("h")) * (lit(2) * (col("n") + 1) - (x + col("h") + 1)))
+    val sc2 = sc.select(col("v"), col("c"), col("c1"), col("n"), col("n1"),
+      (twoG(col("f")) - twoG(col("f0"))).as("two_block"))
+    val score = col("two_block").cast("double") / (lit(2) * col("c"))
+    sc2.groupBy(col("n"), col("n1")).agg(
+      sum(col("c1").cast("double") * col("two_block") / (lit(2) * col("c")))
+        .cast("double").as("w_ab"),
+      sum(col("two_block").cast("double") / 2).cast("double").as("ssum"),
+      rsum(score * score * col("c"), 9).as("ssq"))
+  }
+
+  /** rows → (keys…, n, s1..sk): exact integer power sums per key —
+    * `CAST(sum(x * … * x) AS DECIMAL(38,0)) AS si` over `CAST(x AS
+    * DECIMAL(9,0))`. The per-row DECIMAL(9,0) comes before the powers: a
+    * BIGINT x⁴ wraps past ~55k under non-ANSI Spark where DuckDB errors,
+    * and (9,0)⁴ = DECIMAL(36,0) stays bind-legal in DuckDB and exact in
+    * both engines for any x ≤ 1e9. */
+  def powerSums(rows: DataFrame, keys: Seq[String], x: Column, k: Int): DataFrame = {
+    val d = x.cast("decimal(9,0)")
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).cast("bigint").as("n"),
+      (1 to k).map(i => sum(Seq.fill(i)(d).reduce(_ * _)).cast("decimal(38,0)").as(s"s$i")): _*)
+  }
+
+  /** [[powerSums]] with k = 4 → (keys…, n, m1, m2, m3, m4): the mean and
+    * the central moments from the raw ones r_i = s_i / n — the oracle's
+    * `m` and `c` CTEs. */
+  def centralMoments(ps: DataFrame): DataFrame = {
+    val kn = ps.columns.toSeq.takeWhile(_ != "n").map(col) :+ col("n")
+    val m = ps.select(kn ++ Seq((col("s1").cast("double") / col("n")).as("m1"),
+      (col("s2").cast("double") / col("n")).as("r2"),
+      (col("s3").cast("double") / col("n")).as("r3"),
+      (col("s4").cast("double") / col("n")).as("r4")): _*)
+    m.select(kn ++ Seq(col("m1"),
+      (col("r2") - col("m1") * col("m1")).as("m2"),
+      (col("r3") - lit(3.0) * col("m1") * col("r2")
+        + lit(2.0) * col("m1") * col("m1") * col("m1")).as("m3"),
+      (col("r4") - lit(4.0) * col("m1") * col("r3")
+        + lit(6.0) * col("m1") * col("m1") * col("r2")
+        - lit(3.0) * col("m1") * col("m1") * col("m1") * col("m1")).as("m4")): _*)
+  }
+
+  /** events → (signup, event, t_day): one survival subject per user with a
+    * signup — the oracle's `u`, `pu` and `s` CTEs. signup is the user's
+    * first `signup` ts; the event is the first purchase at or after it (an
+    * earlier purchase is a different lifecycle and must not shadow it);
+    * t_day (INT) runs from the signup day to the purchase day, or else to
+    * the last day the user was seen; event is an INT 0/1. */
+  def survivalSubjects(events: DataFrame): DataFrame = {
+    val u = events.groupBy(col("user_id"))
+      .agg(min(when(col("event_type") === "signup", col("ts"))).as("signup"),
+        max(col("ts")).as("last_seen"))
+    val pu = events.join(u.select(col("user_id").as("uid"), col("signup")),
+        col("user_id") === col("uid"))
+      .filter(col("event_type") === "purchase" && col("ts") >= col("signup"))
+      .groupBy(col("user_id").as("puid")).agg(min(col("ts")).as("purchase"))
+    u.filter(col("signup").isNotNull)
+      .join(pu, col("user_id") === col("puid"), "left")
+      .select(col("signup"),
+        when(col("purchase").isNotNull, 1).otherwise(0).as("event"),
+        when(col("purchase").isNotNull,
+          datediff(col("purchase").cast("date"), col("signup").cast("date")))
+          .otherwise(
+            datediff(col("last_seen").cast("date"), col("signup").cast("date")))
+          .as("t_day"))
+  }
+
+  /** events → (v, cx, cy): per distinct `value`, the click and the view
+    * counts — `SELECT value AS v, sum(CASE WHEN event_type = 'click' THEN 1
+    * ELSE 0 END) AS cx, … FROM events WHERE event_type IN ('click', 'view')
+    * GROUP BY value`. */
+  def clickViewCounts(events: DataFrame): DataFrame =
+    events.filter(col("event_type").isin("click", "view"))
+      .groupBy(col("value").as("v")).agg(
+        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("cx"),
+        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cy"))
+
+  /** The word pattern — `regexp_extract_all(lower(text), '[a-z0-9]+')` —
+    * and the annotator screens' stop-word pattern (the same regex text runs
+    * in both engines). */
+  val WordRe = "[a-z0-9]+"
+  private val StopRe = "\\b(the|and|of|to|in|a|is|for|on|with)\\b"
+
+  /** The two annotator screens over `documents`, as INT 0/1 columns: la
+    * (`n_chars >= 400`) and lb (`20 * len(regexp_extract_all(lower(text),
+    * StopRe)) >= len(regexp_extract_all(lower(text), WordRe))`). */
+  def annotatorLabels: Seq[Column] = Seq(
+    when(col("n_chars") >= 400, 1).otherwise(0).as("la"),
+    when(lit(20) * regexp_count(lower(col("text")), lit(StopRe))
+      >= regexp_count(lower(col("text")), lit(WordRe)), 1)
+      .otherwise(0).as("lb"))
+
+  /** (doc_id, tks) → (tok, doc_id, c): the non-empty token counts per doc,
+    * one explode feeding one (tok, doc_id) partial-aggregate shuffle. */
+  def termCounts(docsTok: DataFrame): DataFrame =
+    docsTok.select(col("doc_id"), explode(col("tks")).as("tok"))
+      .filter(col("tok") =!= "")
+      .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("c"))
+
+  /** [[termCounts]] → (term): the six most frequent tokens of at least four
+    * characters, ties by token — `ORDER BY c DESC, tok LIMIT 6` as a
+    * distributed top-k (TakeOrderedAndProject), never a global window. */
+  def probeTerms(tc: DataFrame): DataFrame =
+    tc.filter(length(col("tok")) >= 4)
+      .groupBy(col("tok")).agg(sum(col("c")).as("c"))
+      .orderBy(col("c").desc, col("tok")).limit(6)
+      .select(col("tok").as("term"))
 }

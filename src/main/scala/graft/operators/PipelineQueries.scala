@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Functions, QueryDef, Tables}
@@ -304,7 +304,7 @@ object PipelineQueries {
       Tables.dfSpread(s, dir, "documents").select(
         col("doc_id"),
         size(split(col("text"), "\\s+")).as("n_ws"),
-        regexp_count(lower(col("text")), lit("[a-z0-9]+")).as("n_words"),
+        regexp_count(lower(col("text")), lit(Kit.WordRe)).as("n_words"),
         ceil(col("n_chars") / 4.0).cast("bigint").as("n_bpe_est"))
         .orderBy(col("doc_id"))
     },

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -93,15 +92,7 @@ object PipelineQueries16 {
         .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
       val ivf = IvfIndex.ivfTopK(e, cents, col("vec_id") < NQueries,
         probes = Probes, topK = K).select(col("q_id"), col("n_id"))
-      val q = e.filter(col("vec_id") < NQueries).alias("q")
-      val c = e.alias("c")
-      val cos = graft.Functions.cosineSimilarity(col("q.embedding"), col("c.embedding"))
-      val w = Window.partitionBy(col("q.vec_id")).orderBy(cos.desc, col("c.vec_id"))
-      val truth = broadcast(q).join(c, col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
-          row_number().over(w).as("rn"))
-        .filter(col("rn") <= K)
-        .select(col("q_id"), col("n_id"))
+      val truth = IvfIndex.exactTopK(e, col("vec_id") < NQueries, K)
       val iv2 = ivf.select(col("q_id").as("iq"), col("n_id").as("hit"))
       truth.join(iv2, col("q_id") === col("iq") && col("n_id") === col("hit"), "left")
         .groupBy(col("q_id"))

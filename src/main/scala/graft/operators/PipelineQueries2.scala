@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
 
 /** Pipeline coverage batch 2: the IVF-style ANN scale path and a composed

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -138,15 +137,7 @@ object PipelineQueries23 {
       val e = Tables.dfSpread(s, dir, "embeddings")
       val cents = e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"))
-      val q = e.filter(col("vec_id") < NQueries).alias("q")
-      val c = e.alias("c")
-      val cos = graft.Functions.cosineSimilarity(col("q.embedding"), col("c.embedding"))
-      val w = Window.partitionBy(col("q.vec_id")).orderBy(cos.desc, col("c.vec_id"))
-      val truth = broadcast(q).join(c, col("q.vec_id") =!= col("c.vec_id"))
-        .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
-          row_number().over(w).as("rn"))
-        .filter(col("rn") <= K)
-        .select(col("q_id"), col("n_id"))
+      val truth = IvfIndex.exactTopK(e, col("vec_id") < NQueries, K)
       val curves = ProbeCounts.map { p =>
         val hits = IvfIndex.ivfTopK(e, cents, col("vec_id") < NQueries,
           probes = p, topK = K)

@@ -38,10 +38,6 @@ object PipelineQueries32 {
     * non-space marks. Same regex text on both engines (RE2 and Java agree
     * on this alternation). */
   private val SubTokRe = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
-  private val WordRe = "[a-z0-9]+"
-
-  /** p124: stopword hits for the B labeler. */
-  private val StopRe = "\\b(the|and|of|to|in|a|is|for|on|with)\\b"
 
   private def norm(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", ""), "\\s+", " "))
@@ -66,7 +62,7 @@ object PipelineQueries32 {
       Tables.dfSpread(s, dir, "documents")
         .select(col("source"),
           regexp_count(lower(col("text")), lit(SubTokRe)).as("n_sub"),
-          regexp_count(lower(col("text")), lit(WordRe)).as("n_words"),
+          regexp_count(lower(col("text")), lit(Kit.WordRe)).as("n_words"),
           octet_length(col("text").cast("binary")).as("n_bytes"))
         .groupBy(col("source"))
         .agg(sum(col("n_sub")).as("sub_tokens"),
@@ -140,11 +136,7 @@ object PipelineQueries32 {
                             / (n * n), 0), 6) AS kappa
       FROM c ORDER BY lang""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(col("lang"),
-          when(col("n_chars") >= 400, 1).otherwise(0).as("la"),
-          when(lit(20) * regexp_count(lower(col("text")), lit(StopRe))
-            >= regexp_count(lower(col("text")), lit(WordRe)), 1)
-            .otherwise(0).as("lb"))
+        .select(col("lang") +: Kit.annotatorLabels: _*)
       val c = t.groupBy(col("lang"))
         .agg(count(lit(1)).as("n"),
           sum(col("la") * col("lb")).as("a"),

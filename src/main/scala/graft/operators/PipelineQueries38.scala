@@ -137,15 +137,8 @@ object PipelineQueries38 {
       val sc = Tables.dfSpread(s, dir, "documents")
         .select(col("text"), Kit.words(col("text")).as("ws"))
         .select(Kit.enRatio(col("ws"), 4).as("q"), length(col("text")).as("y"))
-      def midranks(frame: org.apache.spark.sql.DataFrame, v: String, out: String) = {
-        val cnt = frame.groupBy(col(v)).agg(count(lit(1)).cast("bigint").as("c"))
-        cnt.select(col(v),
-          (coalesce(sum(col("c")).over(Window.orderBy(col(v))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-            + (col("c") + 1) / 2.0).as(out))
-      }
-      val qr = midranks(sc, "q", "rx")
-      val yr = midranks(sc, "y", "ry")
+      val qr = Kit.midranks(sc, "q", "rx")
+      val yr = Kit.midranks(sc, "y", "ry")
       val rk = sc.join(broadcast(qr), "q").join(broadcast(yr), "y")
         .select(col("rx"), col("ry"))
       val a = rk.agg(count(lit(1)).cast("bigint").as("n"),

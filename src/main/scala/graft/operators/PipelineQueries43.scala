@@ -91,16 +91,11 @@ object PipelineQueries43 {
       SELECT nx, ny, u, mu, round(sigma, 6) AS sigma,
              round((u - mu) / sigma, 4) AS z
       FROM stat""")) { (s, dir) =>
-      val ev = Tables.df(s, dir, "events")
-        .filter(col("event_type").isin("click", "view"))
-      val byV = ev.groupBy(col("value").as("v")).agg(
-        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("cx"),
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cy"))
       // window over the DISTINCT-value frame (bounded 2-decimal domain),
       // never over the row-level corpus
       val w = Window.orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      val cum = byV
+      val cum = Kit.clickViewCounts(Tables.df(s, dir, "events"))
         .withColumn("t", col("cx") + col("cy"))
         .withColumn("below", coalesce(sum(col("cx") + col("cy")).over(w), lit(0L)))
       val agg = cum.agg(

@@ -110,18 +110,14 @@ object PipelineQueries44 {
              round(CAST(n AS DOUBLE) * m / ((n + m) * CAST(n + m AS DOUBLE))
                * CAST(sum(term) AS DOUBLE), 6) AS cvm_t
       FROM terms, tot GROUP BY n, m""")) { (s, dir) =>
-      val ev = Tables.df(s, dir, "events")
-        .filter(col("event_type").isin("click", "view"))
-      val byV = ev.groupBy(col("value").as("v")).agg(
-        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("cx"),
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cy"))
+      val vv = Kit.clickViewCounts(Tables.df(s, dir, "events"))
       val w = Window.orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = byV
+      val cum = vv
         .withColumn("t", col("cx") + col("cy"))
         .withColumn("cumx", sum(col("cx")).over(w))
         .withColumn("cumy", sum(col("cy")).over(w))
-      val tot = byV.agg(sum(col("cx")).as("n"), sum(col("cy")).as("m"))
+      val tot = vv.agg(sum(col("cx")).as("n"), sum(col("cy")).as("m"))
       val d = col("cumx").cast("double") / col("n") -
         col("cumy").cast("double") / col("m")
       cum.crossJoin(broadcast(tot))

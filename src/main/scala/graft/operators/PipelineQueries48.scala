@@ -221,25 +221,8 @@ object PipelineQueries48 {
       SELECT t_day, CAST(d AS BIGINT) AS d, CAST(n_at_risk AS BIGINT) AS n_at_risk,
              CASE WHEN absorbed = 1 THEN 0.0 ELSE round(surv, 6) END AS survival
       FROM km ORDER BY t_day""")) { (s, dir) =>
-      val ev = Tables.df(s, dir, "events")
-      val u = ev.groupBy(col("user_id")).agg(
-        min(when(col("event_type") === "signup", col("ts"))).as("signup"),
-        max(col("ts")).as("last_seen"))
-      // first purchase AT-OR-AFTER signup (an earlier purchase is a
-      // different lifecycle and must not shadow the post-signup one)
-      val pu = ev.filter(col("event_type") === "purchase")
-        .join(u.select(col("user_id"), col("signup")), "user_id")
-        .filter(col("ts") >= col("signup"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("purchase"))
-      val converted = col("purchase").isNotNull
-      val sdf = u.join(pu, Seq("user_id"), "left")
-        .filter(col("signup").isNotNull).select(
-        when(converted, 1L).otherwise(0L).as("event"),
-        when(converted,
-          datediff(col("purchase").cast("date"), col("signup").cast("date")))
-          .otherwise(
-            datediff(col("last_seen").cast("date"), col("signup").cast("date")))
-          .cast("long").as("t_day"))
+      val sdf = Kit.survivalSubjects(Tables.df(s, dir, "events"))
+        .select(col("event").cast("long").as("event"), col("t_day").cast("long").as("t_day"))
       // at-risk counts: reverse cumulative over the DAY frame (date-span
       // bounded); product-limit via exp of 9dp-rounded log terms
       val byDayDesc = Window.orderBy(col("t_day").desc)

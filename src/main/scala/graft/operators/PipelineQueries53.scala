@@ -442,15 +442,8 @@ object PipelineQueries53 {
       // probes + tf reference the IDENTICAL exchange subtree, so runtime
       // ReuseExchange executes the tokenize + (tok,doc) shuffle once (the
       // p77-measured pattern — no checkpoint, nothing materialized)
-      val tc = docsTok
-        .select(col("doc_id"), explode(col("tks")).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("c"))
-      // distributed top-k (TakeOrderedAndProject), never a global window
-      val probes = tc.filter(length(col("tok")) >= 4)
-        .groupBy(col("tok")).agg(sum(col("c")).as("c"))
-        .orderBy(col("c").desc, col("tok")).limit(6)
-        .select(col("tok").as("term"))
+      val tc = Kit.termCounts(docsTok)
+      val probes = Kit.probeTerms(tc)
       val tf = tc.join(broadcast(probes), col("tok") === col("term"))
         .select(col("term"), col("doc_id"), col("c").as("tf"))
       val scored = tf.join(dl, "doc_id").crossJoin(broadcast(avgdl))

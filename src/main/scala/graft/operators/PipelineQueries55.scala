@@ -113,26 +113,11 @@ object PipelineQueries55 {
                  - tie.tsum / (CAST(n AS DOUBLE) * n * n - n)) END, 6)
                AS h_tie_corrected
       FROM h, tie""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vc = docs.groupBy(col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      // midranks over the distinct-value frame (p141 class): the window is
-      // value-domain-bounded at ANY corpus size, never over rows
-      val r = vc.select(col("v"), col("c"),
-        (coalesce(sum(col("c")).over(Window.orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          + (col("c") + 1) / 2.0).as("rv"))
-      val sc = docs.groupBy(col("source"), col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c_s"))
-      val gs = sc.join(broadcast(r), "v").groupBy(col("source")).agg(
-        sum(col("c_s")).cast("bigint").as("n_s"),
-        sum(col("c_s") * col("rv").cast("decimal(19,1)"))
-          .cast("decimal(38,1)").as("rsum"))
+      val (gs, tie) = Kit.rankSums(Tables.dfSpread(s, dir, "documents"), "source",
+        col("n_chars"))
       val term = gs.select(col("source"), col("n_s"),
         Kit.rdec(col("rsum").cast("double") * col("rsum").cast("double")
           / col("n_s"), 6).as("r2n"))
-      val tie = vc.filter(col("c") > 1).agg(
-        coalesce(Kit.dsum(col("c") * col("c") * col("c") - col("c"), 0), lit(0.0)).as("tsum"))
       val a = term.agg(count(lit(1)).cast("bigint").as("k"),
         sum(col("n_s")).cast("bigint").as("n"),
         sum(col("r2n")).cast("double").as("s_r2n"))

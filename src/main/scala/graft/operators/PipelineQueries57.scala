@@ -269,30 +269,8 @@ object PipelineQueries57 {
              round(((n + CAST(1.0 AS DOUBLE)) * g2 + 6) * (n - 1)
                / ((n - 2) * (CAST(n AS DOUBLE) - 3)), 6) AS kurt_g2_adj
       FROM g ORDER BY source""")) { (s, dir) =>
-      // Per-row DECIMAL(9,0) BEFORE forming powers (r17 ADVICE #4: the old
-      // BIGINT x*x*x*x silently wraps past ~55k chars under non-ANSI Spark
-      // where DuckDB errors). (9,0)^4 = DECIMAL(36,0) stays bind-legal in
-      // DuckDB (products past 38 digits are a bind error there) and exact
-      // in both engines for any n_chars <= 1e9.
-      val x = col("n_chars").cast("decimal(9,0)")
-      val st = Tables.dfSpread(s, dir, "documents").groupBy(col("source")).agg(
-        count(lit(1)).cast("bigint").as("n"),
-        sum(x).cast("decimal(38,0)").as("s1"),
-        sum(x * x).cast("decimal(38,0)").as("s2"),
-        sum(x * x * x).cast("decimal(38,0)").as("s3"),
-        sum(x * x * x * x).cast("decimal(38,0)").as("s4"))
-      val m = st.select(col("source"), col("n"),
-        (col("s1").cast("double") / col("n")).as("m1"),
-        (col("s2").cast("double") / col("n")).as("r2"),
-        (col("s3").cast("double") / col("n")).as("r3"),
-        (col("s4").cast("double") / col("n")).as("r4"))
-      val c = m.select(col("source"), col("n"), col("m1"),
-        (col("r2") - col("m1") * col("m1")).as("m2"),
-        (col("r3") - lit(3.0) * col("m1") * col("r2")
-          + lit(2.0) * col("m1") * col("m1") * col("m1")).as("m3"),
-        (col("r4") - lit(4.0) * col("m1") * col("r3")
-          + lit(6.0) * col("m1") * col("m1") * col("r2")
-          - lit(3.0) * col("m1") * col("m1") * col("m1") * col("m1")).as("m4"))
+      val c = Kit.centralMoments(Kit.powerSums(Tables.dfSpread(s, dir, "documents"),
+        Seq("source"), col("n_chars"), 4))
       val g = c.select(col("source"), col("n"), col("m2"),
         (col("m3") / sqrt(col("m2") * col("m2") * col("m2"))).as("g1"),
         (col("m4") / (col("m2") * col("m2")) - 3).as("g2"))

@@ -71,9 +71,6 @@ import graft.{QueryDef, Tables}
   */
 object PipelineQueries59 {
 
-  private val WordRe = "[a-z0-9]+"
-  private val StopRe = "\\b(the|and|of|to|in|a|is|for|on|with)\\b"
-
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Krippendorff's alpha (p247)
@@ -96,10 +93,7 @@ object PipelineQueries59 {
                / (CAST(2 * u - n1 AS DOUBLE) * n1), 6) AS alpha
       FROM c""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(when(col("n_chars") >= 400, 1).otherwise(0).as("la"),
-          when(lit(20) * regexp_count(lower(col("text")), lit(StopRe))
-            >= regexp_count(lower(col("text")), lit(WordRe)), 1)
-            .otherwise(0).as("lb"))
+        .select(Kit.annotatorLabels: _*)
       val c = t.agg(count(lit(1)).cast("bigint").as("u"),
         sum(when(col("la") =!= col("lb"), 1).otherwise(0)).cast("bigint").as("dis"),
         sum(col("la") + col("lb")).cast("bigint").as("n1"))
@@ -306,16 +300,8 @@ object PipelineQueries59 {
           size(filter(col("tks"), t => t =!= "")).cast("long").as("dl"))
         .filter(col("dl") > 0)
       val avgdl = dlnc.agg((sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      val tc = docsTok
-        .select(col("doc_id"), explode(col("tks")).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("c"))
-      // distributed top-k (TakeOrderedAndProject), never a global window —
-      // the p216 probe-selection pattern, verbatim
-      val probes = tc.filter(length(col("tok")) >= 4)
-        .groupBy(col("tok")).agg(sum(col("c")).as("c"))
-        .orderBy(col("c").desc, col("tok")).limit(6)
-        .select(col("tok").as("term"))
+      val tc = Kit.termCounts(docsTok)
+      val probes = Kit.probeTerms(tc)
       val tf = tc.join(broadcast(probes), col("tok") === col("term"))
         .select(col("term"), col("doc_id"), col("c").as("tf"))
       val scored = tf.join(dlnc, "doc_id")
@@ -435,10 +421,7 @@ object PipelineQueries59 {
                AS mcc
       FROM c""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(when(col("n_chars") >= 400, 1).otherwise(0).as("la"),
-          when(lit(20) * regexp_count(lower(col("text")), lit(StopRe))
-            >= regexp_count(lower(col("text")), lit(WordRe)), 1)
-            .otherwise(0).as("lb"))
+        .select(Kit.annotatorLabels: _*)
       val c = t.agg(
         sum(col("la") * col("lb")).cast("bigint").as("tp"),
         sum(col("la") * (lit(1) - col("lb"))).cast("bigint").as("fn"),

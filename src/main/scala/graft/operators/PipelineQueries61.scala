@@ -175,26 +175,8 @@ object PipelineQueries61 {
       SELECT n AS n_docs, round(z1, 6) AS skew_z1, round(z2, 6) AS kurt_z2,
              round(z1 * z1 + z2 * z2, 6) AS k2_stat
       FROM ku3""")) { (s, dir) =>
-      // per-row DECIMAL(9,0) before forming powers — the p239 pattern
-      val x = col("n_chars").cast("decimal(9,0)")
-      val st = Tables.dfSpread(s, dir, "documents").agg(
-        count(lit(1)).cast("bigint").as("n"),
-        sum(x).cast("decimal(38,0)").as("s1"),
-        sum(x * x).cast("decimal(38,0)").as("s2"),
-        sum(x * x * x).cast("decimal(38,0)").as("s3"),
-        sum(x * x * x * x).cast("decimal(38,0)").as("s4"))
-      val m = st.select(col("n"),
-        (col("s1").cast("double") / col("n")).as("m1"),
-        (col("s2").cast("double") / col("n")).as("r2"),
-        (col("s3").cast("double") / col("n")).as("r3"),
-        (col("s4").cast("double") / col("n")).as("r4"))
-      val c = m.select(col("n"), col("m1"),
-        (col("r2") - col("m1") * col("m1")).as("m2"),
-        (col("r3") - lit(3.0) * col("m1") * col("r2")
-          + lit(2.0) * col("m1") * col("m1") * col("m1")).as("m3"),
-        (col("r4") - lit(4.0) * col("m1") * col("r3")
-          + lit(6.0) * col("m1") * col("m1") * col("r2")
-          - lit(3.0) * col("m1") * col("m1") * col("m1") * col("m1")).as("m4"))
+      val c = Kit.centralMoments(Kit.powerSums(Tables.dfSpread(s, dir, "documents"),
+        Seq(), col("n_chars"), 4))
       val g = c.select(col("n"),
         (col("m3") / sqrt(col("m2") * col("m2") * col("m2"))).as("g1"),
         (col("m4") / (col("m2") * col("m2"))).as("b2"))

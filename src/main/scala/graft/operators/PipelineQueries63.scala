@@ -243,11 +243,7 @@ object PipelineQueries63 {
              round((po - pek) / (1 - pek), 6) AS kappa_overall
       FROM e""")) { (s, dir) =>
       val t = Tables.dfSpread(s, dir, "documents")
-        .select(when(col("n_chars") >= 400, 1).otherwise(0).as("la"),
-          when(lit(20) * regexp_count(lower(col("text")),
-            lit("\\b(the|and|of|to|in|a|is|for|on|with)\\b"))
-            >= regexp_count(lower(col("text")), lit("[a-z0-9]+")), 1)
-            .otherwise(0).as("lb"))
+        .select(Kit.annotatorLabels: _*)
       val c = t.agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("la") * col("lb")).cast("bigint").as("a"),
         sum(col("la") * (lit(1) - col("lb"))).cast("bigint").as("b"),

@@ -121,25 +121,11 @@ object PipelineQueries64 {
              round((lr.o1 - lr.e1) * (lr.o1 - lr.e1) / nullif(lr.v, 0), 6)
                AS logrank_chi2
       FROM lr, nn""")) { (s, dir) =>
-      val ev0 = Tables.df(s, dir, "events")
-      val u = ev0.groupBy(col("user_id"))
-        .agg(min(when(col("event_type") === "signup", col("ts"))).as("signup"),
-          max(col("ts")).as("last_seen"))
-      val pu = ev0.join(u.select(col("user_id").as("uid"), col("signup")),
-          col("user_id") === col("uid"))
-        .filter(col("event_type") === "purchase" && col("ts") >= col("signup"))
-        .groupBy(col("user_id").as("puid")).agg(min(col("ts")).as("purchase"))
-      val subj = u.filter(col("signup").isNotNull)
-        .join(pu, col("user_id") === col("puid"), "left")
+      val subj = Kit.survivalSubjects(Tables.df(s, dir, "events"))
         .select(
           when(dayofmonth(col("signup").cast("date")) === 1, 1).otherwise(0)
             .as("grp"),
-          when(col("purchase").isNotNull, 1).otherwise(0).as("event"),
-          when(col("purchase").isNotNull,
-            datediff(col("purchase").cast("date"), col("signup").cast("date")))
-            .otherwise(
-              datediff(col("last_seen").cast("date"), col("signup").cast("date")))
-            .as("t_day"))
+          col("event"), col("t_day"))
       val gt = subj.groupBy(col("t_day"), col("grp"))
         .agg(count(lit(1)).cast("bigint").as("c"),
           sum(col("event")).cast("bigint").as("d"))
@@ -227,41 +213,17 @@ object PipelineQueries64 {
                / sqrt(CAST(n1 AS DOUBLE) * (n - n1) / (CAST(n AS DOUBLE) * (n - 1))
                  * (n * ssq - ssum * ssum) / n), 6) AS z_stat
       FROM st""")) { (s, dir) =>
-      val g = Tables.dfSpread(s, dir, "documents")
+      val (nn, w) = Kit.twoGroupFrame(Tables.dfSpread(s, dir, "documents")
         .select((col("lang") === "en").cast("int").as("grp"),
-          col("n_chars").as("v"))
-      val nn = g.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("grp")).cast("bigint").as("n1"))
-      val vc = g.groupBy(col("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"),
-          sum(col("grp")).cast("bigint").as("c1"))
-      val wv = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w = vc.select(col("v"), col("c"), col("c1"),
-        sum(col("c")).over(wv).cast("bigint").as("f"))
-      val sc = w.crossJoin(broadcast(nn))
-        .select(col("v"), col("c"), col("c1"), col("f"),
-          (col("f") - col("c")).as("f0"), col("n"), col("n1"),
-          floor((col("n") + 1) / 2).cast("bigint").as("h"))
-      def twoG(x: org.apache.spark.sql.Column) =
-        when(x <= col("h"), x * (x + 1))
-          .otherwise(col("h") * (col("h") + 1)
-            + (x - col("h")) * (lit(2) * (col("n") + 1) - (x + col("h") + 1)))
-      val sc2 = sc.select(col("v"), col("c"), col("c1"), col("n"), col("n1"),
-        (twoG(col("f")) - twoG(col("f0"))).as("two_block"))
-      val st = sc2.groupBy(col("n"), col("n1")).agg(
-        sum(col("c1").cast("double") * col("two_block") / (lit(2) * col("c")))
-          .cast("double").as("w_ab"),
-        sum(col("two_block").cast("double") / 2).cast("double").as("ssum"),
-        Kit.rsum((col("two_block").cast("double") / (lit(2) * col("c")))
-          * (col("two_block").cast("double") / (lit(2) * col("c"))) * col("c"), 9).as("ssq"))
-      st.select(col("n1").as("n_en"), (col("n") - col("n1")).as("n_other"),
-        round(col("w_ab"), 6).as("ab_w"),
-        round((col("w_ab") - col("n1").cast("double") * col("ssum") / col("n"))
-          / sqrt(col("n1").cast("double") * (col("n") - col("n1"))
-            / (col("n").cast("double") * (col("n") - 1))
-            * (col("n") * col("ssq") - col("ssum") * col("ssum")) / col("n")),
-          6).as("z_stat"))
+          col("n_chars").as("v")))
+      Kit.ansariBradley(nn, w)
+        .select(col("n1").as("n_en"), (col("n") - col("n1")).as("n_other"),
+          round(col("w_ab"), 6).as("ab_w"),
+          round((col("w_ab") - col("n1").cast("double") * col("ssum") / col("n"))
+            / sqrt(col("n1").cast("double") * (col("n") - col("n1"))
+              / (col("n").cast("double") * (col("n") - 1))
+              * (col("n") * col("ssq") - col("ssum") * col("ssum")) / col("n")),
+            6).as("z_stat"))
     },
 
     // --------------------- CUSUM of squares variance changepoint (p279)

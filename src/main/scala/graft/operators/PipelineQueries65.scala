@@ -81,21 +81,18 @@ object PipelineQueries65 {
                * (CAST(1.0 AS DOUBLE) / na + CAST(1.0 AS DOUBLE) / nb)), 6)
                AS q_stat
       FROM pairs, msw ORDER BY src_a, src_b""")) { (s, dir) =>
-      val x = col("n_chars").cast("decimal(9,0)")
-      val g = Tables.dfSpread(s, dir, "documents").groupBy(col("source"))
-        .agg(count(lit(1)).cast("bigint").as("n_s"),
-          sum(x).cast("decimal(38,0)").as("s1"),
-          sum(x * x).cast("decimal(38,0)").as("s2"))
+      val g = Kit.powerSums(Tables.dfSpread(s, dir, "documents"), Seq("source"),
+        col("n_chars"), 2)
       val msw = g.agg((Kit.rsum(col("s2").cast("double")
-        - col("s1").cast("double") * col("s1").cast("double") / col("n_s"), 6)
-        / (sum(col("n_s")) - count(lit(1)))).as("msw"))
-      val b = g.select(col("source").as("src_b"), col("n_s").as("nb"),
+        - col("s1").cast("double") * col("s1").cast("double") / col("n"), 6)
+        / (sum(col("n")) - count(lit(1)))).as("msw"))
+      val b = g.select(col("source").as("src_b"), col("n").as("nb"),
         col("s1").as("bs1"))
       val pairs = g.join(b, col("source") < col("src_b"))
         .select(col("source").as("src_a"), col("src_b"),
-          (col("s1").cast("double") / col("n_s")
+          (col("s1").cast("double") / col("n")
             - col("bs1").cast("double") / col("nb")).as("diff"),
-          col("n_s").as("na"), col("nb"))
+          col("n").as("na"), col("nb"))
       pairs.crossJoin(broadcast(msw))
         .select(col("src_a"), col("src_b"), round(col("diff"), 6).as("mean_diff"),
           round(abs(col("diff")) / sqrt(col("msw") / 2
@@ -143,25 +140,9 @@ object PipelineQueries65 {
                * (CAST(1.0 AS DOUBLE) / na + CAST(1.0 AS DOUBLE) / nb)), 6)
                AS z_dunn
       FROM pairs, base ORDER BY src_a, src_b""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vc = docs.groupBy(col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val wv = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val r = vc.select(col("v"), col("c"),
-        (coalesce(sum(col("c")).over(wv), lit(0)) + (col("c") + 1) / 2.0)
-          .as("rv"))
-      val sc = docs.groupBy(col("source"), col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c_s"))
-      val gs = sc.join(r.select(col("v").as("rv_v"), col("rv")),
-          col("v") === col("rv_v"))
-        .groupBy(col("source"))
-        .agg(sum(col("c_s")).cast("bigint").as("n_s"),
-          sum(col("c_s") * col("rv").cast("decimal(19,1)"))
-            .cast("decimal(38,1)").as("rsum"))
+      val (gs, tie) = Kit.rankSums(Tables.dfSpread(s, dir, "documents"), "source",
+        col("n_chars"))
       val nn = gs.agg(sum(col("n_s")).cast("bigint").as("n"))
-      val tie = vc.filter(col("c") > 1)
-        .agg(coalesce(Kit.dsum(col("c") * col("c") * col("c") - col("c"), 0), lit(0.0)).as("tsum"))
       val base = nn.crossJoin(tie)
         .select((col("n").cast("double") * (col("n") + 1) / 12
           - col("tsum") / (lit(12.0) * (col("n") - 1))).as("s2"))
@@ -205,7 +186,7 @@ object PipelineQueries65 {
       FROM g ORDER BY source""")) { (s, dir) =>
       val d = Tables.dfSpread(s, dir, "documents")
         .select(col("source"),
-          regexp_count(lower(col("text")), lit("[a-z0-9]+")).as("w"),
+          regexp_count(lower(col("text")), lit(Kit.WordRe)).as("w"),
           greatest(regexp_count(col("text"), lit("[.!?]+")), lit(1)).as("sen"),
           regexp_count(lower(col("text")), lit("[aeiouy]+")).as("syl"))
       val g = d.groupBy(col("source"))
@@ -263,22 +244,7 @@ object PipelineQueries65 {
       SELECT t_day, n_r AS n_at_risk, d AS d_events,
              round(h, 6) AS na_cumhaz, round(v, 6) AS na_var
       FROM na WHERE d > 0 ORDER BY t_day""")) { (s, dir) =>
-      val ev0 = Tables.df(s, dir, "events")
-      val u = ev0.groupBy(col("user_id"))
-        .agg(min(when(col("event_type") === "signup", col("ts"))).as("signup"),
-          max(col("ts")).as("last_seen"))
-      val pu = ev0.join(u.select(col("user_id").as("uid"), col("signup")),
-          col("user_id") === col("uid"))
-        .filter(col("event_type") === "purchase" && col("ts") >= col("signup"))
-        .groupBy(col("user_id").as("puid")).agg(min(col("ts")).as("purchase"))
-      val subj = u.filter(col("signup").isNotNull)
-        .join(pu, col("user_id") === col("puid"), "left")
-        .select(when(col("purchase").isNotNull, 1).otherwise(0).as("event"),
-          when(col("purchase").isNotNull,
-            datediff(col("purchase").cast("date"), col("signup").cast("date")))
-            .otherwise(
-              datediff(col("last_seen").cast("date"), col("signup").cast("date")))
-            .as("t_day"))
+      val subj = Kit.survivalSubjects(Tables.df(s, dir, "events"))
       val byT = subj.groupBy(col("t_day"))
         .agg(sum(col("event")).cast("bigint").as("d"),
           count(lit(1)).as("cnt"))
@@ -359,18 +325,9 @@ object PipelineQueries65 {
              round(zw.zw, 6) AS z_wilcoxon, round(zab.zab, 6) AS z_ansari,
              round(zw.zw * zw.zw + zab.zab * zab.zab, 6) AS lepage_l
       FROM zw, zab, nn""")) { (s, dir) =>
-      val g = Tables.dfSpread(s, dir, "documents")
+      val (nn, w) = Kit.twoGroupFrame(Tables.dfSpread(s, dir, "documents")
         .select((col("lang") === "en").cast("int").as("grp"),
-          col("n_chars").as("v"))
-      val nn = g.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("grp")).cast("bigint").as("n1"))
-      val vc = g.groupBy(col("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"),
-          sum(col("grp")).cast("bigint").as("c1"))
-      val wv = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w = vc.select(col("v"), col("c"), col("c1"),
-        sum(col("c")).over(wv).cast("bigint").as("f"))
+          col("n_chars").as("v")))
       val wil = w.agg(
         sum(col("c1") * (lit(2) * col("f") - col("c") + 1))
           .cast("bigint").as("w2"),
@@ -381,23 +338,7 @@ object PipelineQueries65 {
           / sqrt(col("n1").cast("double") * (col("n") - col("n1")) / 12
             * ((col("n") + 1) - col("tsum")
               / (col("n").cast("double") * (col("n") - 1))))).as("zw"))
-      val sc = w.crossJoin(broadcast(nn))
-        .select(col("v"), col("c"), col("c1"), col("f"),
-          (col("f") - col("c")).as("f0"), col("n"), col("n1"),
-          floor((col("n") + 1) / 2).cast("bigint").as("h"))
-      def twoG(x: org.apache.spark.sql.Column) =
-        when(x <= col("h"), x * (x + 1))
-          .otherwise(col("h") * (col("h") + 1)
-            + (x - col("h")) * (lit(2) * (col("n") + 1) - (x + col("h") + 1)))
-      val sc2 = sc.select(col("v"), col("c"), col("c1"), col("n"), col("n1"),
-        (twoG(col("f")) - twoG(col("f0"))).as("two_block"))
-      val ab = sc2.groupBy(col("n"), col("n1")).agg(
-        sum(col("c1").cast("double") * col("two_block") / (lit(2) * col("c")))
-          .cast("double").as("w_ab"),
-        sum(col("two_block").cast("double") / 2).cast("double").as("ssum"),
-        Kit.rsum((col("two_block").cast("double") / (lit(2) * col("c")))
-          * (col("two_block").cast("double") / (lit(2) * col("c"))) * col("c"), 9).as("ssq"))
-      val zab = ab.select(((col("w_ab")
+      val zab = Kit.ansariBradley(nn, w).select(((col("w_ab")
         - col("n1").cast("double") * col("ssum") / col("n"))
         / sqrt(col("n1").cast("double") * (col("n") - col("n1"))
           / (col("n").cast("double") * (col("n") - 1))

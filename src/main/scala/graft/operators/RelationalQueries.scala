@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
-import Kit.{dec, dsum, fsum, ts}
+import Kit.{fsum, ts}
 
 /** Relational operator coverage — one query per physical operator in the
   * reference's inventory (SURVEY.md §2.1/§2.2) plus the expression/function

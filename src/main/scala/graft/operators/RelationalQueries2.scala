@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
-import Kit.{dec, dsum, fsum, ts}
+import Kit.{dsum, fsum, ts}
 
 /** Coverage batch 2 — the remaining SURVEY.md §2 surface: extra aggregate
   * functions (§2.2), cast/try-cast matrix, the rest of the string/hash/datetime

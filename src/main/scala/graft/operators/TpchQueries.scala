@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import Kit.{dec, dsum, fsum, ts}
+import Kit.{fsum, ts}
 
 /** Remaining TPC-H-shaped workloads (Q2/Q4/Q7/Q8/Q11/Q15/Q17/Q20/Q21/Q22
   * adapted to the driver testdata schema — no l_commitdate/l_receiptdate/

@@ -15,7 +15,11 @@ import scala.jdk.CollectionConverters._
   * double aggregates with are spelled in `Kit.scala` alone, so the one
   * decision that keeps results hash-equal to the oracle is made once. So
   * are the per-day event series frames and the embedding centroid and
-  * k-means frames, the English stop-word ratio and the md5 hex fraction.
+  * k-means frames, the English stop-word ratio and the md5 hex fraction,
+  * and the rank and moment statistics: midranks, the Ansari–Bradley block,
+  * the DECIMAL(38,0) power sums, the survival subjects, the click/view value
+  * frame and the annotator screens (the exact top-k truth frame lives in
+  * `IvfIndex`).
   */
 class KitGuardSpec extends AnyFunSuite {
 
@@ -88,5 +92,29 @@ class KitGuardSpec extends AnyFunSuite {
       "use Kit.dayCounts / dayTypeGrid / dayIndex / lagPairs / centroids / " +
         "sphericalKMeans / enRatio / hexFrac instead of a local spelling: " +
         spelled.mkString(", "))
+  }
+
+  test("rank, moment, survival, screen and truth frames are spelled only in Kit") {
+    // whitespace removed and triple-quoted oracle SQL blanked, as above
+    val spellings = Seq(
+      "defmidranks",
+      """+(col("c")+1)/2.0""",
+      """sum(x*x).cast("decimal(38,0)")""",
+      "deftwoG",
+      """max(col("ts")).as("last_seen")""",
+      "valbyV=",
+      "privatevalStopRe=",
+      "privatevalWordRe=",
+      "valtruth=broadcast(q)")
+    val spelled = sources.filterNot(_.getFileName.toString == "Kit.scala").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+        .replaceAll("(?s)\"\"\".*?\"\"\"", "\"\"")
+        .replaceAll("\\s+", "")
+      spellings.filter(text.contains(_)).map(m => s"${root.relativize(p)}: $m")
+    }
+    assert(spelled.isEmpty,
+      "use Kit.midranks / rankSums / twoGroupFrame / ansariBradley / powerSums / " +
+        "survivalSubjects / clickViewCounts / annotatorLabels or IvfIndex.exactTopK " +
+        "instead of a local spelling: " + spelled.mkString(", "))
   }
 }

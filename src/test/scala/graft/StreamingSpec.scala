@@ -26,23 +26,30 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming windowed agg matches batch computation") {
-    val stream = EventStreams.readEventStream(spark, eventsDir)
-    runToMemory(EventStreams.windowedAgg(stream), "win_agg")
-    val streamed = spark.table("win_agg")
-      .orderBy(col("window_start"), col("event_type"))
-      .collect()
+    // the tumbling and the sliding (1h window, 15m slide) aggregation, each
+    // against its batch twin
+    Seq(
+      ("win_agg", EventStreams.windowedAgg _, window(col("ts"), "1 hour")),
+      ("slide_agg", EventStreams.slidingAgg _, window(col("ts"), "1 hour", "15 minutes"))
+    ).foreach { case (name, agg, win) =>
+      val stream = EventStreams.readEventStream(spark, eventsDir)
+      runToMemory(agg(stream), name)
+      val streamed = spark.table(name)
+        .orderBy(col("window_start"), col("event_type"))
+        .collect()
 
-    val batch = Tables.df(spark, SharedSpark.sf, "events")
-      .withColumn("ts", col("ts").cast("timestamp")) // match the stream's ltz type
-      .groupBy(window(col("ts"), "1 hour").getField("start").as("window_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .orderBy(col("window_start"), col("event_type"))
-      .collect()
+      val batch = Tables.df(spark, SharedSpark.sf, "events")
+        .withColumn("ts", col("ts").cast("timestamp")) // match the stream's ltz type
+        .groupBy(win.getField("start").as("window_start"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("window_start"), col("event_type"))
+        .collect()
 
-    assert(streamed.length == batch.length)
-    streamed.zip(batch).foreach { case (s, b) =>
-      assert(s.get(0) == b.get(0) && s.get(1) == b.get(1) && s.getLong(2) == b.getLong(2))
+      assert(streamed.nonEmpty && streamed.length == batch.length, name)
+      streamed.zip(batch).foreach { case (s, b) =>
+        assert(s.get(0) == b.get(0) && s.get(1) == b.get(1) && s.getLong(2) == b.getLong(2),
+          s"$name: $s vs $b")
+      }
     }
   }
 
