@@ -8,10 +8,18 @@ import graft.{Functions, Tables}
 /** The shared operator kit: one home for each building block the query
   * batches combine, so a decision that must match the oracle is made once.
   *
-  *  - text: the tokenizer, the distinct shingle set, the MinHash signature,
-  *    its LSH bands and the bucket-pair emission, the df-capped rare-shingle
-  *    frame and the shared-shingle overlap counts of the near-dup family,
-  *    the English stop-word ratio and the md5 hex fraction;
+  *  - text: the tokenizer, the distinct shingle set, the MinHash signature
+  *    and its LSH bands, the df-capped rare-shingle frame of the near-dup
+  *    family, the English stop-word ratio and the md5 hex fraction;
+  *  - pairs: the set-similarity family — set sizes, the shared-shingle
+  *    counts and the Jaccard pair frame with its ratio column (p04, p17,
+  *    p80, p105; the ratio also in p50, p55, p74, p77, p84, p157, p191 and,
+  *    weighted, p160/p192), the candidate join-back overlap (p74, p84), the
+  *    rare-shingle idf shared by the p160/p192 twins, the prefix-filter
+  *    candidate frame (p191, p192), the row-local pair emission of a
+  *    bucket or cell (p02 family, p77, p23) and the exchange width of the
+  *    pair stages: the hash pin (p55, p77, p80, p160) and the round-robin
+  *    spread (p23, p191, p192);
   *  - exact sums: the DECIMAL(38,s) and fixed-point BIGINT folds every
   *    batch sums its double aggregates with, one helper per oracle spelling;
   *  - series: the per-day event count frame of the `events` time-series
@@ -23,8 +31,9 @@ import graft.{Functions, Tables}
   *  - stats: the rank and moment statistics — midranks over the
   *    distinct-value frame and the per-group rank sums with their tie term
   *    (p141, p223, p284), the two-group cumulative frame and the
-  *    Ansari–Bradley sums (p278, p287), the exact DECIMAL(38,0) power sums
-  *    and central moments (p239, p260, p283), the survival subjects (p188,
+  *    Ansari–Bradley sums and z (p278, p287), the exact DECIMAL(38,0) power
+  *    sums (p239, p241, p260, p283) and central moments (p239, p260), the
+  *    source-pair mean differences (p283, p284), the survival subjects (p188,
   *    p277, p286), the click/view value frame (p155, p162), the annotator
   *    screens (p124, p247, p252, p274) and the BM25 probe terms (p216,
   *    p250), each quoting the oracle CTE it mirrors.
@@ -73,21 +82,6 @@ object Kit {
         .as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
-  /** (doc_id, band, bucket) → distinct candidate pairs (doc_a < doc_b).
-    * Pair emission without a self-join: a band self-join recomputes the
-    * signature lineage once per side (at 100 TB that doubles the dominant
-    * map stage). Grouping on (band, bucket) shuffles once and emits i<j
-    * pairs row-locally; per-bucket lists are bounded by near-dup cluster
-    * size, and a hot bucket costs |bucket|^2 either way. */
-  def bucketPairs(bands: DataFrame): DataFrame =
-    bands.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("doc_a"), col("ids"))
-      .select(col("doc_a"),
-        explode(filter(col("ids"), x => x > col("doc_a"))).as("doc_b"))
-      .distinct()
-
   /** The p02 LSH candidate pairs (3-shingles → 8 minhashes → 4 bands of 2):
     * its result, and the edge source of the component/audit queries. */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
@@ -113,14 +107,6 @@ object Kit {
     sh.join(rare, "shingle")
       .select(col("doc_id"), col("shingle"), col("n_docs"), col("corpus_n"))
   }
-
-  /** (doc_id, shingle) rows → (doc_a, doc_b, i): shingles shared by each
-    * doc pair (doc_a < doc_b) that shares at least one. */
-  def sharedCounts(rows: DataFrame): DataFrame =
-    rows.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(rows.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
-      .where(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
 
   /** The fixed English stop-word probe of the p132-p142 statistics. */
   private val EnStops = Seq("the", "of", "and", "to", "a", "in", "is", "it",
@@ -152,6 +138,106 @@ object Kit {
     (1 to 13).foldRight("0.0") { (i, acc) =>
       s"((CAST(instr('0123456789abcdef', substr($col, $i, 1)) AS DOUBLE) - 1.0 + $acc) / 16.0)"
     }
+
+  // ----------------------------------------------------------------- pairs
+  //
+  // The set-similarity family: exact, weighted and estimated Jaccard over
+  // doc pairs, each frame mirroring one CTE of their oracle SQL. Pairs are
+  // emitted once (doc_a < doc_b) and carry only ids and counts until the
+  // verify step.
+
+  /** (doc_id, shingle) rows → (doc_id, n): `sizes AS (SELECT doc_id,
+    * count(*) AS n FROM sh GROUP BY doc_id)`. */
+  def setSizes(rows: DataFrame): DataFrame =
+    rows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+
+  /** (doc_id, shingle) rows → (doc_a, doc_b, i): shingles shared by each
+    * doc pair (doc_a < doc_b) that shares at least one — `inter AS (SELECT
+    * a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i FROM sh a JOIN sh b
+    * ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2)`. */
+  def sharedCounts(rows: DataFrame): DataFrame =
+    rows.select(col("doc_id").as("doc_a"), col("shingle"))
+      .join(rows.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
+      .where(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+
+  /** (doc_a, doc_b, …) pairs + [[setSizes]] → the pairs with both set
+    * sizes na, nb — `JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON
+    * sb.doc_id = doc_b`. */
+  def sizeJoin(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs.join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+
+  /** (doc_id, shingle) rows → (doc_b, doc_a, i, na, nb): [[sharedCounts]]
+    * with both set sizes — the oracle's `sizes` and `inter` CTEs and their
+    * two size joins. */
+  def jaccardPairs(rows: DataFrame): DataFrame =
+    sizeJoin(sharedCounts(rows), setSizes(rows))
+
+  /** `CAST(i AS DOUBLE) / (na + nb - i)`. The weighted spelling passes the
+    * shared and per-doc masses already cast to DOUBLE. */
+  def jaccard(i: Column, na: Column, nb: Column): Column =
+    i.cast("double") / (na + nb - i)
+
+  /** (doc_a, doc_b) candidate pairs + (doc_id, shingle) rows → (doc_a,
+    * doc_b, i): the shingles each candidate pair shares, counted on the
+    * candidates only — `SELECT p.doc_a, p.doc_b, count(*) AS i FROM pairs p
+    * JOIN sh a ON a.doc_id = p.doc_a JOIN sh b ON b.doc_id = p.doc_b AND
+    * b.shingle = a.shingle GROUP BY p.doc_a, p.doc_b`. A pair sharing no
+    * shingle has no row. */
+  def pairOverlap(pairs: DataFrame, rows: DataFrame): DataFrame =
+    pairs
+      .join(rows.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
+      .join(rows.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+
+  /** The idf of a [[rareShingles]] row — `CAST(round(ln(CAST(corpus_n AS
+    * DOUBLE) / n_docs), 9) AS DECIMAL(38,9))`; p160 and its twin p192 both
+    * read it, so their byte-identical results share one spelling. */
+  val rareIdf: Column = rdec(log(col("corpus_n").cast("double") / col("n_docs")), 9)
+
+  /** (doc_id, shingle, length…) prefix rows → distinct (doc_a, doc_b)
+    * candidates, spread — `cand AS (SELECT DISTINCT a.doc_id AS doc_a,
+    * b.doc_id AS doc_b FROM pref a JOIN pref b ON a.shingle = b.shingle AND
+    * a.doc_id < b.doc_id)` plus the caller's PPJoin length filter
+    * `lengthOk`, written over the aliases `pa` and `pb`. */
+  def prefixCandidates(pref: DataFrame, lengthOk: Column): DataFrame =
+    spread(pref.alias("pa").join(pref.alias("pb"),
+        col("pa.shingle") === col("pb.shingle")
+          && col("pa.doc_id") < col("pb.doc_id") && lengthOk)
+      .select(col("pa.doc_id").as("doc_a"), col("pb.doc_id").as("doc_b"))
+      .distinct())
+
+  /** rows → distinct id pairs (a < b) of the rows sharing the `keys` cell
+    * (by default the LSH (band, bucket) → (doc_a, doc_b)). Pair emission
+    * without a self-join: a cell self-join recomputes the lineage once per
+    * side (at 100 TB that doubles the dominant map stage). Grouping on the
+    * cell shuffles once and emits i<j pairs row-locally; per-cell lists are
+    * bounded by near-dup cluster size, and a hot cell costs |cell|^2 either
+    * way. */
+  def bucketPairs(rows: DataFrame, keys: Seq[String] = Seq("band", "bucket"),
+      id: String = "doc_id", a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col(id))).as("ids"))
+      .where(size(col("ids")) > 1)
+      .select(explode(col("ids")).as(a), col("ids"))
+      .select(col(a), explode(filter(col("ids"), x => x > col(a))).as(b))
+      .distinct()
+
+  // The exchange width of the pair stages. Both read the session's
+  // parallelism at plan time, not a literal.
+
+  /** Hash-repartitions `df` on `keys` to the session parallelism: a
+    * byte-tiny key exchange under a pair fan-out is otherwise coalesced by
+    * AQE onto 1-2 cores. The pin also turns off AQE skew-splitting there,
+    * so it sits only on a guarded truth tier (`BoundedWindowSpec`). */
+  def pin(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys.map(col): _*)
+
+  /** Round-robin spreads a slim pair frame over the session parallelism
+    * before a verify stage that fans each pair out into two wide rows. */
+  def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   // ------------------------------------------------------------ exact sums
   //
@@ -388,10 +474,13 @@ object Kit {
     (nn, w)
   }
 
-  /** [[twoGroupFrame]]'s (nn, w) → one row (n, n1, w_ab, ssum, ssq): the
-    * Ansari–Bradley sums over the closed-form block scores — the oracle's
-    * `sc`, `sc2` and `st` CTEs. twoG(x) = Σ_{i≤x} 2·min(i, N+1−i) folds at
-    * h = (N+1) // 2; a tie block (f0, f] takes the mean of its scores. */
+  /** [[twoGroupFrame]]'s (nn, w) → one row (n, n1, w_ab, ssum, ssq, z_ab):
+    * the Ansari–Bradley sums over the closed-form block scores — the
+    * oracle's `sc`, `sc2` and `st` CTEs. twoG(x) = Σ_{i≤x} 2·min(i, N+1−i)
+    * folds at h = (N+1) // 2; a tie block (f0, f] takes the mean of its
+    * scores. z_ab is the tie-corrected z statistic `(w_ab - CAST(n1 AS
+    * DOUBLE) * ssum / n) / sqrt(CAST(n1 AS DOUBLE) * (n - n1) / (CAST(n AS
+    * DOUBLE) * (n - 1)) * (n * ssq - ssum * ssum) / n)`. */
   def ansariBradley(nn: DataFrame, w: DataFrame): DataFrame = {
     val sc = w.crossJoin(broadcast(nn))
       .select(col("v"), col("c"), col("c1"), col("f"),
@@ -409,6 +498,10 @@ object Kit {
         .cast("double").as("w_ab"),
       sum(col("two_block").cast("double") / 2).cast("double").as("ssum"),
       rsum(score * score * col("c"), 9).as("ssq"))
+      .withColumn("z_ab", (col("w_ab") - col("n1").cast("double") * col("ssum") / col("n"))
+        / sqrt(col("n1").cast("double") * (col("n") - col("n1"))
+          / (col("n").cast("double") * (col("n") - 1))
+          * (col("n") * col("ssq") - col("ssum") * col("ssum")) / col("n")))
   }
 
   /** rows → (keys…, n, s1..sk): exact integer power sums per key —
@@ -421,6 +514,20 @@ object Kit {
     val d = x.cast("decimal(9,0)")
     rows.groupBy(keys.map(col): _*).agg(count(lit(1)).cast("bigint").as("n"),
       (1 to k).map(i => sum(Seq.fill(i)(d).reduce(_ * _)).cast("decimal(38,0)").as(s"s$i")): _*)
+  }
+
+  /** Per-source (source, n, total) frame → (src_a, src_b, out, na, nb) over
+    * the source pairs a < b, out the difference of the two means —
+    * `SELECT a.source AS src_a, b.source AS src_b, CAST(a.t AS DOUBLE) /
+    * a.n - CAST(b.t AS DOUBLE) / b.n AS out, a.n AS na, b.n AS nb FROM g a
+    * JOIN g b ON a.source < b.source`. */
+  def meanDiffPairs(g: DataFrame, total: String, n: String, out: String): DataFrame = {
+    val b = g.select(col("source").as("src_b"), col(n).as("nb"), col(total).as(s"b$total"))
+    g.join(b, col("source") < col("src_b"))
+      .select(col("source").as("src_a"), col("src_b"),
+        (col(total).cast("double") / col(n)
+          - col(s"b$total").cast("double") / col("nb")).as(out),
+        col(n).as("na"), col("nb"))
   }
 
   /** [[powerSums]] with k = 4 → (keys…, n, m1, m2, m3, m4): the mean and

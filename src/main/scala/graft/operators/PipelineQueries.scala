@@ -121,15 +121,10 @@ object PipelineQueries {
       // Uncapped all-pairs TRUTH TIER: quadratic on purpose (exact
       // verification baseline). Bounded by contract like p17/p160 — past
       // the bound the prefix-filtered family (p191) is the scale plan.
-      val sh = Kit.shingleRows(TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
-        "p04_dedup_jaccard", "p191_jaccard_prefix_filter", TruthTier.documentsBound))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = Kit.sharedCounts(sh)
-      val jac = col("i").cast("double") /
-        (col("sa.n") + col("sb.n") - col("i"))
-      inter
-        .join(sizes.alias("sa"), col("sa.doc_id") === col("doc_a"))
-        .join(sizes.alias("sb"), col("sb.doc_id") === col("doc_b"))
+      val sh = Kit.shingleRows(TruthTier.guard(s, dir, "documents",
+        "p04_dedup_jaccard", "p191_jaccard_prefix_filter"))
+      val jac = Kit.jaccard(col("i"), col("na"), col("nb"))
+      Kit.jaccardPairs(sh)
         .filter(jac >= 0.2)
         .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))
@@ -147,9 +142,8 @@ object PipelineQueries {
       // All-pairs TRUTH TIER: exact verification baseline, quadratic on
       // purpose; bounded by contract — the LSH bucket join (p07) is the
       // scale path past the bound.
-      val e = TruthTier.guard(Tables.dfSpread(s, dir, "embeddings"),
-        "p05_dedup_embedding", "p07_similarity_lsh",
-        TruthTier.embeddingsBound)
+      val e = TruthTier.guard(s, dir, "embeddings",
+        "p05_dedup_embedding", "p07_similarity_lsh")
       val a = e.alias("a")
       val b = e.alias("b")
       val cos = Functions.cosineSimilarity(col("a.embedding"), col("b.embedding"))

@@ -110,21 +110,19 @@ object PipelineQueries10 {
       // parameters (~2k docs per band bucket at 500k docs -> ~4e9 pairs;
       // the r17 100x run killed the session). Recall audits at production
       // scale run on a bounded subsample by design.
-      val guarded = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
+      val guarded = TruthTier.guard(s, dir, "documents",
         "p55_dedup_audit", "p191_jaccard_prefix_filter + p151_dedup_pair_eval",
-        TruthTier.documentsBound,
         "the prefix-filtered exact pair set at threshold, evaluated with " +
           "the pair-eval op on a bounded audit sample")
       val sim = guarded
         .select(col("doc_id"), Functions.simhash32(Kit.words(col("text"))).as("h"))
-      val bl = sim.select(col("doc_id"), col("h"),
+      // r19 OPTIMIZATION (guide §2.5): the band-bucket exchange is
+      // byte-tiny, so AQE coalesced the banded self-join + pair fan-out
+      // + distinct stage onto 1-2 of 32 cores; pin it to session
+      // parallelism (both self-join sides reuse the one exchange).
+      val bl = Kit.pin(sim.select(col("doc_id"), col("h"),
         explode(sequence(lit(0), lit(Subs - 1))).as("b"))
-        .withColumn("bv", expr("shiftright(h, b * 8) & 255"))
-        // r19 OPTIMIZATION (guide §2.5): the band-bucket exchange is
-        // byte-tiny, so AQE coalesced the banded self-join + pair fan-out
-        // + distinct stage onto 1-2 of 32 cores; pin it to session
-        // parallelism (both self-join sides reuse the one exchange).
-        .repartition(s.sparkContext.defaultParallelism, col("b"), col("bv"))
+        .withColumn("bv", expr("shiftright(h, b * 8) & 255")), "b", "bv")
       val la = bl.select(col("doc_id").as("da"), col("h").as("ha"), col("b"), col("bv"))
       val lb = bl.select(col("doc_id").as("db"), col("h").as("hb"), col("b"), col("bv"))
       val cand = la.join(lb, Seq("b", "bv")).filter(col("da") < col("db"))
@@ -142,7 +140,7 @@ object PipelineQueries10 {
       // the unblocked truth self-join — same AQE collapse as the p17-class
       // prologues; one exchange, reused by both sides. Bounded by the
       // TruthTier guard above.
-      val shG = sh.repartition(s.sparkContext.defaultParallelism, col("g"))
+      val shG = Kit.pin(sh, "g")
       val sa = shG.select(col("doc_id").as("da"), col("g"))
       val sb = shG.select(col("doc_id").as("db"), col("g"))
       val pr = sa.join(sb, Seq("g")).filter(col("da") < col("db"))
@@ -155,8 +153,7 @@ object PipelineQueries10 {
       val truth = pr
         .join(dcnt.select(col("doc_id").as("da"), col("c").as("ca")), Seq("da"))
         .join(dcnt.select(col("doc_id").as("db"), col("c").as("cb")), Seq("db"))
-        .filter(col("inter").cast("double") /
-          (col("ca") + col("cb") - col("inter")) >= JacT)
+        .filter(Kit.jaccard(col("inter"), col("ca"), col("cb")) >= JacT)
         .select(col("da"), col("db"), lit(1).as("tp"))
       val nt = truth.agg(count(lit(1)).as("n_truth"))
       val per = cand.join(truth, Seq("da", "db"), "left")

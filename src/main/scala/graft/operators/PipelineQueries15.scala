@@ -173,24 +173,16 @@ object PipelineQueries15 {
       val sh = Kit.shingleRows(docs)
       val sig = Kit.signatures(docs)
       val pairs = Kit.minhashPairs(s, dir)
-      val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
-      val inter = pairs
-        .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
+      val inter = Kit.pairOverlap(pairs, sh)
       val est = pairs
         .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
         .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
           (size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y), b => b))
             .cast("double") / 8).as("est"))
-      val m = est
-        .join(inter, Seq("doc_a", "doc_b"), "left")
-        .join(cnt.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
-        .join(cnt.select(col("doc_id").as("doc_b"), col("ns").as("nb")), "doc_b")
+      val m = Kit.sizeJoin(est.join(inter, Seq("doc_a", "doc_b"), "left"), Kit.setSizes(sh))
         .select(col("est"),
-          (coalesce(col("i"), lit(0L)).cast("double")
-            / (col("na") + col("nb") - coalesce(col("i"), lit(0L))) >= JTruth).as("pos"))
+          (Kit.jaccard(coalesce(col("i"), lit(0L)), col("na"), col("nb")) >= JTruth).as("pos"))
       val th = s.range(1).select(explode(array(Thresholds.map(lit(_)): _*)).as("threshold"))
       val pred = sum(when(col("est") >= col("threshold"), 1L).otherwise(0L))
       val tp = sum(when(col("est") >= col("threshold") && col("pos"), 1L).otherwise(0L))

@@ -188,9 +188,8 @@ object PipelineQueries16 {
       // than p17's rare-capped blocking, whose 100x DNF was measured in
       // r15. Band sweeps at production scale are tuned on a bounded
       // subsample; past the bound use the prefix-filtered exact pair set.
-      val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
+      val docs = TruthTier.guard(s, dir, "documents",
         "p77_band_tuning", "p191_jaccard_prefix_filter + p74_minhash_calibration",
-        TruthTier.documentsBound,
         "the prefix-filtered exact pair set as truth, with minhash " +
           "calibration on a bounded tuning sample")
       // NOTE: no localCheckpoint here, deliberately — the three band
@@ -201,24 +200,19 @@ object PipelineQueries16 {
       // the checkpoint because its consumers sit in SEPARATE plans after
       // the broadcast boundary; these don't.
       val sh = Kit.shingleRows(docs)
-      val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
       // r19 OPTIMIZATION (guide §2.5): pin the shingle-keyed exchange under
       // the unblocked truth self-join (AQE coalesced the fan-out stage onto
       // 1-2 of 32 cores — the p17-class finding); one exchange, both sides
       // reuse it. Bounded by the TruthTier guard above.
-      val shG = sh.repartition(s.sparkContext.defaultParallelism, col("shingle"))
+      val shG = Kit.pin(sh, "shingle")
       // shared-shingle candidate superset: every banded config's pair set
       // is a subset, so ONE truth join covers all three
       val inter = Kit.sharedCounts(shG)
       val sig = Kit.signatures(docs)
       val summaries = BandConfigs.map { case (nb, r) =>
         val pairs = Kit.bucketPairs(Kit.bands(sig, nb, r))
-        val truth = (coalesce(col("i"), lit(0L)).cast("double")
-          / (col("na") + col("nb") - coalesce(col("i"), lit(0L))) >= JTruth)
-        pairs
-          .join(inter, Seq("doc_a", "doc_b"), "left")
-          .join(cnt.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
-          .join(cnt.select(col("doc_id").as("doc_b"), col("ns").as("nb")), "doc_b")
+        val truth = Kit.jaccard(coalesce(col("i"), lit(0L)), col("na"), col("nb")) >= JTruth
+        Kit.sizeJoin(pairs.join(inter, Seq("doc_a", "doc_b"), "left"), Kit.setSizes(sh))
           .agg(count(lit(1)).as("n_pairs"),
             sum(when(truth, 1L).otherwise(0L)).as("n_true"))
           .select(lit(nb).as("bands"), lit(r).as("rows_per_band"),

@@ -128,24 +128,17 @@ object PipelineQueries17 {
       // 10k docs/shingle at 500k docs). Past the bound the prefix-filtered
       // twin computes the same >=0.5 pair set; sweeping lower thresholds
       // at scale is a bounded-sample exercise by design.
-      val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
+      val docs = TruthTier.guard(s, dir, "documents",
         "p80_dedup_threshold_sweep", "p191_jaccard_prefix_filter",
-        TruthTier.documentsBound,
         "the same rare-capped pair semantics at the 0.5 threshold via " +
           "lossless prefix filtering; sweep lower thresholds on a bounded sample")
-      val sh = Kit.shingleRows(docs)
-        // r19 OPTIMIZATION (guide §2.5): pin the sh-by-shingle exchange to
-        // session parallelism — see the p17 note (same collapsed join-back
-        // + self-join fan-out stage, same bounded-input posture).
-        .repartition(s.sparkContext.defaultParallelism, col("shingle"))
-      val rare = Kit.rareShingles(sh, docs)
-      val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = Kit.sharedCounts(rare)
-      val pairs = inter
-        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      // r19 OPTIMIZATION (guide §2.5): pin the sh-by-shingle exchange to
+      // session parallelism — AQE coalesced the rare join-back + self-join
+      // fan-out stage onto 1-2 of 32 cores. Bounded by the guard above.
+      val sh = Kit.pin(Kit.shingleRows(docs), "shingle")
+      val pairs = Kit.jaccardPairs(Kit.rareShingles(sh, docs))
         .select(col("doc_a"), col("doc_b"),
-          (col("i").cast("double") / (col("na") + col("nb") - col("i"))).as("j"))
+          Kit.jaccard(col("i"), col("na"), col("nb")).as("j"))
       // pair → per-threshold doc emission: each pair contributes its two
       // doc ids to every threshold it clears; count(DISTINCT) closes it
       val perTh = pairs.select(

@@ -112,18 +112,12 @@ object PipelineQueries18 {
       val oldBands = bands.filter(col("doc_id") % 10 < SplitMod)
         .select(col("doc_id").as("old_id"), col("band"), col("bucket"))
       val cand = newBands.join(oldBands, Seq("band", "bucket"))
-        .select(col("new_id"), col("old_id")).distinct()
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
-      val verified = cand
-        .join(sh.select(col("doc_id").as("new_id"), col("shingle")), "new_id")
-        .join(sh.select(col("doc_id").as("old_id"), col("shingle")), Seq("old_id", "shingle"))
-        .groupBy(col("new_id"), col("old_id")).agg(count(lit(1)).as("i"))
-        .join(sizes.select(col("doc_id").as("new_id"), col("ns").as("na")), "new_id")
-        .join(sizes.select(col("doc_id").as("old_id"), col("ns").as("nb")), "old_id")
-        .select(col("new_id"), col("old_id"),
-          (col("i").cast("double") / (col("na") + col("nb") - col("i"))).as("j"))
+        .select(col("new_id").as("doc_a"), col("old_id").as("doc_b")).distinct()
+      val verified = Kit.sizeJoin(Kit.pairOverlap(cand, sh), Kit.setSizes(sh))
+        .select(col("doc_a").as("doc_id"), col("doc_b").as("old_id"),
+          Kit.jaccard(col("i"), col("na"), col("nb")).as("j"))
       docs.filter(col("doc_id") % 10 >= SplitMod).select(col("doc_id"))
-        .join(verified.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
+        .join(verified, Seq("doc_id"), "left")
         .groupBy(col("doc_id"))
         .agg(count(col("old_id")).as("n_cand"),
           round(max(col("j")), 6).as("best_j"),

@@ -100,16 +100,10 @@ object PipelineQueries2 {
       // byte-identical prefix-filtered twin p191 is the plan to run
       // (PrefixFilterTwinSpec pins equality), so oversized corpora are
       // refused fast instead of launched forever.
-      val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
-        "p17_dedup_jaccard_capped", "p191_jaccard_prefix_filter",
-        TruthTier.documentsBound)
-      val rare = Kit.rareShingles(Kit.shingleRows(docs), docs)
-      val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = Kit.sharedCounts(rare)
-      val jac = col("i").cast("double") / (col("sa.n") + col("sb.n") - col("i"))
-      inter
-        .join(sizes.alias("sa"), col("sa.doc_id") === col("doc_a"))
-        .join(sizes.alias("sb"), col("sb.doc_id") === col("doc_b"))
+      val docs = TruthTier.guard(s, dir, "documents",
+        "p17_dedup_jaccard_capped", "p191_jaccard_prefix_filter")
+      val jac = Kit.jaccard(col("i"), col("na"), col("nb"))
+      Kit.jaccardPairs(Kit.rareShingles(Kit.shingleRows(docs), docs))
         .filter(jac >= 0.5)
         .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))

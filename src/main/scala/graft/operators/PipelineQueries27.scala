@@ -134,19 +134,13 @@ object PipelineQueries27 {
       // committed lossless prefix twin here; past the bound, block by the
       // SMALLER side's prefix (overlap >= t*min) or audit on a bounded
       // sample — both recorded in BENCH_NOTES r17.
-      val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
+      val docs = TruthTier.guard(s, dir, "documents",
         "p105_containment_dedup", "p191_jaccard_prefix_filter",
-        TruthTier.documentsBound,
         "the prefix-filter pattern applied on the smaller side's prefix " +
           "(overlap >= t*min bound), or a bounded audit sample")
-      val rare = Kit.rareShingles(Kit.shingleRows(docs), docs)
-      val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = Kit.sharedCounts(rare)
-      val cont = col("i").cast("double") / least(col("sa.n"), col("sb.n"))
-      val jac = col("i").cast("double") / (col("sa.n") + col("sb.n") - col("i"))
-      inter
-        .join(sizes.alias("sa"), col("sa.doc_id") === col("doc_a"))
-        .join(sizes.alias("sb"), col("sb.doc_id") === col("doc_b"))
+      val cont = col("i").cast("double") / least(col("na"), col("nb"))
+      val jac = Kit.jaccard(col("i"), col("na"), col("nb"))
+      Kit.jaccardPairs(Kit.rareShingles(Kit.shingleRows(docs), docs))
         .filter(cont >= ContThresh)
         .select(col("doc_a"), col("doc_b"),
           round(cont, 6).as("containment"), round(jac, 6).as("jaccard"),

@@ -126,18 +126,14 @@ object PipelineQueries4 {
       // Candidate pairs per (super, sub) cell — p02's collect_list pair
       // emission: one shuffle on the cell id, i<j pairs row-locally, no
       // self-join recomputing the assignment lineage per side.
-      val cand = a2.groupBy(col("sup_id"), col("sub_id"))
-        .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-        .where(size(col("ids")) > 1)
-        .select(explode(col("ids")).as("vec_a"), col("ids"))
-        .select(col("vec_a"), explode(filter(col("ids"), x => x > col("vec_a"))).as("vec_b"))
-        .distinct()
-        // r18 OPTIMIZATION (guide §2.5, the p191 finding): the distinct's
-        // AQE-coalesced output is byte-tiny, so the cosine-verify stage —
-        // where each slim pair row fans out into two 64-dim vectors — ran
-        // on a couple of cores; spread the pair frame to session
-        // parallelism first (results unchanged, re-verified vs oracle)
-        .repartition(s.sparkContext.defaultParallelism)
+      //
+      // r18 OPTIMIZATION (guide §2.5, the p191 finding): the distinct's
+      // AQE-coalesced output is byte-tiny, so the cosine-verify stage —
+      // where each slim pair row fans out into two 64-dim vectors — ran
+      // on a couple of cores; spread the pair frame to session
+      // parallelism first (results unchanged, re-verified vs oracle)
+      val cand = Kit.spread(
+        Kit.bucketPairs(a2, Seq("sup_id", "sub_id"), "vec_id", "vec_a", "vec_b"))
       val x = e.select(col("vec_id").as("vec_a"), col("embedding").as("xv"))
       val y = e.select(col("vec_id").as("vec_b"), col("embedding").as("yv"))
       val cos = Functions.cosineSimilarity(col("xv"), col("yv"))

@@ -241,8 +241,7 @@ object PipelineQueries43 {
             col("ca.rk") < col("cb.rk"))
         .select(col("ca.lang").as("lang"), col("ca.doc_id").as("da"),
           col("cb.doc_id").as("db"))
-      val jac = round(coalesce(col("i"), lit(0L)).cast("double") /
-        (col("sa.n") + col("sb.n") - coalesce(col("i"), lit(0L))), 6)
+      val jac = round(Kit.jaccard(coalesce(col("i"), lit(0L)), col("sa.n"), col("sb.n")), 6)
       allp
         .join(inter.drop("lang"), Seq("da", "db"), "left")
         .join(sz.alias("sa"), col("sa.doc_id") === col("da"))
@@ -404,17 +403,14 @@ object PipelineQueries43 {
       // Capped TRUTH TIER (r15 VERDICT #3): measured DNF at 100x; the
       // byte-identical prefix-filtered twin p192 is the scale plan
       // (PrefixFilterTwinSpec), so oversized corpora are refused fast.
-      val docs = TruthTier.guard(Tables.dfSpread(s, dir, "documents"),
-        "p160_idf_weighted_jaccard", "p192_wjaccard_prefix_filter",
-        TruthTier.documentsBound)
-      val sh = Kit.shingleRows(docs)
-        // r19 OPTIMIZATION (guide §2.5): pin the sh-by-shingle exchange to
-        // session parallelism — see the p17 note (same collapsed join-back
-        // + self-join fan-out stage, same bounded-input posture).
-        .repartition(s.sparkContext.defaultParallelism, col("shingle"))
+      val docs = TruthTier.guard(s, dir, "documents",
+        "p160_idf_weighted_jaccard", "p192_wjaccard_prefix_filter")
+      // r19 OPTIMIZATION (guide §2.5): pin the sh-by-shingle exchange to
+      // session parallelism — AQE coalesced the rare join-back + self-join
+      // fan-out stage onto 1-2 of 32 cores. Bounded by the guard above.
+      val sh = Kit.pin(Kit.shingleRows(docs), "shingle")
       val rare = Kit.rareShingles(sh, docs)
-        .select(col("doc_id"), col("shingle"),
-          Kit.rdec(log(col("corpus_n").cast("double") / col("n_docs")), 9).as("idf"))
+        .select(col("doc_id"), col("shingle"), Kit.rareIdf.as("idf"))
       val wts = rare.groupBy(col("doc_id"))
         .agg(sum(col("idf")).cast("decimal(38,9)").as("w"))
       val a = rare.alias("a")
@@ -423,9 +419,8 @@ object PipelineQueries43 {
           && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(sum(col("a.idf")).cast("decimal(38,9)").as("shared"))
-      val wjac = col("shared").cast("double") /
-        (col("wa.w").cast("double") + col("wb.w").cast("double") -
-          col("shared").cast("double"))
+      val wjac = Kit.jaccard(col("shared").cast("double"),
+        col("wa.w").cast("double"), col("wb.w").cast("double"))
       inter
         .join(wts.alias("wa"), col("wa.doc_id") === col("doc_a"))
         .join(wts.alias("wb"), col("wb.doc_id") === col("doc_b"))

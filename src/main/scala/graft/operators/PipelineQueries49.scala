@@ -139,23 +139,17 @@ object PipelineQueries49 {
           .as("shingle"))
       // candidate join carries the PPJoin length filter: J ≤ min(n)/max(n),
       // so 2·min(na,nb) < max(na,nb) can never reach t = 0.5 — provably
-      // lossless, and it prunes before the distinct/verify shuffles
-      val cand = pref.alias("pa").join(pref.alias("pb"),
-          col("pa.shingle") === col("pb.shingle")
-            && col("pa.doc_id") < col("pb.doc_id")
-            && col("pa.n") * 2 >= col("pb.n")
-            && col("pb.n") * 2 >= col("pa.n"))
-        .select(col("pa.doc_id").as("doc_a"), col("pb.doc_id").as("doc_b"))
-        .distinct()
-        // r18 OPTIMIZATION (guide §2.5, measured: the distinct's AQE-
-        // coalesced output is 2 partitions at sf0.1 — byte-sized targets
-        // cannot see that each slim pair row fans out into two ~50-element
-        // arrays downstream — so the whole verify stage ran on 2 of 32
-        // cores, 2.5 s -> 0.6 s when spread). Round-robin repartition of
-        // the SLIM pair frame (16 bytes/row) to the session parallelism;
-        // at cluster scale this is one cheap exchange of keys ahead of the
-        // dominant verify stage.
-        .repartition(s.sparkContext.defaultParallelism)
+      // lossless, and it prunes before the distinct/verify shuffles.
+      // r18 OPTIMIZATION (guide §2.5, measured: the distinct's AQE-
+      // coalesced output is 2 partitions at sf0.1 — byte-sized targets
+      // cannot see that each slim pair row fans out into two ~50-element
+      // arrays downstream — so the whole verify stage ran on 2 of 32
+      // cores, 2.5 s -> 0.6 s when spread). Round-robin repartition of
+      // the SLIM pair frame (16 bytes/row) to the session parallelism;
+      // at cluster scale this is one cheap exchange of keys ahead of the
+      // dominant verify stage.
+      val cand = Kit.prefixCandidates(pref,
+        col("pa.n") * 2 >= col("pb.n") && col("pb.n") * 2 >= col("pa.n"))
       val verified = cand
         .join(docsets.select(col("doc_id").as("doc_a"), col("sset").as("sa"),
           col("n").as("na")), "doc_a")
@@ -163,7 +157,7 @@ object PipelineQueries49 {
           col("n").as("nb")), "doc_b")
         .withColumn("i",
           graft.functions.NativeExpressions.sortedIntersectCount(col("sa"), col("sb")))
-      val jac = col("i").cast("double") / (col("na") + col("nb") - col("i"))
+      val jac = Kit.jaccard(col("i"), col("na"), col("nb"))
       verified
         .filter(jac >= 0.5)
         .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
@@ -218,9 +212,8 @@ object PipelineQueries49 {
       // DECIMAL(38,9) idf is k/1e9 exactly, so long sums here and decimal
       // sums there round-trip to the SAME nearest-double at the end — the
       // twin-equality spec pins it
-      val idf = Kit.rdec(log(col("corpus_n").cast("double") / col("n_docs")), 9)
       val rn = rareDf(s, dir).select(col("doc_id"), col("shingle"), col("n_docs"),
-        round(idf.cast("double") * 1e9, 0).cast("long").as("idf_n"))
+        round(Kit.rareIdf.cast("double") * 1e9, 0).cast("long").as("idf_n"))
       // same one-shuffle per-doc-array shape as p191.
       // r18 OPTIMIZATION (guide §4, the p191 merge-scan change): `wp` is
       // the (shingle, idf_n) pairs re-sorted lexicographically by shingle
@@ -252,18 +245,10 @@ object PipelineQueries49 {
       val pref = docsets.select(col("doc_id"), col("wn"),
         explode(slice(col("set"), lit(1), col("plen"))).as("shingle"))
       // weighted length filter: J_w ≤ min(w)/max(w), so 5·min < 2·max can
-      // never reach t = 0.4 — lossless pruning before distinct/verify
-      val cand = pref.alias("pa").join(pref.alias("pb"),
-          col("pa.shingle") === col("pb.shingle")
-            && col("pa.doc_id") < col("pb.doc_id")
-            && col("pa.wn") * 5 >= col("pb.wn") * 2
-            && col("pb.wn") * 5 >= col("pa.wn") * 2)
-        .select(col("pa.doc_id").as("doc_a"), col("pb.doc_id").as("doc_b"))
-        .distinct()
-        // spread the slim pair frame over the session cores before the
-        // verify stage — see p191 (AQE's byte-sized coalescing left the
-        // dominant stage on 2 of 32 cores)
-        .repartition(s.sparkContext.defaultParallelism)
+      // never reach t = 0.4 — lossless pruning before distinct/verify;
+      // the candidates are spread as in p191
+      val cand = Kit.prefixCandidates(pref,
+        col("pa.wn") * 5 >= col("pb.wn") * 2 && col("pb.wn") * 5 >= col("pa.wn") * 2)
       val sideA = docsets.select(col("doc_id").as("doc_a"), col("sset").as("sa"),
         col("svals").as("va"), col("wn").as("wa_n"))
       val sideB = docsets.select(col("doc_id").as("doc_b"), col("sset").as("sb"),
@@ -271,10 +256,8 @@ object PipelineQueries49 {
       val verified = cand.join(sideA, "doc_a").join(sideB, "doc_b")
         .withColumn("shared_n", graft.functions.NativeExpressions
           .sortedIntersectWSum(col("sa"), col("va"), col("sb")))
-      val sharedD = col("shared_n").cast("double") / 1e9
-      val wjac = sharedD /
-        (col("wa_n").cast("double") / 1e9 + col("wb_n").cast("double") / 1e9 -
-          sharedD)
+      val wjac = Kit.jaccard(col("shared_n").cast("double") / 1e9,
+        col("wa_n").cast("double") / 1e9, col("wb_n").cast("double") / 1e9)
       verified
         .filter(wjac >= 0.4)
         .select(col("doc_a"), col("doc_b"), round(wjac, 6).as("wjac"))

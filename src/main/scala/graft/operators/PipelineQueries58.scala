@@ -133,9 +133,8 @@ object PipelineQueries58 {
         sum(col("c")).over(ws).cast("bigint").as("f"),
         sum(col("v").cast("decimal(9,0)") * col("c").cast("decimal(12,0)"))
           .over(ws).cast("decimal(30,0)").as("cumt"))
-      val tot = docs.groupBy(col("source")).agg(
-        count(lit(1)).cast("bigint").as("n"),
-        sum(col("n_chars").cast("decimal(9,0)")).cast("decimal(38,0)").as("t"))
+      val tot = Kit.powerSums(docs, Seq("source"), col("n_chars"), 1)
+        .withColumnRenamed("s1", "t")
       val s2 = w.groupBy(col("source")).agg(
         sum(col("v").cast("decimal(9,0)") * col("c").cast("decimal(12,0)")
           * (lit(2) * (col("f") - col("c")) + col("c") + 1).cast("decimal(13,0)"))

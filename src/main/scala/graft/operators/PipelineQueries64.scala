@@ -218,12 +218,7 @@ object PipelineQueries64 {
           col("n_chars").as("v")))
       Kit.ansariBradley(nn, w)
         .select(col("n1").as("n_en"), (col("n") - col("n1")).as("n_other"),
-          round(col("w_ab"), 6).as("ab_w"),
-          round((col("w_ab") - col("n1").cast("double") * col("ssum") / col("n"))
-            / sqrt(col("n1").cast("double") * (col("n") - col("n1"))
-              / (col("n").cast("double") * (col("n") - 1))
-              * (col("n") * col("ssq") - col("ssum") * col("ssum")) / col("n")),
-            6).as("z_stat"))
+          round(col("w_ab"), 6).as("ab_w"), round(col("z_ab"), 6).as("z_stat"))
     },
 
     // --------------------- CUSUM of squares variance changepoint (p279)

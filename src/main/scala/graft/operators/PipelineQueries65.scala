@@ -86,14 +86,7 @@ object PipelineQueries65 {
       val msw = g.agg((Kit.rsum(col("s2").cast("double")
         - col("s1").cast("double") * col("s1").cast("double") / col("n"), 6)
         / (sum(col("n")) - count(lit(1)))).as("msw"))
-      val b = g.select(col("source").as("src_b"), col("n").as("nb"),
-        col("s1").as("bs1"))
-      val pairs = g.join(b, col("source") < col("src_b"))
-        .select(col("source").as("src_a"), col("src_b"),
-          (col("s1").cast("double") / col("n")
-            - col("bs1").cast("double") / col("nb")).as("diff"),
-          col("n").as("na"), col("nb"))
-      pairs.crossJoin(broadcast(msw))
+      Kit.meanDiffPairs(g, "s1", "n", "diff").crossJoin(broadcast(msw))
         .select(col("src_a"), col("src_b"), round(col("diff"), 6).as("mean_diff"),
           round(abs(col("diff")) / sqrt(col("msw") / 2
             * (lit(1.0) / col("na") + lit(1.0) / col("nb"))), 6).as("q_stat"))
@@ -146,14 +139,7 @@ object PipelineQueries65 {
       val base = nn.crossJoin(tie)
         .select((col("n").cast("double") * (col("n") + 1) / 12
           - col("tsum") / (lit(12.0) * (col("n") - 1))).as("s2"))
-      val b = gs.select(col("source").as("src_b"), col("n_s").as("nb"),
-        col("rsum").as("brsum"))
-      val pairs = gs.join(b, col("source") < col("src_b"))
-        .select(col("source").as("src_a"), col("src_b"),
-          (col("rsum").cast("double") / col("n_s")
-            - col("brsum").cast("double") / col("nb")).as("rdiff"),
-          col("n_s").as("na"), col("nb"))
-      pairs.crossJoin(broadcast(base))
+      Kit.meanDiffPairs(gs, "rsum", "n_s", "rdiff").crossJoin(broadcast(base))
         .select(col("src_a"), col("src_b"),
           round(col("rdiff"), 6).as("mean_rank_diff"),
           round(col("rdiff") / sqrt(col("s2")
@@ -338,12 +324,7 @@ object PipelineQueries65 {
           / sqrt(col("n1").cast("double") * (col("n") - col("n1")) / 12
             * ((col("n") + 1) - col("tsum")
               / (col("n").cast("double") * (col("n") - 1))))).as("zw"))
-      val zab = Kit.ansariBradley(nn, w).select(((col("w_ab")
-        - col("n1").cast("double") * col("ssum") / col("n"))
-        / sqrt(col("n1").cast("double") * (col("n") - col("n1"))
-          / (col("n").cast("double") * (col("n") - 1))
-          * (col("n") * col("ssq") - col("ssum") * col("ssum")) / col("n")))
-        .as("zab"))
+      val zab = Kit.ansariBradley(nn, w).select(col("z_ab").as("zab"))
       zw.crossJoin(zab).crossJoin(broadcast(nn))
         .select(col("n1").as("n_en"), (col("n") - col("n1")).as("n_other"),
           round(col("zw"), 6).as("z_wilcoxon"),

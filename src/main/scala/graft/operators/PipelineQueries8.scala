@@ -361,7 +361,7 @@ object PipelineQueries8 {
         .join(broadcast(db), Seq("src_b"))
         .select(col("src_a"), col("src_b"), col("inter"),
           (col("ca") + col("cb") - col("inter")).as("uni"),
-          (col("inter").cast("double") / (col("ca") + col("cb") - col("inter"))).as("jac"))
+          Kit.jaccard(col("inter"), col("ca"), col("cb")).as("jac"))
       // Pair domain is |sources|² — a few hundred rows at most reach the
       // single-partition ranking window.
       val rank = Window.orderBy(round(col("jac"), 9).desc, col("src_a"), col("src_b"))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Contract enforcement for the documented truth-tier (verification
   * baseline) operators — the ops whose DEFAULT plan is intentionally
@@ -52,17 +53,29 @@ object TruthTier {
     * verification budget; 10x more is 100x more pairs. */
   val embeddingsBound = 50000L
 
+  private val TwinRelation = "byte-identical results, bucketed plan (PrefixFilterTwinSpec)"
+
+  /** The bound of each table a truth tier reads. */
+  private val bounds = Map("documents" -> documentsBound, "embeddings" -> embeddingsBound)
+
   /** Eagerly counts `df` (one metadata-cheap job on a parquet scan) and
     * either returns it unchanged or refuses with [[ExceededException]].
     * The count is the price of an enforced contract — micro against the
     * quadratic work the op does on an admitted corpus, and the refusal
     * path is the entire point on an oversized one. */
   def guard(df: DataFrame, op: String, twin: String, bound: Long,
-      relation: String =
-        "byte-identical results, bucketed plan (PrefixFilterTwinSpec)")
-      : DataFrame = {
+      relation: String): DataFrame = {
     val n = df.count()
     if (n > bound) throw new ExceededException(op, twin, bound, n, relation)
     df
   }
+
+  def guard(df: DataFrame, op: String, twin: String, bound: Long): DataFrame =
+    guard(df, op, twin, bound, TwinRelation)
+
+  /** The truth tier's input: `Tables.dfSpread(s, dir, table)` under
+    * [[guard]], with the table's own bound. */
+  def guard(s: SparkSession, dir: String, table: String, op: String, twin: String,
+      relation: String = TwinRelation): DataFrame =
+    guard(Tables.dfSpread(s, dir, table), op, twin, bounds(table), relation)
 }

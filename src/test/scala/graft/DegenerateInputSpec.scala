@@ -24,6 +24,7 @@ class DegenerateInputSpec extends AnyFunSuite {
   private val nearDup = Seq(
     "p02_dedup_minhash", "p04_dedup_jaccard", "p17_dedup_jaccard_capped",
     "p18_dedup_components", "p20_contamination", "p29_dedup_components_star",
+    "p55_dedup_audit",
     "p68_cluster_reps", "p73_dupgraph_triangles", "p74_minhash_calibration",
     "p77_band_tuning", "p80_dedup_threshold_sweep", "p84_incremental_minhash",
     "p92_dup_distance_profile", "p94_cross_source_dup_matrix",

@@ -19,7 +19,11 @@ import scala.jdk.CollectionConverters._
   * and the rank and moment statistics: midranks, the Ansari–Bradley block,
   * the DECIMAL(38,0) power sums, the survival subjects, the click/view value
   * frame and the annotator screens (the exact top-k truth frame lives in
-  * `IvfIndex`).
+  * `IvfIndex`). And so are the set-similarity pair frames: the Jaccard
+  * ratio, the row-local pair emission, the rare-shingle idf the p160/p192
+  * twins share, and the exchange width of the pair stages (`Kit.pin` and
+  * `Kit.spread`, the only readers of `defaultParallelism` under
+  * `operators/`).
   */
 class KitGuardSpec extends AnyFunSuite {
 
@@ -116,5 +120,28 @@ class KitGuardSpec extends AnyFunSuite {
       "use Kit.midranks / rankSums / twoGroupFrame / ansariBradley / powerSums / " +
         "survivalSubjects / clickViewCounts / annotatorLabels or IvfIndex.exactTopK " +
         "instead of a local spelling: " + spelled.mkString(", "))
+  }
+
+  test("pair frames, idf and exchange widths are spelled only in Kit") {
+    // whitespace removed and triple-quoted oracle SQL blanked, as above;
+    // a Jaccard denominator is `/ (x + y - z)` with x, y columns
+    val spellings = Seq(
+      """/\(col\("[\w.]+"\)(\.cast\("double"\))?(/1e9)?\+col\("[\w.]+"\)(\.cast\("double"\))?(/1e9)?-[a-z]""",
+      """filter\(col\("ids"\)""",
+      """log\(col\("corpus_n"\)""").map(_.r)
+    val spelled = sources.filterNot(_.getFileName.toString == "Kit.scala").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+        .replaceAll("(?s)\"\"\".*?\"\"\"", "\"\"")
+        .replaceAll("\\s+", "")
+      val width =
+        if (root.relativize(p).startsWith("operators") && text.contains("defaultParallelism"))
+          Seq(s"${root.relativize(p)}: defaultParallelism")
+        else Nil
+      spellings.flatMap(_.findAllIn(text).map(m => s"${root.relativize(p)}: $m")) ++ width
+    }
+    assert(spelled.isEmpty,
+      "use Kit.jaccardPairs / jaccard / pairOverlap / bucketPairs / rareIdf / " +
+        "prefixCandidates / pin / spread instead of a local spelling: " +
+        spelled.mkString(", "))
   }
 }
