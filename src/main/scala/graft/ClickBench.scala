@@ -14,46 +14,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * This is a PERF corpus, not a correctness gate: Bench runs it under the
   * same interleaved-trial instrument and reports a separate `clickbench`
   * section in BENCH_r{N}.json, tracked round over round. Statements run
-  * through the full graft dialect pipeline (`Graft.query`), so the numbers
-  * include parse/rewrite cost like the reference harness's do.
+  * through the full graft dialect pipeline (`Graft.query`) on the shared
+  * per-session engine ([[Graft.engine]]), so the numbers include
+  * parse/rewrite cost like the reference harness's do.
   */
 object ClickBench {
 
   /** events widened to a hits-like shape: one scan-friendly view, derived
-    * date + JSON counter columns computed in the scan projection. */
-  private val hitsView = """
+    * date + JSON counter columns computed in the scan projection.
+    * [[Graft.engine]] registers it as `cb_hits` next to the dir's tables. */
+  private[graft] val hitsView = """
     SELECT event_id, ts, CAST(ts AS DATE) AS event_date, user_id, event_type,
            value, CAST(props ->> 'k' AS INT) AS k
     FROM events"""
-
-  // Memoized per (session, dir) and never evicted: acceptable because the
-  // only callers are the bench/verify processes, whose sessions live for the
-  // whole JVM — an embedder with many short-lived sessions would want weak
-  // keys here (same note as Tables.df).
-  private val engines = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Graft]()
-
-  // Temp views are SESSION-global, not engine-local: when one session
-  // alternates between dirs (ScaleCheck times every statement at sf0.1 and
-  // at the 10× synth interleaved), the memoized engine of a previously-seen
-  // dir must re-point `events`/`documents`/`cb_hits` back at ITS dir or the
-  // small-scale measurement silently reads the big tables (found round 14:
-  // every cb ratio came back ~1.0).
-  private val currentDir = new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
-  private def engine(s: SparkSession, dir: String): Graft = {
-    val g = engines.computeIfAbsent((s, dir), _ => Graft(s))
-    if (currentDir.get(s) != dir) {
-      // Advance the marker only after registration succeeds: if registerDir
-      // or the view swap throws, a stale marker pointing at the NEW dir
-      // would make later calls skip re-registration and silently read the
-      // previous dir's views — the wrong-dir-measurement class this method
-      // exists to prevent.
-      g.registerDir(dir)
-      g.query(hitsView).createOrReplaceTempView("cb_hits")
-      currentDir.put(s, dir)
-    }
-    g
-  }
 
   /** The 90-sum wide aggregate (reference statement 30). */
   private val wideSums: String =
@@ -105,15 +78,11 @@ object ClickBench {
     "cb43" -> "SELECT date_trunc('minute', ts) AS m, COUNT(*) AS pv FROM cb_hits WHERE event_date >= '2024-01-14' AND event_date <= '2024-01-15' AND event_type = 'view' GROUP BY date_trunc('minute', ts) ORDER BY m LIMIT 10 OFFSET 1000"
   )
 
-  /** Bench-compatible query map. */
+  /** Bench-compatible query map; each statement runs on the shared engine
+    * ([[Graft.engine]]), as do the correctness-gate twins
+    * ([[graft.operators.ClickBenchGate]]). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     statements.map { case (name, sql) =>
-      name -> ((s: SparkSession, dir: String) => engine(s, dir).query(sql))
+      name -> ((s: SparkSession, dir: String) => Graft.engine(s, dir).query(sql))
     }.toMap
-
-  /** Run one statement through the shared engine — the correctness-gate
-    * twins ([[graft.operators.ClickBenchGate]]) enter here so they exercise
-    * the same dialect pipeline + cb_hits view as the perf corpus. */
-  private[graft] def gate(s: SparkSession, dir: String, sql: String): DataFrame =
-    engine(s, dir).query(sql)
 }

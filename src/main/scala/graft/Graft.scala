@@ -280,4 +280,48 @@ object Graft {
 
   /** Zero-config embedded session, like `import opteryx; opteryx.query(...)`. */
   def embedded(): Graft = new Graft(GraftSession.create())
+
+  // One engine per session, never evicted: acceptable because the only
+  // callers are the gate/bench/verify processes, whose sessions live for
+  // the whole JVM — an embedder with many short-lived sessions would want
+  // weak keys here (same note as Tables.df). An engine holds no per-dir
+  // state; the views it reads are the session's, which [[engine]] points.
+  private val engines = new java.util.concurrent.ConcurrentHashMap[SparkSession, Graft]()
+
+  /** The views [[engine]] keeps pointed at its dir: the testdata tables and
+    * ClickBench's `cb_hits`. */
+  private val sharedViews = Tables.names :+ "cb_hits"
+
+  // Per session: the dir its shared views were last registered for, and the
+  // view relations that registration created.
+  private val pointed =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, (String, Seq[AnyRef])]()
+
+  /** The engine every SQL-form gate statement ([[QueryDef.sql]]) and every
+    * ClickBench statement runs on, with the session's views pointed at
+    * `dir`. Temp views are SESSION-global: when one session alternates
+    * between dirs (ScaleCheck times every statement at sf0.1 and at the 10×
+    * synth interleaved, a spec runs a query on a fixture dir), each call
+    * must re-point the views at ITS dir or the statement silently reads the
+    * other dir's tables (found round 14: every cb ratio came back ~1.0).
+    * Any other registration of the same names (a plain `Graft.registerDir`,
+    * a visibility filter) replaces the view relation, so the check is by
+    * identity of the registered relations, not by a dir marker alone.
+    */
+  def engine(s: SparkSession, dir: String): Graft = s.synchronized {
+    val g = engines.computeIfAbsent(s, _ => Graft(s))
+    val catalog = s.sessionState.catalog
+    def registered: Seq[AnyRef] = sharedViews.map(catalog.getRawTempView(_).orNull)
+    val current = Option(pointed.get(s)).exists { case (d, views) =>
+      d == dir && views.corresponds(registered)(_ eq _)
+    }
+    if (!current) {
+      // recorded only after every view is swapped: a swap that throws half
+      // way leaves the old record, which no longer matches the views
+      g.registerDir(dir)
+      g.query(ClickBench.hitsView).createOrReplaceTempView("cb_hits")
+      pointed.put(s, (dir, registered))
+    }
+    g
+  }
 }

@@ -252,8 +252,8 @@ object GraftSql {
   // START, and literalMask excludes the opening quote, so a literal LHS
   // still rewrites while content inside other literals stays untouched.
   private val atQuestion =
-    """('(?:[^']|'')*'|[\w.\)\]]+)\s*@\?\s*(?:'([^']+)'|(\d+))""".r
-  private val atArrow = """('(?:[^']|'')*'|[\w.\)\]]+)\s*@>\s*'(\{[^']*\})'""".r
+    """('[^']*+(?:''[^']*+)*+'|[\w.\)\]]+)\s*@\?\s*(?:'([^']+)'|(\d+))""".r
+  private val atArrow = """('[^']*+(?:''[^']*+)*+'|[\w.\)\]]+)\s*@>\s*'(\{[^']*\})'""".r
 
   /** `col @> '{"k":1,"s":"x"}'` (JSONB containment, reference AtArrow at
     * opteryx/managers/expression/ops.py:291-365): every key/value of the
@@ -709,7 +709,7 @@ object GraftSql {
 
   private val typedLiteral =
     ("""(?i)(?<![\w.])(INTEGER|INT|BIGINT|SMALLINT|TINYINT|DOUBLE|FLOAT|REAL|""" +
-      """DECIMAL|NUMERIC|BOOLEAN|VARCHAR|BLOB)\s+'((?:[^']|'')*)'""").r
+      """DECIMAL|NUMERIC|BOOLEAN|VARCHAR|BLOB)\s+'([^']*+(?:''[^']*+)*+)'""").r
 
   private val typedLiteralTarget = Map(
     "INTEGER" -> "INT", "NUMERIC" -> "DECIMAL", "REAL" -> "FLOAT",
@@ -933,7 +933,7 @@ object GraftSql {
     }
     // `'ip' | 'cidr'` IPv4 containment (reference documentation corpus)
     s = replaceOutsideLiterals(
-      """('(?:[^']|'')*'|[\w.]+)\s*\|\s*'([^']+/\d+)'""".r, s) { m =>
+      """('[^']*+(?:''[^']*+)*+'|[\w.]+)\s*\|\s*'([^']+/\d+)'""".r, s) { m =>
       s"ip_in_subnet(${m.group(1)}, '${m.group(2)}')"
     }
     s
@@ -977,7 +977,7 @@ object GraftSql {
           // literal-keyed subscript → graft_extract (a string key on a
           // JSON-text column has no Spark-native bracket form)
           val inner = s.substring(i + 1, close).trim
-          if (inner.matches("'(?:[^']|'')*'") || inner.matches("\\d+")) {
+          if (inner.matches("'[^']*+(?:''[^']*+)*+'") || inner.matches("\\d+")) {
             val lhsStart = operandStart(s, mask, p)
             if (lhsStart >= 0 && lhsStart <= p)
               return Some(s.substring(0, lhsStart) +

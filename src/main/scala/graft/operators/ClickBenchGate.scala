@@ -1,13 +1,14 @@
 package graft.operators
 
-import graft.{ClickBench, QueryDef}
+import graft.{Graft, QueryDef}
 
 /** Correctness twins for the ClickBench-shaped perf corpus ([[graft.ClickBench]];
   * reference: tests/performance/clickbench/clickbench.py:18-62).
   *
   * The perf corpus keeps the reference's statement shapes verbatim for
   * round-over-round timing parity; these gate twins run the SAME statements
-  * through the same graft dialect pipeline but adjusted the minimum needed
+  * through the same graft dialect pipeline, on the same shared engine and
+  * `cb_hits` view ([[graft.Graft.engine]]), but adjusted the minimum needed
   * for a hash-exact DuckDB comparison:
   *
   *   - LIMIT/OFFSET statements gain deterministic tiebreak columns in ORDER
@@ -37,7 +38,7 @@ object ClickBenchGate {
 
   private def gd(name: String, sql: String, oracle: String = null): QueryDef =
     QueryDef(name, Some(Option(oracle).getOrElse(duck(sql)))) { (s, dir) =>
-      ClickBench.gate(s, dir, sql)
+      Graft.engine(s, dir).query(sql)
     }
 
   private val wideSums: String =

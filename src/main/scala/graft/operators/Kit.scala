@@ -516,20 +516,6 @@ object Kit {
       (1 to k).map(i => sum(Seq.fill(i)(d).reduce(_ * _)).cast("decimal(38,0)").as(s"s$i")): _*)
   }
 
-  /** Per-source (source, n, total) frame → (src_a, src_b, out, na, nb) over
-    * the source pairs a < b, out the difference of the two means —
-    * `SELECT a.source AS src_a, b.source AS src_b, CAST(a.t AS DOUBLE) /
-    * a.n - CAST(b.t AS DOUBLE) / b.n AS out, a.n AS na, b.n AS nb FROM g a
-    * JOIN g b ON a.source < b.source`. */
-  def meanDiffPairs(g: DataFrame, total: String, n: String, out: String): DataFrame = {
-    val b = g.select(col("source").as("src_b"), col(n).as("nb"), col(total).as(s"b$total"))
-    g.join(b, col("source") < col("src_b"))
-      .select(col("source").as("src_a"), col("src_b"),
-        (col(total).cast("double") / col(n)
-          - col(s"b$total").cast("double") / col("nb")).as(out),
-        col(n).as("na"), col("nb"))
-  }
-
   /** [[powerSums]] with k = 4 → (keys…, n, m1, m2, m3, m4): the mean and
     * the central moments from the raw ones r_i = s_i / n — the oracle's
     * `m` and `c` CTEs. */

@@ -30,15 +30,10 @@ object PipelineQueries {
     // Exact dedup: content-hash grouping; every doc mapped to its keeper
     // (min doc_id with identical text). Map-side hash + one shuffle on the
     // 16-byte digest — the canonical 100-TB exact-dedup plan.
-    QueryDef("p01_dedup_exact", Some("""
+    QueryDef.sql("p01_dedup_exact", """
       SELECT doc_id,
              min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
-      FROM documents ORDER BY doc_id""")) { (s, dir) =>
-      Tables.dfSpread(s, dir, "documents")
-        .withColumn("keeper", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
-        .select(col("doc_id"), col("keeper"))
-        .orderBy(col("doc_id"))
-    },
+      FROM documents ORDER BY doc_id"""),
 
     // MinHash + LSH near-dedup: 3-word shingles → 8 minhashes → 4 bands of 2
     // → per-(band,bucket) grouping emits candidate pairs. Signature stage is
@@ -122,7 +117,10 @@ object PipelineQueries {
       // verification baseline). Bounded by contract like p17/p160 — past
       // the bound the prefix-filtered family (p191) is the scale plan.
       val sh = Kit.shingleRows(TruthTier.guard(s, dir, "documents",
-        "p04_dedup_jaccard", "p191_jaccard_prefix_filter"))
+        "p04_dedup_jaccard", "p191_jaccard_prefix_filter",
+        "the exact pair set of the rare-capped shingles at its own threshold " +
+          "via lossless prefix filtering; this op's uncapped 0.2 sweep runs " +
+          "only on a bounded sample"))
       val jac = Kit.jaccard(col("i"), col("na"), col("nb"))
       Kit.jaccardPairs(sh)
         .filter(jac >= 0.2)
@@ -143,7 +141,9 @@ object PipelineQueries {
       // purpose; bounded by contract — the LSH bucket join (p07) is the
       // scale path past the bound.
       val e = TruthTier.guard(s, dir, "embeddings",
-        "p05_dedup_embedding", "p07_similarity_lsh")
+        "p05_dedup_embedding", "p07_similarity_lsh",
+        "an approximate LSH bucket join that can miss pairs; the exact " +
+          "all-pairs set runs only on a bounded sample")
       val a = e.alias("a")
       val b = e.alias("b")
       val cos = Functions.cosineSimilarity(col("a.embedding"), col("b.embedding"))
@@ -368,7 +368,7 @@ object PipelineQueries {
 
     // Sessionization: 30-minute-gap sessions via lag + cumulative flag sum —
     // pure window algebra, one shuffle on user_id.
-    QueryDef("p14_events_sessions", Some("""
+    QueryDef.sql("p14_events_sessions", """
       WITH flagged AS (
         SELECT user_id, ts, event_id,
                CASE WHEN lag(ts) OVER w IS NULL
@@ -384,20 +384,6 @@ object PipelineQueries {
       SELECT user_id,
              count(DISTINCT session_id) AS n_sessions,
              count(*) AS n_events
-      FROM sess GROUP BY user_id ORDER BY user_id""")) { (s, dir) =>
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val flagged = Tables.df(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            col("ts") > col("prev_ts") + expr("INTERVAL 30 MINUTES"), 1).otherwise(0))
-      flagged
-        .withColumn("session_id",
-          sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"))
-        .agg(countDistinct(col("session_id")).as("n_sessions"),
-          count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }
+      FROM sess GROUP BY user_id ORDER BY user_id""")
   )
 }

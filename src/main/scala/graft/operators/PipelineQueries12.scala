@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -90,7 +89,7 @@ object PipelineQueries12 {
     // Scale shape: the day collapse is one (user, day) partial-agg shuffle;
     // the rolling window orders each user's DAYS (span-bounded, streaming
     // ROWS frame with O(1) aggregate state); output is user-day-sized.
-    QueryDef("p60_rolling_zscore", Some(s"""
+    QueryDef.sql("p60_rolling_zscore", s"""
       WITH d AS (
         SELECT user_id, CAST(ts AS DATE) AS day,
                CAST(sum(CAST(round(value, 9) AS DECIMAL(38,9))) AS DECIMAL(38,9)) AS v
@@ -115,28 +114,6 @@ object PipelineQueries12 {
              CAST(n AS BIGINT) AS hist_days,
              round(zs, 6) AS z,
              coalesce(abs(zs) > $ZFlag, false) AS anomaly
-      FROM z ORDER BY user_id, day""")) { (s, dir) =>
-      val d = Tables.df(s, dir, "events")
-        .groupBy(col("user_id"), col("ts").cast("date").as("day"))
-        .agg(sum(Kit.rdec(col("value"), 9))
-          .cast("decimal(38,9)").as("v"))
-      val tw = Window.partitionBy(col("user_id")).orderBy(col("day"))
-        .rowsBetween(-Trail, -1)
-      val w = d
-        .withColumn("s1", sum(col("v")).over(tw))
-        .withColumn("s2", sum(col("v") * col("v")).over(tw))
-        .withColumn("n", count(lit(1)).over(tw))
-      val vD = col("v").cast("double")
-      val s1D = col("s1").cast("double")
-      val s2D = col("s2").cast("double")
-      val zs = when(col("n") >= MinHist,
-        (vD - s1D / col("n")) /
-          sqrt((s2D - s1D * s1D / col("n")) / (col("n") - 1)))
-      w.select(col("user_id"), col("day"), round(vD, 6).as("v_day"),
-          col("n").cast("long").as("hist_days"),
-          round(zs, 6).as("z"),
-          coalesce(abs(zs) > ZFlag, lit(false)).as("anomaly"))
-        .orderBy(col("user_id"), col("day"))
-    }
+      FROM z ORDER BY user_id, day""")
   )
 }

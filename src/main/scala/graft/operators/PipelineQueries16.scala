@@ -108,7 +108,7 @@ object PipelineQueries16 {
     // the row. The per-language ledger reports both drop reasons
     // separately — a screen that cannot explain its drops cannot be
     // audited.
-    QueryDef("p76_blocklist_screen", Some(s"""
+    QueryDef.sql("p76_blocklist_screen", s"""
       WITH f AS (
         SELECT lang,
                source IN (${BlockedSources.map("'" + _ + "'").mkString(", ")}) AS bad_src,
@@ -118,19 +118,7 @@ object PipelineQueries16 {
              CAST(sum(CASE WHEN bad_src THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked_source,
              CAST(sum(CASE WHEN bad_phrase AND NOT bad_src THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked_phrase,
              CAST(sum(CASE WHEN NOT bad_src AND NOT bad_phrase THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-      FROM f GROUP BY lang ORDER BY lang""")) { (s, dir) =>
-      val badSrc = col("source").isin(BlockedSources.map(lit(_)): _*)
-      val badPhrase = BlockedPhrases.map(p => col("text").contains(lit(p)))
-        .reduce(_ || _)
-      Tables.dfSpread(s, dir, "documents")
-        .select(col("lang"), badSrc.as("bad_src"), badPhrase.as("bad_phrase"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("bad_src"), 1L).otherwise(0L)).as("n_blocked_source"),
-          sum(when(col("bad_phrase") && !col("bad_src"), 1L).otherwise(0L)).as("n_blocked_phrase"),
-          sum(when(!col("bad_src") && !col("bad_phrase"), 1L).otherwise(0L)).as("n_kept"))
-        .orderBy(col("lang"))
-    },
+      FROM f GROUP BY lang ORDER BY lang"""),
 
     // ---------------------------- LSH band tuning (p77)
 

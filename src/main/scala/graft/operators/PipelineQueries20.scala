@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 
 /** Pipeline coverage batch 20 — privacy auditing and operational skew
   * diagnostics:
@@ -31,7 +30,7 @@ object PipelineQueries20 {
     // ladder explodes over the GROUP frame (|QI groups| rows, corpus-
     // independent once grouped), never over raw events. Ratios are exact
     // integer divisions rounded once.
-    QueryDef("p89_k_anonymity", Some(s"""
+    QueryDef.sql("p89_k_anonymity", s"""
       WITH qi AS (
         SELECT event_type, CAST(ts AS DATE) AS d,
                CAST(floor(value / 10) AS BIGINT) AS vb,
@@ -45,22 +44,7 @@ object PipelineQueries20 {
              round(CAST(sum(CASE WHEN qi.c < k.k THEN qi.c ELSE 0 END) AS DOUBLE)
                    / sum(qi.c), 6) AS risk_share
       FROM qi CROSS JOIN k
-      GROUP BY k.k ORDER BY k.k""")) { (s, dir) =>
-      import s.implicits._
-      val qi = Tables.df(s, dir, "events")
-        .groupBy(col("event_type"), col("ts").cast("date").as("d"),
-          floor(col("value") / 10).cast("bigint").as("vb"))
-        .agg(count(lit(1)).as("c"))
-      val ks = Ks.toDF("k")
-      qi.crossJoin(broadcast(ks))
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n_groups"),
-          sum(when(col("c") < col("k"), 1L).otherwise(0L)).as("n_groups_below"),
-          sum(when(col("c") < col("k"), col("c")).otherwise(0L)).as("n_rows_at_risk"),
-          round(sum(when(col("c") < col("k"), col("c")).otherwise(0L)).cast("double")
-            / sum(col("c")), 6).as("risk_share"))
-        .orderBy(col("k"))
-    },
+      GROUP BY k.k ORDER BY k.k"""),
 
     // ----------------------- join-key skew profile (p90)
 
@@ -72,7 +56,7 @@ object PipelineQueries20 {
     // distribution, the factor is the headline the p34 salting decision
     // reads. Scale shape: key-keyed reduce, then a ≤64-row bucket rollup;
     // the 1-row global frame broadcasts back.
-    QueryDef("p90_join_key_skew", Some("""
+    QueryDef.sql("p90_join_key_skew", """
       WITH kc AS (SELECT user_id, count(*) AS c FROM events GROUP BY user_id),
       g AS (SELECT CAST(max(c) AS DOUBLE) * count(*) / sum(c) AS skew_factor FROM kc)
       SELECT CAST(length(bin(kc.c)) - 1 AS INTEGER) AS freq_bucket,
@@ -80,38 +64,19 @@ object PipelineQueries20 {
              CAST(sum(kc.c) AS BIGINT) AS n_rows,
              round(max(g.skew_factor), 6) AS skew_factor
       FROM kc CROSS JOIN g
-      GROUP BY 1 ORDER BY freq_bucket""")) { (s, dir) =>
-      val kc = Tables.df(s, dir, "events")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
-      val g = kc.agg((max(col("c")).cast("double") * count(lit(1)) / sum(col("c")))
-        .as("skew_factor"))
-      kc.crossJoin(broadcast(g))
-        .groupBy((length(bin(col("c"))) - 1).cast("int").as("freq_bucket"))
-        .agg(count(lit(1)).as("n_keys"), sum(col("c")).as("n_rows"),
-          round(max(col("skew_factor")), 6).as("skew_factor"))
-        .orderBy(col("freq_bucket"))
-    },
+      GROUP BY 1 ORDER BY freq_bucket"""),
 
     // ------------------- dup-cluster size spectrum (p91)
 
     // Two stacked reduces, both map-side combined: content digest → family
     // size, family size → spectrum. The digest is the only thing shuffled
     // (32 bytes/row), never text — the p01 discipline.
-    QueryDef("p91_dup_size_spectrum", Some("""
+    QueryDef.sql("p91_dup_size_spectrum", """
       WITH fam AS (SELECT md5(text) AS h, count(*) AS c FROM documents GROUP BY h)
       SELECT CAST(c AS BIGINT) AS family_size,
              CAST(count(*) AS BIGINT) AS n_families,
              CAST(c * count(*) AS BIGINT) AS n_docs,
              CAST((c - 1) * count(*) AS BIGINT) AS n_removable
-      FROM fam GROUP BY c ORDER BY family_size""")) { (s, dir) =>
-      Tables.dfSpread(s, dir, "documents")
-        .groupBy(md5(col("text")).as("h")).agg(count(lit(1)).as("c"))
-        .groupBy(col("c"))
-        .agg(count(lit(1)).as("n_families"))
-        .select(col("c").as("family_size"), col("n_families"),
-          (col("c") * col("n_families")).as("n_docs"),
-          ((col("c") - 1) * col("n_families")).as("n_removable"))
-        .orderBy(col("family_size"))
-    }
+      FROM fam GROUP BY c ORDER BY family_size""")
   )
 }

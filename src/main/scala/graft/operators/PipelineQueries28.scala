@@ -110,7 +110,7 @@ object PipelineQueries28 {
     // (dropDuplicatesWithinWatermark). The payload `value` is NOT part of
     // the identity: delivery retries re-jitter payload floats, which is
     // exactly why production dedup keys on the logical identity.
-    QueryDef("p109_event_window_dedup", Some("""
+    QueryDef.sql("p109_event_window_dedup", """
       WITH k AS (
         SELECT user_id, event_type, date_trunc('hour', ts) AS hb,
                min(ts) AS first_ts, count(*) AS c
@@ -120,19 +120,7 @@ object PipelineQueries28 {
              CAST(count(*) AS BIGINT) AS n_kept,
              CAST(sum(c) - count(*) AS BIGINT) AS n_removed,
              round(CAST(sum(c) - count(*) AS DOUBLE) / sum(c), 6) AS dup_rate
-      FROM k GROUP BY event_type ORDER BY event_type""")) { (s, dir) =>
-      val k = Tables.dfSpread(s, dir, "events")
-        .groupBy(col("user_id"), col("event_type"),
-          date_trunc("hour", col("ts")).as("hb"))
-        .agg(min(col("ts")).as("first_ts"), count(lit(1)).as("c"))
-      k.groupBy(col("event_type"))
-        .agg(sum(col("c")).as("n_events"),
-          count(lit(1)).as("n_kept"),
-          (sum(col("c")) - count(lit(1))).as("n_removed"),
-          round((sum(col("c")) - count(lit(1))).cast("double") / sum(col("c")), 6)
-            .as("dup_rate"))
-        .orderBy(col("event_type"))
-    },
+      FROM k GROUP BY event_type ORDER BY event_type"""),
 
     // ------------------ centroid outlier screen (p110)
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
 
 /** Pipeline coverage batch 3 — the curation stages a 100-TB training-data
@@ -202,20 +201,13 @@ object PipelineQueries3 {
     // key; the rank window is bounded per stratum. At 100 TB with very hot
     // strata, pre-filter with a digest-prefix predicate so each stratum
     // ships only ~k rows into the window.
-    QueryDef("p21_sample_stratified", Some("""
+    QueryDef.sql("p21_sample_stratified", """
       SELECT lang, doc_id, rn FROM (
         SELECT lang, doc_id,
                row_number() OVER (PARTITION BY lang
                  ORDER BY md5(CAST(doc_id AS VARCHAR) || ':graft'), doc_id) AS rn
         FROM documents) t
-      WHERE rn <= 5 ORDER BY lang, doc_id""")) { (s, dir) =>
-      Tables.dfSpread(s, dir, "documents")
-        .withColumn("rn", row_number().over(Window.partitionBy(col("lang"))
-          .orderBy(md5(concat(col("doc_id").cast("string"), lit(":graft"))), col("doc_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("lang"), col("doc_id"), col("rn"))
-        .orderBy(col("lang"), col("doc_id"))
-    },
+      WHERE rn <= 5 ORDER BY lang, doc_id"""),
 
     // ------------------------------------------------- repetition quality
 

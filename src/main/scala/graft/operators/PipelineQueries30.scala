@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -144,7 +144,7 @@ object PipelineQueries30 {
     // aggregation scan of that table (violations are when()-counts, the
     // duplicate-PK rule rides the same scan as count distinct); the orphan
     // rule is one anti join. The report is a union of 1-row frames.
-    QueryDef("p116_dq_rules", Some("""
+    QueryDef.sql("p116_dq_rules", """
       WITH cust AS (
         SELECT count(*) AS n, count(*) FILTER (WHERE c_acctbal < 0) AS v
         FROM customer),
@@ -179,45 +179,7 @@ object PipelineQueries30 {
         UNION ALL SELECT 'r08_part_nonpositive_price', 'part', n, v FROM pa)
       SELECT rule, tbl, CAST(n AS BIGINT) AS n_rows, CAST(v AS BIGINT) AS n_violations,
              round(CAST(v AS DOUBLE) / n, 6) AS violation_rate
-      FROM rules ORDER BY rule""")) { (s, dir) =>
-      def rows(df: DataFrame, tbl: String, n: Column, rules: (String, Column)*) = {
-        val agg = df.agg(n.as("n"),
-          rules.zipWithIndex.map { case ((_, v), i) => v.as(s"v$i") }: _*)
-        agg.select(explode(array(rules.zipWithIndex.map { case ((name, _), i) =>
-          struct(lit(name).as("rule"), lit(tbl).as("tbl"),
-            col("n"), col(s"v$i").as("v"))
-        }: _*)).as("r")).select(col("r.rule"), col("r.tbl"), col("r.n"), col("r.v"))
-      }
-      val cust = rows(Tables.df(s, dir, "customer"), "customer", count(lit(1)),
-        "r01_customer_negative_acctbal" -> count(when(col("c_acctbal") < 0, 1)))
-      val li = rows(Tables.dfSpread(s, dir, "lineitem"), "lineitem", count(lit(1)),
-        "r02_lineitem_discount_high" -> count(when(col("l_discount") > 0.08, 1)),
-        "r03_lineitem_quantity_range" ->
-          count(when(col("l_quantity") <= 0 || col("l_quantity") > 50, 1)))
-      val ord = rows(Tables.df(s, dir, "orders"), "orders", count(lit(1)),
-        "r05_orders_duplicate_pk" ->
-          (count(lit(1)) - countDistinct(col("o_orderkey"))))
-      val orph = Tables.df(s, dir, "orders")
-        .join(Tables.df(s, dir, "customer").select(col("c_custkey")),
-          col("o_custkey") === col("c_custkey"), "left_anti")
-        .agg(count(lit(1)).as("v"))
-        .crossJoin(Tables.df(s, dir, "orders").agg(count(lit(1)).as("n")))
-        .select(lit("r04_orders_orphan_custkey").as("rule"), lit("orders").as("tbl"),
-          col("n"), col("v"))
-      val doc = rows(Tables.df(s, dir, "documents"), "documents", count(lit(1)),
-        "r06_documents_nchars_mismatch" ->
-          count(when(col("n_chars") =!= length(col("text")), 1)))
-      val ev = rows(Tables.df(s, dir, "events"), "events", count(lit(1)),
-        "r07_events_value_extreme" -> count(when(col("value") > 450, 1)))
-      val pa = rows(Tables.df(s, dir, "part"), "part", count(lit(1)),
-        "r08_part_nonpositive_price" -> count(when(col("p_retailprice") <= 0, 1)))
-      cust.unionByName(li).unionByName(ord).unionByName(orph)
-        .unionByName(doc).unionByName(ev).unionByName(pa)
-        .select(col("rule"), col("tbl"), col("n").as("n_rows"),
-          col("v").as("n_violations"),
-          round(col("v").cast("double") / col("n"), 6).as("violation_rate"))
-        .orderBy(col("rule"))
-    },
+      FROM rules ORDER BY rule"""),
 
     // ------------------ training-shard manifest (p117)
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -78,7 +77,7 @@ object PipelineQueries34 {
     },
 
     // ------------------------------- source-precedence dedup flow (p129)
-    QueryDef("p129_dedup_source_precedence", Some("""
+    QueryDef.sql("p129_dedup_source_precedence", """
       WITH d AS (
         SELECT doc_id, source, md5(substr(text, 1, 128)) AS dg FROM documents),
       r AS (
@@ -90,21 +89,7 @@ object PipelineQueries34 {
              CAST(count(*) AS BIGINT) AS n_docs
       FROM r JOIN k USING (dg) WHERE r.rn > 1
       GROUP BY r.source, k.winner_source
-      ORDER BY loser_source, winner_source""")) { (s, dir) =>
-      val d = Tables.dfSpread(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          md5(substring(col("text"), 1, 128)).as("dg"))
-      // digest-partitioned window: cardinality ~= corpus, spread across the
-      // cluster; never a global sort
-      val r = d.withColumn("rn", row_number().over(
-        Window.partitionBy(col("dg")).orderBy(col("source"), col("doc_id"))))
-      val k = r.filter(col("rn") === 1)
-        .select(col("dg"), col("source").as("winner_source"))
-      r.filter(col("rn") > 1).join(k, "dg")
-        .groupBy(col("source").as("loser_source"), col("winner_source"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("loser_source"), col("winner_source"))
-    },
+      ORDER BY loser_source, winner_source"""),
 
     // ------------------------ Johnson–Lindenstrauss sketch audit (p130)
     QueryDef("p130_rp_sketch", Some(s"""

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -45,7 +44,7 @@ object PipelineQueries39 {
   val defs: Seq[QueryDef] = Seq(
 
     // ------------------- largest-remainder quota apportionment (p143)
-    QueryDef("p143_quota_apportionment", Some(s"""
+    QueryDef.sql("p143_quota_apportionment", s"""
       WITH c AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1),
       w AS (
@@ -71,28 +70,7 @@ object PipelineQueries39 {
       SELECT r.source, r.n, r.wt, r.ideal, r.base,
              CAST(r.base + CASE WHEN r.pri <= leftover.k THEN 1 ELSE 0 END
                   AS BIGINT) AS quota
-      FROM r CROSS JOIN leftover ORDER BY r.source""")) { (s, dir) =>
-      val c = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source")).agg(count(lit(1)).cast("bigint").as("n"))
-      val w = c.select(col("source"), col("n"),
-        round(sqrt(col("n").cast("double")), 6).as("wt"))
-      val tw = w.agg(Kit.dsum(col("wt"), 6).as("t"))
-      val f = w.crossJoin(broadcast(tw))
-        .select(col("source"), col("n"), col("wt"),
-          round(col("wt") / col("t") * Seats, 6).as("ideal"))
-        .select(col("source"), col("n"), col("wt"), col("ideal"),
-          floor(col("ideal")).cast("bigint").as("base"),
-          round(col("ideal") - floor(col("ideal")), 6).as("rem"))
-      val leftover = f.agg((lit(Seats) - sum(col("base"))).as("k"))
-      // |S|-row apportionment frame (whitelisted bounded window)
-      val r = f.withColumn("pri",
-        row_number().over(Window.orderBy(col("rem").desc, col("source"))))
-      r.crossJoin(broadcast(leftover))
-        .select(col("source"), col("n"), col("wt"), col("ideal"), col("base"),
-          (col("base") + when(col("pri") <= col("k"), 1L).otherwise(0L))
-            .cast("bigint").as("quota"))
-        .orderBy(col("source"))
-    },
+      FROM r CROSS JOIN leftover ORDER BY r.source"""),
 
     // --------------- DP noisy counts + utility audit (p144, eps = 1)
     QueryDef("p144_dp_noisy_counts", Some("""
@@ -130,7 +108,7 @@ object PipelineQueries39 {
     },
 
     // --------------------------- entropy l-diversity screen (p145)
-    QueryDef("p145_l_diversity", Some("""
+    QueryDef.sql("p145_l_diversity", """
       WITH cell AS (
         SELECT event_type, CAST(ts AS DATE) AS d,
                CAST(floor(value / 10) AS BIGINT) AS vb,
@@ -157,30 +135,5 @@ object PipelineQueries39 {
                AS fail_entropy,
              round(CAST(sum(CASE WHEN grp.n_users < l.l THEN grp.n_rows ELSE 0 END)
                         AS DOUBLE) / sum(grp.n_rows), 6) AS rows_at_risk_share
-      FROM grp CROSS JOIN l GROUP BY l.l ORDER BY l.l""")) { (s, dir) =>
-      import s.implicits._
-      val cell = Tables.df(s, dir, "events")
-        .groupBy(col("event_type"), col("ts").cast("date").as("d"),
-          floor(col("value") / 10).cast("bigint").as("vb"), col("user_id"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val gw = Window.partitionBy(col("event_type"), col("d"), col("vb"))
-      val withP = cell.withColumn("p",
-        col("c").cast("double") / sum(col("c")).over(gw))
-      val grp = withP
-        .groupBy(col("event_type"), col("d"), col("vb"))
-        .agg(count(lit(1)).cast("bigint").as("n_users"),
-          sum(col("c")).cast("bigint").as("n_rows"),
-          round(exp(Kit.rsum(-col("p") * log(col("p")), 9)), 6).as("ent_l"))
-      val ls = Seq(2, 3, 5).toDF("l")
-      grp.crossJoin(broadcast(ls))
-        .groupBy(col("l"))
-        .agg(count(lit(1)).cast("bigint").as("n_groups"),
-          sum(when(col("n_users") < col("l"), 1).otherwise(0)).cast("bigint")
-            .as("fail_distinct"),
-          sum(when(col("ent_l") < col("l"), 1).otherwise(0)).cast("bigint")
-            .as("fail_entropy"),
-          round(sum(when(col("n_users") < col("l"), col("n_rows")).otherwise(0L))
-            .cast("double") / sum(col("n_rows")), 6).as("rows_at_risk_share"))
-        .orderBy(col("l"))
-    })
+      FROM grp CROSS JOIN l GROUP BY l.l ORDER BY l.l"""))
 }

@@ -292,7 +292,7 @@ object PipelineQueries4 {
     // Scale shape: one partial-aggregated groupBy on (source, lang); the
     // windows then run over per-source language distributions (bounded by
     // the number of languages, never by corpus size).
-    QueryDef("p27_source_mix", Some("""
+    QueryDef.sql("p27_source_mix", """
       WITH c AS (SELECT source, lang, count(*) AS n FROM documents GROUP BY source, lang),
       r AS (SELECT source, lang, n,
               sum(n) OVER (PARTITION BY source) AS tot,
@@ -303,21 +303,7 @@ object PipelineQueries4 {
              CAST(count(*) AS BIGINT) AS n_langs,
              round(sum(0.0 - (CAST(n AS DOUBLE) / tot) * ln(CAST(n AS DOUBLE) / tot)), 6) AS lang_entropy,
              min(CASE WHEN rn = 1 THEN lang END) AS top_lang
-      FROM r GROUP BY source ORDER BY source""")) { (s, dir) =>
-      val c = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
-      val share = col("n").cast("double") / col("tot")
-      val r = c
-        .withColumn("tot", sum(col("n")).over(Window.partitionBy(col("source"))))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("source")).orderBy(col("n").desc, col("lang"))))
-      r.groupBy(col("source"))
-        .agg(max(col("tot")).as("n_docs"),
-          count(lit(1)).as("n_langs"),
-          round(sum(lit(0.0) - share * log(share)), 6).as("lang_entropy"),
-          min(when(col("rn") === 1, col("lang"))).as("top_lang"))
-        .orderBy(col("source"))
-    },
+      FROM r GROUP BY source ORDER BY source"""),
 
     // ------------------------------------------------ sequence packing
 

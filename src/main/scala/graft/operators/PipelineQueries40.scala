@@ -92,7 +92,7 @@ object PipelineQueries40 {
     },
 
     // ----------------------- retention-policy simulation (p147)
-    QueryDef("p147_retention_policy", Some("""
+    QueryDef.sql("p147_retention_policy", """
       WITH wm AS (SELECT max(ts) AS mx FROM events),
       r AS (
         SELECT event_type, ts,
@@ -114,28 +114,7 @@ object PipelineQueries40 {
                AS evicted,
              round(CAST(sum(CASE WHEN fate = 'evicted' THEN 1 ELSE 0 END)
                         AS DOUBLE) / count(*), 6) AS evicted_share
-      FROM cls GROUP BY event_type ORDER BY event_type""")) { (s, dir) =>
-      val ev = Tables.df(s, dir, "events")
-      val wm = ev.agg(max(col("ts")).as("mx"))
-      val r = ev.select(col("event_type"), col("ts"),
-        row_number().over(Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id"))).as("rk"))
-      val cls = r.crossJoin(broadcast(wm))
-        .select(col("event_type"),
-          when(col("rk") <= 5, "last_k")
-            .when(col("ts") >= col("mx") - expr("INTERVAL 7 DAY"), "window")
-            .otherwise("evicted").as("fate"))
-      cls.groupBy(col("event_type"))
-        .agg(sum(when(col("fate") === "last_k", 1).otherwise(0)).cast("bigint")
-          .as("kept_last_k"),
-          sum(when(col("fate") === "window", 1).otherwise(0)).cast("bigint")
-            .as("kept_window"),
-          sum(when(col("fate") === "evicted", 1).otherwise(0)).cast("bigint")
-            .as("evicted"),
-          round(sum(when(col("fate") === "evicted", 1).otherwise(0))
-            .cast("double") / count(lit(1)), 6).as("evicted_share"))
-        .orderBy(col("event_type"))
-    },
+      FROM cls GROUP BY event_type ORDER BY event_type"""),
 
     // ------------------ event-time disorder / watermark audit (p148)
     QueryDef("p148_watermark_audit", Some("""

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.expressions.Window
 
 /** Pipeline coverage batch 41 — monitoring / data-forensics tier: the checks
   * that run CONTINUOUSLY over a production corpus and page someone.

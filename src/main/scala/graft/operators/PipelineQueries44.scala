@@ -87,7 +87,7 @@ object PipelineQueries44 {
     },
 
     // --------------------- Cramér–von Mises two-sample (p162)
-    QueryDef("p162_cvm_two_sample", Some("""
+    QueryDef.sql("p162_cvm_two_sample", """
       WITH vv AS (
         SELECT value AS v,
                sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cx,
@@ -109,25 +109,7 @@ object PipelineQueries44 {
       SELECT n, m,
              round(CAST(n AS DOUBLE) * m / ((n + m) * CAST(n + m AS DOUBLE))
                * CAST(sum(term) AS DOUBLE), 6) AS cvm_t
-      FROM terms, tot GROUP BY n, m""")) { (s, dir) =>
-      val vv = Kit.clickViewCounts(Tables.df(s, dir, "events"))
-      val w = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = vv
-        .withColumn("t", col("cx") + col("cy"))
-        .withColumn("cumx", sum(col("cx")).over(w))
-        .withColumn("cumy", sum(col("cy")).over(w))
-      val tot = vv.agg(sum(col("cx")).as("n"), sum(col("cy")).as("m"))
-      val d = col("cumx").cast("double") / col("n") -
-        col("cumy").cast("double") / col("m")
-      cum.crossJoin(broadcast(tot))
-        .select(col("n"), col("m"),
-          Kit.rdec(col("t") * d * d, 9).as("term"))
-        .groupBy(col("n"), col("m"))
-        .agg(round(col("n").cast("double") * col("m") /
-          ((col("n") + col("m")) * (col("n") + col("m")).cast("double")) *
-          sum(col("term")).cast("double"), 6).as("cvm_t"))
-    },
+      FROM terms, tot GROUP BY n, m"""),
 
     // --------------------- chunk-boundary dedup audit (p163)
     QueryDef("p163_chunk_boundary_audit", Some("""

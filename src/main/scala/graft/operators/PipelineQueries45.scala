@@ -55,7 +55,7 @@ object PipelineQueries45 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- deterministic bottom-k sample (p167)
-    QueryDef("p167_bottomk_sample", Some("""
+    QueryDef.sql("p167_bottomk_sample", """
       WITH r AS (
         SELECT doc_id, source, md5(CAST(doc_id AS VARCHAR)) AS rk
         FROM documents),
@@ -68,23 +68,7 @@ object PipelineQueries45 {
              round(CAST(coalesce(n_sample, 0) AS DOUBLE) / 500, 6) AS sample_share,
              round(CAST(n_total AS DOUBLE) / t, 6) AS corpus_share
       FROM src s LEFT JOIN samp ON samp.source = s.source, tot
-      ORDER BY source""")) { (s, dir) =>
-      val docs = Tables.df(s, dir, "documents")
-      val k = docs
-        .select(col("doc_id"), col("source"),
-          md5(col("doc_id").cast("string")).as("rk"))
-        .orderBy(col("rk"), col("doc_id")).limit(500)
-      val src = docs.groupBy(col("source")).agg(count(lit(1)).as("n_total"))
-      val samp = k.groupBy(col("source")).agg(count(lit(1)).as("n_sample"))
-      val tot = src.agg(sum(col("n_total")).as("t"))
-      src.join(samp, Seq("source"), "left").crossJoin(broadcast(tot))
-        .select(col("source"), col("n_total"),
-          coalesce(col("n_sample"), lit(0L)).as("n_sample"),
-          round(coalesce(col("n_sample"), lit(0L)).cast("double") / 500, 6)
-            .as("sample_share"),
-          round(col("n_total").cast("double") / col("t"), 6).as("corpus_share"))
-        .orderBy(col("source"))
-    },
+      ORDER BY source"""),
 
     // --------------------- held-out perplexity (p168)
     QueryDef("p168_heldout_perplexity", Some("""
@@ -192,7 +176,7 @@ object PipelineQueries45 {
     },
 
     // --------------------- stratified k-fold assignment (p170)
-    QueryDef("p170_stratified_kfold", Some("""
+    QueryDef.sql("p170_stratified_kfold", """
       WITH d AS (
         SELECT doc_id, lang,
                CASE WHEN n_chars < 200 THEN 'S'
@@ -209,26 +193,7 @@ object PipelineQueries45 {
       SELECT CAST(fold AS BIGINT) AS fold, CAST(sum(n) AS BIGINT) AS n_docs,
              round(max(abs(CAST(n AS DOUBLE) / t - 0.2)), 6) AS max_stratum_dev
       FROM cnt JOIN tot ON cnt.lang = tot.lang AND cnt.qb = tot.qb
-      GROUP BY fold ORDER BY fold""")) { (s, dir) =>
-      val d = Tables.df(s, dir, "documents").select(
-        col("doc_id"), col("lang"),
-        when(col("n_chars") < 200, "S")
-          .when(col("n_chars") < 400, "M").otherwise("L").as("qb"))
-      val byStratum = Window.partitionBy(col("lang"), col("qb"))
-        .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-      val f = d.withColumn("fold", (row_number().over(byStratum) - 1) % 5)
-      val cnt = f.groupBy(col("fold"), col("lang"), col("qb"))
-        .agg(count(lit(1)).as("n"))
-      val tot = cnt.groupBy(col("lang"), col("qb")).agg(sum(col("n")).as("t"))
-      cnt.join(tot, Seq("lang", "qb"))
-        .groupBy(col("fold"))
-        .agg(sum(col("n")).as("n_docs"),
-          round(max(abs(col("n").cast("double") / col("t") - 0.2)), 6)
-            .as("max_stratum_dev"))
-        .select(col("fold").cast("long").as("fold"), col("n_docs"),
-          col("max_stratum_dev"))
-        .orderBy(col("fold"))
-    },
+      GROUP BY fold ORDER BY fold"""),
 
     // --------------------- Fano-factor burstiness (p171)
     QueryDef("p171_fano_burstiness", Some("""

@@ -197,7 +197,7 @@ object PipelineQueries46 {
     },
 
     // --------------------- blocking-recall audit (p177)
-    QueryDef("p177_blocking_recall", Some("""
+    QueryDef.sql("p177_blocking_recall", """
       WITH d AS (
         SELECT doc_id, lang, CAST(floor(n_chars / 256.0) AS BIGINT) AS lb,
                md5(substr(lower(text), 1, 50)) AS ph
@@ -212,28 +212,10 @@ object PipelineQueries46 {
              WHERE ph IN (SELECT ph FROM truth))
       SELECT tp.n AS truth_pairs, bp.n AS blocked_pairs,
              round(CAST(bp.n AS DOUBLE) / tp.n, 6) AS recall
-      FROM tp, bp""")) { (s, dir) =>
-      val d = Tables.df(s, dir, "documents").select(
-        col("doc_id"), col("lang"),
-        floor(col("n_chars") / 256.0).cast("long").as("lb"),
-        md5(substring(lower(col("text")), 1, 50)).as("ph"))
-      val truth = d.groupBy(col("ph")).agg(count(lit(1)).as("m"))
-        .filter(col("m") > 1)
-      val cap = d.groupBy(col("ph"), col("lang"), col("lb"))
-        .agg(count(lit(1)).as("m")).filter(col("m") > 1)
-        .join(truth.select(col("ph")), Seq("ph"), "left_semi")
-      val tp = truth.agg(sum(col("m") * (col("m") - 1) / 2).as("truth_pairs"))
-      val bp = cap.agg(
-        coalesce(sum(col("m") * (col("m") - 1) / 2), lit(0L)).as("blocked_pairs"))
-      tp.crossJoin(bp).select(
-        col("truth_pairs").cast("long").as("truth_pairs"),
-        col("blocked_pairs").cast("long").as("blocked_pairs"),
-        round(col("blocked_pairs").cast("double") / col("truth_pairs"), 6)
-          .as("recall"))
-    },
+      FROM tp, bp"""),
 
     // --------------------- Bloom join-prefilter audit (p178)
-    QueryDef("p178_bloom_join_prefilter", Some("""
+    QueryDef.sql("p178_bloom_join_prefilter", """
       WITH members AS (
         SELECT DISTINCT o_orderkey AS k FROM orders
         WHERE o_orderpriority = '1-URGENT'),
@@ -260,37 +242,6 @@ object PipelineQueries46 {
                - (SELECT n_exact FROM ex) AS n_false_pass,
              round(1 - CAST(sum(CASE WHEN n_hit = 3 THEN nrows ELSE 0 END) AS DOUBLE)
                / sum(nrows), 6) AS scan_reduction
-      FROM hits""")) { (s, dir) =>
-      val members = Tables.df(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey").as("k")).distinct()
-      val ks = (0 until 3).map(lit(_))
-      def bit(j: org.apache.spark.sql.Column, k: org.apache.spark.sql.Column) =
-        substring(md5(concat(j.cast("string"), lit(":"), k.cast("string"))), 1, 3)
-      val bits = members.select(explode(array(ks: _*)).as("j"), col("k"))
-        .select(col("j"), bit(col("j"), col("k")).as("bit")).distinct()
-      // per-KEY probe (row counts carried alongside): the broadcast bit set
-      // is 4096-bounded regardless of build size, and the probe work is
-      // distinct-key-sized, not row-sized. A left join with an indicator —
-      // NOT left_semi — so zero-hit keys stay counted.
-      val keys = Tables.df(s, dir, "lineitem")
-        .groupBy(col("l_orderkey").as("k")).agg(count(lit(1)).as("nrows"))
-      val hits = keys
-        .select(col("k"), col("nrows"), explode(array(ks: _*)).as("j"))
-        .withColumn("bit", bit(col("j"), col("k")))
-        .join(broadcast(bits.withColumn("hit", lit(1))), Seq("j", "bit"), "left")
-        .groupBy(col("k"), col("nrows"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-      val ex = keys.join(members, Seq("k"), "left_semi")
-        .agg(sum(col("nrows")).as("n_exact"))
-      hits.agg(
-        sum(col("nrows")).as("n_probe_rows"),
-        sum(when(col("n_hit") === 3, col("nrows")).otherwise(0L)).as("n_bloom_pass"))
-        .crossJoin(broadcast(ex))
-        .select(col("n_probe_rows"), col("n_exact"), col("n_bloom_pass"),
-          (col("n_bloom_pass") - col("n_exact")).as("n_false_pass"),
-          round(lit(1) - col("n_bloom_pass").cast("double") /
-            col("n_probe_rows"), 6).as("scan_reduction"))
-    }
+      FROM hits""")
   )
 }

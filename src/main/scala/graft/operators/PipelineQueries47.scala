@@ -128,7 +128,7 @@ object PipelineQueries47 {
     },
 
     // --------------------- association-rule lift (p181)
-    QueryDef("p181_association_lift", Some("""
+    QueryDef.sql("p181_association_lift", """
       WITH b AS (
         SELECT DISTINCT user_id, event_type FROM events),
       n AS (SELECT count(DISTINCT user_id) AS n_users FROM events),
@@ -147,29 +147,7 @@ object PipelineQueries47 {
       JOIN ante la ON la.event_type = lhs
       JOIN ante lb ON lb.event_type = rhs
       CROSS JOIN n
-      ORDER BY lhs, rhs""")) { (s, dir) =>
-      val b = Tables.df(s, dir, "events")
-        .select(col("user_id"), col("event_type")).distinct()
-      val n = Tables.df(s, dir, "events")
-        .agg(count_distinct(col("user_id")).as("n_users"))
-      val ante = b.groupBy(col("event_type")).agg(count(lit(1)).as("ca"))
-      val x = b.alias("x")
-      val y = b.alias("y")
-      val pair = x.join(y, col("x.user_id") === col("y.user_id") &&
-          col("x.event_type") =!= col("y.event_type"))
-        .groupBy(col("x.event_type").as("lhs"), col("y.event_type").as("rhs"))
-        .agg(count(lit(1)).as("cab"))
-      pair
-        .join(broadcast(ante.select(col("event_type").as("lhs"), col("ca").as("cl"))), "lhs")
-        .join(broadcast(ante.select(col("event_type").as("rhs"), col("ca").as("cr"))), "rhs")
-        .crossJoin(broadcast(n))
-        .select(col("lhs"), col("rhs"),
-          round(col("cab").cast("double") / col("n_users"), 6).as("support"),
-          round(col("cab").cast("double") / col("cl"), 6).as("confidence"),
-          round((col("cab").cast("double") / col("cl")) /
-            (col("cr").cast("double") / col("n_users")), 6).as("lift"))
-        .orderBy(col("lhs"), col("rhs"))
-    },
+      ORDER BY lhs, rhs"""),
 
     // --------------------- CUPED variance reduction (p182)
     QueryDef("p182_cuped_adjustment", Some("""

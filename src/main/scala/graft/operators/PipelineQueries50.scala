@@ -271,7 +271,7 @@ object PipelineQueries50 {
     },
 
     // --------------------- user-activity overdispersion (p196)
-    QueryDef("p196_overdispersion", Some("""
+    QueryDef.sql("p196_overdispersion", """
       WITH uc AS (
         SELECT event_type, user_id, count(*) AS c
         FROM events GROUP BY event_type, user_id),
@@ -288,23 +288,7 @@ object PipelineQueries50 {
              round(((CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * sc / n_users)
                / (n_users - 1)) / (CAST(sc AS DOUBLE) / n_users), 4)
                AS dispersion
-      FROM m ORDER BY event_type""")) { (s, dir) =>
-      val uc = Tables.df(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("c"))
-      val m = uc.groupBy(col("event_type")).agg(
-        count(lit(1)).as("n_users"),
-        sum(col("c")).as("sc"),
-        sum(col("c") * col("c")).as("scc"))
-      val mean = col("sc").cast("double") / col("n_users")
-      val varC = (col("scc").cast("double") -
-        col("sc").cast("double") * col("sc") / col("n_users")) /
-        (col("n_users") - 1)
-      m.select(col("event_type"), col("n_users"),
-          round(mean, 6).as("mean_c"), round(varC, 6).as("var_c"),
-          round(varC / mean, 4).as("dispersion"))
-        .orderBy(col("event_type"))
-    },
+      FROM m ORDER BY event_type"""),
 
     // --------------------- curation Pareto curve (p197)
     QueryDef("p197_quality_pareto", Some(s"""
@@ -348,7 +332,7 @@ object PipelineQueries50 {
     },
 
     // --------------------- empirical-Bayes group shrinkage (p198)
-    QueryDef("p198_eb_shrinkage", Some("""
+    QueryDef.sql("p198_eb_shrinkage", """
       WITH g AS (
         SELECT source,
                CAST(count(*) AS BIGINT) AS n,
@@ -381,30 +365,5 @@ object PipelineQueries50 {
              round(grand + greatest(0, between_v - vbar)
                / (greatest(0, between_v - vbar) + gm.var_g / gm.n)
                * (gm.mean_g - grand), 6) AS eb_mean
-      FROM gm, gl ORDER BY gm.source""")) { (s, dir) =>
-      val g = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source")).agg(
-          count(lit(1)).as("n"),
-          sum(col("n_chars")).as("sx"),
-          sum(col("n_chars") * col("n_chars")).as("sxx"))
-      val gm = g.select(col("source"), col("n"),
-        (col("sx").cast("double") / col("n")).as("mean_g"),
-        ((col("sxx").cast("double") - col("sx").cast("double") * col("sx") /
-          col("n")) / (col("n") - 1)).as("var_g"))
-      val sMean = Kit.rsum(col("mean_g"), 9)
-      val glob = gm.agg(
-        count(lit(1)).as("k"),
-        (sMean / count(lit(1))).as("grand"),
-        (Kit.rsum(col("var_g") / col("n"), 9) / count(lit(1))).as("vbar"),
-        ((Kit.rsum(col("mean_g") * col("mean_g"), 9) - sMean * sMean / count(lit(1))) /
-          (count(lit(1)) - 1)).as("between_v"))
-      val tau2 = greatest(lit(0.0), col("between_v") - col("vbar"))
-      val b = tau2 / (tau2 + col("var_g") / col("n"))
-      gm.crossJoin(broadcast(glob))
-        .select(col("source"), col("n"), round(col("mean_g"), 6).as("raw_mean"),
-          round(b, 6).as("shrink_b"),
-          round(col("grand") + b * (col("mean_g") - col("grand")), 6)
-            .as("eb_mean"))
-        .orderBy(col("source"))
-    })
+      FROM gm, gl ORDER BY gm.source"""))
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -52,7 +51,7 @@ object PipelineQueries51 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- jackknife source influence (p199)
-    QueryDef("p199_jackknife_influence", Some("""
+    QueryDef.sql("p199_jackknife_influence", """
       WITH g AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n,
                CAST(sum(n_chars) AS BIGINT) AS sx
@@ -64,26 +63,12 @@ object PipelineQueries51 {
                AS mean_without,
              round(CAST(tot.ss - g.sx AS DOUBLE) / (tot.nn - g.n)
                - CAST(tot.ss AS DOUBLE) / tot.nn, 6) AS influence
-      FROM g, tot ORDER BY g.source""")) { (s, dir) =>
-      val g = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sx"))
-      val tot = g.agg(sum(col("n")).as("nn"), sum(col("sx")).as("ss"))
-      val without = (col("ss") - col("sx")).cast("double") /
-        (col("nn") - col("n"))
-      g.crossJoin(broadcast(tot))
-        .select(col("source"), col("n"),
-          round(col("sx").cast("double") / col("n"), 6).as("mean_g"),
-          round(without, 6).as("mean_without"),
-          round(without - col("ss").cast("double") / col("nn"), 6)
-            .as("influence"))
-        .orderBy(col("source"))
-    },
+      FROM g, tot ORDER BY g.source"""),
 
     // --------------------- SPRT sequential test (p200)
     // ln(p1/p0) = ln(0.22/0.18) and ln((1-p1)/(1-p0)) = ln(0.78/0.82),
     // 9dp-precomputed; boundaries ±ln((1-β)/α) = ±ln(19) at α=β=0.05.
-    QueryDef("p200_sprt_sequential", Some("""
+    QueryDef.sql("p200_sprt_sequential", """
       WITH daily AS (
         SELECT CAST(ts AS DATE) AS d,
                CAST(count(*) AS BIGINT) AS n,
@@ -109,34 +94,7 @@ object PipelineQueries51 {
                WHEN (SELECT xd FROM first_x) IS NULL THEN 'continue'
                WHEN (SELECT llr FROM crossed, first_x WHERE d = xd) > 0
                  THEN 'accept_h1'
-               ELSE 'accept_h0' END AS decision""")) { (s, dir) =>
-      val daily = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("k"))
-      // cumulation over the per-DAY frame — date-span bounded at any scale
-      val w = Window.orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val walk = daily.select(col("d"),
-        sum(Kit.rdec(col("k") * 0.200670695 + (col("n") - col("k")) * -0.050010421, 9))
-          .over(w).cast("double").as("llr"))
-      val crossed = walk.filter(abs(col("llr")) > 2.944438979)
-      val firstX = crossed.agg(min(col("d")).as("xd"))
-      val nDays = daily.agg(count(lit(1)).as("n_days"))
-      val finalLlr = walk.agg(round(expr("max_by(llr, d)"), 6).as("final_llr"))
-      val xLlr = crossed.crossJoin(broadcast(firstX))
-        .filter(col("d") === col("xd"))
-        .select(col("llr").as("xllr"))
-      nDays.crossJoin(broadcast(finalLlr))
-        .crossJoin(broadcast(firstX))
-        .join(broadcast(xLlr), lit(true), "left")
-        .select(col("n_days"), col("final_llr"),
-          coalesce(col("xd").cast("string"), lit("(none)"))
-            .as("first_cross_day"),
-          when(col("xd").isNull, "continue")
-            .when(col("xllr") > 0, "accept_h1")
-            .otherwise("accept_h0").as("decision"))
-    },
+               ELSE 'accept_h0' END AS decision"""),
 
     // --------------------- daily autocorrelation (p201)
     QueryDef("p201_daily_autocorrelation", Some("""
@@ -172,7 +130,7 @@ object PipelineQueries51 {
     },
 
     // --------------------- stratified design effect (p202)
-    QueryDef("p202_design_effect", Some("""
+    QueryDef.sql("p202_design_effect", """
       WITH g AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n,
                CAST(sum(n_chars) AS BIGINT) AS sx,
@@ -194,27 +152,7 @@ object PipelineQueries51 {
              round(within_v, 6) AS within_var,
              round(within_v / var_total, 6) AS deff,
              round(1 - within_v / var_total, 6) AS variance_reduction
-      FROM parts""")) { (s, dir) =>
-      val g = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sx"),
-          sum(col("n_chars") * col("n_chars")).as("sxx"))
-      val tot = g.agg(sum(col("n")).as("nn"), sum(col("sx")).as("ss"),
-        sum(col("sxx")).as("sss"))
-      val varTotal = (col("sss").cast("double") -
-        col("ss").cast("double") * col("ss") / col("nn")) / (col("nn") - 1)
-      val varG = (col("sxx").cast("double") -
-        col("sx").cast("double") * col("sx") / col("n")) / (col("n") - 1)
-      val parts = g.crossJoin(broadcast(tot))
-        .groupBy(col("nn"), col("sss"), col("ss"))
-        .agg(sum((col("n").cast("double") / col("nn")) * varG).as("within_v"))
-      parts.select(col("nn").as("n_docs"),
-        round(varTotal, 6).as("var_total"),
-        round(col("within_v"), 6).as("within_var"),
-        round(col("within_v") / varTotal, 6).as("deff"),
-        round(lit(1.0) - col("within_v") / varTotal, 6)
-          .as("variance_reduction"))
-    },
+      FROM parts"""),
 
     // --------------------- day-of-week seasonality (p203)
     QueryDef("p203_dow_seasonality", Some("""

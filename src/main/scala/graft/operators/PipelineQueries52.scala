@@ -116,7 +116,7 @@ object PipelineQueries52 {
     },
 
     // --------------------- Simpson's-paradox audit (p206)
-    QueryDef("p206_simpsons_audit", Some("""
+    QueryDef.sql("p206_simpsons_audit", """
       WITH u AS (
         SELECT event_type, user_id,
                CAST(count(*) AS BIGINT) AS x,
@@ -150,30 +150,7 @@ object PipelineQueries52 {
              CASE WHEN ((g.sxy - CAST(g.sx AS DOUBLE) * g.sy / g.n)
                / (CAST(g.sxx AS DOUBLE) - CAST(g.sx AS DOUBLE) * g.sx / g.n))
                * ps.pooled_slope < 0 THEN 1 ELSE 0 END AS sign_flip
-      FROM grp g, ps ORDER BY g.event_type""")) { (s, dir) =>
-      val u = Tables.df(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("x"),
-          (Kit.rsum(col("value"), 2) /
-            count(lit(1))).as("y"))
-      val cells = u.select(col("event_type"), col("x"),
-        Kit.rdec(col("y"), 6).as("y"))
-      def suff(df: org.apache.spark.sql.RelationalGroupedDataset) = df.agg(
-        count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("x") * col("y")).cast("double").as("sxy"))
-      def slope = (col("sxy") - col("sx").cast("double") * col("sy") / col("n")) /
-        (col("sxx").cast("double") - col("sx").cast("double") * col("sx") / col("n"))
-      val pooled = suff(cells.groupBy()).select(slope.as("pooled_slope"))
-      suff(cells.groupBy(col("event_type")))
-        .crossJoin(broadcast(pooled))
-        .select(col("event_type"), col("n").as("n_users"),
-          round(slope, 6).as("slope_within"),
-          round(col("pooled_slope"), 6).as("slope_pooled"),
-          when(slope * col("pooled_slope") < 0, 1).otherwise(0).as("sign_flip"))
-        .orderBy(col("event_type"))
-    },
+      FROM grp g, ps ORDER BY g.event_type"""),
 
     // --------------------- simhash bit-bias audit (p207)
     QueryDef("p207_simhash_bit_bias", Some("""

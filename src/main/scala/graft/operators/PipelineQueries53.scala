@@ -115,7 +115,7 @@ object PipelineQueries53 {
     },
 
     // --------------------- Wilson LCB source ranking (p212)
-    QueryDef("p212_wilson_ranking", Some("""
+    QueryDef.sql("p212_wilson_ranking", """
       WITH s AS (
         SELECT source, count(*) AS n,
                sum(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS k
@@ -134,25 +134,7 @@ object PipelineQueries53 {
              round(p, 6) AS pass_rate, round(wilson_lcb, 6) AS wilson_lcb,
              CAST(row_number() OVER (ORDER BY wilson_lcb DESC, source)
                AS BIGINT) AS rank
-      FROM lcb ORDER BY rank""")) { (s, dir) =>
-      val z = lit(1.959963985)
-      val stats = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source")).agg(
-          count(lit(1)).as("n"),
-          sum(when(col("n_chars") >= 300, 1L).otherwise(0L)).as("k"))
-        .withColumn("p", col("k").cast("double") / col("n"))
-      val lcb = (col("p") + z * z / (lit(2) * col("n"))
-        - z * sqrt(col("p") * (lit(1) - col("p")) / col("n")
-          + z * z / (lit(4.0) * col("n") * col("n"))))
-        ./(lit(1) + z * z / col("n"))
-      stats.withColumn("wilson_lcb", lcb)
-        .select(col("source"), col("n"), col("k"),
-          round(col("p"), 6).as("pass_rate"),
-          round(col("wilson_lcb"), 6).as("wilson_lcb"),
-          row_number().over(Window.orderBy(col("wilson_lcb").desc,
-            col("source"))).cast("long").as("rank"))
-        .orderBy(col("rank"))
-    },
+      FROM lcb ORDER BY rank"""),
 
     // --------------------- HyperLogLog distinct sketch (p213)
     QueryDef("p213_hll_sketch", Some("""
@@ -312,7 +294,7 @@ object PipelineQueries53 {
     },
 
     // --------------------- one-way ANOVA F (p215)
-    QueryDef("p215_anova_f", Some("""
+    QueryDef.sql("p215_anova_f", """
       WITH y AS (
         SELECT event_type,
                CAST(round(value, 2) AS DECIMAL(18,2)) AS y
@@ -343,31 +325,7 @@ object PipelineQueries53 {
                  / (k - 1))
                / ((CAST(ss_all AS DOUBLE) - CAST(s2n_all AS DOUBLE))
                  / (n_total - k)), 6) AS f_stat
-      FROM tot""")) { (s, dir) =>
-      // DECIMAL(18,2): wide enough for the 2dp values, and the square
-      // stays inside both engines' 38-digit decimal ceiling
-      val y = Tables.df(s, dir, "events")
-        .select(col("event_type"),
-          round(col("value"), 2).cast("decimal(18,2)").as("y"))
-      val g = y.groupBy(col("event_type")).agg(
-        count(lit(1)).as("n"), sum(col("y")).as("s"),
-        sum((col("y") * col("y")).cast("decimal(38,4)")).as("ss"))
-      // per-group s^2/n rounded into DECIMAL before the k-row reduce:
-      // no float sum order exists anywhere in the statistic
-      val terms = g.withColumn("s2n",
-        Kit.rdec(col("s").cast("double") * col("s").cast("double") / col("n"), 6))
-      val ssb = col("s2n_all").cast("double") -
-        col("s_all").cast("double") * col("s_all").cast("double") / col("n_total")
-      val ssw = col("ss_all").cast("double") - col("s2n_all").cast("double")
-      terms.agg(
-          count(lit(1)).as("k"), sum(col("n")).as("n_total"),
-          sum(col("s")).as("s_all"), sum(col("ss")).as("ss_all"),
-          sum(col("s2n")).as("s2n_all"))
-        .select(col("k").as("k_groups"), col("n_total"),
-          round(ssb, 2).as("ss_between"), round(ssw, 2).as("ss_within"),
-          round((ssb / (col("k") - 1)) / (ssw / (col("n_total") - col("k"))), 6)
-            .as("f_stat"))
-    },
+      FROM tot"""),
 
     // --------------------- NDCG@5 ranked-retrieval quality (p216)
     QueryDef("p216_ndcg_eval", Some("""

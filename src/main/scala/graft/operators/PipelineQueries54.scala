@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -66,7 +65,7 @@ object PipelineQueries54 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Wasserstein-1 length drift (p217)
-    QueryDef("p217_wasserstein_drift", Some("""
+    QueryDef.sql("p217_wasserstein_drift", """
       WITH vals AS (SELECT DISTINCT n_chars AS v FROM documents),
       srcs AS (SELECT source, count(*) AS n_s FROM documents GROUP BY source),
       tot AS (SELECT count(*) AS n_all FROM documents),
@@ -92,33 +91,7 @@ object PipelineQueries54 {
                  * (v_next - v), 9) AS DECIMAL(38,9)) AS piece
         FROM cdf WHERE v_next IS NOT NULL)
       SELECT source, round(CAST(sum(piece) AS DOUBLE), 6) AS w1
-      FROM seg GROUP BY source ORDER BY source""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vals = docs.select(col("n_chars").as("v")).distinct()
-      val srcs = docs.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
-      val tot = docs.agg(count(lit(1)).as("n_all"))
-      val gcnt = docs.groupBy(col("n_chars").as("v")).agg(count(lit(1)).as("c_all"))
-      val scnt = docs.groupBy(col("source"), col("n_chars").as("v"))
-        .agg(count(lit(1)).as("c_s"))
-      val grid = srcs.crossJoin(vals).join(gcnt, "v")
-        .join(scnt, Seq("source", "v"), "left")
-        .select(col("source"), col("n_s"), col("v"),
-          coalesce(col("c_s"), lit(0L)).as("c_s"), col("c_all"))
-      val w = Window.partitionBy(col("source")).orderBy(col("v"))
-      val cdf = grid.select(col("source"), col("n_s"), col("v"),
-        sum(col("c_s")).over(w).as("cum_s"),
-        sum(col("c_all")).over(w).as("cum_all"),
-        lead(col("v"), 1).over(w).as("v_next"))
-        .crossJoin(broadcast(tot))
-      cdf.filter(col("v_next").isNotNull)
-        .select(col("source"),
-          Kit.rdec(abs(col("cum_s").cast("double") / col("n_s")
-              - col("cum_all").cast("double") / col("n_all"))
-            * (col("v_next") - col("v")), 9).as("piece"))
-        .groupBy(col("source"))
-        .agg(round(sum(col("piece")).cast("double"), 6).as("w1"))
-        .orderBy(col("source"))
-    },
+      FROM seg GROUP BY source ORDER BY source"""),
 
     // --------------------- Calinski-Harabasz index (p218)
     QueryDef("p218_calinski_harabasz", Some("""
@@ -276,7 +249,7 @@ object PipelineQueries54 {
     },
 
     // --------------------- Kendall tau-b rank stability (p220)
-    QueryDef("p220_kendall_rank_stability", Some("""
+    QueryDef.sql("p220_kendall_rank_stability", """
       WITH s AS (
         SELECT source, count(*) AS n_docs, sum(n_chars) AS tot_chars,
                sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS en_cnt
@@ -306,36 +279,7 @@ object PipelineQueries54 {
                ELSE (CAST(c AS DOUBLE) - d)
                  / sqrt((CAST(n_pairs AS DOUBLE) - tq)
                    * (CAST(n_pairs AS DOUBLE) - tv)) END, 6) AS tau_b
-      FROM agg""")) { (s, dir) =>
-      val q = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("source")).agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("tot_chars"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("en_cnt"))
-        .select(col("source"),
-          (col("tot_chars").cast("double") / col("n_docs")).as("qual"),
-          (col("en_cnt").cast("double") / col("n_docs")).as("en_share"))
-      val a = q.alias("a"); val b = q.alias("b")
-      val dq = col("a.qual") - col("b.qual")
-      val dv = col("a.en_share") - col("b.en_share")
-      // standard tau-b tie counts: a pair tied on a variable counts toward
-      // that variable's tie correction regardless of the other variable;
-      // a completely-tied variable makes tau undefined -> reported as 0
-      val pairs = a.join(b, col("a.source") < col("b.source")).select(
-        when(dq * dv > 0, 1L).otherwise(0L).as("conc"),
-        when(dq * dv < 0, 1L).otherwise(0L).as("disc"),
-        when(col("a.qual") === col("b.qual"), 1L).otherwise(0L).as("tie_q"),
-        when(col("a.en_share") === col("b.en_share"), 1L).otherwise(0L).as("tie_v"))
-      pairs.agg(count(lit(1)).as("n_pairs"), sum(col("conc")).as("c"),
-          sum(col("disc")).as("d"), sum(col("tie_q")).as("tq"),
-          sum(col("tie_v")).as("tv"))
-        .select(col("n_pairs"), col("c").as("concordant"), col("d").as("discordant"),
-          col("tq").as("ties_quality"), col("tv").as("ties_enshare"),
-          round(when(col("tq") === col("n_pairs") || col("tv") === col("n_pairs"),
-              0.0)
-            .otherwise((col("c").cast("double") - col("d"))
-              / sqrt((col("n_pairs").cast("double") - col("tq"))
-                * (col("n_pairs").cast("double") - col("tv")))), 6).as("tau_b"))
-    },
+      FROM agg"""),
 
     // --------------------- Theil index decomposition (p221)
     QueryDef("p221_theil_decomposition", Some("""

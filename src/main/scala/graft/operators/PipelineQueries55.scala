@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -71,7 +70,7 @@ object PipelineQueries55 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Kruskal-Wallis H (p223)
-    QueryDef("p223_kruskal_wallis", Some("""
+    QueryDef.sql("p223_kruskal_wallis", """
       WITH vc AS (
         SELECT n_chars AS v, CAST(count(*) AS BIGINT) AS c
         FROM documents GROUP BY 1),
@@ -112,29 +111,10 @@ object PipelineQueries55 {
                ELSE h.h_raw / (CAST(1.0 AS DOUBLE)
                  - tie.tsum / (CAST(n AS DOUBLE) * n * n - n)) END, 6)
                AS h_tie_corrected
-      FROM h, tie""")) { (s, dir) =>
-      val (gs, tie) = Kit.rankSums(Tables.dfSpread(s, dir, "documents"), "source",
-        col("n_chars"))
-      val term = gs.select(col("source"), col("n_s"),
-        Kit.rdec(col("rsum").cast("double") * col("rsum").cast("double")
-          / col("n_s"), 6).as("r2n"))
-      val a = term.agg(count(lit(1)).cast("bigint").as("k"),
-        sum(col("n_s")).cast("bigint").as("n"),
-        sum(col("r2n")).cast("double").as("s_r2n"))
-      val h = a.select(col("k"), col("n"),
-        (lit(12.0) * (col("s_r2n") / (col("n") * (col("n") + lit(1.0))))
-          - lit(3.0) * (col("n") + lit(1.0))).as("h_raw"))
-      val tieDen = col("n").cast("double") * col("n") * col("n") - col("n")
-      h.crossJoin(broadcast(tie))
-        .select(col("k").as("k_sources"), col("n").as("n_docs"),
-          round(col("h_raw"), 6).as("h"),
-          round(when(col("tsum") >= tieDen, 0.0)
-            .otherwise(col("h_raw") / (lit(1.0) - col("tsum") / tieDen)), 6)
-            .as("h_tie_corrected"))
-    },
+      FROM h, tie"""),
 
     // --------------------- Brown-Forsythe variance homogeneity (p224)
-    QueryDef("p224_brown_forsythe", Some("""
+    QueryDef.sql("p224_brown_forsythe", """
       WITH med AS (
         SELECT source, median(n_chars) AS m FROM documents GROUP BY 1),
       z AS (
@@ -167,49 +147,10 @@ object PipelineQueries55 {
              round(agg.ssb, 6) AS ss_between, round(agg.ssw, 6) AS ss_within,
              round((agg.ssb / (tot.k - 1)) / (agg.ssw / (tot.n - tot.k)), 6)
                AS bf_f
-      FROM agg, tot""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val med = docs.groupBy(col("source"))
-        .agg(expr("percentile(n_chars, 0.5)").as("m"))
-      val z = docs.join(broadcast(med), "source")
-        .select(col("source"),
-          abs(col("n_chars").cast("double") - col("m")).as("z"))
-      val g = z.groupBy(col("source")).agg(
-        count(lit(1)).cast("bigint").as("n_s"),
-        sum(col("z").cast("decimal(19,1)")).cast("decimal(38,1)").as("sz"),
-        sum(col("z").cast("decimal(19,1)") * col("z").cast("decimal(19,1)"))
-          .cast("decimal(38,2)").as("szz"))
-      val tot = g.agg(count(lit(1)).cast("bigint").as("k"),
-        sum(col("n_s")).cast("bigint").as("n"),
-        sum(col("sz")).cast("double").as("sz_all"))
-      // parenthesized across the line break: an operator starting a
-      // continuation line is a new statement to the Scala parser, which
-      // silently drops the grand-mean term (caught by the oracle gate)
-      val zbarDiff = (col("sz").cast("double") / col("n_s")
-        - col("sz_all") / col("n"))
-      // k and n are carried THROUGH the per-source term frame instead of
-      // cross-joining `tot` a second time after the reduce: the same
-      // Dataset on both sides of that diamond makes Catalyst's self-join
-      // attribute dedup rebind sz_all inside the term projection (measured:
-      // ss_between read Σ n_s·z̄_s² — the grand-mean subtraction vanished)
-      val terms = g.crossJoin(broadcast(tot)).select(
-        col("k"), col("n"),
-        Kit.rdec(col("n_s") * zbarDiff * zbarDiff, 6).as("tb"),
-        Kit.rdec(col("szz").cast("double")
-          - col("sz").cast("double") * col("sz").cast("double") / col("n_s"), 6).as("tw"))
-      val agg = terms.agg(max(col("k")).as("k"), max(col("n")).as("n"),
-        sum(col("tb")).cast("double").as("ssb"),
-        sum(col("tw")).cast("double").as("ssw"))
-      agg
-        .select(col("k").as("k_sources"), col("n").as("n_docs"),
-          round(col("ssb"), 6).as("ss_between"),
-          round(col("ssw"), 6).as("ss_within"),
-          round((col("ssb") / (col("k") - 1))
-            / (col("ssw") / (col("n") - col("k"))), 6).as("bf_f"))
-    },
+      FROM agg, tot"""),
 
     // --------------------- Cliff's delta effect size (p225)
-    QueryDef("p225_cliffs_delta", Some("""
+    QueryDef.sql("p225_cliffs_delta", """
       WITH vc AS (
         SELECT n_chars AS v,
                CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
@@ -241,36 +182,7 @@ object PipelineQueries55 {
              CAST(tied AS BIGINT) AS pairs_tied,
              round((CAST(gt AS DOUBLE) - CAST(lt AS DOUBLE))
                / (CAST(n_en AS DOUBLE) * n_ot), 6) AS cliffs_delta
-      FROM a""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vc = docs.groupBy(col("n_chars").as("v")).agg(
-        sum(when(col("lang") === "en", 1L).otherwise(0L))
-          .cast("bigint").as("c_en"),
-        sum(when(col("lang") === "en", 0L).otherwise(1L))
-          .cast("bigint").as("c_ot"))
-      // pair counting over the value-domain-bounded cumulative frame —
-      // NEVER the n_en x n_ot row-level pair space
-      val below = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val cum = vc.select(col("v"), col("c_en"), col("c_ot"),
-        coalesce(sum(col("c_en")).over(below), lit(0L)).as("en_below"),
-        coalesce(sum(col("c_ot")).over(below), lit(0L)).as("ot_below"))
-      val a = cum.agg(
-        sum(col("c_en")).cast("bigint").as("n_en"),
-        sum(col("c_ot")).cast("bigint").as("n_ot"),
-        sum((col("c_en") * col("ot_below")).cast("decimal(38,0)"))
-          .cast("decimal(38,0)").as("gt"),
-        sum((col("c_ot") * col("en_below")).cast("decimal(38,0)"))
-          .cast("decimal(38,0)").as("lt"),
-        sum((col("c_en") * col("c_ot")).cast("decimal(38,0)"))
-          .cast("decimal(38,0)").as("tied"))
-      a.select(col("n_en"), col("n_ot"),
-        col("gt").cast("bigint").as("pairs_gt"),
-        col("lt").cast("bigint").as("pairs_lt"),
-        col("tied").cast("bigint").as("pairs_tied"),
-        round((col("gt").cast("double") - col("lt").cast("double"))
-          / (col("n_en").cast("double") * col("n_ot")), 6).as("cliffs_delta"))
-    },
+      FROM a"""),
 
     // --------------------- bigram richness / Yule's K (p226)
     QueryDef("p226_bigram_richness", Some("""

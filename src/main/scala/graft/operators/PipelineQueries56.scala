@@ -61,7 +61,7 @@ object PipelineQueries56 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Cochran-Armitage trend test (p229)
-    QueryDef("p229_cochran_armitage", Some("""
+    QueryDef.sql("p229_cochran_armitage", """
       WITH b AS (
         SELECT least(CAST(floor(n_chars / 140) AS BIGINT), 3) AS s,
                CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS en
@@ -85,29 +85,7 @@ object PipelineQueries56 {
       SELECT n AS n_docs, r AS n_en,
              round(t_stat, 6) AS t_stat, round(var_t, 6) AS var_t,
              round(t_stat / sqrt(var_t), 6) AS ca_z
-      FROM t""")) { (s, dir) =>
-      val b = Tables.dfSpread(s, dir, "documents").select(
-        least(floor(col("n_chars") / 140).cast("bigint"), lit(3L)).as("s"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("en"))
-      val g = b.groupBy(col("s")).agg(count(lit(1)).cast("bigint").as("n_b"),
-        sum(col("en")).cast("bigint").as("r_b"))
-      val a = g.agg(sum(col("n_b")).cast("bigint").as("n"),
-        sum(col("r_b")).cast("bigint").as("r"),
-        sum(col("s") * col("r_b")).cast("bigint").as("sr"),
-        sum(col("s") * col("n_b")).cast("bigint").as("sn"),
-        sum(col("s") * col("s") * col("n_b")).cast("bigint").as("ssn"))
-      val t = a.select(col("n"), col("r"),
-        (col("sr").cast("double") - col("sn").cast("double") * col("r") / col("n"))
-          .as("t_stat"),
-        ((col("r").cast("double") / col("n"))
-          * (lit(1.0) - col("r").cast("double") / col("n"))
-          * (col("ssn").cast("double") - col("sn").cast("double") * col("sn") / col("n")))
-          .as("var_t"))
-      t.select(col("n").as("n_docs"), col("r").as("n_en"),
-        round(col("t_stat"), 6).as("t_stat"),
-        round(col("var_t"), 6).as("var_t"),
-        round(col("t_stat") / sqrt(col("var_t")), 6).as("ca_z"))
-    },
+      FROM t"""),
 
     // --------------------- rank-biased overlap of token rankings (p230)
     QueryDef("p230_rbo_token_ranks", Some("""
@@ -181,7 +159,7 @@ object PipelineQueries56 {
     },
 
     // --------------------- Cohen's d / Hedges' g (p231)
-    QueryDef("p231_cohens_d", Some("""
+    QueryDef.sql("p231_cohens_d", """
       WITH g AS (
         SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS en,
                CAST(count(*) AS BIGINT) AS n,
@@ -208,35 +186,10 @@ object PipelineQueries56 {
              round(d, 6) AS cohens_d,
              round(d * (CAST(1.0 AS DOUBLE)
                - CAST(3.0 AS DOUBLE) / (4 * (n1 + n2) - 9)), 6) AS hedges_g
-      FROM e""")) { (s, dir) =>
-      val g = Tables.dfSpread(s, dir, "documents")
-        .groupBy(when(col("lang") === "en", 1).otherwise(0).as("en"))
-        .agg(count(lit(1)).cast("bigint").as("n"),
-          sum(col("n_chars")).cast("bigint").as("sx"),
-          sum(col("n_chars") * col("n_chars")).cast("bigint").as("sxx"))
-      val vExpr = (col("sxx").cast("double")
-        - col("sx").cast("double") * col("sx") / col("n")) / (col("n") - 1)
-      val w = g.agg(
-        max(when(col("en") === 1, col("n"))).as("n1"),
-        max(when(col("en") === 0, col("n"))).as("n2"),
-        max(when(col("en") === 1, col("sx").cast("double") / col("n"))).as("m1"),
-        max(when(col("en") === 0, col("sx").cast("double") / col("n"))).as("m2"),
-        max(when(col("en") === 1, vExpr)).as("v1"),
-        max(when(col("en") === 0, vExpr)).as("v2"))
-      val e = w.select(col("n1"), col("n2"), col("m1"), col("m2"),
-        ((col("m1") - col("m2"))
-          / sqrt(((col("n1") - 1) * col("v1") + (col("n2") - 1) * col("v2"))
-            / (col("n1") + col("n2") - 2))).as("d"))
-      e.select(col("n1").cast("bigint").as("n_en"),
-        col("n2").cast("bigint").as("n_other"),
-        round(col("m1"), 6).as("mean_en"), round(col("m2"), 6).as("mean_other"),
-        round(col("d"), 6).as("cohens_d"),
-        round(col("d") * (lit(1.0)
-          - lit(3.0) / (lit(4) * (col("n1") + col("n2")) - 9)), 6).as("hedges_g"))
-    },
+      FROM e"""),
 
     // --------------------- Wald-Wolfowitz runs test (p232)
-    QueryDef("p232_runs_test", Some("""
+    QueryDef.sql("p232_runs_test", """
       WITH dc AS (
         SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
         FROM events GROUP BY 1),
@@ -264,33 +217,7 @@ object PipelineQueries56 {
              round(mu, 6) AS expected_runs,
              round(CASE WHEN var_r <= 0 THEN 0.0
                ELSE (runs - mu) / sqrt(var_r) END, 6) AS runs_z
-      FROM z""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      val med = dc.agg(expr("percentile(c, 0.5)").as("m"))
-      val sgn = dc.crossJoin(broadcast(med))
-        .filter(col("c").cast("double") =!= col("m"))
-        .select(col("d"),
-          when(col("c").cast("double") > col("m"), 1L).otherwise(0L).as("up"))
-      // the lag runs over the per-DAY frame — bounded by the date span
-      val lagged = sgn.select(col("up"),
-        lag(col("up"), 1).over(Window.orderBy(col("d"))).as("prev"))
-      val a = lagged.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("up")).cast("bigint").as("n1"),
-        sum(lit(1L) - col("up")).cast("bigint").as("n2"),
-        (lit(1L) + sum(when(col("prev").isNotNull && col("up") =!= col("prev"),
-          1L).otherwise(0L))).cast("bigint").as("runs"))
-      val z = a.select(col("n"), col("n1"), col("n2"), col("runs"),
-        (lit(2.0) * col("n1") * col("n2") / col("n") + 1).as("mu"),
-        ((lit(2.0) * col("n1") * col("n2")
-          * (lit(2.0) * col("n1") * col("n2") - col("n")))
-          / (col("n").cast("double") * col("n") * (col("n") - 1))).as("var_r"))
-      z.select(col("n").as("n_days_used"), col("n1").as("n_above"),
-        col("n2").as("n_below"), col("runs"),
-        round(col("mu"), 6).as("expected_runs"),
-        round(when(col("var_r") <= 0, 0.0)
-          .otherwise((col("runs") - col("mu")) / sqrt(col("var_r"))), 6)
-          .as("runs_z"))
-    },
+      FROM z"""),
 
     // --------------------- Gries' deviation of proportions (p233)
     QueryDef("p233_gries_dp", Some("""

@@ -233,7 +233,7 @@ object PipelineQueries57 {
     },
 
     // --------------------- skewness / kurtosis shape audit (p239)
-    QueryDef("p239_shape_moments", Some("""
+    QueryDef.sql("p239_shape_moments", """
       WITH d AS (
         SELECT source, CAST(n_chars AS DECIMAL(9,0)) AS x FROM documents),
       s AS (
@@ -268,25 +268,10 @@ object PipelineQueries57 {
              round(g2, 6) AS kurt_g2_pop,
              round(((n + CAST(1.0 AS DOUBLE)) * g2 + 6) * (n - 1)
                / ((n - 2) * (CAST(n AS DOUBLE) - 3)), 6) AS kurt_g2_adj
-      FROM g ORDER BY source""")) { (s, dir) =>
-      val c = Kit.centralMoments(Kit.powerSums(Tables.dfSpread(s, dir, "documents"),
-        Seq("source"), col("n_chars"), 4))
-      val g = c.select(col("source"), col("n"), col("m2"),
-        (col("m3") / sqrt(col("m2") * col("m2") * col("m2"))).as("g1"),
-        (col("m4") / (col("m2") * col("m2")) - 3).as("g2"))
-      g.select(col("source"), col("n").as("n_docs"),
-          round(sqrt(col("m2")), 6).as("stddev_pop"),
-          round(col("g1"), 6).as("skew_g1_pop"),
-          round(col("g1") * sqrt(col("n").cast("double") * (col("n") - 1))
-            / (col("n") - 2), 6).as("skew_g1_adj"),
-          round(col("g2"), 6).as("kurt_g2_pop"),
-          round(((col("n") + lit(1.0)) * col("g2") + 6) * (col("n") - 1)
-            / ((col("n") - 2) * (col("n").cast("double") - 3)), 6).as("kurt_g2_adj"))
-        .orderBy(col("source"))
-    },
+      FROM g ORDER BY source"""),
 
     // --------------------- Hellinger length-histogram drift (p240)
-    QueryDef("p240_hellinger_drift", Some("""
+    QueryDef.sql("p240_hellinger_drift", """
       WITH b AS (
         SELECT source, CAST(floor(n_chars / 50) AS BIGINT) AS bkt
         FROM documents),
@@ -308,24 +293,6 @@ object PipelineQueries57 {
       SELECT source, round(bc, 6) AS bhattacharyya,
              round(sqrt(greatest(CAST(1.0 AS DOUBLE) - bc, 0.0)), 6)
                AS hellinger
-      FROM bc ORDER BY source""")) { (s, dir) =>
-      val b = Tables.dfSpread(s, dir, "documents")
-        .select(col("source"), floor(col("n_chars") / 50).cast("bigint").as("bkt"))
-      val sc = b.groupBy(col("source"), col("bkt"))
-        .agg(count(lit(1)).cast("bigint").as("c_s"))
-      val ns = sc.groupBy(col("source")).agg(sum(col("c_s")).cast("bigint").as("n_s"))
-      val gc = b.groupBy(col("bkt")).agg(count(lit(1)).cast("bigint").as("c_all"))
-      val tot = b.agg(count(lit(1)).cast("bigint").as("n_all"))
-      // absent (source, bkt) cells contribute sqrt(0*q) = 0 — no dense grid
-      val term = sc.join(ns, "source").join(gc, "bkt")
-        .crossJoin(broadcast(tot))
-        .select(col("source"),
-          Kit.rdec(sqrt((col("c_s").cast("double") / col("n_s"))
-            * (col("c_all").cast("double") / col("n_all"))), 9).as("t"))
-      term.groupBy(col("source")).agg(sum(col("t")).cast("double").as("bc"))
-        .select(col("source"), round(col("bc"), 6).as("bhattacharyya"),
-          round(sqrt(greatest(lit(1.0) - col("bc"), lit(0.0))), 6).as("hellinger"))
-        .orderBy(col("source"))
-    },
+      FROM bc ORDER BY source"""),
   )
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -78,7 +77,7 @@ object PipelineQueries58 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Gini / Lorenz length inequality (p241)
-    QueryDef("p241_gini_lorenz", Some("""
+    QueryDef.sql("p241_gini_lorenz", """
       WITH vc AS (
         SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS c
         FROM documents GROUP BY source, n_chars),
@@ -121,47 +120,10 @@ object PipelineQueries58 {
                AS bottom_half_share
       FROM tot JOIN s2 ON tot.source = s2.source
       JOIN lz ON tot.source = lz.source
-      ORDER BY tot.source""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vc = docs.groupBy(col("source"), col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      // the cumulation runs over the per-source distinct-length frame —
-      // value-domain-bounded at ANY corpus size (the p225/p141 class)
-      val ws = Window.partitionBy(col("source")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w = vc.select(col("source"), col("v"), col("c"),
-        sum(col("c")).over(ws).cast("bigint").as("f"),
-        sum(col("v").cast("decimal(9,0)") * col("c").cast("decimal(12,0)"))
-          .over(ws).cast("decimal(30,0)").as("cumt"))
-      val tot = Kit.powerSums(docs, Seq("source"), col("n_chars"), 1)
-        .withColumnRenamed("s1", "t")
-      val s2 = w.groupBy(col("source")).agg(
-        sum(col("v").cast("decimal(9,0)") * col("c").cast("decimal(12,0)")
-          * (lit(2) * (col("f") - col("c")) + col("c") + 1).cast("decimal(13,0)"))
-          .cast("decimal(38,0)").as("s2"))
-      val tk = tot.select(col("source"), col("n"), col("t"),
-        floor(col("n").cast("double") / 2).cast("bigint").as("k"))
-      val lz = tk.join(w.withColumnRenamed("source", "wsrc"),
-          col("wsrc") === col("source")
-            && col("f") - col("c") < col("k") && col("k") <= col("f"))
-        .select(col("source"),
-          (col("cumt") - col("v").cast("decimal(9,0)") * col("c").cast("decimal(12,0)")
-            + col("v").cast("decimal(9,0)")
-              * (col("k") - (col("f") - col("c"))).cast("decimal(12,0)"))
-            .cast("decimal(38,0)").as("chars_k"))
-      tot.join(s2, "source").join(lz, "source")
-        .select(col("source"), col("n").as("n_docs"),
-          col("t").cast("bigint").as("total_chars"),
-          round(col("s2").cast("double")
-            / (col("n").cast("double") * col("t").cast("double"))
-            - (col("n").cast("double") + 1) / col("n"), 6).as("gini"),
-          round(col("chars_k").cast("double") / col("t").cast("double"), 6)
-            .as("bottom_half_share"))
-        .orderBy(col("source"))
-    },
+      ORDER BY tot.source"""),
 
     // --------------------- Friedman test / Kendall's W (p242)
-    QueryDef("p242_friedman_test", Some("""
+    QueryDef.sql("p242_friedman_test", """
       WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
       ty AS (SELECT DISTINCT event_type AS et FROM events),
       cnt AS (SELECT CAST(ts AS DATE) AS day, event_type AS et,
@@ -195,38 +157,10 @@ object PipelineQueries58 {
              round((CAST(k AS DOUBLE) - 1)
                * (CAST(ssj AS DOUBLE) / CAST(ssd AS DOUBLE)), 6) AS friedman_q,
              round(CAST(ssj AS DOUBLE) / CAST(ssd AS DOUBLE) / n, 6) AS kendalls_w
-      FROM num, den, km, nn""")) { (s, dir) =>
-      val ev = Tables.df(s, dir, "events")
-      // dense day×type grid — date-span × type-cardinality bounded
-      val cell = Kit.dayTypeGrid(ev)
-      val b = cell.select(col("d").as("bday"), col("c").as("bc"))
-      val rk = cell.join(b, col("d") === col("bday"))
-        .groupBy(col("d"), col("et"))
-        .agg((sum(when(col("bc") < col("c"), 2L).otherwise(0L))
-          + sum(when(col("bc") === col("c"), 1L).otherwise(0L)) + 1)
-          .cast("bigint").as("r2"))
-      val km = Kit.eventTypes(ev).agg(count(lit(1)).cast("bigint").as("k"))
-      val nn = Kit.days(ev).agg(count(lit(1)).cast("bigint").as("n"))
-      val rj = rk.groupBy(col("et")).agg(sum(col("r2")).cast("bigint").as("r2j"))
-      val num = rj.crossJoin(broadcast(km)).crossJoin(broadcast(nn))
-        .agg(sum((col("r2j") - col("n") * (col("k") + 1)).cast("decimal(18,0)")
-          * (col("r2j") - col("n") * (col("k") + 1)).cast("decimal(18,0)"))
-          .cast("decimal(38,0)").as("ssj"))
-      val den = rk.crossJoin(broadcast(km))
-        .agg(sum((col("r2") - (col("k") + 1)).cast("decimal(18,0)")
-          * (col("r2") - (col("k") + 1)).cast("decimal(18,0)"))
-          .cast("decimal(38,0)").as("ssd"))
-      num.crossJoin(den).crossJoin(km).crossJoin(nn)
-        .select(col("n").as("n_days"), col("k").as("k_types"),
-          round((col("k").cast("double") - 1)
-            * (col("ssj").cast("double") / col("ssd").cast("double")), 6)
-            .as("friedman_q"),
-          round(col("ssj").cast("double") / col("ssd").cast("double")
-            / col("n"), 6).as("kendalls_w"))
-    },
+      FROM num, den, km, nn"""),
 
     // --------------------- Jonckheere-Terpstra ordered trend (p243)
-    QueryDef("p243_jonckheere_terpstra", Some("""
+    QueryDef.sql("p243_jonckheere_terpstra", """
       WITH vc AS (
         SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS c
         FROM documents GROUP BY source, n_chars),
@@ -284,71 +218,10 @@ object PipelineQueries58 {
              round(jts, 6) AS jt_stat, round(e_jt, 6) AS e_jt,
              round(var_jt, 6) AS var_jt,
              round((jts - e_jt) / sqrt(var_jt), 6) AS z
-      FROM fin""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vc = docs.groupBy(col("source"), col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val vals = vc.select(col("v")).distinct()
-      val srcs = docs.select(col("source")).distinct()
-      // dense source×value grid — value-domain × source-cardinality bounded;
-      // broadcast the few-row source side
-      val grid = vals.crossJoin(broadcast(srcs))
-        .join(vc, Seq("source", "v"), "left")
-        .select(col("source"), col("v"), coalesce(col("c"), lit(0L)).as("c"))
-      val ws = Window.partitionBy(col("source")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = grid.select(col("source"), col("v"), col("c"),
-        (sum(col("c")).over(ws).cast("bigint") - col("c")).as("fless"))
-      val h = cum.select(col("source").as("hsrc"), col("v").as("hv"),
-        col("c").as("hc"))
-      val jt = cum.join(h, col("v") === col("hv")
-          && col("source") < col("hsrc"))
-        .agg(sum(col("hc").cast("decimal(12,0)")
-          * (lit(2) * col("fless") + col("c")).cast("decimal(14,0)"))
-          .cast("decimal(38,0)").as("jt2"))
-      val gs = docs.groupBy(col("source"))
-        .agg(count(lit(1)).cast("bigint").as("ng"))
-      val tg = gs.agg(
-        count(lit(1)).cast("bigint").as("kgrp"),
-        sum(col("ng")).cast("bigint").as("n"),
-        sum(col("ng").cast("decimal(12,0)") * col("ng").cast("decimal(12,0)"))
-          .cast("decimal(38,0)").as("sn2"),
-        sum(col("ng").cast("decimal(12,0)") * (col("ng") - 1).cast("decimal(12,0)"))
-          .cast("decimal(38,0)").as("g2"),
-        sum(col("ng").cast("decimal(12,0)") * (col("ng") - 1).cast("decimal(12,0)")
-          * (col("ng") - 2).cast("decimal(12,0)")).cast("decimal(38,0)").as("g3"),
-        sum(col("ng").cast("decimal(12,0)") * (col("ng") - 1).cast("decimal(12,0)")
-          * (lit(2) * col("ng") + 5).cast("decimal(13,0)"))
-          .cast("decimal(38,0)").as("g25"))
-      val tvv = vc.groupBy(col("v")).agg(sum(col("c")).cast("bigint").as("tc"))
-      val tv = tvv.agg(
-        sum(col("tc").cast("decimal(12,0)") * (col("tc") - 1).cast("decimal(12,0)"))
-          .cast("decimal(38,0)").as("t2"),
-        sum(col("tc").cast("decimal(12,0)") * (col("tc") - 1).cast("decimal(12,0)")
-          * (col("tc") - 2).cast("decimal(12,0)")).cast("decimal(38,0)").as("t3"),
-        sum(col("tc").cast("decimal(12,0)") * (col("tc") - 1).cast("decimal(12,0)")
-          * (lit(2) * col("tc") + 5).cast("decimal(13,0)"))
-          .cast("decimal(38,0)").as("t25"))
-      val fin = jt.crossJoin(tg).crossJoin(tv).select(
-        col("kgrp"), col("n"),
-        (col("jt2").cast("double") / 2).as("jts"),
-        ((col("n").cast("double") * col("n") - col("sn2").cast("double")) / 4)
-          .as("e_jt"),
-        ((col("n").cast("double") * (col("n") - 1)
-            * (lit(2) * col("n").cast("double") + 5)
-          - col("g25").cast("double") - col("t25").cast("double")) / 72
-          + col("g3").cast("double") * col("t3").cast("double")
-            / (lit(36.0) * col("n") * (col("n") - 1) * (col("n") - 2))
-          + col("g2").cast("double") * col("t2").cast("double")
-            / (lit(8.0) * col("n") * (col("n") - 1))).as("var_jt"))
-      fin.select(col("kgrp").as("n_groups"), col("n").as("n_docs"),
-        round(col("jts"), 6).as("jt_stat"), round(col("e_jt"), 6).as("e_jt"),
-        round(col("var_jt"), 6).as("var_jt"),
-        round((col("jts") - col("e_jt")) / sqrt(col("var_jt")), 6).as("z"))
-    },
+      FROM fin"""),
 
     // --------------------- k-sample Anderson-Darling (p244)
-    QueryDef("p244_ad_ksample", Some("""
+    QueryDef.sql("p244_ad_ksample", """
       WITH vc AS (
         SELECT lang, n_chars AS v, CAST(count(*) AS BIGINT) AS c
         FROM documents GROUP BY lang, n_chars),
@@ -396,51 +269,7 @@ object PipelineQueries58 {
                * CAST(tot.sc AS DOUBLE), 6) AS a2akn,
              CAST(tot.k - 1 AS BIGINT) AS a2_null_mean
       FROM comp, tot, nn
-      ORDER BY comp.lang""")) { (s, dir) =>
-      val docs = Tables.dfSpread(s, dir, "documents")
-      val vc = docs.groupBy(col("lang"), col("n_chars").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val pool = vc.groupBy(col("v")).agg(sum(col("c")).cast("bigint").as("l"))
-      val langs = vc.groupBy(col("lang")).agg(sum(col("c")).cast("bigint").as("ni"))
-      val nn = pool.agg(sum(col("l")).cast("bigint").as("n"))
-      // pooled mid-cumulative over the distinct-length frame —
-      // value-domain-bounded at ANY corpus size (the p141/p155 class)
-      val wp = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val pb = pool.select(col("v"), col("l"),
-        (lit(2) * sum(col("l")).over(wp).cast("bigint") - col("l")).as("b2"))
-      val grid = pb.crossJoin(broadcast(langs))
-        .join(vc, Seq("lang", "v"), "left")
-        .select(col("lang"), col("ni"), col("v"), col("l"), col("b2"),
-          coalesce(col("c"), lit(0L)).as("m"))
-      val wl = Window.partitionBy(col("lang")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val mg = grid.select(col("lang"), col("ni"), col("v"), col("l"), col("b2"),
-        (lit(2) * sum(col("m")).over(wl).cast("bigint") - col("m")).as("m2"))
-      val x = mg.crossJoin(broadcast(nn)).filter(col("l") < col("n"))
-        .select(col("lang"), col("ni"), col("l"), col("b2"), col("n"),
-          (col("n").cast("decimal(14,0)") * col("m2").cast("decimal(14,0)")
-            - col("ni").cast("decimal(14,0)") * col("b2").cast("decimal(14,0)"))
-            .as("d"))
-      val term = x.select(col("lang"), col("ni"),
-        Kit.rdec(col("l").cast("double") * col("d").cast("double")
-            * col("d").cast("double")
-          / (col("n").cast("double")
-            * (col("b2").cast("double") * (lit(2) * col("n").cast("double") - col("b2"))
-              - col("n").cast("double") * col("l"))), 12).as("t"))
-      val comp = term.groupBy(col("lang")).agg(
-        max(col("ni")).cast("bigint").as("ni"),
-        Kit.rdec(sum(col("t")).cast("double") / max(col("ni")), 9).as("comp"))
-      val tot = comp.agg(count(lit(1)).cast("bigint").as("k"),
-        sum(col("comp")).cast("decimal(38,9)").as("sc"))
-      comp.crossJoin(broadcast(tot)).crossJoin(broadcast(nn))
-        .select(col("lang"), col("ni").as("n_lang"),
-          round(col("comp").cast("double"), 6).as("ad_component"),
-          round((col("n").cast("double") - 1) / col("n")
-            * col("sc").cast("double"), 6).as("a2akn"),
-          (col("k") - 1).cast("bigint").as("a2_null_mean"))
-        .orderBy(col("lang"))
-    },
+      ORDER BY comp.lang"""),
 
     // --------------------- Gumbel block-maxima fit (p245)
     QueryDef("p245_gumbel_maxima", Some("""
@@ -497,7 +326,7 @@ object PipelineQueries58 {
     },
 
     // --------------------- Pettitt rank changepoint (p246)
-    QueryDef("p246_pettitt_changepoint", Some("""
+    QueryDef.sql("p246_pettitt_changepoint", """
       WITH dc AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
                   FROM events GROUP BY 1),
       vv AS (
@@ -521,31 +350,6 @@ object PipelineQueries58 {
                2 * exp(-(CAST(6 AS DOUBLE) * kmax * kmax)
                  / (CAST(t AS DOUBLE) * t * t + CAST(t AS DOUBLE) * t))), 6)
                AS p_approx
-      FROM cp, k, nn""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      val b = dc.select(col("d").as("bd"), col("c").as("bc"))
-      // the day-pair grid is date-span-bounded at ANY corpus size (p237)
-      val vv = dc.crossJoin(broadcast(b))
-        .groupBy(col("d"))
-        .agg(sum(when(col("c") > col("bc"), 1L)
-          .when(col("c") < col("bc"), -1L).otherwise(0L))
-          .cast("bigint").as("vsum"))
-      // the prefix sum runs over the per-DAY frame — date-span-bounded
-      val wu = Window.orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val u = vv.select(col("d"), sum(col("vsum")).over(wu).cast("bigint").as("ut"))
-      val nn = dc.agg(count(lit(1)).cast("bigint").as("t"), max(col("d")).as("dmax"))
-      val uN = u.crossJoin(broadcast(nn)).filter(col("d") < col("dmax"))
-      val k = uN.agg(max(abs(col("ut"))).cast("bigint").as("kmax"))
-      val cp = uN.crossJoin(broadcast(k))
-        .filter(abs(col("ut")) === col("kmax"))
-        .agg(min(col("d")).as("cp_date"))
-      cp.crossJoin(k).crossJoin(nn)
-        .select(col("cp_date"), col("t").as("n_days"), col("kmax").as("k_stat"),
-          round(least(lit(1.0),
-            lit(2) * exp(-(lit(6.0) * col("kmax") * col("kmax"))
-              / (col("t").cast("double") * col("t") * col("t")
-                + col("t").cast("double") * col("t")))), 6).as("p_approx"))
-    }
+      FROM cp, k, nn""")
   )
 }

@@ -166,7 +166,7 @@ object PipelineQueries59 {
     },
 
     // --------------------- bias-corrected Cramer's V (p249)
-    QueryDef("p249_cramers_v", Some("""
+    QueryDef.sql("p249_cramers_v", """
       WITH o AS (
         SELECT lang, source, CAST(count(*) AS BIGINT) AS c
         FROM documents GROUP BY lang, source),
@@ -200,41 +200,7 @@ object PipelineQueries59 {
              round(sqrt(phi2 / least(CAST(r AS DOUBLE) - 1, cc - 1)), 6)
                AS cramers_v,
              round(sqrt(phi2c / least(rc - 1, ccc - 1)), 6) AS cramers_v_corrected
-      FROM fin""")) { (s, dir) =>
-      val o = Tables.dfSpread(s, dir, "documents")
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).cast("bigint").as("c"))
-      val rm = o.groupBy(col("lang")).agg(sum(col("c")).cast("bigint").as("rt"))
-      val cm = o.groupBy(col("source")).agg(sum(col("c")).cast("bigint").as("ct"))
-      val nn = o.agg(sum(col("c")).cast("bigint").as("n"))
-      val cell = rm.crossJoin(broadcast(cm))
-        .join(o, Seq("lang", "source"), "left")
-        .select(col("rt"), col("ct"), coalesce(col("c"), lit(0L)).as("c"))
-      def e = col("rt").cast("double") * col("ct") / col("n")
-      val chi = cell.crossJoin(broadcast(nn))
-        .agg(Kit.rsum((col("c") - e) * (col("c") - e) / e, 9).as("chi2"))
-      val dims = rm.agg(count(lit(1)).cast("bigint").as("r"))
-        .crossJoin(cm.agg(count(lit(1)).cast("bigint").as("cc")))
-      val fin = chi.crossJoin(broadcast(dims)).crossJoin(broadcast(nn))
-        .select(col("n"), col("r"), col("cc"), col("chi2"),
-          (col("chi2") / col("n")).as("phi2"),
-          greatest(lit(0.0), col("chi2") / col("n")
-            - (col("r").cast("double") - 1) * (col("cc") - 1) / (col("n") - 1))
-            .as("phi2c"),
-          (col("r").cast("double")
-            - (col("r").cast("double") - 1) * (col("r") - 1) / (col("n") - 1))
-            .as("rc"),
-          (col("cc").cast("double")
-            - (col("cc").cast("double") - 1) * (col("cc") - 1) / (col("n") - 1))
-            .as("ccc"))
-      fin.select(col("n").as("n_docs"), col("r").as("n_langs"),
-        col("cc").as("n_sources"), round(col("chi2"), 6).as("chi2"),
-        round(sqrt(col("phi2")
-          / least(col("r").cast("double") - 1, col("cc") - 1)), 6)
-          .as("cramers_v"),
-        round(sqrt(col("phi2c") / least(col("rc") - 1, col("ccc") - 1)), 6)
-          .as("cramers_v_corrected"))
-    },
+      FROM fin"""),
 
     // --------------------- average precision @10 (p250)
     QueryDef("p250_average_precision", Some("""

@@ -66,7 +66,7 @@ object PipelineQueries60 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Page-Hinkley drift excursion (p253)
-    QueryDef("p253_page_hinkley", Some("""
+    QueryDef.sql("p253_page_hinkley", """
       WITH dc AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
                   FROM events GROUP BY 1),
       r AS (
@@ -102,34 +102,7 @@ object PipelineQueries60 {
       SELECT sd.n AS n_days, cp.peak_date,
              round(CAST(k.kmax AS DOUBLE), 6) AS ph_excursion,
              round(CAST(k.kmax AS DOUBLE) / sd.sd, 6) AS ph_over_sd
-      FROM k, cp, sd""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      // every window here runs over the per-DAY frame — date-span-bounded
-      val wd = Window.orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val r = dc.select(col("d"), col("c"),
-        row_number().over(Window.orderBy(col("d"))).cast("bigint").as("rn"),
-        sum(col("c")).over(wd).cast("bigint").as("cum"))
-      val dev = r.select(col("d"), col("c"),
-        Kit.rdec(col("c") - col("cum").cast("double") / col("rn"), 9).as("dev"))
-      val m = dev.select(col("d"),
-        sum(col("dev")).over(wd).cast("decimal(38,9)").as("mt"))
-      val exc = m.select(col("d"), (col("mt") - min(col("mt")).over(wd)).as("ex"))
-      val st = dc.agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("c")).cast("bigint").as("s1"),
-        sum(col("c") * col("c")).cast("bigint").as("s2"))
-      val sd = st.select(col("n"),
-        sqrt(col("s2").cast("double") / col("n")
-          - (col("s1").cast("double") / col("n"))
-            * (col("s1").cast("double") / col("n"))).as("sd"))
-      val k = exc.agg(max(col("ex")).as("kmax"))
-      val cp = exc.crossJoin(broadcast(k)).filter(col("ex") === col("kmax"))
-        .agg(min(col("d")).as("peak_date"))
-      k.crossJoin(cp).crossJoin(sd)
-        .select(col("n").as("n_days"), col("peak_date"),
-          round(col("kmax").cast("double"), 6).as("ph_excursion"),
-          round(col("kmax").cast("double") / col("sd"), 6).as("ph_over_sd"))
-    },
+      FROM k, cp, sd"""),
 
     // --------------------- Yuen trimmed-mean t-test (p254)
     QueryDef("p254_yuen_trimmed_ttest", Some("""
@@ -535,7 +508,7 @@ object PipelineQueries60 {
     },
 
     // --------------------- Markov entropy rate of event types (p258)
-    QueryDef("p258_markov_entropy_rate", Some("""
+    QueryDef.sql("p258_markov_entropy_rate", """
       WITH seq AS (
         SELECT user_id, event_type,
                lag(event_type) OVER (PARTITION BY user_id
@@ -555,25 +528,6 @@ object PipelineQueries60 {
       SELECT nn.n AS n_transitions, nn.k AS n_states,
              round(-h.s / nn.n, 6) AS entropy_rate,
              round(-h.s / nn.n / ln(CAST(nn.k AS DOUBLE)), 6) AS efficiency
-      FROM h, nn""")) { (s, dir) =>
-      val seq = Tables.df(s, dir, "events")
-        .select(col("user_id"), col("event_type"),
-          lag(col("event_type"), 1).over(Window.partitionBy(col("user_id"))
-            .orderBy(col("ts"), col("event_id"))).as("prev"))
-      val tr = seq.filter(col("prev").isNotNull)
-        .groupBy(col("prev").as("i"), col("event_type").as("j"))
-        .agg(count(lit(1)).cast("bigint").as("nij"))
-      val ri = tr.groupBy(col("i")).agg(sum(col("nij")).cast("bigint").as("ni"))
-      val nn = tr.agg(sum(col("nij")).cast("bigint").as("n"),
-        countDistinct(col("i")).cast("bigint").as("k"))
-      val h = tr.join(ri, "i")
-        .agg(Kit.rsum(col("nij").cast("double")
-          * log(col("nij").cast("double") / col("ni")), 9).as("s"))
-      h.crossJoin(broadcast(nn))
-        .select(col("n").as("n_transitions"), col("k").as("n_states"),
-          round(-col("s") / col("n"), 6).as("entropy_rate"),
-          round(-col("s") / col("n") / log(col("k").cast("double")), 6)
-            .as("efficiency"))
-    }
+      FROM h, nn""")
   )
 }

@@ -372,7 +372,7 @@ object PipelineQueries61 {
     },
 
     // --------------------- Wilcoxon signed-rank, click vs view by day (p263)
-    QueryDef("p263_wilcoxon_signed_rank", Some("""
+    QueryDef.sql("p263_wilcoxon_signed_rank", """
       WITH g AS (
         SELECT CAST(ts AS DATE) AS d,
                CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -400,35 +400,7 @@ object PipelineQueries61 {
              round((CAST(w2p AS DOUBLE) / 2 - CAST(n AS DOUBLE) * (n + 1) / 4)
                / sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1) / 24
                  - CAST(tie3 AS DOUBLE) / 48), 6) AS z_stat
-      FROM agg""")) { (s, dir) =>
-      val g = Tables.df(s, dir, "events")
-        .groupBy(col("ts").cast("date").as("d"))
-        .agg(sum(when(col("event_type") === "click", 1).otherwise(0))
-          .cast("bigint").as("cx"),
-          sum(when(col("event_type") === "view", 1).otherwise(0))
-            .cast("bigint").as("cy"))
-      val dd = g.filter(col("cx") =!= col("cy"))
-        .select((col("cx") - col("cy")).as("diff"))
-      val vc = dd.groupBy(abs(col("diff")).as("v"))
-        .agg(count(lit(1)).cast("bigint").as("t"),
-          sum(when(col("diff") > 0, 1).otherwise(0)).cast("bigint").as("tp"))
-      // midranks from the |d| value-domain cumsum (bounded by the day span);
-      // 2*midrank = 2f - t + 1 keeps every rank term integer
-      val wv = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w = vc.select(col("v"), col("t"), col("tp"),
-        sum(col("t")).over(wv).cast("bigint").as("f"))
-      val agg = w.agg(sum(col("t")).cast("bigint").as("n"),
-        sum(col("tp") * (lit(2) * col("f") - col("t") + 1))
-          .cast("bigint").as("w2p"),
-        sum(col("t") * col("t") * col("t") - col("t")).cast("bigint").as("tie3"))
-      agg.select(col("n").as("n_nonzero"),
-        round(col("w2p").cast("double") / 2, 6).as("w_plus"),
-        round((col("w2p").cast("double") / 2
-          - col("n").cast("double") * (col("n") + 1) / 4)
-          / sqrt(col("n").cast("double") * (col("n") + 1) * (lit(2) * col("n") + 1) / 24
-            - col("tie3").cast("double") / 48), 6).as("z_stat"))
-    },
+      FROM agg"""),
 
     // --------------------- modified Kneser-Ney discounts (p264)
     QueryDef("p264_kneser_ney_discounts", Some("""

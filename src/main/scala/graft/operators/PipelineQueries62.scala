@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.expressions.Window
 
 /** Pipeline coverage batch 62 — spectral periodicity testing, distribution-
   * free randomness and location tests, the ordinal-association family,
@@ -62,7 +62,7 @@ object PipelineQueries62 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Fisher's g spectral periodicity (p265)
-    QueryDef("p265_fisher_g", Some("""
+    QueryDef.sql("p265_fisher_g", """
       WITH dc AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
                   FROM events GROUP BY 1),
       nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dc),
@@ -90,36 +90,10 @@ object PipelineQueries62 {
       SELECT nn.n AS n_days, pk.jstar AS j_star,
              round(CAST(nn.n AS DOUBLE) / pk.jstar, 6) AS period_days,
              round(tot.imax / tot.s, 6) AS fisher_g
-      FROM nn, pk, tot""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
-      val r = dc.select(col("c"),
-        (row_number().over(Window.orderBy(col("d"))) - 1).cast("bigint").as("t"))
-      // Fourier frequencies derived from the same bounded day frame
-      val fr = r.crossJoin(broadcast(nn))
-        .filter(lit(2) * (col("t") + 1) <= col("n") - 1)
-        .select((col("t") + 1).as("j"))
-      val theta = lit(6.283185307179586) * col("j") * col("t") / col("n")
-      val ab = r.crossJoin(broadcast(fr)).crossJoin(broadcast(nn))
-        .groupBy(col("j"))
-        .agg(Kit.rsum(col("c") * cos(theta), 9).as("a"),
-          Kit.rsum(col("c") * sin(theta), 9).as("b"))
-      val spec = ab.crossJoin(broadcast(nn))
-        .select(col("j"), ((col("a") * col("a") + col("b") * col("b"))
-          / col("n")).as("i"))
-      val tot = spec.agg(
-        Kit.rsum(col("i"), 9).as("s"),
-        max(col("i")).as("imax"))
-      val pk = spec.crossJoin(broadcast(tot))
-        .filter(col("i") === col("imax")).agg(min(col("j")).as("jstar"))
-      nn.crossJoin(pk).crossJoin(tot)
-        .select(col("n").as("n_days"), col("jstar").as("j_star"),
-          round(col("n").cast("double") / col("jstar"), 6).as("period_days"),
-          round(col("imax") / col("s"), 6).as("fisher_g"))
-    },
+      FROM nn, pk, tot"""),
 
     // --------------------- Kendall turning-point randomness test (p266)
-    QueryDef("p266_turning_points", Some("""
+    QueryDef.sql("p266_turning_points", """
       WITH dc AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
                   FROM events GROUP BY 1),
       nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dc),
@@ -134,21 +108,7 @@ object PipelineQueries62 {
       SELECT nn.n AS n_days, tp.t AS n_turning,
              round((CAST(tp.t AS DOUBLE) - CAST(2.0 AS DOUBLE) * (nn.n - 2) / 3)
                / sqrt((CAST(16.0 AS DOUBLE) * nn.n - 29) / 90), 6) AS z_stat
-      FROM tp, nn""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
-      val w = Window.orderBy(col("d"))
-      val l = dc.select(col("c"), lag(col("c"), 1).over(w).as("p"),
-        lead(col("c"), 1).over(w).as("nx"))
-      val tp = l.agg(sum(when(col("p").isNotNull && col("nx").isNotNull
-          && ((col("c") > col("p") && col("c") > col("nx"))
-            || (col("c") < col("p") && col("c") < col("nx"))), 1L)
-          .otherwise(0L)).cast("bigint").as("t"))
-      tp.crossJoin(broadcast(nn))
-        .select(col("n").as("n_days"), col("t").as("n_turning"),
-          round((col("t").cast("double") - lit(2.0) * (col("n") - 2) / 3)
-            / sqrt((lit(16.0) * col("n") - 29) / 90), 6).as("z_stat"))
-    },
+      FROM tp, nn"""),
 
     // --------------------- Mood's k-sample median test (p267)
     QueryDef("p267_mood_median", Some("""

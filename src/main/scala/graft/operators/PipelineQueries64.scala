@@ -222,7 +222,7 @@ object PipelineQueries64 {
     },
 
     // --------------------- CUSUM of squares variance changepoint (p279)
-    QueryDef("p279_cusum_squares", Some("""
+    QueryDef.sql("p279_cusum_squares", """
       WITH dc AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
                   FROM events GROUP BY 1),
       m AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) AS mu,
@@ -243,33 +243,10 @@ object PipelineQueries64 {
       mx AS (SELECT max(dv) AS dmax FROM dev),
       pk AS (SELECT min(d) AS peak_date FROM dev, mx WHERE dv = dmax)
       SELECT m.n AS n_days, pk.peak_date, round(mx.dmax, 6) AS d_stat
-      FROM m, mx, pk""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      val m = dc.agg((sum(col("c")).cast("double") / count(lit(1))).as("mu"),
-        count(lit(1)).cast("bigint").as("n"))
-      val e = dc.crossJoin(broadcast(m))
-        .select(col("d"),
-          Kit.rdec((col("c") - col("mu")) * (col("c") - col("mu")), 9).as("e2"),
-          row_number().over(Window.orderBy(col("d"))).as("rn"))
-      val tot = e.agg(sum(col("e2")).cast("double").as("se"))
-      val wd = Window.orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cs = e.select(col("d"), col("rn"),
-        sum(col("e2")).over(wd).cast("double").as("ct"))
-      val dev = cs.crossJoin(broadcast(tot)).crossJoin(broadcast(m))
-        .select(col("d"),
-          abs(col("ct") / col("se") - col("rn").cast("double") / col("n"))
-            .as("dv"))
-      val mx = dev.agg(max(col("dv")).as("dmax"))
-      val pk = dev.crossJoin(broadcast(mx)).filter(col("dv") === col("dmax"))
-        .agg(min(col("d")).as("peak_date"))
-      m.crossJoin(mx).crossJoin(pk)
-        .select(col("n").as("n_days"), col("peak_date"),
-          round(col("dmax"), 6).as("d_stat"))
-    },
+      FROM m, mx, pk"""),
 
     // --------------------- Bartels rank von Neumann ratio (p280)
-    QueryDef("p280_bartels_rank", Some("""
+    QueryDef.sql("p280_bartels_rank", """
       WITH dc AS (SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
                   FROM events GROUP BY 1),
       nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dc),
@@ -298,36 +275,7 @@ object PipelineQueries64 {
                * (5 * nn.n * nn.n - 2 * nn.n - 9)
                / (CAST(5.0 AS DOUBLE) * nn.n * (nn.n + 1)
                  * (nn.n - 1) * (nn.n - 1))), 6) AS z_stat
-      FROM rvn, nn""")) { (s, dir) =>
-      val dc = Kit.dayCounts(Tables.df(s, dir, "events"))
-      val nn = dc.agg(count(lit(1)).cast("bigint").as("n"))
-      val vc = dc.groupBy(col("c").as("v"))
-        .agg(count(lit(1)).cast("bigint").as("t"))
-      val wv = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val w = vc.select(col("v"), col("t"),
-        sum(col("t")).over(wv).cast("bigint").as("f"))
-      // doubled midranks (2f - t + 1) stay integer; note sum 2R = n(n+1)
-      // so 2*Rbar = n+1 exactly
-      val rk = dc.join(w, col("c") === col("v"))
-        .select(col("d"), (lit(2) * col("f") - col("t") + 1).as("r2"))
-      val lg = rk.select(col("r2"),
-        lead(col("r2"), 1).over(Window.orderBy(col("d"))).as("r2n"))
-      val num = lg.filter(col("r2n").isNotNull)
-        .agg(sum((col("r2") - col("r2n")) * (col("r2") - col("r2n")))
-          .cast("bigint").as("sn"))
-      val den = rk.crossJoin(broadcast(nn))
-        .agg(sum((col("r2") - col("n") - 1) * (col("r2") - col("n") - 1))
-          .cast("bigint").as("sd"))
-      val rvn = num.crossJoin(den)
-        .select((col("sn").cast("double") / col("sd")).as("rvn"))
-      rvn.crossJoin(broadcast(nn))
-        .select(col("n").as("n_days"), round(col("rvn"), 6).as("rvn"),
-          round((col("rvn") - 2) / sqrt(lit(4.0) * (col("n") - 2)
-            * (lit(5) * col("n") * col("n") - lit(2) * col("n") - 9)
-            / (lit(5.0) * col("n") * (col("n") + 1)
-              * (col("n") - 1) * (col("n") - 1))), 6).as("z_stat"))
-    },
+      FROM rvn, nn"""),
 
     // --------------------- KPSS level stationarity (p281)
     QueryDef("p281_kpss_stationarity", Some("""

@@ -57,7 +57,7 @@ object PipelineQueries65 {
   val defs: Seq[QueryDef] = Seq(
 
     // --------------------- Tukey-Kramer pairwise studentized range (p283)
-    QueryDef("p283_tukey_pairwise", Some("""
+    QueryDef.sql("p283_tukey_pairwise", """
       WITH g AS (
         SELECT source, CAST(count(*) AS BIGINT) AS n_s,
                CAST(sum(CAST(n_chars AS DECIMAL(9,0))) AS DECIMAL(38,0)) AS s1,
@@ -80,21 +80,10 @@ object PipelineQueries65 {
              round(abs(diff) / sqrt(msw.msw / 2
                * (CAST(1.0 AS DOUBLE) / na + CAST(1.0 AS DOUBLE) / nb)), 6)
                AS q_stat
-      FROM pairs, msw ORDER BY src_a, src_b""")) { (s, dir) =>
-      val g = Kit.powerSums(Tables.dfSpread(s, dir, "documents"), Seq("source"),
-        col("n_chars"), 2)
-      val msw = g.agg((Kit.rsum(col("s2").cast("double")
-        - col("s1").cast("double") * col("s1").cast("double") / col("n"), 6)
-        / (sum(col("n")) - count(lit(1)))).as("msw"))
-      Kit.meanDiffPairs(g, "s1", "n", "diff").crossJoin(broadcast(msw))
-        .select(col("src_a"), col("src_b"), round(col("diff"), 6).as("mean_diff"),
-          round(abs(col("diff")) / sqrt(col("msw") / 2
-            * (lit(1.0) / col("na") + lit(1.0) / col("nb"))), 6).as("q_stat"))
-        .orderBy(col("src_a"), col("src_b"))
-    },
+      FROM pairs, msw ORDER BY src_a, src_b"""),
 
     // --------------------- Dunn rank post-hoc after Kruskal-Wallis (p284)
-    QueryDef("p284_dunn_posthoc", Some("""
+    QueryDef.sql("p284_dunn_posthoc", """
       WITH vc AS (
         SELECT n_chars AS v, CAST(count(*) AS BIGINT) AS c
         FROM documents GROUP BY 1),
@@ -132,20 +121,7 @@ object PipelineQueries65 {
              round(rdiff / sqrt(base.s2
                * (CAST(1.0 AS DOUBLE) / na + CAST(1.0 AS DOUBLE) / nb)), 6)
                AS z_dunn
-      FROM pairs, base ORDER BY src_a, src_b""")) { (s, dir) =>
-      val (gs, tie) = Kit.rankSums(Tables.dfSpread(s, dir, "documents"), "source",
-        col("n_chars"))
-      val nn = gs.agg(sum(col("n_s")).cast("bigint").as("n"))
-      val base = nn.crossJoin(tie)
-        .select((col("n").cast("double") * (col("n") + 1) / 12
-          - col("tsum") / (lit(12.0) * (col("n") - 1))).as("s2"))
-      Kit.meanDiffPairs(gs, "rsum", "n_s", "rdiff").crossJoin(broadcast(base))
-        .select(col("src_a"), col("src_b"),
-          round(col("rdiff"), 6).as("mean_rank_diff"),
-          round(col("rdiff") / sqrt(col("s2")
-            * (lit(1.0) / col("na") + lit(1.0) / col("nb"))), 6).as("z_dunn"))
-        .orderBy(col("src_a"), col("src_b"))
-    },
+      FROM pairs, base ORDER BY src_a, src_b"""),
 
     // --------------------- Flesch / FK readability per source (p285)
     QueryDef("p285_readability", Some("""

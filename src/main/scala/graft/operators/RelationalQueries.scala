@@ -64,27 +64,18 @@ object RelationalQueries {
     },
 
     // ProjectionNode (reference: opteryx/operators/projection_node.py:112-152)
-    QueryDef("q03_projection", Some("""
+    QueryDef.sql("q03_projection", """
       SELECT n_nationkey,
              n_nationkey * 2 + 1 AS k2,
              upper(n_name) AS un,
              length(n_name) AS name_len,
              n_name || '-' || CAST(n_regionkey AS VARCHAR) AS tagged,
              substr(n_name, 1, 3) AS pre3
-      FROM nation ORDER BY n_nationkey""")) { (s, dir) =>
-      Tables.df(s, dir, "nation").select(
-        col("n_nationkey"),
-        (col("n_nationkey") * 2 + 1).as("k2"),
-        upper(col("n_name")).as("un"),
-        length(col("n_name")).as("name_len"),
-        concat(col("n_name"), lit("-"), col("n_regionkey").cast("string")).as("tagged"),
-        substring(col("n_name"), 1, 3).as("pre3"))
-        .orderBy(col("n_nationkey"))
-    },
+      FROM nation ORDER BY n_nationkey"""),
 
     // FilterNode with compound predicates — IN/BETWEEN/LIKE push to the scan
     // (reference: opteryx/operators/filter_node.py:29-87)
-    QueryDef("q04_filter_complex", Some("""
+    QueryDef.sql("q04_filter_complex", """
       SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
       FROM lineitem
       WHERE l_quantity BETWEEN 5 AND 15
@@ -92,44 +83,22 @@ object RelationalQueries {
         AND l_linestatus = 'F'
         AND l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
         AND (l_discount < 0.03 OR l_tax > 0.05)
-      ORDER BY l_orderkey, l_linenumber""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .filter(col("l_quantity").between(5, 15)
-          && col("l_returnflag").isin("A", "R")
-          && col("l_linestatus") === "F"
-          && col("l_shipdate") >= ts("1995-01-01 00:00:00")
-          && (col("l_discount") < 0.03 || col("l_tax") > 0.05))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_returnflag"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    },
+      ORDER BY l_orderkey, l_linenumber"""),
 
     // DistinctNode (reference: opteryx/operators/distinct_node.py:175-217)
-    QueryDef("q05_distinct", Some("""
+    QueryDef.sql("q05_distinct", """
       SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-      ORDER BY l_returnflag, l_linestatus""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"))
-        .distinct()
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
+      ORDER BY l_returnflag, l_linestatus"""),
 
     // DISTINCT ON (cols) — deterministic row choice via ranked window
     // (reference: opteryx/operators/distinct_node.py:178-183)
-    QueryDef("q06_distinct_on", Some("""
+    QueryDef.sql("q06_distinct_on", """
       SELECT c_nationkey, c_custkey, c_acctbal FROM (
         SELECT c_nationkey, c_custkey, c_acctbal,
                row_number() OVER (PARTITION BY c_nationkey
                                   ORDER BY c_acctbal DESC, c_custkey) AS rn
         FROM customer) t
-      WHERE rn = 1 ORDER BY c_nationkey""")) { (s, dir) =>
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      Tables.df(s, dir, "customer")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"))
-        .orderBy(col("c_nationkey"))
-    },
+      WHERE rn = 1 ORDER BY c_nationkey"""),
 
     // InnerJoinNode — fact⨝dim with explicit broadcast of the dimension side;
     // at 100 TB the customer dim stays broadcastable while lineitem shuffles
@@ -166,43 +135,23 @@ object RelationalQueries {
     },
 
     // OuterJoinNode: RIGHT (reference: opteryx/compiled/joins/outer_join.pyx)
-    QueryDef("q09_join_right", Some("""
+    QueryDef.sql("q09_join_right", """
       SELECT n_name, count(s_suppkey) AS n_supp
       FROM supplier RIGHT JOIN nation ON s_nationkey = n_nationkey
-      GROUP BY n_name ORDER BY n_name""")) { (s, dir) =>
-      val sup = Tables.df(s, dir, "supplier")
-      val n = Tables.df(s, dir, "nation")
-      sup.join(n, sup("s_nationkey") === n("n_nationkey"), "right")
-        .groupBy(col("n_name"))
-        .agg(count(col("s_suppkey")).as("n_supp"))
-        .orderBy(col("n_name"))
-    },
+      GROUP BY n_name ORDER BY n_name"""),
 
     // OuterJoinNode: FULL (reference: opteryx/operators/outer_join_node.py:115-151)
-    QueryDef("q10_join_full", Some("""
+    QueryDef.sql("q10_join_full", """
       WITH cc AS (SELECT c_nationkey AS nk, count(*) AS n_cust FROM customer GROUP BY c_nationkey),
            ss AS (SELECT s_nationkey AS nk, count(*) AS n_supp FROM supplier GROUP BY s_nationkey)
       SELECT coalesce(cc.nk, ss.nk) AS nationkey, n_cust, n_supp
       FROM cc FULL OUTER JOIN ss ON cc.nk = ss.nk
-      ORDER BY nationkey""")) { (s, dir) =>
-      val cc = Tables.df(s, dir, "customer")
-        .groupBy(col("c_nationkey").as("nk_c")).agg(count(lit(1)).as("n_cust"))
-      val ss = Tables.df(s, dir, "supplier")
-        .groupBy(col("s_nationkey").as("nk_s")).agg(count(lit(1)).as("n_supp"))
-      cc.join(ss, col("nk_c") === col("nk_s"), "full")
-        .select(coalesce(col("nk_c"), col("nk_s")).as("nationkey"),
-          col("n_cust"), col("n_supp"))
-        .orderBy(col("nationkey"))
-    },
+      ORDER BY nationkey"""),
 
     // CrossJoinNode (reference: opteryx/operators/cross_join_node.py:90-145)
-    QueryDef("q11_join_cross", Some("""
+    QueryDef.sql("q11_join_cross", """
       SELECT r_name, n_name FROM region CROSS JOIN nation
-      ORDER BY r_name, n_name""")) { (s, dir) =>
-      Tables.df(s, dir, "region").crossJoin(Tables.df(s, dir, "nation"))
-        .select(col("r_name"), col("n_name"))
-        .orderBy(col("r_name"), col("n_name"))
-    },
+      ORDER BY r_name, n_name"""),
 
     // FilterJoinNode: LEFT SEMI (reference: opteryx/operators/filter_join_node.py:298-351)
     QueryDef("q12_join_semi", Some("""
@@ -218,35 +167,20 @@ object RelationalQueries {
     },
 
     // FilterJoinNode: LEFT ANTI — customers with no large order
-    QueryDef("q13_join_anti", Some("""
+    QueryDef.sql("q13_join_anti", """
       SELECT c_custkey, c_name FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders
                         WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-      ORDER BY c_custkey""")) { (s, dir) =>
-      val c = Tables.df(s, dir, "customer")
-      val o = Tables.df(s, dir, "orders").filter(col("o_totalprice") > 400000)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    },
+      ORDER BY c_custkey"""),
 
     // Equi+range join — same-region nation pairs
     // (reference join-condition handling: opteryx/operators/inner_join_node.py:17-18)
-    QueryDef("q14_join_range", Some("""
+    QueryDef.sql("q14_join_range", """
       SELECT a.n_regionkey AS region, count(*) AS n_pairs,
              min(a.n_name || '|' || b.n_name) AS first_pair
       FROM nation a JOIN nation b
         ON a.n_regionkey = b.n_regionkey AND a.n_nationkey < b.n_nationkey
-      GROUP BY a.n_regionkey ORDER BY region""")) { (s, dir) =>
-      val a = Tables.df(s, dir, "nation").alias("a")
-      val b = Tables.df(s, dir, "nation").alias("b")
-      a.join(b, col("a.n_regionkey") === col("b.n_regionkey")
-          && col("a.n_nationkey") < col("b.n_nationkey"))
-        .groupBy(col("a.n_regionkey").as("region"))
-        .agg(count(lit(1)).as("n_pairs"),
-          min(concat(col("a.n_name"), lit("|"), col("b.n_name"))).as("first_pair"))
-        .orderBy(col("region"))
-    },
+      GROUP BY a.n_regionkey ORDER BY region"""),
 
     // NonEquiJoinNode — pure theta join, executed as a BANDED RANGE JOIN
     // (reference: opteryx/operators/non_equi_join_node.py:38-120).
@@ -290,41 +224,24 @@ object RelationalQueries {
     },
 
     // UnionNode: UNION ALL (reference: opteryx/operators/union_node.py:473-513)
-    QueryDef("q17_union_all", Some("""
+    QueryDef.sql("q17_union_all", """
       SELECT side, nk, count(*) AS n FROM (
         SELECT 'cust' AS side, c_nationkey AS nk FROM customer
         UNION ALL
         SELECT 'supp' AS side, s_nationkey AS nk FROM supplier) t
-      GROUP BY side, nk ORDER BY side, nk""")) { (s, dir) =>
-      val c = Tables.df(s, dir, "customer")
-        .select(lit("cust").as("side"), col("c_nationkey").as("nk"))
-      val sup = Tables.df(s, dir, "supplier")
-        .select(lit("supp").as("side"), col("s_nationkey").as("nk"))
-      c.union(sup).groupBy(col("side"), col("nk"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("side"), col("nk"))
-    },
+      GROUP BY side, nk ORDER BY side, nk"""),
 
     // UNION (distinct) — planner-inserted Distinct in the reference
     // (reference: opteryx/planner/logical_planner/logical_planner.py:890-895)
-    QueryDef("q18_union_distinct", Some("""
+    QueryDef.sql("q18_union_distinct", """
       SELECT c_nationkey AS nk FROM customer
-      UNION SELECT s_nationkey AS nk FROM supplier ORDER BY nk""")) { (s, dir) =>
-      val c = Tables.df(s, dir, "customer").select(col("c_nationkey").as("nk"))
-      val sup = Tables.df(s, dir, "supplier").select(col("s_nationkey").as("nk"))
-      c.union(sup).distinct().orderBy(col("nk"))
-    },
+      UNION SELECT s_nationkey AS nk FROM supplier ORDER BY nk"""),
 
     // HeapSortNode — Top-N; Catalyst fuses to TakeOrderedAndProject
     // (reference: opteryx/operators/heap_sort_node.py:419-515)
-    QueryDef("q19_topn", Some("""
+    QueryDef.sql("q19_topn", """
       SELECT o_orderkey, o_totalprice FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""")) { (s, dir) =>
-      Tables.df(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-    },
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"""),
 
     // LimitNode with OFFSET (reference: opteryx/operators/limit_node.py:239-283)
     QueryDef("q20_limit_offset", Some("""
@@ -360,16 +277,10 @@ object RelationalQueries {
     },
 
     // HAVING (reference: opteryx/planner/logical_planner/logical_planner.py:440-446)
-    QueryDef("q22_having", Some("""
+    QueryDef.sql("q22_having", """
       SELECT l_partkey, count(*) AS n
       FROM lineitem GROUP BY l_partkey HAVING count(*) >= 5
-      ORDER BY l_partkey""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 5)
-        .orderBy(col("l_partkey"))
-    },
+      ORDER BY l_partkey"""),
 
     // Scalar subquery (uncorrelated) — the 1-row aggregate is broadcast and
     // cross-joined, never collected to the driver: the whole plan stays lazy
@@ -388,34 +299,18 @@ object RelationalQueries {
     },
 
     // IN (subquery) — semi-join under the hood
-    QueryDef("q24_subquery_in", Some("""
+    QueryDef.sql("q24_subquery_in", """
       SELECT l_partkey, count(*) AS n FROM lineitem
       WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 45)
-      GROUP BY l_partkey ORDER BY l_partkey""")) { (s, dir) =>
-      val li = Tables.df(s, dir, "lineitem")
-      val p = Tables.df(s, dir, "part").filter(col("p_size") > 45)
-        .select(col("p_partkey"))
-      li.join(broadcast(p), li("l_partkey") === p("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("l_partkey"))
-    },
+      GROUP BY l_partkey ORDER BY l_partkey"""),
 
     // CTE composition (reference: extract_ctes at logical_planner.py:168-179)
-    QueryDef("q25_cte", Some("""
+    QueryDef.sql("q25_cte", """
       WITH per_cust AS (
         SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey)
       SELECT c_nationkey, CAST(sum(n_orders) AS BIGINT) AS total_orders, count(*) AS n_cust
       FROM per_cust JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_nationkey ORDER BY c_nationkey""")) { (s, dir) =>
-      val perCust = Tables.df(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-      val c = Tables.df(s, dir, "customer")
-      perCust.join(c, perCust("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_nationkey"))
-        .agg(sum(col("n_orders")).as("total_orders"), count(lit(1)).as("n_cust"))
-        .orderBy(col("c_nationkey"))
-    },
+      GROUP BY c_nationkey ORDER BY c_nationkey"""),
 
     // Conditional expressions: CASE/IIF/COALESCE/NULLIF/GREATEST/LEAST
     // (reference: opteryx/functions/__init__.py:591-611)
@@ -546,28 +441,14 @@ object RelationalQueries {
     },
 
     // Interval arithmetic + DATEDIFF (reference: opteryx/managers/expression/binary_operators.py:179-195)
-    QueryDef("q31_datetime_arith", Some("""
+    QueryDef.sql("q31_datetime_arith", """
       SELECT l_orderkey, l_linenumber,
              l_shipdate + INTERVAL 90 DAY AS ship90,
              l_shipdate + INTERVAL 2 MONTH AS ship2m,
              datediff('day', o_orderdate, l_shipdate) AS lag_days
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       WHERE l_orderkey <= 1000
-      ORDER BY l_orderkey, l_linenumber""")) { (s, dir) =>
-      val li = Tables.df(s, dir, "lineitem").filter(col("l_orderkey") <= 1000)
-      val o = Tables.df(s, dir, "orders")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          // NB: 90 days + 3 months would trip a DuckDB-1.0 oracle quirk —
-          // interval constants that are equal under the 1-month≈30-days
-          // approximation (90d vs 3mo) get deduplicated, corrupting one
-          // result; 2 months doesn't alias with 90 days.
-          (col("l_shipdate") + expr("INTERVAL 90 DAYS")).as("ship90"),
-          (col("l_shipdate") + expr("INTERVAL 2 MONTHS")).as("ship2m"),
-          datediff(col("l_shipdate").cast("date"), col("o_orderdate").cast("date")).as("lag_days"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    },
+      ORDER BY l_orderkey, l_linenumber"""),
 
     // JSON access — `->>` family (reference: opteryx/managers/expression/binary_operators.py:203-218)
     QueryDef("q32_json", Some("""
@@ -619,13 +500,9 @@ object RelationalQueries {
     },
 
     // FunctionDatasetNode: GENERATE_SERIES (reference: opteryx/operators/function_dataset_node.py:583-651)
-    QueryDef("q35_series", Some("""
+    QueryDef.sql("q35_series", """
       SELECT CAST(sum(x) AS BIGINT) AS s, count(*) AS n, min(x) AS mn, max(x) AS mx
-      FROM range(1, 1001) t(x)""")) { (s, _) =>
-      s.range(1, 1001).toDF("x")
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"),
-          min(col("x")).as("mn"), max(col("x")).as("mx"))
-    },
+      FROM range(1, 1001) t(x)"""),
 
     // Pivot-style conditional aggregation (HISTOGRAM analogue —
     // reference: opteryx/operators/aggregate_node.py:29-48)
@@ -645,22 +522,13 @@ object RelationalQueries {
     },
 
     // Statistical aggregates (reference: STDDEV/VARIANCE at opteryx/operators/aggregate_node.py:45-47)
-    QueryDef("q37_stats", Some("""
+    QueryDef.sql("q37_stats", """
       SELECT l_returnflag,
              round(stddev_samp(l_quantity), 4) AS sd_qty,
              round(var_samp(l_quantity), 4) AS var_qty,
              round(corr(l_quantity, l_extendedprice), 4) AS corr_qp,
              round(covar_samp(l_quantity, l_extendedprice), 2) AS cov_qp
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(stddev_samp(col("l_quantity")), 4).as("sd_qty"),
-          round(var_samp(col("l_quantity")), 4).as("var_qty"),
-          round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qp"),
-          round(covar_samp(col("l_quantity"), col("l_extendedprice")), 2).as("cov_qp"))
-        .orderBy(col("l_returnflag"))
-    },
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // Hash/encode family (reference: opteryx/functions/__init__.py:572-589)
     QueryDef("q38_hash", Some("""

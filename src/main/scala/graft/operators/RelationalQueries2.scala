@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Tables}
 import Kit.{dsum, fsum, ts}
+import org.apache.spark.sql.expressions.Window
 
 /** Coverage batch 2 — the remaining SURVEY.md §2 surface: extra aggregate
   * functions (§2.2), cast/try-cast matrix, the rest of the string/hash/datetime
@@ -148,29 +148,17 @@ object RelationalQueries2 {
     // PRODUCT aggregate — sign-correct typed Aggregator registered as a SQL
     // UDAF (reference: opteryx/operators/aggregate_node.py:44). Small integer
     // inputs so double products are exact on both engines.
-    QueryDef("q42_product", Some("""
+    QueryDef.sql("q42_product", """
       SELECT n_regionkey,
              product(CAST(n_nationkey % 5 + 1 AS DOUBLE)) AS prod,
              count(*) AS n
-      FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""")) { (s, dir) =>
-      Tables.df(s, dir, "nation")
-        .groupBy(col("n_regionkey"))
-        .agg(
-          expr("product(CAST(n_nationkey % 5 + 1 AS DOUBLE))").as("prod"),
-          count(lit(1)).as("n"))
-        .orderBy(col("n_regionkey"))
-    },
+      FROM nation GROUP BY n_regionkey ORDER BY n_regionkey"""),
 
     // HISTOGRAM analogue — fixed-width bucketing (reference HISTOGRAM at
     // opteryx/operators/aggregate_node.py:40): scales as a single hash agg.
-    QueryDef("q43_histogram", Some("""
+    QueryDef.sql("q43_histogram", """
       SELECT CAST(floor(p_retailprice / 200) AS BIGINT) AS bucket, count(*) AS n
-      FROM part GROUP BY bucket ORDER BY bucket""")) { (s, dir) =>
-      Tables.df(s, dir, "part")
-        .groupBy(floor(col("p_retailprice") / 200).cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("bucket"))
-    },
+      FROM part GROUP BY bucket ORDER BY bucket"""),
 
     // ARRAY_AGG with DISTINCT / ORDER / LIMIT post-pass (reference:
     // opteryx/operators/aggregate_and_group_node.py:180-216) — expressed as
@@ -195,7 +183,7 @@ object RelationalQueries2 {
 
     // Cast / TRY_cast matrix (reference: opteryx/functions/__init__.py:520-545
     // CAST + TRY_* variants).
-    QueryDef("q45_casts", Some("""
+    QueryDef.sql("q45_casts", """
       SELECT p_partkey,
              CAST(p_size AS VARCHAR) AS sz_s,
              CAST(p_size AS DOUBLE) AS sz_d,
@@ -205,28 +193,12 @@ object RelationalQueries2 {
              p_size % 2 = 0 AS even_size,
              CAST(CAST('2024-05-06' AS DATE) AS VARCHAR) AS d_lit,
              CAST('2024-05-06 07:08:09' AS TIMESTAMP) AS ts_lit
-      FROM part ORDER BY p_partkey""")) { (s, dir) =>
-      Tables.df(s, dir, "part").select(
-        col("p_partkey"),
-        col("p_size").cast("string").as("sz_s"),
-        col("p_size").cast("double").as("sz_d"),
-        // decimal cast exercised, then re-emitted as DOUBLE for the gate
-        col("p_retailprice").cast("decimal(12,2)").cast("double").as("price_dec"),
-        expr("try_cast(p_name AS int)").as("nm_i"),
-        expr("try_cast(left(CAST(p_partkey AS string), 2) AS int)").as("pk2"),
-        (col("p_size") % 2 === 0).as("even_size"),
-        // DATE cast exercised, emitted as VARCHAR: pandas renders datetime
-        // blocks frame-wide, so a true-date column next to a timestamp column
-        // picks up a spurious " 00:00:00" on the oracle side
-        lit("2024-05-06").cast("date").cast("string").as("d_lit"),
-        lit("2024-05-06 07:08:09").cast("timestamp_ntz").as("ts_lit"))
-        .orderBy(col("p_partkey"))
-    },
+      FROM part ORDER BY p_partkey"""),
 
     // String family batch 2: TITLE/INITCAP, LEFT/RIGHT, ASCII/CHAR, REPEAT,
     // SPLIT_PART, TRANSLATE, prefix/suffix tests
     // (reference: opteryx/functions/__init__.py:547-570).
-    QueryDef("q46_strings_extra", Some("""
+    QueryDef.sql("q46_strings_extra", """
       SELECT c_custkey,
              upper(left(c_mktsegment, 1)) || substr(lower(c_mktsegment), 2) AS ic,
              left(c_name, 5) AS l5,
@@ -238,21 +210,7 @@ object RelationalQueries2 {
              translate(c_mktsegment, 'AEIOU', 'aeiou') AS tr,
              starts_with(c_name, 'Customer') AS sw,
              ends_with(c_name, '1') AS ew
-      FROM customer ORDER BY c_custkey""")) { (s, dir) =>
-      Tables.df(s, dir, "customer").select(
-        col("c_custkey"),
-        initcap(lower(col("c_mktsegment"))).as("ic"),
-        expr("left(c_name, 5)").as("l5"),
-        expr("right(c_name, 4)").as("r4"),
-        ascii(expr("left(c_name, 1)")).as("a1"),
-        expr("char(65 + CAST(c_nationkey % 26 AS int))").as("ch"),
-        repeat(expr("left(c_mktsegment, 2)"), 3).as("rep"),
-        expr("split_part(c_name, '#', 2)").as("num_part"),
-        translate(col("c_mktsegment"), "AEIOU", "aeiou").as("tr"),
-        col("c_name").startsWith("Customer").as("sw"),
-        col("c_name").endsWith("1").as("ew"))
-        .orderBy(col("c_custkey"))
-    },
+      FROM customer ORDER BY c_custkey"""),
 
     // HEX_ENCODE / HEX_DECODE round-trip (reference:
     // opteryx/functions/__init__.py:586-589).
@@ -285,25 +243,14 @@ object RelationalQueries2 {
 
     // ROLLUP — hierarchical totals (beyond the reference: SURVEY.md §2.1 notes
     // no GROUPING SETS/CUBE/ROLLUP anywhere in its planner).
-    QueryDef("q49_rollup", Some("""
+    QueryDef.sql("q49_rollup", """
       SELECT l_returnflag, l_linestatus,
              CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
              CAST(grouping(l_linestatus) AS INTEGER) AS g_ls,
              CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS DOUBLE) AS sum_qty,
              count(*) AS n
       FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-      ORDER BY l_returnflag, l_linestatus""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          grouping(col("l_returnflag")).cast("int").as("g_rf"),
-          grouping(col("l_linestatus")).cast("int").as("g_ls"),
-          fsum(col("l_quantity"), 0).as("sum_qty"),
-          count(lit(1)).as("n"))
-        .select(col("l_returnflag"), col("l_linestatus"), col("g_rf"), col("g_ls"),
-          col("sum_qty"), col("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
+      ORDER BY l_returnflag, l_linestatus"""),
 
     // CUBE — all grouping-set combinations.
     QueryDef("q50_cube", Some("""
@@ -329,38 +276,23 @@ object RelationalQueries2 {
     // INTERSECT / EXCEPT (beyond the reference — it raises
     // UnsupportedSyntaxError for any set op but UNION,
     // reference: opteryx/planner/logical_planner/logical_planner.py:862-865).
-    QueryDef("q51_setops", Some("""
+    QueryDef.sql("q51_setops", """
       SELECT 'both' AS tag, k FROM
         (SELECT c_nationkey AS k FROM customer INTERSECT SELECT s_nationkey AS k FROM supplier) a
       UNION ALL
       SELECT 'cust_only' AS tag, k FROM
         (SELECT c_nationkey AS k FROM customer EXCEPT SELECT s_nationkey AS k FROM supplier) b
-      ORDER BY tag, k""")) { (s, dir) =>
-      val c = Tables.df(s, dir, "customer").select(col("c_nationkey").as("k"))
-      val sup = Tables.df(s, dir, "supplier").select(col("s_nationkey").as("k"))
-      c.intersect(sup).withColumn("tag", lit("both"))
-        .unionByName(c.except(sup).withColumn("tag", lit("cust_only")))
-        .select(col("tag"), col("k"))
-        .orderBy(col("tag"), col("k"))
-    },
+      ORDER BY tag, k"""),
 
     // FunctionDatasetNode: inline VALUES as a relation joined to real data
     // (reference: opteryx/operators/function_dataset_node.py:583-651).
-    QueryDef("q52_values", Some("""
+    QueryDef.sql("q52_values", """
       SELECT v.sla_days, count(*) AS n
       FROM orders o JOIN (VALUES
         ('1-URGENT', 1), ('2-HIGH', 3), ('3-MEDIUM', 7),
         ('4-NOT SPECIFIED', 14), ('5-LOW', 30)) v(prio, sla_days)
         ON o.o_orderpriority = v.prio
-      GROUP BY v.sla_days ORDER BY v.sla_days""")) { (s, dir) =>
-      import s.implicits._
-      val v = Seq(("1-URGENT", 1), ("2-HIGH", 3), ("3-MEDIUM", 7),
-        ("4-NOT SPECIFIED", 14), ("5-LOW", 30)).toDF("prio", "sla_days")
-      Tables.df(s, dir, "orders")
-        .join(broadcast(v), col("o_orderpriority") === col("prio"))
-        .groupBy(col("sla_days")).agg(count(lit(1)).as("n"))
-        .orderBy(col("sla_days"))
-    },
+      GROUP BY v.sla_days ORDER BY v.sla_days"""),
 
     // JSON family batch 2: JSONB_OBJECT_KEYS + path-exists (reference:
     // opteryx/functions/__init__.py:607 JSONB_OBJECT_KEYS; ops.py:291-365 @?).
@@ -394,7 +326,7 @@ object RelationalQueries2 {
 
     // Bitwise operator family (reference:
     // opteryx/managers/expression/binary_operators.py:203-218 & | ^ << >>).
-    QueryDef("q54_bitwise", Some("""
+    QueryDef.sql("q54_bitwise", """
       SELECT p_partkey,
              p_size & 15 AS band,
              p_size | 64 AS bor,
@@ -402,17 +334,7 @@ object RelationalQueries2 {
              p_size << 2 AS shl,
              p_size >> 1 AS shr,
              CAST(bit_count(p_size) AS INTEGER) AS bc
-      FROM part ORDER BY p_partkey""")) { (s, dir) =>
-      Tables.df(s, dir, "part").select(
-        col("p_partkey"),
-        col("p_size").bitwiseAND(15).as("band"),
-        col("p_size").bitwiseOR(64).as("bor"),
-        col("p_size").bitwiseXOR(21).as("bxor"),
-        shiftleft(col("p_size"), 2).as("shl"),
-        shiftright(col("p_size"), 1).as("shr"),
-        bit_count(col("p_size")).cast("int").as("bc"))
-        .orderBy(col("p_partkey"))
-    },
+      FROM part ORDER BY p_partkey"""),
 
     // ----------------------------------------------------------------
     // TPC-H-shaped multi-join workloads (dates adapted to testdata's
@@ -447,21 +369,12 @@ object RelationalQueries2 {
 
     // Q13 shape: orders-per-customer distribution (LEFT JOIN preserving
     // zero-order customers, double aggregation).
-    QueryDef("q56_tpch_q13", Some("""
+    QueryDef.sql("q56_tpch_q13", """
       SELECT c_count, count(*) AS custdist FROM (
         SELECT c_custkey, count(o_orderkey) AS c_count
         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         GROUP BY c_custkey) cc
-      GROUP BY c_count ORDER BY custdist DESC, c_count DESC""")) { (s, dir) =>
-      val c = Tables.df(s, dir, "customer")
-      val o = Tables.df(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    },
+      GROUP BY c_count ORDER BY custdist DESC, c_count DESC"""),
 
     // Q14 shape: promo revenue share — two conditional decimal sums, division
     // deferred to doubles so both engines round identically.
@@ -651,17 +564,9 @@ object RelationalQueries2 {
     // NOT IN against a list containing NULL — the classic three-valued trap:
     // x NOT IN (..., NULL) is never TRUE, so the filter returns zero rows on
     // both engines (reference ops table: managers/expression/ops.py:150-260).
-    QueryDef("q65_not_in_null", Some("""
+    QueryDef.sql("q65_not_in_null", """
       SELECT count(*) AS n FROM nation
-      WHERE n_nationkey NOT IN (SELECT nullif(s_nationkey, s_nationkey) FROM supplier)""")) { (s, dir) =>
-      val nulls = Tables.df(s, dir, "supplier")
-        .select(nullif(col("s_nationkey"), col("s_nationkey")).as("k"))
-      val n = Tables.df(s, dir, "nation")
-      // NOT IN (subquery) = null-aware anti join — Spark plans exactly that
-      n.join(nulls, n("n_nationkey") <=> nulls("k")
-          || nulls("k").isNull || n("n_nationkey").isNull, "left_anti")
-        .agg(count(lit(1)).as("n"))
-    },
+      WHERE n_nationkey NOT IN (SELECT nullif(s_nationkey, s_nationkey) FROM supplier)"""),
 
     // Schema-on-read drift: union by name with typed-null backfill (reference
     // normalize_morsel at opteryx/operators/read_node.py:91-129).

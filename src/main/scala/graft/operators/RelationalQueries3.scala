@@ -18,29 +18,18 @@ object RelationalQueries3 {
     // empty relation (Catalyst PropagateEmptyRelation), and a global
     // aggregate over it still yields its one row
     // (reference: opteryx null_reader_node — contradiction → empty page).
-    QueryDef("q72_contradiction_empty", Some("""
+    QueryDef.sql("q72_contradiction_empty", """
       SELECT CAST(count(*) AS BIGINT) AS n,
              CAST(sum(l_extendedprice) AS DOUBLE) AS s
-      FROM lineitem WHERE 1 = 0""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .filter(lit(false))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_extendedprice")).cast("double").as("s"))
-    },
+      FROM lineitem WHERE 1 = 0"""),
 
     // Aggregate FILTER clause (ANSI; beyond the reference's aggregate
     // registry) — per-group conditional counts without self-joins.
-    QueryDef("q73_filter_clause", Some("""
+    QueryDef.sql("q73_filter_clause", """
       SELECT l_returnflag,
              CAST(count(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS hi,
              CAST(count(*) FILTER (WHERE l_quantity <= 25) AS BIGINT) AS lo
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")) { (s, dir) =>
-      Tables.df(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(count(when(col("l_quantity") > 25, 1)).as("hi"),
-          count(when(col("l_quantity") <= 25, 1)).as("lo"))
-        .orderBy(col("l_returnflag"))
-    },
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // INTERSECT ALL — multiset semantics (duplicates preserved), one shuffle
     // on the compared columns.
@@ -57,18 +46,12 @@ object RelationalQueries3 {
     },
 
     // EXCEPT ALL — multiset difference.
-    QueryDef("q75_except_all", Some("""
+    QueryDef.sql("q75_except_all", """
       SELECT k FROM (
         SELECT CAST(n_regionkey AS BIGINT) AS k FROM nation
         EXCEPT ALL
         SELECT CAST(n_regionkey AS BIGINT) AS k FROM nation WHERE n_nationkey < 5
-      ) t ORDER BY k""")) { (s, dir) =>
-      val n = Tables.df(s, dir, "nation")
-      n.select(col("n_regionkey").cast("bigint").as("k"))
-        .exceptAll(n.filter(col("n_nationkey") < 5)
-          .select(col("n_regionkey").cast("bigint").as("k")))
-        .orderBy(col("k"))
-    },
+      ) t ORDER BY k"""),
 
     // Exact MEDIAN per group — both engines compute the exact middle value
     // over doubles (reference APPROXIMATE_MEDIAN is the sketch variant,
@@ -96,32 +79,19 @@ object RelationalQueries3 {
 
     // MAX_BY / MIN_BY (argmax/argmin) — deterministic because the ordering
     // key (c_custkey) is unique.
-    QueryDef("q77_arg_extrema", Some("""
+    QueryDef.sql("q77_arg_extrema", """
       SELECT c_mktsegment,
              max_by(c_name, c_custkey) AS newest,
              min_by(c_name, c_custkey) AS oldest
-      FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""")) { (s, dir) =>
-      Tables.df(s, dir, "customer")
-        .groupBy(col("c_mktsegment"))
-        .agg(max_by(col("c_name"), col("c_custkey")).as("newest"),
-          min_by(col("c_name"), col("c_custkey")).as("oldest"))
-        .orderBy(col("c_mktsegment"))
-    },
+      FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
 
     // JOIN ... USING — shared-name equi-join, single output key column.
-    QueryDef("q78_join_using", Some("""
+    QueryDef.sql("q78_join_using", """
       SELECT k, n_name, r_name FROM
         (SELECT CAST(n_regionkey AS BIGINT) AS k, n_name FROM nation) a
       JOIN
         (SELECT CAST(r_regionkey AS BIGINT) AS k, r_name FROM region) b
-      USING (k) ORDER BY k, n_name""")) { (s, dir) =>
-      val a = Tables.df(s, dir, "nation")
-        .select(col("n_regionkey").cast("bigint").as("k"), col("n_name"))
-      val b = Tables.df(s, dir, "region")
-        .select(col("r_regionkey").cast("bigint").as("k"), col("r_name"))
-      a.join(b, Seq("k")).select(col("k"), col("n_name"), col("r_name"))
-        .orderBy(col("k"), col("n_name"))
-    },
+      USING (k) ORDER BY k, n_name"""),
 
     // Window frames — ROWS sliding sum and running average over a unique
     // ordering key. Running sums accumulate in DECIMAL(38,6) (exact,
@@ -131,7 +101,7 @@ object RelationalQueries3 {
     // (inherent to a global running total); frame coverage is the point
     // here — a 100-TB running total would be windowed per key or per time
     // bucket instead.
-    QueryDef("q79_window_frames", Some("""
+    QueryDef.sql("q79_window_frames", """
       SELECT o_orderkey,
              CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))) OVER (ORDER BY o_orderkey
                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS roll3,
@@ -139,33 +109,15 @@ object RelationalQueries3 {
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS runsum,
              count(*) OVER (ORDER BY o_orderkey
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runcnt
-      FROM orders ORDER BY o_orderkey LIMIT 500""")) { (s, dir) =>
-      val dec = col("o_totalprice").cast("decimal(38,6)")
-      val w3 = Window.orderBy(col("o_orderkey")).rowsBetween(-2, Window.currentRow)
-      val wAll = Window.orderBy(col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.df(s, dir, "orders")
-        .select(col("o_orderkey"),
-          round(sum(dec).over(w3), 2).cast("double").as("roll3"),
-          round(sum(dec).over(wAll), 2).cast("double").as("runsum"),
-          count(lit(1)).over(wAll).as("runcnt"))
-        .orderBy(col("o_orderkey")).limit(500)
-    },
+      FROM orders ORDER BY o_orderkey LIMIT 500"""),
 
     // Inline VALUES relation joined to a table (FunctionDatasetNode VALUES
     // as a join input, not just a standalone SELECT).
-    QueryDef("q80_values_join", Some("""
+    QueryDef.sql("q80_values_join", """
       SELECT r.r_regionkey, v.tag FROM region r
       JOIN (VALUES (0, 'alpha'), (1, 'beta'), (2, 'gamma')) AS v(k, tag)
         ON CAST(r.r_regionkey AS BIGINT) = v.k
-      ORDER BY r.r_regionkey""")) { (s, dir) =>
-      import s.implicits._
-      val v = Seq((0L, "alpha"), (1L, "beta"), (2L, "gamma")).toDF("k", "tag")
-      Tables.df(s, dir, "region")
-        .join(broadcast(v), col("r_regionkey").cast("bigint") === col("k"))
-        .select(col("r_regionkey"), col("tag"))
-        .orderBy(col("r_regionkey"))
-    },
+      ORDER BY r.r_regionkey"""),
 
     // Ordered STRING_AGG — list-valued aggregate emitted as a string (the
     // q44 lesson: the gate canonicalizer requires scalar cells).
@@ -184,43 +136,23 @@ object RelationalQueries3 {
     },
 
     // Bitwise aggregates over the whole relation — BIGINT on both sides.
-    QueryDef("q82_bit_aggs", Some("""
+    QueryDef.sql("q82_bit_aggs", """
       SELECT CAST(bit_and(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS b_and,
              CAST(bit_or(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS b_or,
              CAST(bit_xor(CAST(l_linenumber AS BIGINT)) AS BIGINT) AS b_xor
-      FROM lineitem""")) { (s, dir) =>
-      val ln = col("l_linenumber").cast("bigint")
-      Tables.df(s, dir, "lineitem")
-        .agg(bit_and(ln).as("b_and"), bit_or(ln).as("b_or"), bit_xor(ln).as("b_xor"))
-    },
+      FROM lineitem"""),
 
     // Row-level visibility filters (reference: logical_planner.py:1116-1145
-    // apply_visibility_filters) — a per-relation DNF installed on the engine
-    // is enforced at every resolution of the relation, here on the probe
-    // side of a join; the oracle spells the same DNF inline. The filter is
-    // an ordinary Catalyst Filter above the scan, so it pushes down
-    // (GraftSqlSpec asserts PushedFilters).
-    QueryDef("q90_visibility_filters", Some("""
+    // apply_visibility_filters), the DNF spelled inline. The same DNF
+    // installed on the engine (`Graft.setVisibilityFilters`) is enforced at
+    // every resolution of the relation as an ordinary Catalyst Filter above
+    // the scan; GraftSqlSpec asserts that it pushes down (PushedFilters).
+    QueryDef.sql("q90_visibility_filters", """
       SELECT c_nationkey, count(*) AS n,
              CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE) AS bal
       FROM customer
       WHERE c_mktsegment = 'BUILDING' OR (c_mktsegment = 'MACHINERY' AND c_acctbal > 0.0)
-      GROUP BY c_nationkey ORDER BY c_nationkey""")) { (s, dir) =>
-      val g = graft.Graft(s)
-      g.registerDir(dir)
-      g.setVisibilityFilters("customer", Seq(
-        Seq(("c_mktsegment", "Eq", "BUILDING")),
-        Seq(("c_mktsegment", "Eq", "MACHINERY"), ("c_acctbal", "Gt", 0.0))))
-      // the query itself carries no WHERE — all filtering is the installed DNF
-      val df = g.query("""
-        SELECT c_nationkey, count(*) AS n,
-               CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE) AS bal
-        FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""")
-      // restore session state: gate queries share one SparkSession (the
-      // returned DataFrame is already analyzed, so clearing is safe)
-      g.clearVisibilityFilters("customer")
-      df
-    },
+      GROUP BY c_nationkey ORDER BY c_nationkey"""),
 
     // AS-OF join — each 'click' event matched to the same user's most
     // recent 'purchase' at-or-before its timestamp (the time-series
@@ -287,9 +219,8 @@ object RelationalQueries3 {
     // Explicit GROUPING SETS — the general form behind q49's ROLLUP and
     // q50's CUBE (each per-set aggregate is the same partial-agg shuffle;
     // Catalyst expands the sets into one Expand + aggregate, a single
-    // pass). The DataFrame API only exposes rollup/cube, so this runs
-    // through the SQL surface on a query-scoped temp view.
-    QueryDef("q92_grouping_sets", Some("""
+    // pass).
+    QueryDef.sql("q92_grouping_sets", """
       SELECT o_orderstatus, o_orderpriority,
              CAST(grouping(o_orderstatus) AS INTEGER) AS g_st,
              CAST(grouping(o_orderpriority) AS INTEGER) AS g_pr,
@@ -297,37 +228,17 @@ object RelationalQueries3 {
              round(CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE), 2) AS total
       FROM orders
       GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      ORDER BY g_st, g_pr, o_orderstatus, o_orderpriority""")) { (s, dir) =>
-      Tables.df(s, dir, "orders").createOrReplaceTempView("q92_orders")
-      s.sql("""
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(grouping(o_orderstatus) AS INTEGER) AS g_st,
-               CAST(grouping(o_orderpriority) AS INTEGER) AS g_pr,
-               count(*) AS n,
-               round(CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE), 2) AS total
-        FROM q92_orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        ORDER BY g_st, g_pr, o_orderstatus, o_orderpriority""")
-    },
+      ORDER BY g_st, g_pr, o_orderstatus, o_orderpriority"""),
 
     // Correlated LATERAL subquery — per-outer-row top-N through the SQL
     // surface (Catalyst plans the correlated limit as a rewritten join +
     // per-key ranking; no per-row re-execution). The DuckDB oracle uses
     // its native LATERAL, an independent implementation of the semantics.
-    QueryDef("q93_lateral_topn", Some("""
+    QueryDef.sql("q93_lateral_topn", """
       SELECT r.r_name, t.n_name FROM region r,
         LATERAL (SELECT n_name FROM nation
                  WHERE n_regionkey = r.r_regionkey
                  ORDER BY n_name LIMIT 2) t
-      ORDER BY r.r_name, t.n_name""")) { (s, dir) =>
-      Tables.df(s, dir, "region").createOrReplaceTempView("q93_region")
-      Tables.df(s, dir, "nation").createOrReplaceTempView("q93_nation")
-      s.sql("""
-        SELECT r.r_name, t.n_name FROM q93_region r
-        JOIN LATERAL (SELECT n_name FROM q93_nation
-                      WHERE n_regionkey = r.r_regionkey
-                      ORDER BY n_name LIMIT 2) t
-        ORDER BY r.r_name, t.n_name""")
-    }
+      ORDER BY r.r_name, t.n_name""")
   )
 }

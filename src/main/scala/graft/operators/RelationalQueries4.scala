@@ -46,33 +46,20 @@ object RelationalQueries4 {
 
     // ------------------- time-range window frame (q95)
 
-    // RANGE BETWEEN INTERVAL 1 HOUR PRECEDING on the event-time axis. On
-    // the Spark side the frame is expressed over epoch MICROSECONDS
-    // (unix_micros under the UTC session), which is exactly DuckDB's
-    // interval arithmetic at the file's µs precision — same inclusive
-    // lower bound, same peer-row semantics on ts ties. Scale shape: one
+    // RANGE BETWEEN INTERVAL 1 HOUR PRECEDING on the event-time axis, at
+    // the file's µs precision on both engines — same inclusive lower
+    // bound, same peer-row semantics on ts ties. Scale shape: one
     // hash partition by user_id, per-partition sort, bounded frame state;
     // per-event values are rounded to DECIMAL before the frame sum so the
     // rolling total is order-independent.
-    QueryDef("q95_window_time_range", Some("""
+    QueryDef.sql("q95_window_time_range", """
       SELECT event_id,
              CAST(count(*) OVER w AS BIGINT) AS n_1h,
              CAST(sum(CAST(round(value, 2) AS DECIMAL(38,2))) OVER w AS DOUBLE) AS sum_1h
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts
                    RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-      ORDER BY event_id""")) { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("us"))
-        .rangeBetween(-3600L * 1000000L, Window.currentRow)
-      Tables.df(s, dir, "events")
-        .withColumn("us", unix_micros(col("ts").cast("timestamp")))
-        .select(col("event_id"),
-          count(lit(1)).over(w).as("n_1h"),
-          sum(Kit.rdec(col("value"), 2)).over(w)
-            .cast("double").as("sum_1h"))
-        .orderBy(col("event_id"))
-    },
+      ORDER BY event_id"""),
 
     // ------------------------ recursive CTE (q96)
 
@@ -215,7 +202,7 @@ object RelationalQueries4 {
     // and from each other; ntile rides a fully-ordered window because its
     // assignment is positional (nondeterministic under ties). One hash
     // partition by nation, per-partition sort — standard window shape.
-    QueryDef("q100_rank_family", Some("""
+    QueryDef.sql("q100_rank_family", """
       SELECT c_custkey, c_nationkey, c_mktsegment,
              CAST(rank() OVER wt AS BIGINT) AS rk,
              CAST(dense_rank() OVER wt AS BIGINT) AS drk,
@@ -225,19 +212,7 @@ object RelationalQueries4 {
       FROM customer
       WINDOW wt AS (PARTITION BY c_nationkey ORDER BY c_mktsegment),
              wo AS (PARTITION BY c_nationkey ORDER BY c_mktsegment, c_custkey)
-      ORDER BY c_custkey""")) { (s, dir) =>
-      val wt = Window.partitionBy(col("c_nationkey")).orderBy(col("c_mktsegment"))
-      val wo = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_mktsegment"), col("c_custkey"))
-      Tables.df(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
-          rank().over(wt).cast("bigint").as("rk"),
-          dense_rank().over(wt).cast("bigint").as("drk"),
-          round(percent_rank().over(wt), 6).as("prk"),
-          round(cume_dist().over(wt), 6).as("cd"),
-          ntile(4).over(wo).cast("int").as("quartile"))
-        .orderBy(col("c_custkey"))
-    },
+      ORDER BY c_custkey"""),
 
     // --------------- IGNORE NULLS / defaulted offsets (q101)
 

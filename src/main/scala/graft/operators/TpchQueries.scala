@@ -19,7 +19,7 @@ object TpchQueries {
     // Q4 shape: priority counts for orders having at least one late line
     // (EXISTS → left-semi join; the date predicate stands in for
     // commitdate < receiptdate).
-    QueryDef("q66_tpch_q4", Some("""
+    QueryDef.sql("q66_tpch_q4", """
       SELECT o_orderpriority, count(*) AS order_count
       FROM orders
       WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -27,19 +27,7 @@ object TpchQueries {
         AND EXISTS (
           SELECT 1 FROM lineitem
           WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-      GROUP BY o_orderpriority ORDER BY o_orderpriority""")) { (s, dir) =>
-      val o = Tables.df(s, dir, "orders")
-        .filter(col("o_orderdate") >= ts("1997-01-01 00:00:00")
-          && col("o_orderdate") < ts("1997-04-01 00:00:00"))
-      val li = Tables.df(s, dir, "lineitem")
-      o.join(li,
-          o("o_orderkey") === li("l_orderkey")
-            && li("l_shipdate") > o("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    },
+      GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
 
     // Q7 shape: bilateral trade volume between two nations by year —
     // customer nation and supplier nation resolved independently (two
@@ -85,7 +73,7 @@ object TpchQueries {
     // Q8 shape: one nation's market share of a part-type's revenue by year —
     // conditional share over a decimal-exact total, division deferred to
     // doubles.
-    QueryDef("q68_tpch_q8", Some("""
+    QueryDef.sql("q68_tpch_q8", """
       SELECT o_year,
              round(CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume
                                  ELSE CAST(0 AS BIGINT) END) AS DOUBLE)
@@ -100,25 +88,7 @@ object TpchQueries {
         JOIN nation ON s_nationkey = n_nationkey
         JOIN orders ON o_orderkey = l_orderkey
         WHERE p_type = 'ECONOMY') all_nations
-      GROUP BY o_year ORDER BY o_year""")) { (s, dir) =>
-      val li = Tables.df(s, dir, "lineitem")
-      val p = Tables.df(s, dir, "part").filter(col("p_type") === "ECONOMY")
-      val sup = Tables.df(s, dir, "supplier")
-      val n = Tables.df(s, dir, "nation")
-      val o = Tables.df(s, dir, "orders")
-      val volume = floor(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 10000 + lit(0.5))
-      li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-        .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"))
-        .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
-        .join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(year(col("o_orderdate")).cast("int").as("o_year"),
-          volume.as("volume"), col("n_name").as("nation"))
-        .groupBy(col("o_year"))
-        .agg(round(
-          sum(when(col("nation") === "NATION_5", col("volume")).otherwise(lit(0L)))
-            .cast("double") / sum(col("volume")).cast("double"), 6).as("mkt_share"))
-        .orderBy(col("o_year"))
-    },
+      GROUP BY o_year ORDER BY o_year"""),
 
     // Q15 shape: top supplier(s) by quarterly revenue — aggregate reused
     // twice (revenue per supplier; max over it) without re-scanning.
@@ -158,25 +128,14 @@ object TpchQueries {
     // Q17 shape: small-quantity orders vs the per-part average — correlated
     // scalar subquery, decorrelated to a per-part aggregate join (the plan
     // Spark produces for the correlated spelling too).
-    QueryDef("q70_tpch_q17", Some("""
+    QueryDef.sql("q70_tpch_q17", """
       SELECT round(CAST(sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) / 100.0 / 7.0, 4)
                AS avg_yearly,
              count(*) AS n
       FROM lineitem JOIN part ON p_partkey = l_partkey
       WHERE p_brand = 'Brand#23'
         AND l_quantity < (
-          SELECT 0.2 * avg(l_quantity) FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)""")) { (s, dir) =>
-      val li = Tables.df(s, dir, "lineitem")
-      val p = Tables.df(s, dir, "part").filter(col("p_brand") === "Brand#23")
-      val perPart = li.groupBy(col("l_partkey").as("ap_key"))
-        .agg((lit(0.2) * avg(col("l_quantity"))).as("qty_cap"))
-      li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-        .join(perPart, li("l_partkey") === col("ap_key"))
-        .filter(col("l_quantity") < col("qty_cap"))
-        .agg(
-          round(fsum(col("l_extendedprice"), 2) / 7.0, 4).as("avg_yearly"),
-          count(lit(1)).as("n"))
-    },
+          SELECT 0.2 * avg(l_quantity) FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)"""),
 
     // Q22 shape: customers with above-average balances and no orders —
     // uncorrelated scalar aggregate (broadcast 1-row cross join, never
@@ -288,7 +247,7 @@ object TpchQueries {
     // other supplier was late), both equi-keyed on the order key. The
     // supplier/nation dims are broadcast and applied before the semi/anti
     // chain so only one nation's lines flow through it.
-    QueryDef("q86_tpch_q21", Some("""
+    QueryDef.sql("q86_tpch_q21", """
       SELECT s_name, count(*) AS numwait
       FROM supplier, lineitem l1, orders, nation
       WHERE s_suppkey = l1.l_suppkey
@@ -302,31 +261,7 @@ object TpchQueries {
                           AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
         AND s_nationkey = n_nationkey
         AND n_name = 'NATION_3'
-      GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""")) { (s, dir) =>
-      val li = Tables.df(s, dir, "lineitem")
-      val sup = Tables.df(s, dir, "supplier")
-        .join(Tables.df(s, dir, "nation").filter(col("n_name") === "NATION_3"),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"))
-      val o = Tables.df(s, dir, "orders").filter(col("o_orderstatus") === "F")
-      val late = li.join(o, li("l_orderkey") === o("o_orderkey")
-          && li("l_shipdate") > o("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .join(broadcast(sup), li("l_suppkey") === col("s_suppkey"))
-        .select(li("l_orderkey").as("orderkey"), li("l_suppkey").as("suppkey"),
-          o("o_orderdate").as("odate"), col("s_name"))
-      val l2 = li.select(col("l_orderkey").as("k2"), col("l_suppkey").as("s2"))
-      val withOther = late.join(l2,
-        col("orderkey") === col("k2") && col("suppkey") =!= col("s2"), "left_semi")
-      val l3 = li.select(col("l_orderkey").as("k3"), col("l_suppkey").as("s3"),
-        col("l_shipdate").as("d3"))
-      withOther.join(l3,
-          col("orderkey") === col("k3") && col("suppkey") =!= col("s3")
-            && col("d3") > col("odate") + expr("INTERVAL 60 DAYS"), "left_anti")
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    },
+      GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20"""),
 
     // Q2 shape: minimum-cost supplier per part. The testdata has no partsupp
     // table, so lineitem serves as the part↔supplier association with

@@ -576,4 +576,16 @@ class GraftSqlSpec extends AnyFunSuite {
   test("printf formats DECIMAL arguments with %f") {
     assert(g.query("SELECT printf('%05.2f', 3.14159) AS v").head().getString(0) == "03.14")
   }
+
+  // The literal alternative `'(?:[^']|'')*'` recursed once per character in
+  // java.util.regex, so a match attempt from a closing quote across a long
+  // quote-free stretch overflowed the stack from 2,033 characters on.
+  test("rewrites a statement of several thousand characters") {
+    def stmt(n: Int) = "SELECT 'a' AS x, " + "1 + " * n + "1 AS y, 'c' AS z"
+    val long = stmt(2000)
+    assert(long.length > 8000)
+    assert(GraftSql.rewrite(long).sql.endsWith("1 AS y, 'c' AS z"))
+    val r = g.query(stmt(500)).head()
+    assert(r.getString(0) == "a" && r.getInt(1) == 501 && r.getString(2) == "c")
+  }
 }
